@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan dump: prints formatted physical plans for key queries. */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -9,13 +7,7 @@ object Explain {
     // depend on size statistics (broadcast vs shuffle, adaptive barriers)
     // only show at a tier big enough to clear the thresholds; the sf0.01
     // default auto-broadcasts everything and hides them.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftExtensions.local(cpusDefault = 8)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     args.foreach { name =>
       println(s"==== $name ====")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import graft.functions.{Fingerprint, MinHashBands, MinHashSignature, PerceptualHash, ShingleHashes, SimHash, TokenHashes, VecDot, VecSum}
@@ -112,5 +112,26 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         case Seq(a) => VecSum(a)
         case _ => throw new IllegalArgumentException("vec_sum(array<double>)")
       }))
+  }
+}
+
+object GraftExtensions {
+
+  /** The local session every main runs on: `local[$SPARK_GRAFT_CPUS]`
+    * (`cpusDefault` when unset — each main keeps its own deployment
+    * default), graft's extensions, one shuffle partition per core, UTC,
+    * no UI, WARN logging.
+    */
+  def local(cpusDefault: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", cpusDefault.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev micro-bench for A/B experiments on individual registry queries
   * (the interleaved-isolated-runs discipline of the round-14
@@ -17,16 +16,7 @@ object QueryBench {
     val sfDir = args(0)
     val iters = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftExtensions.local(cpusDefault = 32)
     def once(n: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, sfDir).count()

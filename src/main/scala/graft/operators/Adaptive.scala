@@ -37,11 +37,13 @@ object Adaptive {
   /** `shared` materializes iff `sizedOn`'s estimated scan size exceeds
     * the threshold. `sizedOn` is the INPUT the shared subtree re-scans
     * per consumer (not the shared frame itself, whose post-aggregation
-    * estimate says nothing about the cost of re-computing it).
+    * estimate says nothing about the cost of re-computing it). A
+    * non-numeric threshold (a typo such as "4MB") falls back to the
+    * default instead of failing every barriered query.
     */
   def barrierIfBig(shared: DataFrame, sizedOn: DataFrame): DataFrame = {
-    val minBytes = shared.sparkSession.conf
-      .getOption(MinInputBytesKey).map(_.toLong).getOrElse(MinInputBytesDefault)
+    val minBytes = shared.sparkSession.conf.getOption(MinInputBytesKey)
+      .flatMap(_.toLongOption).getOrElse(MinInputBytesDefault)
     if (sizedOn.queryExecution.optimizedPlan.stats.sizeInBytes > minBytes)
       shared.localCheckpoint(eager = false)
     else shared

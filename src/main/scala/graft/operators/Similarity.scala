@@ -608,7 +608,7 @@ object Similarity {
     * overwrites in place — a crash mid-build leaves an uncommitted
     * directory that the next build simply rewrites. `stamp` (normally the
     * source table's [[graft.sources.SnapshotStore.fingerprint]]) is
-    * written INTO the marker: the stamped [[indexReady]] overload then
+    * written INTO the marker: [[graft.sources.SnapshotStore.ready]] then
     * refuses a build committed for different source content, closing the
     * stale-reuse hole of the earlier name+length scheme (round-8
     * ADVICE-2).
@@ -667,15 +667,6 @@ object Similarity {
     val p = new org.apache.hadoop.fs.Path(dir, "_graft_ok")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
-
-  /** True iff [[persistIndex]] committed a build under `dir` for a source
-    * stamped exactly `stamp` — a marker stamped for OTHER source content
-    * (a regenerated embeddings table) reads as "no index" and forces a
-    * rebuild (round-8 ADVICE-2).
-    */
-  def indexReady(spark: org.apache.spark.sql.SparkSession, dir: String,
-                 stamp: String): Boolean =
-    graft.sources.SnapshotStore.ready(spark, dir, stamp)
 
   /** Load a [[persistIndex]]-ed index: the (coarse, fine) centroid tables
     * plus the depth-`probeDepth` inverted lists. Plain parquet scans — no

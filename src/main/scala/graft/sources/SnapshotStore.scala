@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -27,8 +28,81 @@ import org.apache.spark.sql.SparkSession
   * CHECK, while count+length+mtime is one namenode listing. mtime is part of
   * the stamp, so even a byte-identical rewrite rebuilds — the cheap side to
   * err on.
+  *
+  * FAMILIES ([[family]]) are the one place a derived table set is defined:
+  * a warehouse directory name, a layout version, the source tables it is a
+  * pure function of, a `build` that writes the tables under the snapshot
+  * directory and a `load` that reads them back. The memo and staleness
+  * contract every family shares:
+  *   - first use on a given source snapshot builds and commits the tables
+  *     under the warehouse dir; every later use — including later
+  *     processes — serves from the committed parquet, never re-building;
+  *   - the marker stamp is `<version>:<fp1>+<fp2>…` over the sources in
+  *     declaration order. The version prefix versions the family's LAYOUT
+  *     and build geometry: bumping it makes a marker committed by an older
+  *     build fail the stamp compare and rebuild in place, instead of
+  *     half-loading a directory that predates a table;
+  *   - the staleness check runs PER CALL, not per memo miss — the
+  *     fingerprint is recomputed on every lookup (one namenode listing per
+  *     source) and the memoized loaded tables are reused only while it
+  *     matches, so a source regenerated mid-session rebuilds on the next
+  *     call instead of serving stale tables for the session's lifetime
+  *     (round-9 ADVICE-2);
+  *   - the memo is keyed by (session, dataset dir), and entries of stopped
+  *     sessions are swept on every call (round-6 ADVICE-4);
+  *   - the directory is [[snapshotDir]] of the FIRST source.
+  * Each family owns its own memo: a build may call another family's `get`
+  * (a composed answer over already-persisted families), and a nested
+  * `compute` on one shared map would fail with a recursive update.
   */
 object SnapshotStore {
+
+  /** A family build: `(spark, dataDir, snapshotDir, stamp)`. It writes the
+    * family's tables under `snapshotDir` from the sources under `dataDir`;
+    * `stamp` is for operators that commit internally.
+    */
+  type Build = (SparkSession, String, String, String) => Unit
+
+  /** A persisted table family over the tables `sources` (file names under
+    * the dataset directory). See the object scaladoc for the contract.
+    */
+  final class Family[A] private[SnapshotStore] (
+      name: String, version: String, sources: Seq[String],
+      build: Build, load: (SparkSession, String) => A) {
+    private val memo = new ConcurrentHashMap[(SparkSession, String), (String, A)]()
+
+    /** The family's tables for the dataset at `d`, built on first use of
+      * this source snapshot and re-read from the warehouse thereafter.
+      */
+    def get(s: SparkSession, d: String): A = {
+      memo.keySet.removeIf(_._1.sparkContext.isStopped)
+      val paths = sources.map(src => s"$d/$src")
+      val stamp = version + ":" + paths.map(fingerprint(s, _)).mkString("+")
+      memo.compute((s, d), (_, cached) =>
+        if (cached != null && cached._1 == stamp) cached
+        else {
+          val dir = snapshotDir(s, paths.head, name)
+          if (!ready(s, dir, stamp)) {
+            build(s, d, dir, stamp)
+            commit(s, dir, stamp)
+          }
+          (stamp, load(s, dir))
+        })._2
+    }
+
+    /** Live memo entries — one per (session, dataset dir) in use. */
+    private[graft] def memoSize: Int = memo.size
+  }
+
+  /** Define a family: `build` writes the tables, `load(spark, snapshotDir)`
+    * reads them back. The combinator commits after `build` (idempotent for
+    * builds that already commit).
+    */
+  def family[A](name: String, version: String, sources: String*)(
+      build: Build)(load: (SparkSession, String) => A): Family[A] = {
+    require(sources.nonEmpty, s"family $name needs at least one source")
+    new Family(name, version, sources, build, load)
+  }
 
   /** Content stamp of the source table at `path` (file or directory). */
   def fingerprint(spark: SparkSession, path: String): String = {
