@@ -102,19 +102,20 @@ object Bench {
     // strictly additive and printed BEFORE the compact line so the
     // driver's tail still ends with the same headline record.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val concFailed = new java.util.concurrent.atomic.AtomicInteger(0)
     val cT0 = System.nanoTime()
     val futures = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       pool.submit(new Runnable {
         def run(): Unit = {
           spark.sparkContext.setJobDescription(s"bench-conc:$name")
-          try fn(spark, sfDir).count() catch { case _: Throwable => () }
+          try fn(spark, sfDir).count() catch { case _: Throwable => concFailed.incrementAndGet() }
         }
       })
     }
     futures.foreach(_.get())
     pool.shutdown()
     val concTotal = (System.nanoTime() - cT0) / 1e9
-    println(s"""{"concurrent_total_s":$concTotal,"pool_threads":4,"n_queries":${results.size}}""")
+    println(s"""{"concurrent_total_s":$concTotal,"pool_threads":4,"n_queries":${results.size},"n_failed":${concFailed.get}}""")
     println(s"""{"total_s":$total,"n_failed":${results.size - ok.size},"n_queries":${results.size},"canary_s":$canary,"canary_floor":0.081}""")
     spark.stop()
   }

@@ -57,7 +57,6 @@ object HeavyTier {
     val eventsStride = stride(tbl("events"), "event_id")
     val userStride   = stride(tbl("events"), "user_id")
     val docStride    = stride(tbl("documents"), "doc_id")
-    val vecStride    = stride(tbl("embeddings"), "vec_id")
     val orderStride  = stride(tbl("orders"), "o_orderkey")
     val custStride   = stride(tbl("customer"), "c_custkey")
     val suppStride   = stride(tbl("supplier"), "s_suppkey")
@@ -83,7 +82,9 @@ object HeavyTier {
           transform(col("embedding"), (x, i) =>
             (x + (pmod(xxhash64(col("vec_id"), col("r"), i), lit(2001)) - lit(1000))
               .cast("double") * lit(2e-5)).cast("float"))))
-      .select(shifted("vec_id", vecStride).as("vec_id"),
+      // vec_id is the embedded document's doc_id: shift by the documents'
+      // stride so each replica's vectors stay paired with its documents
+      .select(shifted("vec_id", docStride).as("vec_id"),
         col("embedding"), col("label")),
       "embeddings", 32)
 

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, ForeachWriter, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
@@ -16,47 +16,28 @@ import org.apache.spark.sql.functions._
   *  - `open(partitionId, epochId)` acquires the per-partition "connection"
   *    (here: a write buffer + the store handle; the reference builds its
   *    DynamoDB client per partition) and returns **false to skip the
-  *    partition** when this (writer, epoch, partition) is already durably
-  *    committed — that is the replay-idempotence half of effectively-once
+  *    partition** when this (writer, partition) already committed the
+  *    epoch — under a live marker for exactly that epoch, or at or below
+  *    its `_txn` fence: the replay-idempotence half of effectively-once
   *    (T7);
   *  - `process(row)` stages one keyed record; any exception propagates —
   *    Spark fails the task and retries it, re-invoking `open` for the same
   *    epoch (the reference's rethrow-to-retry, consumer :258-271) (T8);
-  *  - `close(error)` commits atomically on success (temp file → rename →
-  *    commit marker) and leaves NOTHING on failure, so a half-written
-  *    attempt is invisible to readers and to the retry.
+  *  - `close(error)` commits on success and leaves NOTHING on failure, so
+  *    a half-written attempt is invisible to readers and to the retry.
   *
-  * Replay fencing is WRITER-SCOPED, like [[KeyedUpsertSink]]'s (round-5
-  * ADVICE-1 class of defect): the marker path embeds the owning streaming
-  * query's durable queryId (read from the `sql.streaming.queryId` local
-  * property, which Spark ships to tasks; `default` for driver-side/ad-hoc
-  * use). A bare `(epoch, partition)` fence silently skipped every
-  * partition after a checkpoint was deleted/recreated (epochs restart at
-  * 0 under a marker that already exists) — with the writer in the path, a
-  * new checkpoint is a new writer and its rows always land, while the
-  * same writer's replays still skip (spec'd in ForeachSinkSpec).
-  *
-  * Cross-writer ORDERING (round-6 ADVICE-1): each committed partition log
-  * additionally carries a store-assigned '''commit sequence''' — allocated
-  * at commit time as 1 + the highest sequence among existing commit
-  * markers, mirroring [[KeyedUpsertSink]]'s segment sequence — and the LWW
-  * read orders by it FIRST. Without it, a writer created after a
-  * checkpoint was deleted/recreated restarts its epochs at 0, and the old
-  * writer's stale high-epoch rows kept winning every read of a shared key
-  * until the new epoch counter passed the old high-water mark (fence fixed
-  * in round 5, reads still stale; spec'd with a SHARED key now).
-  * Concurrent partitions of one epoch may allocate the same sequence —
-  * harmless: the remaining (epoch, writer, partition, seq) order is total
-  * and deterministic, exactly the pre-round-6 semantics within a writer.
-  *
-  * Rows must carry the producer wire shape `(key: String, value: String)`
+  * The commit protocol is [[LwwLog]]'s. Format: partition log
+  * `data/<writer>-<epoch>-<part>.log` committed under
+  * `commits/<seq>__<writer>-<epoch>-<part>` (round-5 markers lack the
+  * `<seq>__` prefix, pre-round-5 ones also the writer); compacted logs
+  * `compact-<maxSeq>[-n].log` commit under `<maxSeq>__compact-<maxSeq>[-n]`.
+  * The fence key is `<writer>__<part>`; the writer is the owning query's
+  * durable queryId, read on the executor from the task's local properties
+  * (`default` for driver-side/ad-hoc use). Rows carry the producer wire
+  * shape `(key: String, value: String)`
   * ([[graft.streaming.EventStreamSource.toKafkaRecords]]);
-  * [[KeyedForeachWriter.read]] resolves last-writer-wins per key across
-  * epochs — DynamoDB putItem semantics over an append-only log, the
-  * log-structured cousin of [[KeyedUpsertSink]], with the same full
-  * maintenance story: CAS-allocated commit sequences ([[claimCseq]]),
-  * out-of-band [[KeyedForeachWriter.compact]] bounding read
-  * amplification, and `_txn` fences keeping folded epochs replay-safe.
+  * [[KeyedForeachWriter.read]] resolves last-writer-wins per key —
+  * DynamoDB putItem semantics over an append-only log.
   */
 class KeyedForeachWriter(storeDir: String) extends ForeachWriter[Row] {
 
@@ -66,49 +47,20 @@ class KeyedForeachWriter(storeDir: String) extends ForeachWriter[Row] {
   private var seq: Long = 0L
   private var writer: String = _
 
-  private def fs = new Path(storeDir).getFileSystem(new Configuration())
-  private def commitsDir = new Path(s"$storeDir/commits")
+  private def log =
+    KeyedForeachWriter.logOf(new Path(storeDir).getFileSystem(new Configuration()), storeDir)
   private def core = s"$writer-$epoch-$part"
-  private def dataPath = new Path(s"$storeDir/data/$core.log")
-
-  /** The owning query's durable id, resolved ON THE EXECUTOR at open time
-    * (local properties travel with the task; stable across restarts of one
-    * checkpoint, fresh for a recreated one). Sanitized: it becomes a path
-    * segment and a record field, and must never contain `__` (the commit-
-    * sequence separator in marker names).
-    */
-  private def resolveWriter(): String = {
-    val raw = Option(TaskContext.get())
-      .flatMap(tc => Option(tc.getLocalProperty(StreamExecution.QUERY_ID_KEY)))
-      .getOrElse("default")
-    raw.map(c => if (c.isLetterOrDigit || c == '-') c else '_').replace("__", "-")
-  }
 
   override def open(partitionId: Long, epochId: Long): Boolean = {
     part = partitionId; epoch = epochId; seq = 0L
-    writer = resolveWriter()
-    val f = fs
-    f.mkdirs(commitsDir)
-    f.mkdirs(new Path(s"$storeDir/data"))
-    // committed iff any marker names this (writer, epoch, partition) —
-    // `<cseq>__<core>` normally, bare `<core>` for round-5 legacy markers —
-    // or a `_txn` fence left by compaction covers this epoch (compaction
-    // retires markers; the fence preserves the replay guarantee, exactly
-    // as in [[KeyedUpsertSink]])
-    val committed = f.listStatus(commitsDir).exists { st =>
-      val n = st.getPath.getName
-      n == core || n.endsWith(s"__$core")
-    }
-    val txn = new Path(s"$storeDir/_txn")
-    val fenced = f.exists(txn) && f.listStatus(txn).exists { st =>
-      st.getPath.getName.split("__") match {
-        case Array(w, p, e) =>
-          w == writer && p == part.toString &&
-            (try epoch <= e.toLong catch { case _: NumberFormatException => false })
-        case _ => false
-      }
-    }
-    if (committed || fenced) {
+    writer = LwwLog.sanitize(Option(TaskContext.get())
+      .flatMap(tc => Option(tc.getLocalProperty(StreamExecution.QUERY_ID_KEY)))
+      .getOrElse(LwwLog.DefaultWriter))
+    val l = log
+    l.init()
+    val key = s"${writer}__$part"
+    if (l.markers().flatMap(l.fenceOf).contains((key, epoch)) ||
+        l.txnEpoch(key).exists(epoch <= _)) {
       false // epoch already durable for this (writer, partition): replay, skip
     } else {
       buf = new scala.collection.mutable.ArrayBuffer[String]
@@ -127,19 +79,15 @@ class KeyedForeachWriter(storeDir: String) extends ForeachWriter[Row] {
 
   override def close(errorOrNull: Throwable): Unit = {
     if (errorOrNull != null || buf == null) { buf = null; return }
-    val f = fs
-    // store-assigned commit sequence via the same create-exclusive CAS as
-    // KeyedUpsertSink.claimSeq: simultaneous committers can never share one
-    val cseq = KeyedForeachWriter.claimCseq(f, storeDir)
+    val l = log
+    val cseq = l.claim()
+    val marker = s"${cseq}__$core"
     val prefix = Seq(cseq.toString, writer, epoch.toString, part.toString)
       .mkString(KeyedForeachWriter.Sep) + KeyedForeachWriter.Sep
-    val tmp = new Path(s"$storeDir/data/.tmp-$core")
-    val out = f.create(tmp, true)
+    val out = l.fs.create(l.tmpPath(marker), true)
     out.write(buf.map(prefix + _).mkString("\n").getBytes(UTF_8))
     out.close()
-    f.delete(dataPath, true) // uncommitted leftover from a crashed attempt
-    require(f.rename(tmp, dataPath), s"rename $tmp -> $dataPath failed")
-    f.create(new Path(commitsDir, s"${cseq}__$core"), true).close() // marker last: commit point
+    l.commit(marker)
     buf = null
   }
 }
@@ -149,57 +97,25 @@ object KeyedForeachWriter {
   /** Field separator (0x01 — cannot appear in the JSON wire values). */
   val Sep: String = "\u0001"
 
-  /** Commit sequence recorded in a marker name (`<cseq>__<writer>-<epoch>-
-    * <part>`); round-5 legacy markers (bare core) map to -1.
+  /** (`<writer>__<part>`, epoch) of a `<writer>-<epoch>-<part>` tag, parsed
+    * from the end (writer ids may contain dashes); a pre-round-5
+    * `<epoch>-<part>` tag has no writer: `default`.
     */
-  private def markerSeq(name: String): Long = name.split("__", 2) match {
-    case Array(n, _) if n.nonEmpty && n.forall(_.isDigit) => n.toLong
-    case _ => -1L
-  }
-
-  /** Data-file name a marker commits (the marker name minus the sequence
-    * prefix, plus `.log`).
-    */
-  private def markerDataFile(name: String): String = name.split("__", 2) match {
-    case Array(n, c) if n.nonEmpty && n.forall(_.isDigit) => s"$c.log"
-    case _ => s"$name.log"
-  }
-
-  /** Claim the next commit sequence through the same create-exclusive CAS
-    * as [[KeyedUpsertSink]]'s segment sequence: scan committed markers AND
-    * outstanding claims for the max, then CREATE-EXCLUSIVE `_seq/<n>`; a
-    * concurrent winner makes the create throw and the loser retries above
-    * it. Same-JVM committers (local mode, or several queries in one app)
-    * additionally serialize on the process lock — Hadoop's local
-    * `create(overwrite = false)` is check-then-create; HDFS's create is
-    * atomic for the cross-process case. Without the CAS two simultaneous
-    * partition commits could share a sequence and cross-writer LWW order
-    * fell to the (epoch, writer, partition) tie-break instead of commit
-    * time.
-    */
-  private val claimLock = new Object
-
-  private def claimCseq(f: org.apache.hadoop.fs.FileSystem,
-                        storeDir: String): Long = claimLock.synchronized {
-    val seqs = new Path(s"$storeDir/_seq")
-    val commits = new Path(s"$storeDir/commits")
-    f.mkdirs(seqs)
-    var attempts = 0
-    while (attempts < 1000) {
-      val claimed = f.listStatus(seqs).toSeq.map(_.getPath.getName)
-        .flatMap(n => try Some(n.toLong) catch { case _: NumberFormatException => None })
-      val committed = f.listStatus(commits).toSeq
-        .map(st => markerSeq(st.getPath.getName))
-      val next = (claimed ++ committed).foldLeft(-1L)(_ max _) + 1
-      try {
-        f.create(new Path(seqs, next.toString), false).close()
-        return next
-      } catch {
-        case _: java.io.IOException => attempts += 1 // lost the race: re-read
-      }
+  private def tagFence(tag: String): Option[(String, Long)] = {
+    val a = tag.split("-")
+    val (w, ep) =
+      if (a.length >= 3) (a.dropRight(2).mkString("-"), a.takeRight(2)) else (LwwLog.DefaultWriter, a)
+    ep match {
+      case Array(e, p) => for (e <- e.toLongOption; p <- p.toLongOption) yield (s"${w}__$p", e)
+      case _ => None
     }
-    sys.error(s"could not claim a commit sequence at $storeDir after 1000 races")
   }
+
+  private def logOf(fs: FileSystem, storeDir: String): LwwLog = new LwwLog(fs, storeDir, "data",
+    m => s"${LwwLog.tag(m)}.log", (maxSeq, name) => s"${maxSeq}__$name", tagFence)
+
+  private def logOf(spark: SparkSession, storeDir: String): LwwLog =
+    logOf(new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration), storeDir)
 
   /** Last-writer-wins view of the append-only store: per key, the row with
     * the highest (commitSeq, epoch, writer, partition, seq) — the
@@ -221,23 +137,18 @@ object KeyedForeachWriter {
     *  - 5 fields (round 5): writer, epoch, seq, key, value → commitSeq -1
     *  - 4 fields (pre-round-5): epoch, seq, key, value → writer `default`
     */
-  def read(spark: SparkSession, storeDir: String): DataFrame =
-    winners(spark, storeDir).select("key", "value")
+  def read(spark: SparkSession, storeDir: String): DataFrame = {
+    val l = logOf(spark, storeDir)
+    winners(spark, l, l.markers()).select("key", "value")
+  }
 
   /** Per-key winners WITH their full (cseq, writer, epoch, part, seq)
     * stamps — shared by [[read]] and [[compact]] so LWW tie-breaking can
     * never diverge between them (the [[KeyedUpsertSink]] arrangement).
     */
-  private def winners(spark: SparkSession, storeDir: String): DataFrame = {
-    val fs = new Path(storeDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val commits = new Path(s"$storeDir/commits")
-    val files =
-      if (!fs.exists(commits)) Seq.empty[String]
-      else fs.listStatus(commits).toSeq
-        .map(st => s"$storeDir/data/${markerDataFile(st.getPath.getName)}")
-        .distinct
-    require(files.nonEmpty, s"no committed logs at $storeDir")
+  private def winners(spark: SparkSession, l: LwwLog, markers: Seq[String]): DataFrame = {
+    val files = markers.map(l.dataPath(_).toString).distinct
+    require(files.nonEmpty, s"no committed logs at ${l.store}")
     val parts = split(col("line"), Sep)
     val arity = size(parts)
     // Every layout ever written has arity exactly 7, 5, or 4 — any other
@@ -269,98 +180,25 @@ object KeyedForeachWriter {
   }
 
   /** Fold every committed partition log into ONE compacted log of per-key
-    * winners, bounding read amplification exactly as
-    * [[KeyedUpsertSink.compact]] does for the columnar store (round 6:
-    * the row store previously appended forever). Winners keep their
-    * ORIGINAL stamps, so LWW ordering against later appends is unaffected.
-    *
-    * Replay protection survives marker retirement: before the fold, each
-    * retired (writer, partition)'s high-water epoch is persisted to
-    * `_txn/<writer>__<part>__<epoch>` — `open` consults those fences, and
-    * they only ever record already-committed epochs, so every crash point
-    * is safe. Write order: fences → compacted data (temp → rename) →
-    * compact marker → retire old markers → old data → covered `_seq`
-    * claims. A crash part-way leaves either invisible data (no marker) or
-    * duplicate identical winners (collapse at read). Run out-of-band, like
-    * the columnar store's compaction.
+    * winners ([[LwwLog]] compaction), bounding read amplification as
+    * [[KeyedUpsertSink.compact]] does for the columnar store. Run
+    * out-of-band.
     */
   def compact(spark: SparkSession, storeDir: String): Unit = {
-    val fs = new Path(storeDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val commits = new Path(s"$storeDir/commits")
-    if (!fs.exists(commits)) return
-    val markers = fs.listStatus(commits).toSeq.map(_.getPath.getName)
-    if (markers.size <= 1) return
-    // persist per-(writer, partition) fences for the markers being retired
-    val txn = new Path(s"$storeDir/_txn")
-    fs.mkdirs(txn)
-    val fences = markers.flatMap { m =>
-      // strip the `<cseq>__` prefix, then parse `<writer>-<epoch>-<part>`
-      // from the END (writer ids may contain dashes); legacy pre-round-5
-      // `<epoch>-<part>` cores have no writer → `default`
-      val core = m.split("__", 2) match {
-        case Array(n, c) if n.nonEmpty && n.forall(_.isDigit) => c
-        case _ => m
-      }
-      core.split("-") match {
-        case a if a.length >= 3 =>
-          try Some((a.dropRight(2).mkString("-"), a(a.length - 1).toLong, a(a.length - 2).toLong))
-          catch { case _: NumberFormatException => None }
-        case Array(e, p) =>
-          try Some(("default", p.toLong, e.toLong)) catch { case _: NumberFormatException => None }
-        case _ => None
-      }
-    }
-    fences.groupMapReduce(f => (f._1, f._2))(_._3)(_ max _).foreach { case ((w, p), e) =>
-      fs.create(new Path(txn, s"${w}__${p}__$e"), true).close()
-      fs.listStatus(txn).foreach { st => // prune superseded fences
-        st.getPath.getName.split("__") match {
-          case Array(`w`, pp, ee) if pp == p.toString &&
-            (try ee.toLong < e catch { case _: NumberFormatException => false }) =>
-            fs.delete(st.getPath, false)
-          case _ =>
-        }
-      }
-    }
-    // fold winners (original stamps) into one compacted log
-    val maxSeq = markers.map(markerSeq).foldLeft(-1L)(_ max _) max 0L
-    val existing = fs.listStatus(new Path(s"$storeDir/data")).map(_.getPath.getName).toSet
-    val base = s"compact-$maxSeq"
-    val name = if (!existing.contains(s"$base.log")) base
-      else Iterator.from(1).map(i => s"$base-$i").find(n => !existing.contains(s"$n.log")).get
-    // corrupt-arity rows parse to null fields and cannot re-encode; they
-    // never won a read either (null keys group apart), so drop them here
-    val folded = winners(spark, storeDir)
-      .filter(col("key").isNotNull && col("value").isNotNull &&
-        col("epoch").isNotNull && col("seq").isNotNull)
-      .select(concat_ws(Sep, col("cseq"), col("writer"), col("epoch"),
-        col("part"), col("seq"), col("key"), col("value")).as("value"))
-    val tmp = new Path(s"$storeDir/data/.tmp-$name.log")
-    fs.delete(tmp, true)
-    folded.write.text(tmp.toString)
-    val dst = new Path(s"$storeDir/data/$name.log")
-    fs.delete(dst, true) // orphan from a crashed attempt (provably unreferenced)
-    require(fs.rename(tmp, dst), s"rename $tmp -> $dst failed")
-    fs.create(new Path(commits, s"${maxSeq}__$name"), true).close() // commit
-    // retire inputs: markers first (readers stop listing their files),
-    // then data; the compacted marker maps `name.log`, never an input
-    markers.foreach(m => fs.delete(new Path(commits.toString, m), false))
-    markers.foreach(m => fs.delete(new Path(s"$storeDir/data/${markerDataFile(m)}"), true))
-    // prune sequence claims the compacted log now covers
-    val seqs = new Path(s"$storeDir/_seq")
-    if (fs.exists(seqs)) fs.listStatus(seqs).foreach { st =>
-      val keep = try st.getPath.getName.toLong > maxSeq
-      catch { case _: NumberFormatException => false }
-      if (!keep) fs.delete(st.getPath, false)
+    val l = logOf(spark, storeDir)
+    l.compact { (markers, tmp) =>
+      // corrupt-arity rows parse to null fields and cannot re-encode; they
+      // never won a read either (null keys group apart), so drop them here
+      winners(spark, l, markers)
+        .filter(col("key").isNotNull && col("value").isNotNull &&
+          col("epoch").isNotNull && col("seq").isNotNull)
+        .select(concat_ws(Sep, col("cseq"), col("writer"), col("epoch"),
+          col("part"), col("seq"), col("key"), col("value")).as("value"))
+        .write.mode("overwrite").text(tmp.toString)
     }
   }
 
   /** Committed log count (compaction/test observability). */
-  def logCount(spark: SparkSession, storeDir: String): Int = {
-    val fs = new Path(storeDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val commits = new Path(s"$storeDir/commits")
-    if (!fs.exists(commits)) 0
-    else fs.listStatus(commits).length
-  }
+  def logCount(spark: SparkSession, storeDir: String): Int =
+    logOf(spark, storeDir).markers().size
 }

@@ -8,71 +8,31 @@ import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Log-structured keyed last-writer-wins parquet store — the batch-side
-  * replacement for the reference's hand-rolled DynamoDB `ForeachWriter` sink
-  * (consumer/.../SparkDynamoDBConsumer.java:202-283): DynamoDB `putItem` is
-  * an upsert by key (T7, SURVEY.md §2.9), so each micro-batch merges into the
-  * store by key with new rows winning.
+/** Keyed last-writer-wins parquet store: the `foreachBatch` replacement
+  * for the reference's DynamoDB `ForeachWriter` sink
+  * (consumer/.../SparkDynamoDBConsumer.java:202-283), whose `putItem` is
+  * an upsert by key (T7, SURVEY.md §2.9). Each micro-batch appends one
+  * segment, O(batch) whatever the store's size; reads merge by key with
+  * the latest commit winning. The commit protocol — sequence claims,
+  * marker-last commits, replay fences, compaction — is [[LwwLog]]'s; this
+  * front-end adds the columnar format:
   *
-  * Round 2 shipped this as a full-rewrite store (`old ANTI new ∪ new` +
-  * directory swap): correct, but O(store) work per micro-batch. Round 3
-  * replaced it with this log-structured design (append one segment per
-  * epoch + commit marker + LWW merge-on-read + compaction). Round 5 fixes
-  * the replay fence, which was keyed on the bare numeric epochId alone — if
-  * a stream's checkpoint was deleted/recreated, or a second query wrote the
-  * same store path, epochIds restart at 0 and every batch was silently
-  * skipped until the counter passed the old high-water mark. The fence is
-  * now writer-scoped, Delta-Lake-txn style (appId/version):
-  *
-  *  - '''Two id spaces.''' Each committed segment gets a store-assigned,
-  *    monotonically increasing '''sequence number''' (LWW order), and is
-  *    committed under a marker that atomically records the '''writer
-  *    identity and writer epoch''' (`commits/<seq>__<writer>__<epoch>`,
-  *    one file creation = one commit point for both facts). The writer id
-  *    defaults to the owning streaming query's durable `queryId` (stable
-  *    across restarts of one checkpoint, fresh for a recreated one), read
-  *    from the `sql.streaming.queryId` thread-local Spark sets on the
-  *    stream-execution thread that runs `foreachBatch`.
-  *  - '''Replay fence = per-writer high-water mark.''' `upsert` skips an
-  *    epoch iff THIS writer already committed an epoch >= it. A recreated
-  *    checkpoint is a new writer, so its epochs (restarting at 0) apply; a
-  *    second query on the same store path is its own writer and can never
-  *    be fenced by the first one's counter. Within one writer, epochs are
-  *    strictly increasing (Structured Streaming's contract), so
-  *    `epoch <= fence` is exactly "checkpoint replay after recovery".
-  *  - '''Write = O(batch).''' Each epoch appends ONE parquet segment;
-  *    nothing existing is read or rewritten. Marker creation strictly
-  *    follows the segment rename, so a crash mid-write leaves an invisible
-  *    (uncommitted) segment.
-  *  - '''Read = LWW merge-on-read.''' Union committed segments, keep per
-  *    key the row with the highest (sequence, segment-name) stamp — the
-  *    name tie-break makes the view deterministic even if two concurrent
-  *    writers ever allocated the same sequence. One shuffle on the key.
-  *  - '''Compaction bounds read amplification.''' [[compact]] folds all
-  *    committed segments into one segment of per-key winners (keeping
-  *    their original stamps, so LWW ordering vs later appends is
-  *    unaffected), commits it, then retires the inputs. Because retiring
-  *    a marker erases its (writer, epoch) record, compaction first writes
-  *    each folded writer's high-water epoch into a `_txn/<writer>__<epoch>`
-  *    file — those fences survive any crash point, and they only ever
-  *    record already-committed epochs, so a crash between the `_txn` write
-  *    and the compact commit changes nothing.
-  *
-  * This is the Delta/Iceberg MERGE shape (append log + txn-fenced writers +
-  * merge-on-read + compaction) with zero extra dependencies; swapping in a
-  * real table format changes no call site. CONCURRENT multi-writer commits
-  * allocate their sequence through a create-exclusive CAS ([[claimSeq]],
-  * round-6) so simultaneous writers can never share one — cross-writer LWW
-  * order is total by allocation, not by name tie-break; sequential
-  * multi-writer (checkpoint recreation, two queries one path) was already
-  * fully fenced.
-  *
-  * ADVICE-r4 resolution map (round 5): item 1 (epoch-only fence, silent
-  * data loss) → LogStoreSpec "a recreated checkpoint ... batches apply"
-  * and "two writers on one store path cannot fence each other"; item 2
-  * (non-atomic `_keys` manifest, comma-unsafe encoding) → LogStoreSpec
-  * "a crashed manifest write cannot brick the store; comma key names
-  * round-trip".
+  *  - segment `seg/<seq>__<writer>__<epoch>` (parquet), committed under the
+  *    marker of the same name; compacted segments are
+  *    `compact-<maxSeq>[-n]`, and legacy round-3/4 stores named both by the
+  *    bare epoch;
+  *  - every row stamped with its sequence and its segment name:
+  *    [[winners]] keeps per key the row of the highest (sequence, segment
+  *    name), the name breaking ties deterministically should a filesystem
+  *    without atomic create let two commits share a sequence (pinned by
+  *    LogStoreSpec "CAS violation under a non-atomic create");
+  *  - a `_keys` manifest fixing the key columns;
+  *  - fence key = writer id, by default the owning query's durable
+  *    `queryId` (stable across restarts of one checkpoint, fresh for a
+  *    recreated one). An epoch at or below the writer's high-water mark
+  *    over its live markers and `_txn` fence is a replay and is skipped;
+  *    another writer, or a recreated checkpoint restarting at epoch 0, is
+  *    never fenced by it.
   */
 object KeyedUpsertSink {
 
@@ -81,114 +41,16 @@ object KeyedUpsertSink {
   /** Per-row source-segment name (internal): deterministic LWW tie-break. */
   private val SrcCol = "__graft_src"
 
-  private val DefaultWriter = "default"
-
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def commitsDir(store: String) = new Path(s"$store/commits")
-  private def segDir(store: String)     = new Path(s"$store/seg")
-  private def txnDir(store: String)     = new Path(s"$store/_txn")
-  private def seqDir(store: String)     = new Path(s"$store/_seq")
+  private def logOf(spark: SparkSession, store: String): LwwLog =
+    new LwwLog(fsOf(spark, new Path(store)), store, "seg", identity, (_, name) => name, LwwLog.keyEpoch)
 
-  /** Atomically claim the next store sequence (round-6 VERDICT-6, the
-    * documented concurrent-writer gap): scan committed segments AND
-    * outstanding claims for the current max, then CREATE-EXCLUSIVE the
-    * claim file. A concurrent winner makes the create throw; the loser
-    * re-reads and retries above it — two simultaneous commits can never
-    * allocate one sequence, so cross-writer LWW order is total by
-    * construction (the segment-name tie-break remains only as a read-side
-    * safety net for pre-round-6 stores). A crashed writer burns its
-    * claimed number — harmless, sequences need monotonicity, not density;
-    * compaction prunes claims at or below the folded sequence. This is the
-    * Delta-LogStore CAS shape: atomic on HDFS/POSIX rename-semantics
-    * filesystems; an object-store deployment needs a conditional-put
-    * LogStore implementation, the same caveat Delta documents. The
-    * failure mode under a filesystem that violates atomic create is
-    * PINNED BY SPEC, not just prose (LogStoreSpec "CAS violation under a
-    * non-atomic create"): a duplicated sequence degrades the racing pair
-    * to the read-side segment-name tie-break — deterministic, no
-    * corruption, no cascade into later sequences.
-    *
-    * Same-PROCESS claims are additionally serialized by a JVM lock: the
-    * usual concurrent topology is several streaming queries in one Spark
-    * application, and Hadoop's LOCAL filesystem implements
-    * `create(overwrite = false)` as check-then-create, which two threads
-    * can interleave — the in-JVM lock closes that window (exactly Delta's
-    * local-LogStore arrangement); cross-process exclusivity is the
-    * filesystem's atomic create, which HDFS guarantees.
-    */
-  private val claimLock = new Object
-
-  private def claimSeq(spark: SparkSession, store: String): Long = claimLock.synchronized {
-    val fs = fsOf(spark, seqDir(store))
-    fs.mkdirs(seqDir(store))
-    var attempts = 0
-    while (attempts < 1000) {
-      val claimed = fs.listStatus(seqDir(store)).toSeq.map(_.getPath.getName)
-        .flatMap(n => try Some(n.toLong) catch { case _: NumberFormatException => None })
-      val committed = committedSegments(spark, store).flatMap(parseSeq)
-      val next = (claimed ++ committed).foldLeft(-1L)(_ max _) + 1
-      try {
-        fs.create(new Path(seqDir(store), next.toString), false).close()
-        return next
-      } catch {
-        case _: java.io.IOException => attempts += 1 // lost the race: re-read
-      }
-    }
-    sys.error(s"could not claim a commit sequence at $store after 1000 races")
-  }
-
-  /** Writer ids become path segments; keep them to a safe alphabet and make
-    * sanitized collisions impossible by appending a hash of the original.
-    */
-  private def sanitizeWriter(id: String): String = {
-    val safe = id.map(c => if (c.isLetterOrDigit || c == '-' || c == '.') c else '_')
-    if (safe == id && !id.contains("__")) safe
-    else s"${safe.replace("__", "-")}-${Integer.toHexString(id.hashCode)}"
-  }
-
-  /** Store sequence encoded in a segment/marker name: `<seq>__<writer>__
-    * <epoch>` for a normal commit (legacy round-3/4 stores used the bare
-    * epoch number, still parsed), `compact-<maxSeq>` with an optional
-    * `-<n>` uniquifier for a compacted segment.
-    */
-  private def parseSeq(name: String): Option[Long] = {
-    val core =
-      if (name.startsWith("compact-")) name.stripPrefix("compact-").takeWhile(_ != '-')
-      else name.takeWhile(_ != '_')
-    try Some(core.toLong) catch { case _: NumberFormatException => None }
-  }
-
-  /** (writer, epoch) recorded in a commit-marker or `_txn` name. */
-  private def parseWriterEpoch(name: String): Option[(String, Long)] =
-    name.split("__") match {
-      case Array(_, w, e) => try Some((w, e.toLong)) catch { case _: NumberFormatException => None }
-      case Array(w, e) => try Some((w, e.toLong)) catch { case _: NumberFormatException => None }
-      case _ => None
-    }
-
-  /** Committed segment names, by listing the commit-marker directory (the
-    * one source of truth; uncommitted segment data is invisible).
-    */
-  private def committedSegments(spark: SparkSession, store: String): Seq[String] = {
-    val fs = fsOf(spark, commitsDir(store))
-    if (!fs.exists(commitsDir(store))) Seq.empty
-    else fs.listStatus(commitsDir(store)).toSeq.map(_.getPath.getName)
-      .filter(parseSeq(_).isDefined)
-  }
-
-  /** This writer's committed high-water epoch: max over live commit markers
-    * and the `_txn` fences compaction left behind for retired markers.
-    */
-  private def writerFence(spark: SparkSession, store: String, writer: String): Option[Long] = {
-    val fs = fsOf(spark, txnDir(store))
-    val fromTxn =
-      if (!fs.exists(txnDir(store))) Seq.empty
-      else fs.listStatus(txnDir(store)).toSeq.map(_.getPath.getName)
-    val all = (committedSegments(spark, store) ++ fromTxn)
-      .flatMap(parseWriterEpoch).collect { case (`writer`, e) => e }
-    all.reduceOption(_ max _)
+  /** This writer's committed high-water epoch. */
+  private def writerFence(log: LwwLog, writer: String): Option[Long] = {
+    val live = log.markers().flatMap(log.fenceOf).collect { case (`writer`, e) => e }
+    (live ++ log.txnEpoch(writer)).maxOption
   }
 
   /** `_keys` manifest codec: one key column name per line, with `%`, `,`
@@ -247,7 +109,7 @@ object KeyedUpsertSink {
     */
   private def currentWriter(spark: SparkSession): String =
     Option(spark.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY))
-      .getOrElse(DefaultWriter)
+      .getOrElse(LwwLog.DefaultWriter)
 
   /** Append `batch` as `writerId`'s segment for `epochId` (last-writer-wins
     * on `keyCols`; rows within one batch are deduped on the key first).
@@ -257,27 +119,18 @@ object KeyedUpsertSink {
     */
   def upsert(spark: SparkSession, storePath: String, keyCols: Seq[String],
              batch: DataFrame, epochId: Long, writerId: String): Unit = {
-    val writer = sanitizeWriter(writerId)
-    if (writerFence(spark, storePath, writer).exists(epochId <= _))
+    val writer = LwwLog.sanitize(writerId)
+    val log = logOf(spark, storePath)
+    if (writerFence(log, writer).exists(epochId <= _))
       return // this writer already committed this epoch (or folded it): replay, skip
     writeKeysManifest(spark, storePath, keyCols)
-    val fs = fsOf(spark, new Path(storePath))
-    val seq = claimSeq(spark, storePath)
+    val seq = log.claim()
     val name = s"${seq}__${writer}__$epochId"
-    val seg = new Path(segDir(storePath), name)
-    val tmp = new Path(segDir(storePath), s".tmp-$name")
     batch.dropDuplicates(keyCols)
       .withColumn(SeqCol, lit(seq))
       .withColumn(SrcCol, lit(name))
-      .write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(seg, true) // uncommitted leftover from a crashed attempt
-    // Hadoop rename signals most failures by returning false, not
-    // throwing; committing a marker over a failed rename would create a
-    // committed epoch with no data and every read would fail permanently
-    require(fs.rename(tmp, seg), s"rename $tmp -> $seg failed")
-    val marker = new Path(commitsDir(storePath), name)
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, true).close() // marker last: the commit point
+      .write.mode("overwrite").parquet(log.tmpPath(name).toString)
+    log.commit(name)
   }
 
   /** Streaming-default overload: writer identity is the owning query's
@@ -293,8 +146,8 @@ object KeyedUpsertSink {
     */
   def upsert(spark: SparkSession, storePath: String, keyCols: Seq[String],
              batch: DataFrame): Unit = {
-    val writer = sanitizeWriter(currentWriter(spark))
-    val next = writerFence(spark, storePath, writer).map(_ + 1).getOrElse(0L)
+    val writer = LwwLog.sanitize(currentWriter(spark))
+    val next = writerFence(logOf(spark, storePath), writer).map(_ + 1).getOrElse(0L)
     upsert(spark, storePath, keyCols, batch, next, writer)
   }
 
@@ -303,23 +156,18 @@ object KeyedUpsertSink {
     * the key — shared by [[read]] and [[compact]] so LWW tie-breaking can
     * never diverge between them.
     *
-    * Read with `mergeSchema` (round-6 ADVICE-3): legacy bare-epoch
-    * segments (round 3/4) were written before the [[SrcCol]] stamp
-    * existed, so a mixed store's inferred schema depended on which parquet
-    * footer Spark sampled — either failing to resolve [[SrcCol]] or
-    * silently null-ordering the tie-break. Schema merging makes the column
-    * resolve whenever ANY segment has it; legacy rows surface it as null,
-    * coalesced to "" so every stamped segment deterministically outranks
-    * them at equal sequence (legacy segment names are their epoch, and two
-    * legacy segments can never share one, so "" never has to break a
-    * legacy-vs-legacy tie). An all-legacy store has no [[SrcCol]] at all —
-    * then it is injected as "".
+    * Read with `mergeSchema`: legacy bare-epoch segments (round 3/4) were
+    * written before the [[SrcCol]] stamp existed, so a mixed store's
+    * inferred schema would depend on which parquet footer Spark sampled.
+    * Schema merging resolves the column whenever ANY segment has it;
+    * legacy rows surface it as null, coalesced to "" so every stamped
+    * segment outranks them at equal sequence (two legacy segments never
+    * share one). An all-legacy store has no [[SrcCol]]: it is injected as "".
     */
-  private def winners(spark: SparkSession, storePath: String,
-                      segs: Seq[String]): DataFrame = {
-    val keyCols = readKeysManifest(spark, storePath)
+  private def winners(spark: SparkSession, log: LwwLog, segs: Seq[String]): DataFrame = {
+    val keyCols = readKeysManifest(spark, log.store)
     val raw = spark.read.option("mergeSchema", "true")
-      .parquet(segs.map(n => new Path(segDir(storePath), n).toString): _*)
+      .parquet(segs.map(log.dataPath(_).toString): _*)
     val df =
       if (!raw.columns.contains(SrcCol)) raw.withColumn(SrcCol, lit(""))
       else raw.withColumn(SrcCol, coalesce(col(SrcCol), lit("")))
@@ -335,92 +183,38 @@ object KeyedUpsertSink {
     * interrupted compaction collapse here too.
     */
   def read(spark: SparkSession, storePath: String): DataFrame = {
-    val segs = committedSegments(spark, storePath)
+    val log = logOf(spark, storePath)
+    val segs = log.markers()
     require(segs.nonEmpty, s"no committed segments at $storePath")
-    winners(spark, storePath, segs).drop(SeqCol, SrcCol)
+    winners(spark, log, segs).drop(SeqCol, SrcCol)
   }
 
-  /** Fold every committed segment into one segment of per-key winners.
-    * Winners keep their ORIGINAL stamps (LWW ordering vs segments appended
-    * later is unaffected); the compacted segment commits before its inputs
-    * are retired, so readers see a consistent store at every crash point
-    * (at worst: winners duplicated until cleanup re-runs). Each folded
-    * writer's high-water epoch is persisted to `_txn/` FIRST — retiring a
-    * commit marker erases its (writer, epoch) record, and without the
-    * `_txn` fence a crash between compaction and the streaming checkpoint
-    * commit would let `foreachBatch` re-apply a folded epoch. The output
-    * name is uniquified against the live segment set — a re-run over a
-    * crash-recovered store whose max sequence is unchanged must never
-    * reuse a committed name: it would first overwrite the committed data
-    * it is reading and then retire its own output. Run out-of-band (a
-    * maintenance job), never on the hot write path.
+  /** Fold every committed segment into one segment of per-key winners
+    * ([[LwwLog]] compaction). Run out-of-band (a maintenance job), never on
+    * the hot write path.
     */
   def compact(spark: SparkSession, storePath: String): Unit = {
-    val segs = committedSegments(spark, storePath)
-    if (segs.size <= 1) return
-    val fs = fsOf(spark, new Path(storePath))
-    // persist per-writer fences for the markers about to be retired; these
-    // record already-committed epochs, so any crash point is safe
-    val writerMax = segs.flatMap(parseWriterEpoch)
-      .groupMapReduce(_._1)(_._2)(_ max _)
-    if (writerMax.nonEmpty) fs.mkdirs(txnDir(storePath))
-    writerMax.foreach { case (w, e) =>
-      fs.create(new Path(txnDir(storePath), s"${w}__$e"), true).close()
-      // prune superseded fences for the same writer (bounds _txn size)
-      fs.listStatus(txnDir(storePath)).foreach { st =>
-        parseWriterEpoch(st.getPath.getName) match {
-          case Some((`w`, old)) if old < e => fs.delete(st.getPath, false)
-          case _ =>
-        }
-      }
-    }
-    val maxSeq = segs.flatMap(parseSeq).max
-    val base = s"compact-$maxSeq"
-    val name =
-      if (!segs.contains(base)) base
-      else Iterator.from(1).map(i => s"$base-$i").find(n => !segs.contains(n)).get
-    val tmp = new Path(segDir(storePath), s".tmp-$name")
-    val seg = new Path(segDir(storePath), name)
-    winners(spark, storePath, segs).write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(seg, true) // unreferenced leftover (no marker yet): safe
-    require(fs.rename(tmp, seg), s"rename $tmp -> $seg failed")
-    fs.create(new Path(commitsDir(storePath), name), true).close() // commit
-    // retire inputs (markers first, then data); `name` is provably not in
-    // `segs` — the uniquifier above guarantees it — so no self-retirement
-    // case exists. Replay protection for the retired epochs lives in _txn.
-    segs.foreach { n =>
-      fs.delete(new Path(commitsDir(storePath), n), false)
-      fs.delete(new Path(segDir(storePath), n), true)
-    }
-    // prune sequence claims the compacted segment now covers (its name
-    // keeps maxSeq as the allocation floor); claims above it belong to
-    // in-flight writers and stay
-    if (fs.exists(seqDir(storePath))) {
-      fs.listStatus(seqDir(storePath)).foreach { st =>
-        val keep = try st.getPath.getName.toLong > maxSeq
-        catch { case _: NumberFormatException => false }
-        if (!keep) fs.delete(st.getPath, false)
-      }
-    }
+    val log = logOf(spark, storePath)
+    log.compact((segs, tmp) => winners(spark, log, segs).write.mode("overwrite").parquet(tmp.toString))
   }
 
   /** Number of committed segments (compaction/test observability). */
   def segmentCount(spark: SparkSession, storePath: String): Int =
-    committedSegments(spark, storePath).size
+    logOf(spark, storePath).markers().size
 
   /** Rows in the committed segment `writerId` wrote for `epochId` — lets
     * tests assert per-batch write volume scales with the batch, not the
     * store.
     */
   def segmentRows(spark: SparkSession, storePath: String, epochId: Long,
-                  writerId: String = DefaultWriter): Long = {
-    val writer = sanitizeWriter(writerId)
-    val name = committedSegments(spark, storePath)
-      .find(parseWriterEpoch(_).contains((writer, epochId)))
+                  writerId: String = LwwLog.DefaultWriter): Long = {
+    val writer = LwwLog.sanitize(writerId)
+    val log = logOf(spark, storePath)
+    val name = log.markers().find(log.fenceOf(_).contains((writer, epochId)))
       .getOrElse(sys.error(s"no committed segment for writer=$writer epoch=$epochId at $storePath"))
-    spark.read.parquet(new Path(segDir(storePath), name).toString).count()
+    spark.read.parquet(log.dataPath(name).toString).count()
   }
 
   def exists(spark: SparkSession, storePath: String): Boolean =
-    committedSegments(spark, storePath).nonEmpty
+    logOf(spark, storePath).markers().nonEmpty
 }
