@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampType}
+
+import graft.sources.SnapshotStore
 
 /** Parquet table loaders for the driver testdata star schema (TESTDATA.md).
   *
@@ -21,40 +24,35 @@ object Tables {
         new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
 
   /** Parquet logical-type annotation of the `ts` column, read from one
-    * part file's FOOTER — driver-side metadata only, no Spark job — and
-    * memoized per (path, content fingerprint) so an IN-PLACE regeneration
-    * of the table mid-session re-reads the footer instead of serving the
-    * previous generation's annotation (the per-call staleness contract
-    * every snapshot family follows; a path-only memo would let a cached
-    * NANOS verdict wave through a regenerated plain-INT64 table — the
-    * exact silent misconversion the guard exists to stop). (Round-9
-    * ADVICE-1: the LongType dispatch arm below ASSUMED any INT64 `ts`
-    * was nanoseconds; the annotation distinguishes the cases exactly.)
+    * part file's FOOTER — driver-side metadata only, no Spark job. It is a
+    * fact about the same content as the schema, so [[events]] memoizes it
+    * with the schema under the table's content stamp: an IN-PLACE
+    * regeneration of the table mid-session re-reads the footer instead of
+    * serving the previous generation's annotation (a path-only memo would
+    * let a cached NANOS verdict wave through a regenerated plain-INT64
+    * table — the exact silent misconversion the guard exists to stop).
+    * (Round-9 ADVICE-1: the LongType dispatch arm below ASSUMED any INT64
+    * `ts` was nanoseconds; the annotation distinguishes the cases exactly.)
     */
-  private val tsAnnotationCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def tsAnnotation(spark: SparkSession, table: String): String = {
-    val key = table + "@" + graft.sources.SnapshotStore.fingerprint(spark, table)
-    tsAnnotationCache.computeIfAbsent(key, _ => {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val p = new org.apache.hadoop.fs.Path(table)
-      val fs = p.getFileSystem(conf)
-      val part =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).map(_.getPath)
-            .filter(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith("_") && !f.getName.startsWith("."))
-            .minBy(_.getName)
-        else p
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(part, conf))
-      try {
-        val schema = reader.getFooter.getFileMetaData.getSchema
-        if (!schema.containsField("ts")) "absent"
-        else Option(schema.getType(Seq("ts"): _*).getLogicalTypeAnnotation)
-          .map(_.toString).getOrElse("none")
-      } finally reader.close()
-    })
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(table)
+    val fs = p.getFileSystem(conf)
+    val part =
+      if (fs.getFileStatus(p).isDirectory)
+        fs.listStatus(p).map(_.getPath)
+          .filter(f => f.getName.endsWith(".parquet") &&
+            !f.getName.startsWith("_") && !f.getName.startsWith("."))
+          .minBy(_.getName)
+      else p
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(part, conf))
+    try {
+      val schema = reader.getFooter.getFileMetaData.getSchema
+      if (!schema.containsField("ts")) "absent"
+      else Option(schema.getType(Seq("ts"): _*).getLogicalTypeAnnotation)
+        .map(_.toString).getOrElse("none")
+    } finally reader.close()
   }
 
   /** `events.ts` has shipped under two physical types across testdata
@@ -74,16 +72,17 @@ object Tables {
     if (nanosReady.add(spark))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val table = s"$dir/events.parquet"
-    val raw = spark.read.parquet(table)
+    val (raw, facts) = SnapshotStore.parquet(spark, table, SnapshotStore.fingerprint(spark, table), Seq(table))(
+      schema => if (schema("ts").dataType == LongType) Seq(tsAnnotation(spark, table)) else Nil)
     raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        val ann = tsAnnotation(spark, table)
+      case LongType =>
+        val ann = facts.mkString
         require(ann.contains("NANOS"),
           s"events.ts read as INT64 but its parquet logical type is '$ann', not " +
             "TIMESTAMP(NANOS) — the ts div 1000 nanos->micros conversion would " +
             "silently misconvert it; teach Tables.events this generation's unit")
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampType => raw
+      case TimestampType => raw
       case _ =>
         val tz = spark.conf.get("spark.sql.session.timeZone")
         require(tz == "UTC",
@@ -93,13 +92,13 @@ object Tables {
         raw.withColumn("ts", col("ts").cast("timestamp"))
     }
   }
-  def documents(spark: SparkSession, dir: String): DataFrame  = spark.read.parquet(s"$dir/documents.parquet")
-  def embeddings(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(s"$dir/embeddings.parquet")
-  def lineitem(spark: SparkSession, dir: String): DataFrame   = spark.read.parquet(s"$dir/lineitem.parquet")
-  def orders(spark: SparkSession, dir: String): DataFrame     = spark.read.parquet(s"$dir/orders.parquet")
-  def customer(spark: SparkSession, dir: String): DataFrame   = spark.read.parquet(s"$dir/customer.parquet")
-  def supplier(spark: SparkSession, dir: String): DataFrame   = spark.read.parquet(s"$dir/supplier.parquet")
-  def part(spark: SparkSession, dir: String): DataFrame       = spark.read.parquet(s"$dir/part.parquet")
-  def nation(spark: SparkSession, dir: String): DataFrame     = spark.read.parquet(s"$dir/nation.parquet")
-  def region(spark: SparkSession, dir: String): DataFrame     = spark.read.parquet(s"$dir/region.parquet")
+  def documents(spark: SparkSession, dir: String): DataFrame  = SnapshotStore.parquet(spark, s"$dir/documents.parquet")
+  def embeddings(spark: SparkSession, dir: String): DataFrame = SnapshotStore.parquet(spark, s"$dir/embeddings.parquet")
+  def lineitem(spark: SparkSession, dir: String): DataFrame   = SnapshotStore.parquet(spark, s"$dir/lineitem.parquet")
+  def orders(spark: SparkSession, dir: String): DataFrame     = SnapshotStore.parquet(spark, s"$dir/orders.parquet")
+  def customer(spark: SparkSession, dir: String): DataFrame   = SnapshotStore.parquet(spark, s"$dir/customer.parquet")
+  def supplier(spark: SparkSession, dir: String): DataFrame   = SnapshotStore.parquet(spark, s"$dir/supplier.parquet")
+  def part(spark: SparkSession, dir: String): DataFrame       = SnapshotStore.parquet(spark, s"$dir/part.parquet")
+  def nation(spark: SparkSession, dir: String): DataFrame     = SnapshotStore.parquet(spark, s"$dir/nation.parquet")
+  def region(spark: SparkSession, dir: String): DataFrame     = SnapshotStore.parquet(spark, s"$dir/region.parquet")
 }

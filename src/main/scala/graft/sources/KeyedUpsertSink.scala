@@ -151,23 +151,28 @@ object KeyedUpsertSink {
     upsert(spark, storePath, keyCols, batch, next, writer)
   }
 
-  /** Per-key winners of the union of `segs`: the row of the highest
-    * (sequence, source-segment) stamp, keeping its stamps. One shuffle on
-    * the key — shared by [[read]] and [[compact]] so LWW tie-breaking can
-    * never diverge between them.
+  /** Per-key winners of the union of the segments `segs` (markers with
+    * their modification times): the row of the highest (sequence,
+    * source-segment) stamp, keeping its stamps. One shuffle on the key —
+    * shared by [[read]] and [[compact]] so LWW tie-breaking can never
+    * diverge between them.
     *
-    * Read with `mergeSchema`: legacy bare-epoch segments (round 3/4) were
-    * written before the [[SrcCol]] stamp existed, so a mixed store's
-    * inferred schema would depend on which parquet footer Spark sampled.
-    * Schema merging resolves the column whenever ANY segment has it;
-    * legacy rows surface it as null, coalesced to "" so every stamped
-    * segment outranks them at equal sequence (two legacy segments never
-    * share one). An all-legacy store has no [[SrcCol]]: it is injected as "".
+    * The schema and the `_keys` manifest are resolved once per committed
+    * marker set ([[SnapshotStore.parquet]]): a new commit or a compaction
+    * changes the set, so a widened schema shows on the next read, and an
+    * unchanged store is read without an inference job or a manifest read.
+    * The inference reads with `mergeSchema`: legacy bare-epoch segments
+    * (round 3/4) were written before the [[SrcCol]] stamp existed, so a
+    * mixed store's inferred schema would depend on which parquet footer
+    * Spark sampled. Schema merging resolves the column whenever ANY
+    * segment has it; legacy rows surface it as null, coalesced to "" so
+    * every stamped segment outranks them at equal sequence (two legacy
+    * segments never share one). An all-legacy store has no [[SrcCol]]: it
+    * is injected as "".
     */
-  private def winners(spark: SparkSession, log: LwwLog, segs: Seq[String]): DataFrame = {
-    val keyCols = readKeysManifest(spark, log.store)
-    val raw = spark.read.option("mergeSchema", "true")
-      .parquet(segs.map(log.dataPath(_).toString): _*)
+  private def winners(spark: SparkSession, log: LwwLog, segs: Seq[(String, Long)]): DataFrame = {
+    val (raw, keyCols) = SnapshotStore.parquet(spark, log.store, segs.sorted.mkString(","),
+      segs.map(s => log.dataPath(s._1).toString), mergeSchema = true)(_ => readKeysManifest(spark, log.store))
     val df =
       if (!raw.columns.contains(SrcCol)) raw.withColumn(SrcCol, lit(""))
       else raw.withColumn(SrcCol, coalesce(col(SrcCol), lit("")))
@@ -184,7 +189,7 @@ object KeyedUpsertSink {
     */
   def read(spark: SparkSession, storePath: String): DataFrame = {
     val log = logOf(spark, storePath)
-    val segs = log.markers()
+    val segs = log.markerTimes()
     require(segs.nonEmpty, s"no committed segments at $storePath")
     winners(spark, log, segs).drop(SeqCol, SrcCol)
   }
@@ -195,7 +200,11 @@ object KeyedUpsertSink {
     */
   def compact(spark: SparkSession, storePath: String): Unit = {
     val log = logOf(spark, storePath)
-    log.compact((segs, tmp) => winners(spark, log, segs).write.mode("overwrite").parquet(tmp.toString))
+    log.compact { (segs, tmp) =>
+      val live = segs.toSet
+      winners(spark, log, log.markerTimes().filter(m => live(m._1)))
+        .write.mode("overwrite").parquet(tmp.toString)
+    }
   }
 
   /** Number of committed segments (compaction/test observability). */

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.{FileNotFoundException, IOException}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** The last-writer-wins (LWW) commit log behind both keyed sinks: the
   * columnar [[KeyedUpsertSink]] (`foreachBatch`) and the row-level
@@ -70,9 +70,11 @@ private[graft] final class LwwLog(val fs: FileSystem, val store: String, dataDir
   private val seqDir = new Path(store, "_seq")
   private val txnDir = new Path(store, "_txn")
 
-  private def names(dir: Path): Seq[String] =
-    try fs.listStatus(dir).toSeq.map(_.getPath.getName)
+  private def statuses(dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq
     catch { case _: FileNotFoundException => Seq.empty }
+
+  private def names(dir: Path): Seq[String] = statuses(dir).map(_.getPath.getName)
 
   /** Creates the commit directory, so a store nothing committed to yet
     * lists as empty.
@@ -81,6 +83,13 @@ private[graft] final class LwwLog(val fs: FileSystem, val store: String, dataDir
 
   /** Live commit markers. */
   def markers(): Seq[String] = names(commitsDir)
+
+  /** Live commit markers with their modification times: a content stamp
+    * of the committed data, which a store recreated at the same path under
+    * reused marker names does not share.
+    */
+  def markerTimes(): Seq[(String, Long)] =
+    statuses(commitsDir).map(st => st.getPath.getName -> st.getModificationTime)
 
   def dataPath(marker: String): Path = new Path(entryDir, dataName(marker))
 

@@ -4,7 +4,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Commit protocol for DERIVED per-snapshot tables (the persisted IVF index,
   * the dedup sketch family): a build writes its parquet tables under one
@@ -54,6 +55,9 @@ import org.apache.spark.sql.SparkSession
   * Each family owns its own memo: a build may call another family's `get`
   * (a composed answer over already-persisted families), and a nested
   * `compute` on one shared map would fail with a recursive update.
+  *
+  * SOURCE reads use the same content stamps: [[parquet]] infers a table's
+  * or a store's schema once per stamp instead of on every read.
   */
 object SnapshotStore {
 
@@ -123,6 +127,51 @@ object SnapshotStore {
     }
     f"${q.toString.hashCode}%08x-$count-$len-$mtime"
   }
+
+  /** Resolved parquet schemas, one entry per table path or store directory:
+    * `key -> (stamp, schema, facts)`. Inferring a schema runs a Spark job
+    * (a footer read, merged across files under `mergeSchema`), and the
+    * relation it yields cannot be shared: a reused DataFrame would alias
+    * its expression ids in a self-join. So only the schema is kept, and
+    * every call builds a fresh relation from it. No DataFrame or session
+    * is held.
+    */
+  private val schemas = new ConcurrentHashMap[String, (String, StructType, Seq[String])]()
+
+  /** A parquet relation over `paths` whose schema is inferred once per
+    * content stamp. `content` stamps the files (a [[fingerprint]], a
+    * store's committed marker set); every `spark.sql.parquet.*` and
+    * `spark.sql.legacy.parquet.*` conf the session has set joins it,
+    * since they change how a footer maps to a schema. While the stamp
+    * matches `key`'s entry the relation is read with the memoized schema,
+    * which runs no job; otherwise the schema is inferred by a plain read
+    * and memoized with `facts(schema)`, small facts about the same content
+    * (a store's key columns, a footer annotation), returned with the
+    * relation. A hit returns the facts stored under `key`, so each key has
+    * one caller: a table path is read by its one `Tables` loader, a store
+    * directory by `KeyedUpsertSink`.
+    */
+  def parquet(spark: SparkSession, key: String, content: String, paths: Seq[String],
+              mergeSchema: Boolean = false)(facts: StructType => Seq[String]): (DataFrame, Seq[String]) = {
+    val stamp = content + spark.conf.getAll.toSeq
+      .filter { case (k, _) => k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") }
+      .sorted.mkString("|", ",", "")
+    schemas.get(key) match {
+      case (`stamp`, schema, known) => (spark.read.schema(schema).parquet(paths: _*), known)
+      case _ =>
+        val reader = if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
+        val df = reader.parquet(paths: _*)
+        val known = facts(df.schema)
+        schemas.put(key, (stamp, df.schema, known))
+        (df, known)
+    }
+  }
+
+  /** The parquet table at `path`, its schema inferred once per
+    * [[fingerprint]].
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    parquet(spark, path, fingerprint(spark, path), Seq(path))(_ => Nil)._1
 
   /** True iff ANY path component of `file` strictly below `root` is hidden
     * (`.`/`_` prefixed). `listFiles(recursive = true)` descends into hidden
