@@ -399,37 +399,36 @@ object TextAnalysis {
     * delta dirs are served (meta, written last, is the epoch's commit
     * marker) — a torn epoch is invisible rather than a thrown
     * missing-path error or an under-counted df/n_total, and becomes
-    * visible when its replay overwrites all three. The epoch filter is
-    * partition-pruned; the listing is a driver-side dir stat.
+    * visible when its replay overwrites all three. Only the committed
+    * epoch dirs are read; the listing is a driver-side dir stat.
     */
   def grownSearchIndex(spark: org.apache.spark.sql.SparkSession,
                        baseDir: String, postingsDeltaDir: String,
                        lexiconDeltaDir: String,
                        metaDeltaDir: String): SearchIndex = {
+    val committed = Seq(postingsDeltaDir, lexiconDeltaDir, metaDeltaDir)
+      .map(d => graft.streaming.EpochService.epochs(spark, d).toSet)
+      .reduce(_ intersect _)
+    grownSearchIndexOf(spark, baseDir, postingsDeltaDir, lexiconDeltaDir,
+      metaDeltaDir, committed)
+  }
+
+  /** [[grownSearchIndex]] over exactly the delta epochs `epochs` — the
+    * compaction fold, which must read the epochs it lists and no other.
+    */
+  private[graft] def grownSearchIndexOf(spark: org.apache.spark.sql.SparkSession,
+                                        baseDir: String, postingsDeltaDir: String,
+                                        lexiconDeltaDir: String, metaDeltaDir: String,
+                                        epochs: Set[Long]): SearchIndex = {
+    import graft.streaming.EpochService.{read, withDeltas}
     val base = loadSearchIndex(spark, baseDir)
-    def epochsIn(dir: String): Set[Long] = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
-        .collect { case s if s.startsWith("epoch=") =>
-          s.stripPrefix("epoch=").toLong }.toSet
-    }
-    val committed = epochsIn(postingsDeltaDir)
-      .intersect(epochsIn(lexiconDeltaDir))
-      .intersect(epochsIn(metaDeltaDir))
-    if (committed.isEmpty) base
-    else {
-      val keep = col("epoch").isInCollection(committed)
-      SearchIndex(
-        postings = base.postings.unionByName(
-          spark.read.parquet(postingsDeltaDir).filter(keep).drop("epoch")),
-        lexicon = base.lexicon.unionByName(
-            spark.read.parquet(lexiconDeltaDir).filter(keep).drop("epoch"))
-          .groupBy("tok").agg(sum("df").as("df")),
-        nTotal = base.nTotal + spark.read.parquet(metaDeltaDir).filter(keep)
-          .agg(sum("n_total")).head().getLong(0))
-    }
+    if (epochs.isEmpty) base
+    else SearchIndex(
+      postings = withDeltas(spark, base.postings, postingsDeltaDir, epochs),
+      lexicon = withDeltas(spark, base.lexicon, lexiconDeltaDir, epochs)
+        .groupBy("tok").agg(sum("df").as("df")),
+      nTotal = base.nTotal + read(spark, metaDeltaDir, epochs)
+        .fold(0L)(_.agg(sum("n_total")).head().getLong(0)))
   }
 
   /** [[keywordSearch]] served from a persisted index — identical scoring

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
@@ -18,10 +18,7 @@ import graft.operators.Similarity
   * cost is candidate-bounded exactly like the registry serve path. No
   * state accumulates across batches — the snapshot is read-only, so this
   * stream scales horizontally by queries/second alone.
-  *
-  * Effectively-once: per-epoch `epoch=<N>` overwrite directories, the
-  * [[CrawlDedup]] idempotence discipline — a crash-replayed micro-batch
-  * overwrites its own previous partial output instead of duplicating it.
+  * Effectively-once per [[EpochService]].
   */
 object AnnStream {
 
@@ -32,15 +29,9 @@ object AnnStream {
   def start(queries: DataFrame, snapshotDir: String, outDir: String,
             k: Int = 10,
             checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = queries.sparkSession
-    val snap = Similarity.loadAnnServe(spark, snapshotDir)
-    queries.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), snap, outDir, epoch, k)
-      }
-      .start()
+    val snap = Similarity.loadAnnServe(queries.sparkSession, snapshotDir)
+    EpochService.start(queries, outDir, checkpointDir)(
+      runBatch(_, snap, outDir, _, k))
   }
 
   /** One micro-batch (factored out so batch specs can drive it directly).
@@ -50,6 +41,7 @@ object AnnStream {
     */
   def runBatch(batch: DataFrame, snap: Similarity.AnnServeTables,
                outDir: String, epoch: Long, k: Int = 10): Unit =
-    Similarity.quantizedTopKForQueries(batch, snap, k, excludeSelf = false)
-      .write.mode("overwrite").parquet(s"$outDir/topk/epoch=$epoch")
+    EpochService.write(
+      Similarity.quantizedTopKForQueries(batch, snap, k, excludeSelf = false),
+      outDir, "topk", epoch)
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Passage
@@ -28,8 +27,8 @@ import graft.operators.Passage
   * ordering instead of a read-side guard because two tables joined by
   * inner semantics need no third).
   *
-  * Effectively-once: epoch-overwrite replay ([[CrawlDedup]]'s argument);
-  * a batch reads nothing but itself — chunk/embed/band are narrow
+  * Effectively-once per [[EpochService]]; a batch reads nothing but
+  * itself — chunk/embed/band are narrow
   * projections — so a replay cannot self-match anything. Streamed
   * doc_ids share the corpus id space and must not collide with base ids
   * (the [[IndexStream]] contract: the crawl allocates fresh ids).
@@ -48,14 +47,8 @@ object ChunkStream {
             maxTokens: Int = 32, overlap: Int = 8, dims: Int = 16,
             nbits: Int = 16, bandBits: Int = 4,
             checkpointDir: Option[String] = None): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), outDir, epoch, maxTokens, overlap, dims,
-          nbits, bandBits)
-      }
-      .start()
+    EpochService.start(docs, outDir, checkpointDir)(
+      runBatch(_, outDir, _, maxTokens, overlap, dims, nbits, bandBits))
 
   /** One micro-batch (factored out so batch specs can drive it directly):
     * chunk + embed the batch, write its vector delta, then derive and
@@ -65,21 +58,13 @@ object ChunkStream {
   def runBatch(batch: DataFrame, outDir: String, epoch: Long,
                maxTokens: Int = 32, overlap: Int = 8, dims: Int = 16,
                nbits: Int = 16, bandBits: Int = 4): Unit = {
-    val spark = batch.sparkSession
-    Passage.chunkVectors(batch, maxTokens, overlap, dims)
-      .write.mode("overwrite").parquet(s"$outDir/vectors_delta/epoch=$epoch")
-    Passage.chunkBands(
-        spark.read.parquet(s"$outDir/vectors_delta/epoch=$epoch"),
-        nbits, bandBits, dims)
-      .write.mode("overwrite").parquet(s"$outDir/bands_delta/epoch=$epoch")
-  }
-
-  private def existing(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).exists(_.isDirectory))
-      Some(spark.read.parquet(dir).drop("epoch"))
-    else None
+    val vectors = EpochService.write(
+      Passage.chunkVectors(batch, maxTokens, overlap, dims),
+      outDir, "vectors_delta", epoch)
+    EpochService.write(
+      Passage.chunkBands(batch.sparkSession.read.parquet(vectors),
+        nbits, bandBits, dims),
+      outDir, "bands_delta", epoch)
   }
 
   /** The GROWN passage tables: base ∪ epoch deltas (merge-on-read), fed
@@ -91,50 +76,46 @@ object ChunkStream {
     */
   def grownTables(spark: SparkSession, base: Passage.PassageTables,
                   outDir: String): Passage.PassageTables =
-    Passage.PassageTables(
-      vectors = existing(spark, s"$outDir/vectors_delta")
-        .map(base.vectors.unionByName(_)).getOrElse(base.vectors),
-      bands = existing(spark, s"$outDir/bands_delta")
-        .map(base.bands.unionByName(_)).getOrElse(base.bands),
-      topk = base.topk, liTopk = base.liTopk, distill = base.distill)
+    grown(spark, base, outDir, _ => true)
+
+  private def grown(spark: SparkSession, base: Passage.PassageTables,
+                    outDir: String, keep: Long => Boolean): Passage.PassageTables =
+    base.copy(
+      vectors = EpochService.withDeltas(spark, base.vectors,
+        s"$outDir/vectors_delta", keep),
+      bands = EpochService.withDeltas(spark, base.bands,
+        s"$outDir/bands_delta", keep))
 
   /** COMPACTION — fold the base family + epoch deltas into a NEW
     * committed family dir: vectors and bands union-fold, and the
     * default-parameter `topk` answer is RE-DERIVED from the folded
     * tables, as is the MaxSim default (both must reflect the grown
-    * corpus — the derived members).
-    * Commit-before-delete; stop the stream first and restart it against
-    * `newBaseDir` ([[CrawlDedup.compact]]'s stale-base argument).
+    * corpus — the derived members). Guard, commit and delete are
+    * [[EpochService.compact]]'s; stop the stream first and restart it
+    * against `newBaseDir` ([[CrawlDedup.compact]]'s stale-base argument).
     */
   def compact(spark: SparkSession, baseDir: String, outDir: String,
               newBaseDir: String, stamp: String = "compact",
               numQueries: Int = 5, k: Int = 10, maxPerDoc: Int = 2,
-              checkpointDir: Option[String] = None): Unit = {
-    // refuse under a live stream (round-13 verdict 2; see CrawlDedup)
-    StreamGuard.requireStopped(spark,
-      checkpointDir.getOrElse(s"$outDir/_checkpoint"), "ChunkStream.compact")
-    val base = Passage.loadPassage(spark, baseDir)
-    val grown = grownTables(spark, base, outDir)
-    grown.vectors.write.mode("overwrite").parquet(s"$newBaseDir/vectors")
-    grown.bands.write.mode("overwrite").parquet(s"$newBaseDir/bands")
-    // read-back staging (loadPassage would demand the not-yet-written topk)
-    Passage.passageTopKServeFrom(
-        spark.read.parquet(s"$newBaseDir/vectors"),
-        spark.read.parquet(s"$newBaseDir/bands"),
-        numQueries, k, maxPerDoc)
-      .write.mode("overwrite").parquet(s"$newBaseDir/topk")
-    Passage.lateInteractionTopK(
-        spark.read.parquet(s"$newBaseDir/vectors"),
-        spark.read.parquet(s"$newBaseDir/bands"), numQueries, k)
-      .write.mode("overwrite").parquet(s"$newBaseDir/li_topk")
-    Passage.distillPairs(
-        spark.read.parquet(s"$newBaseDir/vectors"),
-        spark.read.parquet(s"$newBaseDir/topk"))
-      .write.mode("overwrite").parquet(s"$newBaseDir/distill")
-    graft.sources.SnapshotStore.commit(spark, newBaseDir, stamp)
-    Seq("vectors_delta", "bands_delta").foreach { d =>
-      val dp = new Path(s"$outDir/$d")
-      dp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dp, true)
+              checkpointDir: Option[String] = None): Unit =
+    EpochService.compact(spark, "ChunkStream.compact", outDir, checkpointDir,
+        Seq("vectors_delta", "bands_delta"), newBaseDir, stamp) { epochs =>
+      val folded = grown(spark, Passage.loadPassage(spark, baseDir), outDir, epochs)
+      folded.vectors.write.mode("overwrite").parquet(s"$newBaseDir/vectors")
+      folded.bands.write.mode("overwrite").parquet(s"$newBaseDir/bands")
+      // read-back staging (loadPassage would demand the not-yet-written topk)
+      Passage.passageTopKServeFrom(
+          spark.read.parquet(s"$newBaseDir/vectors"),
+          spark.read.parquet(s"$newBaseDir/bands"),
+          numQueries, k, maxPerDoc)
+        .write.mode("overwrite").parquet(s"$newBaseDir/topk")
+      Passage.lateInteractionTopK(
+          spark.read.parquet(s"$newBaseDir/vectors"),
+          spark.read.parquet(s"$newBaseDir/bands"), numQueries, k)
+        .write.mode("overwrite").parquet(s"$newBaseDir/li_topk")
+      Passage.distillPairs(
+          spark.read.parquet(s"$newBaseDir/vectors"),
+          spark.read.parquet(s"$newBaseDir/topk"))
+        .write.mode("overwrite").parquet(s"$newBaseDir/distill")
     }
-  }
 }

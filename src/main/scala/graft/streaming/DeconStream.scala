@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
@@ -22,8 +21,8 @@ import graft.operators.Dedup
   * exact collision counts (the quarantine a decon review reads);
   * everything else — non-candidates and candidates the exact verify
   * cleared — lands under `clean/` unchanged. Every input row lands in
-  * exactly one output; both epoch-partitioned overwrite parquet
-  * (idempotent replay).
+  * exactly one output; both `epoch=<N>` parquet (effectively-once per
+  * [[EpochService]]).
   *
   * The bitmap and the benchmark gram set are FROZEN at stream start (the
   * [[CrawlDedup]] captured-base contract): a benchmark-suite update means
@@ -38,13 +37,8 @@ object DeconStream {
   def start(docs: DataFrame, benchmark: DataFrame, outDir: String, n: Int = 5,
             checkpointDir: Option[String] = None): StreamingQuery = {
     val bitmap = Dedup.bloomBitmap(benchmark, n).localCheckpoint()
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), bitmap, benchmark, outDir, epoch, n)
-      }
-      .start()
+    EpochService.start(docs, outDir, checkpointDir)(
+      runBatch(_, bitmap, benchmark, outDir, _, n))
   }
 
   /** One micro-batch (factored out so batch specs can drive it
@@ -52,15 +46,15 @@ object DeconStream {
     * only → quarantine/clean split under `epoch=<N>`.
     */
   def runBatch(batch: DataFrame, bitmap: DataFrame, benchmark: DataFrame,
-               outDir: String, epoch: Long, n: Int = 5): Unit = {
-    val delta = batch.localCheckpoint()
-    val contaminated = Dedup.contamination(
+               outDir: String, epoch: Long, n: Int = 5): Unit =
+    EpochService.barriers { keep =>
+      val delta = keep(batch)
+      val contaminated = keep(Dedup.contamination(
         Dedup.bloomCandidates(delta, bitmap, n).drop("n_bloom_hits"),
-        benchmark, n)
-      .localCheckpoint()
-    contaminated
-      .write.mode("overwrite").parquet(s"$outDir/contaminated/epoch=$epoch")
-    delta.join(contaminated.select("doc_id"), Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$outDir/clean/epoch=$epoch")
-  }
+        benchmark, n))
+      EpochService.write(contaminated, outDir, "contaminated", epoch)
+      EpochService.write(
+        delta.join(contaminated.select("doc_id"), Seq("doc_id"), "left_anti"),
+        outDir, "clean", epoch)
+    }
 }

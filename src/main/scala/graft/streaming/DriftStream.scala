@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -23,8 +23,7 @@ import graft.operators.Corpus
   * three map-side-combined share aggregations plus one dimension-sized
   * join — per-batch cost ∝ batch rows, reference cost zero. Epoch rows
   * (dim, total_variation, n_keys, drifted) land under
-  * `outDir/drift/epoch=N`, overwrite-idempotent under replay like every
-  * epoch-partitioned sibling.
+  * `outDir/drift/epoch=N`, effectively-once per [[EpochService]].
   *
   * The TV-vs-threshold flag is per DIMENSION: a batch can be
   * language-stable yet source-drifted, and the consumer (an alerting
@@ -47,15 +46,9 @@ object DriftStream {
   def start(docs: DataFrame, refSharesDir: String, outDir: String,
             threshold: Double = 0.5, lenBucketChars: Int = 100,
             checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = docs.sparkSession
-    val ref = spark.read.parquet(refSharesDir)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), ref, outDir, epoch, threshold, lenBucketChars)
-      }
-      .start()
+    val ref = docs.sparkSession.read.parquet(refSharesDir)
+    EpochService.start(docs, outDir, checkpointDir)(
+      runBatch(_, ref, outDir, _, threshold, lenBucketChars))
   }
 
   /** One micro-batch (factored out so batch specs can drive it
@@ -65,22 +58,19 @@ object DriftStream {
   def runBatch(batch: DataFrame, refShares: DataFrame, outDir: String,
                epoch: Long, threshold: Double = 0.5,
                lenBucketChars: Int = 100): Unit = {
-    if (!batch.isEmpty) {
-      Corpus.driftBetween(refShares, Corpus.shareCard(batch, lenBucketChars))
-        .withColumn("drifted", col("total_variation") > lit(threshold))
-        .write.mode("overwrite").parquet(s"$outDir/drift/epoch=$epoch")
-    }
+    if (!batch.isEmpty)
+      EpochService.write(
+        Corpus.driftBetween(refShares, Corpus.shareCard(batch, lenBucketChars))
+          .withColumn("drifted", col("total_variation") > lit(threshold)),
+        outDir, "drift", epoch)
   }
 
   /** The accumulated drift log (all epochs) — what a dashboard or an
     * alert consumer scans. Empty frame when no epoch has fired.
     */
-  def driftLog(spark: SparkSession, outDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/drift")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).nonEmpty) spark.read.parquet(p.toString)
-    else spark.range(0).select(lit("").as("dim"),
-      lit(0.0).as("total_variation"), lit(0L).as("n_keys"),
-      lit(false).as("drifted"), lit(0L).as("epoch"))
-  }
+  def driftLog(spark: SparkSession, outDir: String): DataFrame =
+    EpochService.read(spark, s"$outDir/drift").getOrElse(
+      spark.range(0).select(lit("").as("dim"),
+        lit(0.0).as("total_variation"), lit(0L).as("n_keys"),
+        lit(false).as("drifted"), lit(0L).as("epoch")))
 }

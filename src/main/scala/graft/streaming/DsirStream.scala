@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -11,9 +11,8 @@ import graft.operators.Corpus
   * micro-batch by [[Corpus.dsirWeightsFrom]] against a FROZEN
   * [[Corpus.persistDsirModel]]-ed importance model and split at a weight
   * threshold into `selected/` (target-like, kept for the training mix)
-  * and `rejected/` (audit rows with their weights) — both
-  * epoch-partitioned overwrite parquet, the [[CrawlDedup]]
-  * idempotent-replay discipline.
+  * and `rejected/` (audit rows with their weights) — both `epoch=<N>`
+  * parquet, effectively-once per [[EpochService]].
   *
   * The importance model is deliberately NOT re-estimated per batch:
   * weights must be commensurable across the stream's lifetime (the
@@ -53,18 +52,12 @@ object DsirStream {
   def start(docs: DataFrame, modelDir: String, outDir: String,
             threshold: Double = Double.NaN,
             checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = docs.sparkSession
-    val model = Corpus.loadDsirModel(spark, modelDir)
+    val model = Corpus.loadDsirModel(docs.sparkSession, modelDir)
     val gate =
       if (threshold.isNaN) math.nextUp(Corpus.dsirOovFloor(model))
       else threshold
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), model, outDir, epoch, gate)
-      }
-      .start()
+    EpochService.start(docs, outDir, checkpointDir)(
+      runBatch(_, model, outDir, _, gate))
   }
 
   /** One micro-batch (factored out so batch specs can drive it directly):
@@ -85,25 +78,18 @@ object DsirStream {
     val gate =
       if (threshold.isNaN) math.nextUp(Corpus.dsirOovFloor(model))
       else threshold
-    // barrier: the batch feeds scoring AND the audit join — persist (not
-    // localCheckpoint: its blocks are only reclaimed when the
-    // ContextCleaner GCs the RDD, so a long-running stream would
-    // accumulate executor storage) so a real source (kafka) is not
-    // re-read per consumer, and RELEASE both frames once the epoch's two
-    // writes are down
-    val delta = batch.persist()
-    val scored = delta.join(
-      Corpus.dsirWeightsFrom(model, delta).select("doc_id", "dsir_weight"),
-      Seq("doc_id"), "left")
-      .persist() // scoring runs once, not once per output side
-    try {
-      scored.filter(col("dsir_weight") >= gate)
-        .write.mode("overwrite").parquet(s"$outDir/selected/epoch=$epoch")
-      scored.filter(col("dsir_weight").isNull || col("dsir_weight") < gate)
-        .write.mode("overwrite").parquet(s"$outDir/rejected/epoch=$epoch")
-    } finally {
-      scored.unpersist()
-      delta.unpersist()
+    EpochService.barriers { keep =>
+      // barrier: the batch feeds scoring AND the audit join, so a real
+      // source (kafka) is not re-read per consumer
+      val delta = keep(batch)
+      val scored = keep(delta.join( // scoring runs once, not per output side
+        Corpus.dsirWeightsFrom(model, delta).select("doc_id", "dsir_weight"),
+        Seq("doc_id"), "left"))
+      EpochService.write(scored.filter(col("dsir_weight") >= gate),
+        outDir, "selected", epoch)
+      EpochService.write(
+        scored.filter(col("dsir_weight").isNull || col("dsir_weight") < gate),
+        outDir, "rejected", epoch)
     }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -23,10 +22,8 @@ import graft.operators.Similarity
   * DISTINCT vectors (both sides rep-collapsed in the kernel). No driver
   * state accumulates.
   *
-  * Effectively-once: every per-epoch output is an `epoch=<N>` directory
-  * with mode=overwrite — a replayed micro-batch overwrites its own
-  * partial output ([[CrawlDedup]]'s idempotence argument), and the
-  * strictly-earlier-epoch index filter keeps a replay from self-matching.
+  * Effectively-once per [[EpochService]]: the strictly-earlier-epoch
+  * index filter keeps a replay from self-matching.
   *
   * Policy ([[CrawlDedup]]'s, verbatim on vectors): a delta vector within
   * `threshold` cosine of the corpus (or an earlier batch) — exact or
@@ -47,44 +44,34 @@ object EmbedDedup {
   def start(vecs: DataFrame, baseIndexDir: String, outDir: String,
             threshold: Double = 0.4, dim: Int = 64,
             checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = vecs.sparkSession
-    val base = spark.read.parquet(baseIndexDir)
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), base, outDir, epoch, threshold, dim)
-      }
-      .start()
+    val base = vecs.sparkSession.read.parquet(baseIndexDir)
+    EpochService.start(vecs, outDir, checkpointDir)(
+      runBatch(_, base, outDir, _, threshold, dim))
   }
 
   /** One micro-batch (factored out so batch specs can drive it directly):
     * dedup `batch` against base index + strictly-earlier index deltas,
     * write clean vectors, dup pairs, and the clean vectors' index rows
-    * under `epoch=<N>` dirs. Per-batch frames persist/unpersist (not
-    * localCheckpoint — its blocks wait on GC; the [[DsirStream]] rule).
+    * under `epoch=<N>` dirs.
     */
   def runBatch(batch: DataFrame, baseIndex: DataFrame, outDir: String,
-               epoch: Long, threshold: Double = 0.4, dim: Int = 64): Unit = {
-    val spark = batch.sparkSession
-    val grown = indexWithDeltas(spark, baseIndex, s"$outDir/index_delta", epoch)
-    // barrier: the batch feeds the pair join AND the anti-join
-    val delta = batch.persist()
-    try {
-      val pairs = Similarity.annDedupDelta(grown, delta, threshold, dim = dim)
-        .persist()
-      try {
-        pairs.write.mode("overwrite").parquet(s"$outDir/pairs/epoch=$epoch")
-        val dupIds = pairs.select(col("delta_id").as("vec_id")).distinct()
-        delta.join(dupIds, Seq("vec_id"), "left_anti")
-          .write.mode("overwrite").parquet(s"$outDir/clean/epoch=$epoch")
-        // surviving vectors enter the corpus: index rows from the
-        // READ-BACK clean table (staging discipline)
-        Similarity.buildAnnIndex(spark.read.parquet(s"$outDir/clean/epoch=$epoch"))
-          .write.mode("overwrite").parquet(s"$outDir/index_delta/epoch=$epoch")
-      } finally pairs.unpersist()
-    } finally delta.unpersist()
-  }
+               epoch: Long, threshold: Double = 0.4, dim: Int = 64): Unit =
+    EpochService.barriers { keep =>
+      val spark = batch.sparkSession
+      val grown = EpochService.withDeltas(spark, baseIndex,
+        s"$outDir/index_delta", _ < epoch)
+      // barrier: the batch feeds the pair join AND the anti-join
+      val delta = keep(batch)
+      val pairs = keep(Similarity.annDedupDelta(grown, delta, threshold, dim = dim))
+      EpochService.write(pairs, outDir, "pairs", epoch)
+      val dupIds = pairs.select(col("delta_id").as("vec_id")).distinct()
+      val clean = EpochService.write(
+        delta.join(dupIds, Seq("vec_id"), "left_anti"), outDir, "clean", epoch)
+      // surviving vectors enter the corpus: index rows from the
+      // READ-BACK clean table (staging discipline)
+      EpochService.write(Similarity.buildAnnIndex(spark.read.parquet(clean)),
+        outDir, "index_delta", epoch)
+    }
 
   /** COMPACTION — [[CrawlDedup.compact]]'s contract verbatim on the
     * vector side: fold base + epoch deltas into a new committed base,
@@ -97,31 +84,11 @@ object EmbedDedup {
     */
   def compact(spark: SparkSession, baseIndexDir: String, outDir: String,
               newBaseDir: String, stamp: String = "compact",
-              checkpointDir: Option[String] = None): Unit = {
-    // refuse under a live stream (round-13 verdict 2; see CrawlDedup)
-    StreamGuard.requireStopped(spark,
-      checkpointDir.getOrElse(s"$outDir/_checkpoint"), "EmbedDedup.compact")
-    val deltaDir = s"$outDir/index_delta"
-    indexWithDeltas(spark, spark.read.parquet(baseIndexDir), deltaDir,
-        beforeEpoch = Long.MaxValue)
-      .write.mode("overwrite").parquet(s"$newBaseDir/index")
-    graft.sources.SnapshotStore.commit(spark, newBaseDir, stamp)
-    val fs = new Path(deltaDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(deltaDir), true)
-  }
-
-  /** Base index unioned with strictly-earlier per-epoch index deltas —
-    * [[CrawlDedup.indexWithDeltas]]'s replay-safety argument verbatim: a
-    * crashed-and-replayed batch must not find ITS OWN rows in the corpus.
-    */
-  private def indexWithDeltas(spark: SparkSession, base: DataFrame,
-                              deltaDir: String, beforeEpoch: Long): DataFrame = {
-    val p = new Path(deltaDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).exists(_.isDirectory))
-      base.unionByName(spark.read.parquet(deltaDir)
-        .filter(col("epoch") < beforeEpoch).drop("epoch"))
-    else base
-  }
+              checkpointDir: Option[String] = None): Unit =
+    EpochService.compact(spark, "EmbedDedup.compact", outDir, checkpointDir,
+        Seq("index_delta"), newBaseDir, stamp) { epochs =>
+      EpochService.withDeltas(spark, spark.read.parquet(baseIndexDir),
+          s"$outDir/index_delta", epochs)
+        .write.mode("overwrite").parquet(s"$newBaseDir/index")
+    }
 }

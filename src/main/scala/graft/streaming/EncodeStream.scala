@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
@@ -9,8 +10,8 @@ import graft.operators.Similarity
   * stream of (vec_id, embedding) rows is product-quantized per
   * micro-batch against the FROZEN per-subspace codebooks (the persisted
   * `graft_pq` artifact the registry trains once per corpus snapshot), and
-  * the 8-code rows land in epoch-partitioned overwrite parquet
-  * (idempotent crash replay — the [[CrawlDedup]] discipline).
+  * the 8-code rows land in `epoch=<N>` parquet (effectively-once per
+  * [[EpochService]]).
   *
   * The codebooks are deliberately NOT retrained per batch: PQ codes must
   * be commensurable across the stream's lifetime — per-batch codebooks
@@ -38,15 +39,9 @@ object EncodeStream {
   def start(vecs: DataFrame, codebookDir: String, outDir: String,
             m: Int = 8, dim: Int = 64,
             checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = vecs.sparkSession
-    val codebooks = spark.read.parquet(codebookDir)
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), codebooks, outDir, epoch, m, dim)
-      }
-      .start()
+    val codebooks = vecs.sparkSession.read.parquet(codebookDir)
+    EpochService.start(vecs, outDir, checkpointDir)(
+      runBatch(_, codebooks, outDir, _, m, dim))
   }
 
   /** One micro-batch (factored out so batch specs can drive it directly):
@@ -56,15 +51,13 @@ object EncodeStream {
     * corpus embeddings table until the next snapshot re-encode).
     */
   def runBatch(batch: DataFrame, codebooks: DataFrame, outDir: String,
-               epoch: Long, m: Int = 8, dim: Int = 64): Unit = {
-    val b = batch.persist()
-    try {
-      Similarity.pqEncode(b, codebooks, m, dim)
-        .write.mode("overwrite").parquet(s"$outDir/codes/epoch=$epoch")
-      b.select("vec_id", "embedding")
-        .write.mode("overwrite").parquet(s"$outDir/vectors/epoch=$epoch")
-    } finally b.unpersist()
-  }
+               epoch: Long, m: Int = 8, dim: Int = 64): Unit =
+    EpochService.barriers { keep =>
+      val b = keep(batch)
+      EpochService.write(Similarity.pqEncode(b, codebooks, m, dim),
+        outDir, "codes", epoch)
+      EpochService.write(b.select("vec_id", "embedding"), outDir, "vectors", epoch)
+    }
 
   /** The GROWN serving view — base table ∪ epoch deltas ([[IndexStream]]'s
     * discipline on the PQ side): `part` is `codes` (feeds the ADC scan)
@@ -73,21 +66,16 @@ object EncodeStream {
     * commensurable across epochs by construction, so the union IS the
     * index — no re-ranking, no merge logic.
     */
-  def withEpochs(spark: org.apache.spark.sql.SparkSession, base: DataFrame,
-                 outDir: String, part: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/$part")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).exists(_.isDirectory))
-      base.unionByName(spark.read.parquet(s"$outDir/$part").drop("epoch"))
-    else base
-  }
+  def withEpochs(spark: SparkSession, base: DataFrame,
+                 outDir: String, part: String): DataFrame =
+    EpochService.withDeltas(spark, base, s"$outDir/$part")
 
   /** COMPACTION — the [[CrawlDedup]]/[[IndexStream]] contract on the PQ
     * side: fold the base codes + epoch code deltas into a new committed
     * base (and the streamed floats likewise, so rerank keeps its fetch
-    * source), then clear the deltas. Pure union rewrite — codes are
-    * self-contained rows under one frozen codebook generation.
-    * Commit-before-delete; stop the stream first and restart it against
+    * source), then clear the deltas ([[EpochService.compact]]). Pure
+    * union rewrite — codes are self-contained rows under one frozen
+    * codebook generation. Stop the stream first and restart it against
     * `newBaseDir` — a stream started before compaction captured the OLD
     * base once, and after the deltas are cleared its grown view no
     * longer sees the pre-compaction epochs (see [[CrawlDedup.compact]]).
@@ -103,32 +91,21 @@ object EncodeStream {
     * vectors` is ALWAYS written (empty frame when there is nothing to
     * fold) so readers can rely on both dirs existing.
     */
-  def compact(spark: org.apache.spark.sql.SparkSession, baseCodesDir: String,
+  def compact(spark: SparkSession, baseCodesDir: String,
               outDir: String, newBaseDir: String,
               stamp: String = "compact",
               baseVectorsDir: Option[String] = None,
-              checkpointDir: Option[String] = None): Unit = {
-    // refuse under a live stream (round-13 verdict 2; see CrawlDedup)
-    StreamGuard.requireStopped(spark,
-      checkpointDir.getOrElse(s"$outDir/_checkpoint"), "EncodeStream.compact")
-    withEpochs(spark, spark.read.parquet(baseCodesDir), outDir, "codes")
-      .write.mode("overwrite").parquet(s"$newBaseDir/codes")
-    val vp = new org.apache.hadoop.fs.Path(s"$outDir/vectors")
-    val fs = vp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val emptyVecs = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)))))
-    val baseVecs = baseVectorsDir
-      .map(d => spark.read.parquet(d)).getOrElse(emptyVecs)
-    withEpochs(spark, baseVecs, outDir, "vectors")
-      .write.mode("overwrite").parquet(s"$newBaseDir/vectors")
-    graft.sources.SnapshotStore.commit(spark, newBaseDir, stamp)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/codes"), true)
-    fs.delete(vp, true)
-  }
+              checkpointDir: Option[String] = None): Unit =
+    EpochService.compact(spark, "EncodeStream.compact", outDir, checkpointDir,
+        Seq("codes", "vectors"), newBaseDir, stamp) { epochs =>
+      EpochService.withDeltas(spark, spark.read.parquet(baseCodesDir),
+          s"$outDir/codes", epochs)
+        .write.mode("overwrite").parquet(s"$newBaseDir/codes")
+      val baseVecs = baseVectorsDir.map(d => spark.read.parquet(d)).getOrElse(
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
+          StructField("vec_id", LongType),
+          StructField("embedding", ArrayType(FloatType))))))
+      EpochService.withDeltas(spark, baseVecs, s"$outDir/vectors", epochs)
+        .write.mode("overwrite").parquet(s"$newBaseDir/vectors")
+    }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -11,8 +11,8 @@ import graft.operators.TextAnalysis
   * by [[TextAnalysis.lmFluencyFrom]] against a FROZEN
   * [[TextAnalysis.persistLmModel]]-ed reference model, and split at a
   * fluency threshold into `clean/` (kept) and `rejected/` (audit rows
-  * with their scores) — both epoch-partitioned overwrite parquet, the
-  * [[CrawlDedup]] idempotent-replay discipline.
+  * with their scores) — both `epoch=<N>` parquet, effectively-once per
+  * [[EpochService]].
   *
   * The model is deliberately NOT retrained per batch: scoring must be
   * commensurable across the stream's lifetime (the [[AnnStream]]
@@ -35,15 +35,9 @@ object FluencyStream {
   def start(docs: DataFrame, modelDir: String, outDir: String,
             threshold: Double = 0.05,
             checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = docs.sparkSession
-    val model = TextAnalysis.loadLmModel(spark, modelDir)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), model, outDir, epoch, threshold)
-      }
-      .start()
+    val model = TextAnalysis.loadLmModel(docs.sparkSession, modelDir)
+    EpochService.start(docs, outDir, checkpointDir)(
+      runBatch(_, model, outDir, _, threshold))
   }
 
   /** One micro-batch (factored out so batch specs can drive it directly):
@@ -53,17 +47,18 @@ object FluencyStream {
     * stream lossless: every input row lands in exactly one output.
     */
   def runBatch(batch: DataFrame, model: TextAnalysis.LmModel, outDir: String,
-               epoch: Long, threshold: Double = 0.05): Unit = {
-    // barrier: the batch feeds scoring AND the audit join — materialize
-    // once so a real source (kafka) is not re-read per consumer
-    val delta = batch.localCheckpoint()
-    val scored = delta.join(
-      TextAnalysis.lmFluencyFrom(model, delta).select("doc_id", "fluency"),
-      Seq("doc_id"), "left")
-      .localCheckpoint() // scoring runs once, not once per output side
-    scored.filter(col("fluency") >= threshold)
-      .write.mode("overwrite").parquet(s"$outDir/clean/epoch=$epoch")
-    scored.filter(col("fluency").isNull || col("fluency") < threshold)
-      .write.mode("overwrite").parquet(s"$outDir/rejected/epoch=$epoch")
-  }
+               epoch: Long, threshold: Double = 0.05): Unit =
+    EpochService.barriers { keep =>
+      // barrier: the batch feeds scoring AND the audit join, so a real
+      // source (kafka) is not re-read per consumer
+      val delta = keep(batch)
+      val scored = keep(delta.join( // scoring runs once, not per output side
+        TextAnalysis.lmFluencyFrom(model, delta).select("doc_id", "fluency"),
+        Seq("doc_id"), "left"))
+      EpochService.write(scored.filter(col("fluency") >= threshold),
+        outDir, "clean", epoch)
+      EpochService.write(
+        scored.filter(col("fluency").isNull || col("fluency") < threshold),
+        outDir, "rejected", epoch)
+    }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextAnalysis
@@ -17,9 +18,9 @@ import graft.operators.TextAnalysis
   * lands without ever re-indexing what was already indexed — the
   * [[CrawlDedup]] grow-with-the-stream contract on the retrieval side.
   *
-  * Effectively-once: every delta is an `epoch=<N>` overwrite directory,
-  * so a replayed micro-batch overwrites its own partial delta; the
-  * merge-on-read view then never double-counts a document.
+  * Effectively-once per [[EpochService]]: a replayed micro-batch
+  * overwrites its own partial delta, so the merge-on-read view never
+  * double-counts a document.
   *
   * Scale shape: per batch, work ∝ batch tokens (one map-side-combined
   * aggregate); nothing reads the base index at write time, and the
@@ -36,20 +37,14 @@ object IndexStream {
     */
   def start(docs: DataFrame, outDir: String,
             checkpointDir: Option[String] = None): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), outDir, epoch)
-      }
-      .start()
+    EpochService.start(docs, outDir, checkpointDir)(runBatch(_, outDir, _))
 
   /** One micro-batch (factored out so batch specs can drive it directly). */
   def runBatch(batch: DataFrame, outDir: String, epoch: Long): Unit =
     TextAnalysis.writeSearchIndexDelta(batch,
-      s"$outDir/postings_delta/epoch=$epoch",
-      s"$outDir/lexicon_delta/epoch=$epoch",
-      s"$outDir/meta_delta/epoch=$epoch")
+      EpochService.epochDir(outDir, "postings_delta", epoch),
+      EpochService.epochDir(outDir, "lexicon_delta", epoch),
+      EpochService.epochDir(outDir, "meta_delta", epoch))
 
   /** The grown serving view over a base snapshot + this stream's deltas. */
   def servingIndex(spark: SparkSession, baseDir: String,
@@ -61,37 +56,30 @@ object IndexStream {
   /** COMPACTION — the maintenance job the merge-on-read view assumes
     * (the [[graft.sources.KeyedUpsertSink.compact]] discipline on the
     * index side): fold the accumulated epoch deltas into a NEW base
-    * snapshot at `newBaseDir` (written from the READ-BACK grown view —
-    * postings union, one vocab-sized lexicon re-aggregate, summed
-    * count; staging discipline, never a corpus re-index), then clear
-    * the delta directories. Read amplification drops back to one
-    * snapshot; the stream keeps appending fresh epochs afterwards.
+    * snapshot at `newBaseDir` (written from the READ-BACK grown view of
+    * the epochs committed in all three delta dirs — postings union, one
+    * vocab-sized lexicon re-aggregate, summed count; staging discipline,
+    * never a corpus re-index), then clear those epochs. Read
+    * amplification drops back to one snapshot; the stream keeps
+    * appending fresh epochs afterwards.
     *
-    * Crash safety: the new base COMMITS (content-stamped marker) before
-    * any delta is removed — a crash between the two steps leaves both
-    * the new base and the deltas, and serving from new-base ∪ leftover
-    * deltas double-counts, so the caller must re-run compact (which
-    * clears them) before serving; running it under the stream's own
-    * epoch cadence (not concurrently with a delta write) is the
-    * [[KeyedUpsertSink]] single-maintainer contract.
+    * Crash safety ([[EpochService.compact]]): a crash between the commit
+    * and the deletes leaves both the new base and the deltas, and
+    * serving from new-base ∪ leftover deltas double-counts, so the
+    * caller must re-run compact before serving.
     */
   def compact(spark: SparkSession, baseDir: String, outDir: String,
               newBaseDir: String, stamp: String = "compact",
-              checkpointDir: Option[String] = None): Unit = {
-    // refuse under a live stream (round-13 verdict 2; see CrawlDedup)
-    StreamGuard.requireStopped(spark,
-      checkpointDir.getOrElse(s"$outDir/_checkpoint"), "IndexStream.compact")
-    val grown = servingIndex(spark, baseDir, outDir)
-    grown.postings.write.mode("overwrite").parquet(s"$newBaseDir/postings")
-    grown.lexicon.write.mode("overwrite").parquet(s"$newBaseDir/lexicon")
-    import org.apache.spark.sql.functions.lit
-    spark.range(1).select(lit(grown.nTotal).as("n_total"))
-      .write.mode("overwrite").parquet(s"$newBaseDir/meta")
-    graft.sources.SnapshotStore.commit(spark, newBaseDir, stamp)
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("postings_delta", "lexicon_delta", "meta_delta").foreach { d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/$d"), true)
+              checkpointDir: Option[String] = None): Unit =
+    EpochService.compact(spark, "IndexStream.compact", outDir, checkpointDir,
+        Seq("postings_delta", "lexicon_delta", "meta_delta"), newBaseDir,
+        stamp) { epochs =>
+      val grown = TextAnalysis.grownSearchIndexOf(spark, baseDir,
+        s"$outDir/postings_delta", s"$outDir/lexicon_delta",
+        s"$outDir/meta_delta", epochs)
+      grown.postings.write.mode("overwrite").parquet(s"$newBaseDir/postings")
+      grown.lexicon.write.mode("overwrite").parquet(s"$newBaseDir/lexicon")
+      spark.range(1).select(lit(grown.nTotal).as("n_total"))
+        .write.mode("overwrite").parquet(s"$newBaseDir/meta")
     }
-  }
 }

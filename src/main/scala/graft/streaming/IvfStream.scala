@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
@@ -23,9 +21,7 @@ import graft.operators.Similarity
   * side — so [[Similarity.ivfTopKServe]] finds a streamed vector the
   * epoch after it arrives.
   *
-  * Effectively-once: every delta is an `epoch=<N>` overwrite directory,
-  * so a replayed micro-batch overwrites its own partial output
-  * ([[CrawlDedup]]'s idempotence argument). No strictly-earlier-epoch
+  * Effectively-once per [[EpochService]]. No strictly-earlier-epoch
   * read filter is needed here: unlike the dedup streams, a batch's
   * routing reads ONLY the frozen centroids — never the lists or its own
   * prior output — so a replay cannot self-match anything.
@@ -49,15 +45,9 @@ object IvfStream {
   def start(vecs: DataFrame, indexDir: String, outDir: String,
             probeDepth: Int = 4,
             checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = vecs.sparkSession
-    val (index, _) = Similarity.loadIndex(spark, indexDir)
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), index, outDir, epoch, probeDepth)
-      }
-      .start()
+    val (index, _) = Similarity.loadIndex(vecs.sparkSession, indexDir)
+    EpochService.start(vecs, outDir, checkpointDir)(
+      runBatch(_, index, outDir, _, probeDepth))
   }
 
   /** One micro-batch (factored out so batch specs can drive it directly):
@@ -69,7 +59,7 @@ object IvfStream {
                epoch: Long, probeDepth: Int = 4): Unit =
     Similarity.ivfAssignDelta(batch, index, probeDepth = probeDepth)
       .write.mode("overwrite").partitionBy("cell_rank")
-      .parquet(s"$outDir/lists_delta/epoch=$epoch")
+      .parquet(EpochService.epochDir(outDir, "lists_delta", epoch))
 
   /** The GROWN inverted lists: base ∪ epoch deltas (merge-on-read).
     * Assignment rows are self-contained under one frozen centroid
@@ -77,13 +67,8 @@ object IvfStream {
     * [[Similarity.ivfTopKServe]] / [[Similarity.ivfNearDupServe]].
     */
   def grownLists(spark: SparkSession, base: DataFrame,
-                 outDir: String): DataFrame = {
-    val p = new Path(s"$outDir/lists_delta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).exists(_.isDirectory))
-      base.unionByName(spark.read.parquet(s"$outDir/lists_delta").drop("epoch"))
-    else base
-  }
+                 outDir: String): DataFrame =
+    EpochService.withDeltas(spark, base, s"$outDir/lists_delta")
 
   /** COMPACTION — fold the base index + epoch list deltas into a NEW
     * committed index dir: the frozen `coarse`/`fine` tables carry over
@@ -92,25 +77,20 @@ object IvfStream {
     * table is NOT regenerated here — the verified near-dup family is a
     * snapshot-rebuild artifact ([[Similarity.persistIndex]]);
     * [[Similarity.ivfNearDupServe]] over the grown lists is the
-    * any-time path. Commit-before-delete; stop the stream first and
-    * restart it against `newBaseDir` ([[CrawlDedup.compact]]'s
-    * stale-base argument).
+    * any-time path. Guard, commit and delete are
+    * [[EpochService.compact]]'s; stop the stream first and restart it
+    * against `newBaseDir` ([[CrawlDedup.compact]]'s stale-base argument).
     */
   def compact(spark: SparkSession, baseIndexDir: String, outDir: String,
               newBaseDir: String, stamp: String = "compact",
-              checkpointDir: Option[String] = None): Unit = {
-    // refuse under a live stream (round-13 verdict 2; see CrawlDedup)
-    StreamGuard.requireStopped(spark,
-      checkpointDir.getOrElse(s"$outDir/_checkpoint"), "IvfStream.compact")
-    spark.read.parquet(s"$baseIndexDir/coarse")
-      .write.mode("overwrite").parquet(s"$newBaseDir/coarse")
-    spark.read.parquet(s"$baseIndexDir/fine")
-      .write.mode("overwrite").parquet(s"$newBaseDir/fine")
-    grownLists(spark, spark.read.parquet(s"$baseIndexDir/lists"), outDir)
-      .write.mode("overwrite").partitionBy("cell_rank")
-      .parquet(s"$newBaseDir/lists")
-    graft.sources.SnapshotStore.commit(spark, newBaseDir, stamp)
-    val dp = new Path(s"$outDir/lists_delta")
-    dp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dp, true)
-  }
+              checkpointDir: Option[String] = None): Unit =
+    EpochService.compact(spark, "IvfStream.compact", outDir, checkpointDir,
+        Seq("lists_delta"), newBaseDir, stamp) { epochs =>
+      Seq("coarse", "fine").foreach(t => spark.read.parquet(s"$baseIndexDir/$t")
+        .write.mode("overwrite").parquet(s"$newBaseDir/$t"))
+      EpochService.withDeltas(spark, spark.read.parquet(s"$baseIndexDir/lists"),
+          s"$outDir/lists_delta", epochs)
+        .write.mode("overwrite").partitionBy("cell_rank")
+        .parquet(s"$newBaseDir/lists")
+    }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -14,10 +13,9 @@ import graft.operators.Multimodal
   * ([[graft.operators.Multimodal.phashDedupDelta]] — never against
   * payloads), and split into `clean/` (novel media) and `pairs/`
   * (near-dup audit rows); clean rows' OWN hashes are appended to the
-  * index so later batches dedup against earlier ones. Epoch-partitioned
-  * overwrite output ⇒ idempotent crash replay, with the same
-  * strictly-earlier-epoch index filter that keeps a replayed batch from
-  * matching itself.
+  * index so later batches dedup against earlier ones. Effectively-once
+  * per [[EpochService]], with the strictly-earlier-epoch index filter
+  * that keeps a replayed batch from matching itself.
   *
   * Scale shape: per batch, corpus-side cost ∝ index HASH rows (one long
   * per media — 4 orders of magnitude narrower than payloads) and
@@ -35,50 +33,30 @@ object MediaDedup {
   def start(media: DataFrame, basePhashDir: String, outDir: String,
             maxHamming: Int = 5,
             checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = media.sparkSession
-    val base = spark.read.parquet(basePhashDir)
-    media.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), base, outDir, epoch, maxHamming)
-      }
-      .start()
+    val base = media.sparkSession.read.parquet(basePhashDir)
+    EpochService.start(media, outDir, checkpointDir)(
+      runBatch(_, base, outDir, _, maxHamming))
   }
 
   /** One micro-batch (factored out so batch specs can drive it directly). */
   def runBatch(batch: DataFrame, basePhash: DataFrame, outDir: String,
-               epoch: Long, maxHamming: Int = 5): Unit = {
-    val spark = batch.sparkSession
-    val grown = indexWithDeltas(spark, basePhash.select("media_id", "phash"),
-      s"$outDir/index_delta", epoch)
-    // barrier: the batch feeds hashing AND the anti-join — materialize once
-    val delta = batch.localCheckpoint()
-    val deltaPh = Multimodal.mediaPhash(delta).localCheckpoint()
-    val pairs = Multimodal.phashDedupDelta(grown, deltaPh, maxHamming)
-      .localCheckpoint()
-    pairs.write.mode("overwrite").parquet(s"$outDir/pairs/epoch=$epoch")
-    val dupIds = pairs.select(col("delta_id").as("media_id")).distinct()
-    delta.join(dupIds, Seq("media_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$outDir/clean/epoch=$epoch")
-    // surviving media enter the corpus BY FINGERPRINT: hash rows from the
-    // READ-BACK clean table (staging discipline), payloads never stored
-    Multimodal.mediaPhash(spark.read.parquet(s"$outDir/clean/epoch=$epoch"))
-      .select("media_id", "phash")
-      .write.mode("overwrite").parquet(s"$outDir/index_delta/epoch=$epoch")
-  }
-
-  /** Base hash table unioned with strictly-earlier epoch deltas — the
-    * [[CrawlDedup]] replay-safety filter: a crashed-and-replayed batch
-    * must not find ITS OWN hashes in the corpus.
-    */
-  private def indexWithDeltas(spark: SparkSession, base: DataFrame,
-                              deltaDir: String, beforeEpoch: Long): DataFrame = {
-    val p = new Path(deltaDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).exists(_.isDirectory))
-      base.unionByName(spark.read.parquet(deltaDir)
-        .filter(col("epoch") < beforeEpoch).drop("epoch"))
-    else base
-  }
+               epoch: Long, maxHamming: Int = 5): Unit =
+    EpochService.barriers { keep =>
+      val spark = batch.sparkSession
+      val grown = EpochService.withDeltas(spark,
+        basePhash.select("media_id", "phash"), s"$outDir/index_delta", _ < epoch)
+      // barrier: the batch feeds hashing AND the anti-join — materialize once
+      val delta = keep(batch)
+      val deltaPh = keep(Multimodal.mediaPhash(delta))
+      val pairs = keep(Multimodal.phashDedupDelta(grown, deltaPh, maxHamming))
+      EpochService.write(pairs, outDir, "pairs", epoch)
+      val dupIds = pairs.select(col("delta_id").as("media_id")).distinct()
+      val clean = EpochService.write(
+        delta.join(dupIds, Seq("media_id"), "left_anti"), outDir, "clean", epoch)
+      // surviving media enter the corpus BY FINGERPRINT: hash rows from the
+      // READ-BACK clean table (staging discipline), payloads never stored
+      EpochService.write(
+        Multimodal.mediaPhash(spark.read.parquet(clean)).select("media_id", "phash"),
+        outDir, "index_delta", epoch)
+    }
 }

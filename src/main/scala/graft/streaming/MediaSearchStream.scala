@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Multimodal
@@ -12,8 +12,8 @@ import graft.operators.Multimodal
   * (query_id, kind, payload) probes is answered per micro-batch by
   * [[Multimodal.phashLookup]] against a
   * [[Multimodal.persistMediaPhash]]-ed corpus hash table, and the
-  * Hamming-ranked matches land in epoch-partitioned overwrite parquet
-  * (idempotent crash replay — the [[CrawlDedup]] discipline).
+  * Hamming-ranked matches land in `epoch=<N>` parquet (effectively-once
+  * per [[EpochService]]).
   *
   * Scale shape: per batch, the delta side is one codegen'd hashing pass
   * over the batch payloads; corpus-side cost ∝ hash-table rows (one long
@@ -31,15 +31,9 @@ object MediaSearchStream {
   def start(queries: DataFrame, phashDir: String, outDir: String,
             maxHamming: Int = 5,
             checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = queries.sparkSession
-    val corpusPh = spark.read.parquet(phashDir)
-    queries.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), corpusPh, outDir, epoch, maxHamming)
-      }
-      .start()
+    val corpusPh = queries.sparkSession.read.parquet(phashDir)
+    EpochService.start(queries, outDir, checkpointDir)(
+      runBatch(_, corpusPh, outDir, _, maxHamming))
   }
 
   /** One micro-batch (factored out so batch specs can drive it directly).
@@ -50,6 +44,7 @@ object MediaSearchStream {
     */
   def runBatch(batch: DataFrame, corpusPh: DataFrame, outDir: String,
                epoch: Long, maxHamming: Int = 5): Unit =
-    Multimodal.phashLookup(corpusPh, batch, maxHamming, excludeSelf = false)
-      .write.mode("overwrite").parquet(s"$outDir/matches/epoch=$epoch")
+    EpochService.write(
+      Multimodal.phashLookup(corpusPh, batch, maxHamming, excludeSelf = false),
+      outDir, "matches", epoch)
 }

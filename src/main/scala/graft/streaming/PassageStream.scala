@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Passage
@@ -10,8 +10,8 @@ import graft.operators.Passage
   * per micro-batch by [[Passage.passageTopKForQueries]] against a
   * [[Passage.persistPassage]]-ed corpus snapshot (tower-embed the request
   * as one chunk, probe the frozen band planes, diversity-capped top-k),
-  * results landing in epoch-partitioned overwrite parquet (idempotent
-  * replay — the [[CrawlDedup]] discipline).
+  * results landing in `epoch=<N>` parquet (effectively-once per
+  * [[EpochService]]).
   *
   * Scale shape: per batch the broadcast is the batch's query vectors and
   * band probes; corpus-side work is one band-triple equi-join plus the
@@ -30,20 +30,15 @@ object PassageStream {
   def start(queries: DataFrame, passageDir: String, outDir: String,
             k: Int = 10, maxPerDoc: Int = 2,
             checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = queries.sparkSession
-    val t = Passage.loadPassage(spark, passageDir)
-    queries.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), t, outDir, epoch, k, maxPerDoc)
-      }
-      .start()
+    val t = Passage.loadPassage(queries.sparkSession, passageDir)
+    EpochService.start(queries, outDir, checkpointDir)(
+      runBatch(_, t, outDir, _, k, maxPerDoc))
   }
 
   /** One micro-batch (factored out so batch specs can drive it directly). */
   def runBatch(batch: DataFrame, t: Passage.PassageTables, outDir: String,
                epoch: Long, k: Int = 10, maxPerDoc: Int = 2): Unit =
-    Passage.passageTopKForQueries(t.vectors, t.bands, batch, k, maxPerDoc)
-      .write.mode("overwrite").parquet(s"$outDir/passages/epoch=$epoch")
+    EpochService.write(
+      Passage.passageTopKForQueries(t.vectors, t.bands, batch, k, maxPerDoc),
+      outDir, "passages", epoch)
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.{CityEvents, StreamAggregates}
 import graft.sources.{KeyedForeachWriter, KeyedUpsertSink}
@@ -90,6 +90,29 @@ class Pipeline(
       KeyedUpsertSink.compact(df.sparkSession, path)
   }
 
+  /** A keyed-store member: `df` in `mode`, checkpointed at
+    * `checkpointRoot/name`, each micro-batch upserted into `path` by `keys`.
+    */
+  private def upsertMember(df: DataFrame, mode: String, name: String,
+                           path: String, keys: Seq[String]): StreamingQuery =
+    df.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", s"$checkpointRoot/$name")
+      .foreachBatch(upsertBatch(path, keys) _)
+      .start()
+
+  /** An append-mode member landing in the in-memory table `queryName`,
+    * checkpointed at `checkpointRoot/name`.
+    */
+  private def memoryMember[T](ds: Dataset[T], queryName: String,
+                              name: String): StreamingQuery =
+    ds.writeStream
+      .outputMode("append")
+      .format("memory")
+      .queryName(queryName)
+      .option("checkpointLocation", s"$checkpointRoot/$name")
+      .start()
+
   /** Query 1: raw events, append mode, keyed upsert (reference :100-115).
     * Carries an `observe()` metrics contract — the streaming analog of the
     * producer's running send metrics (A7, KafkaProducerService.java:100-145):
@@ -99,16 +122,12 @@ class Pipeline(
     */
   def startRawEvents(events: DataFrame): StreamingQuery = {
     import org.apache.spark.sql.functions._
-    StreamAggregates.rawEvents(normalized(events))
+    upsertMember(StreamAggregates.rawEvents(normalized(events))
       .observe("producer_metrics",
         count(lit(1)).as("event_count"),
         min(col("severity")).as("severity_min"),
-        approx_count_distinct(col("city")).as("cities_seen"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/raw-events")
-      .foreachBatch(upsertBatch(rawStorePath, Seq("rec_id", "ts_str")) _)
-      .start()
+        approx_count_distinct(col("city")).as("cities_seen")),
+      "append", "raw-events", rawStorePath, Seq("rec_id", "ts_str"))
   }
 
   /** Query 1 variant with IN-STREAM id-collision dedup (the streaming half
@@ -127,26 +146,18 @@ class Pipeline(
     * rec_id (asserted by spec).
     */
   def startRawEventsDeduped(events: DataFrame): StreamingQuery =
-    StreamAggregates.rawEvents(
+    upsertMember(StreamAggregates.rawEvents(
         normalized(events).withWatermark("ts", watermarkDelay)
-          .dropDuplicatesWithinWatermark("rec_id"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/raw-events-dedup")
-      .foreachBatch(upsertBatch(rawDedupStorePath, Seq("rec_id")) _)
-      .start()
+          .dropDuplicatesWithinWatermark("rec_id")),
+      "append", "raw-events-dedup", rawDedupStorePath, Seq("rec_id"))
 
   /** Query 2: watermarked 5-minute windowed aggregation, update mode,
     * upsert by partition_key (reference :119-154).
     */
   def startWindowedAgg(events: DataFrame): StreamingQuery =
-    StreamAggregates.windowedAggregate(
-        normalized(events).withWatermark("ts", watermarkDelay))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$checkpointRoot/aggregations")
-      .foreachBatch(upsertBatch(aggStorePath, Seq("partition_key")) _)
-      .start()
+    upsertMember(StreamAggregates.windowedAggregate(
+        normalized(events).withWatermark("ts", watermarkDelay)),
+      "update", "aggregations", aggStorePath, Seq("partition_key"))
 
   /** Query 2 at scale: the same watermarked windowed aggregation with the
     * per-severity COUNT MAP ([[StreamAggregates.windowedAggregateCounts]])
@@ -157,23 +168,15 @@ class Pipeline(
     * runs; the collect_list query stays for reference fidelity.
     */
   def startWindowedAggCounts(events: DataFrame): StreamingQuery =
-    StreamAggregates.windowedAggregateCounts(
-        normalized(events).withWatermark("ts", watermarkDelay))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$checkpointRoot/aggregations-counts")
-      .foreachBatch(upsertBatch(aggCountsStorePath, Seq("partition_key")) _)
-      .start()
+    upsertMember(StreamAggregates.windowedAggregateCounts(
+        normalized(events).withWatermark("ts", watermarkDelay)),
+      "update", "aggregations-counts", aggCountsStorePath, Seq("partition_key"))
 
   /** Query 3: high-severity alerts, append mode (reference :160-177). */
   def startAlerts(events: DataFrame): StreamingQuery =
-    StreamAggregates.alerts(normalized(events))
-      .drop("ts") // store the wire-format string, as the reference's sink did
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/alerts")
-      .foreachBatch(upsertBatch(alertsStorePath, Seq("city", "ts_str")) _)
-      .start()
+    upsertMember(StreamAggregates.alerts(normalized(events))
+        .drop("ts"), // store the wire-format string, as the reference's sink did
+      "append", "alerts", alertsStorePath, Seq("city", "ts_str"))
 
   /** Query 3 variant with ROW-LEVEL sink fidelity (T8): the wire records
     * stream through [[KeyedForeachWriter]] — the open/process/close
@@ -200,14 +203,9 @@ class Pipeline(
     */
   def startThrottledAlerts(events: DataFrame, gapMinutes: Int = 1440,
                            queryName: String = "throttled_alerts"): StreamingQuery =
-    Stateful.alertThrottle(
-        StreamAggregates.alerts(normalized(events)), gapMinutes)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", s"$checkpointRoot/throttled-alerts")
-      .start()
+    memoryMember(Stateful.alertThrottle(
+        StreamAggregates.alerts(normalized(events)), gapMinutes),
+      queryName, "throttled-alerts")
 
   /** k-anonymity release gate as a topology member
     * ([[Stateful.kAnonymityGate]]): events quarantine in keyed state
@@ -220,13 +218,8 @@ class Pipeline(
   def startKAnonGate(events: DataFrame, k: Int = 5,
                      quarantineTtl: Option[String] = Some("1 day"),
                      queryName: String = "kanon_release"): StreamingQuery =
-    Stateful.kAnonymityGate(normalized(events), k, quarantineTtl)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", s"$checkpointRoot/kanon-release")
-      .start()
+    memoryMember(Stateful.kAnonymityGate(normalized(events), k, quarantineTtl),
+      queryName, "kanon-release")
 
   /** Stream-STREAM interval join (SURVEY.md §2.4 extension): each alert
     * joined to the events of the same city in the 5 minutes before it —
@@ -244,17 +237,12 @@ class Pipeline(
       .withWatermark("ts", watermarkDelay)
       .select(col("event_id").as("alert_id"), col("city"), col("ts"),
         col("severity"))
-    alerts.join(evts,
+    memoryMember(alerts.join(evts,
         col("city") === col("e_city") &&
           col("e_ts") >= col("ts") - expr("INTERVAL 5 MINUTES") &&
           col("e_ts") <= col("ts"))
-      .select("alert_id", "city", "severity", "e_rec_id", "e_type")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", s"$checkpointRoot/alert-context")
-      .start()
+      .select("alert_id", "city", "severity", "e_rec_id", "e_type"),
+      queryName, "alert-context")
   }
 
   /** Stream-static enrichment join (SURVEY.md §2.4 extension): the live
@@ -264,14 +252,10 @@ class Pipeline(
     */
   def startEnriched(events: DataFrame, customer: DataFrame): StreamingQuery = {
     import org.apache.spark.sql.functions._
-    normalized(events)
+    upsertMember(normalized(events)
       .join(broadcast(customer), col("user_id") === customer("c_custkey"))
-      .select("rec_id", "ts_str", "city", "event_type", "severity", "c_name", "c_mktsegment")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/enriched")
-      .foreachBatch(upsertBatch(s"$storeRoot/enriched", Seq("rec_id", "ts_str")) _)
-      .start()
+      .select("rec_id", "ts_str", "city", "event_type", "severity", "c_name", "c_mktsegment"),
+      "append", "enriched", s"$storeRoot/enriched", Seq("rec_id", "ts_str"))
   }
 
   /** Session-window streaming variant (T2): per-user 30-minute-gap
@@ -281,14 +265,9 @@ class Pipeline(
     * `q_session_window`).
     */
   def startUserSessions(events: DataFrame, queryName: String = "sessions"): StreamingQuery =
-    StreamAggregates.userSessions(
-        normalized(events).withWatermark("ts", watermarkDelay))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", s"$checkpointRoot/sessions")
-      .start()
+    memoryMember(StreamAggregates.userSessions(
+        normalized(events).withWatermark("ts", watermarkDelay)),
+      queryName, "sessions")
 
   /** Query 4: global monitoring counts, complete mode. `console = true`
     * is the reference's actual sink byte-for-byte (format console,
@@ -360,22 +339,6 @@ class Pipeline(
                            threshold: Double = 0.05): Seq[StreamingQuery] =
     startAllWithCrawl(events, docs, baseIndexDir) :+
       startFluencyGate(docs, modelDir, threshold)
-
-  def dsirStorePath: String = s"$storeRoot/dsir"
-
-  /** DSIR selection as a topology member: the [[DsirStream]] scorer over
-    * the crawl source against a frozen persisted importance model,
-    * writing `selected/` and `rejected/` under the shared store root
-    * with its own checkpoint dir like every sibling — the data-selection
-    * gate beside the fluency gate (a deployment runs both: fluency
-    * filters junk, DSIR steers the mix toward the target domain).
-    * Default threshold NaN = derive the gate above the model's OOV
-    * floor ([[DsirStream.start]]'s contract).
-    */
-  def startDsirGate(docs: DataFrame, modelDir: String,
-                    threshold: Double = Double.NaN): StreamingQuery =
-    DsirStream.start(docs, modelDir, dsirStorePath, threshold,
-      checkpointDir = Some(s"$checkpointRoot/dsir-gate"))
 
   def splitStorePath: String = s"$storeRoot/split"
 
@@ -756,13 +719,4 @@ object Pipeline {
           StateFootprint(name, i, so.numRowsTotal, so.memoryUsedBytes)
         }
     }
-
-  /** Production entry: rate-source (or Kafka via [[EventStreamSource]])
-    * pipeline with default trigger — batches fire as data arrives (T9).
-    */
-  def rateDriven(spark: SparkSession, storeRoot: String, checkpointRoot: String,
-                 rowsPerSecond: Int = 10): (Pipeline, Seq[StreamingQuery]) = {
-    val p = new Pipeline(spark, storeRoot, checkpointRoot)
-    (p, p.startAll(EventStreamSource.rateStream(spark, rowsPerSecond)))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -19,9 +19,8 @@ import graft.operators.Pii
   * documents that carried NO pii land under `clean/` untouched;
   * documents that were masked land under `scrubbed/` with their
   * per-family counts — the audit trail a privacy review reads. Both
-  * epoch-partitioned overwrite parquet (idempotent replay, the
-  * [[CrawlDedup]] argument). Every input row lands in exactly one
-  * output.
+  * `epoch=<N>` parquet (effectively-once per [[EpochService]]). Every
+  * input row lands in exactly one output.
   *
   * The stage is STATELESS by design (a pure row-local projection): no
   * model, no index, no growth — which is exactly why it scales as a
@@ -36,29 +35,21 @@ object ScrubStream {
     */
   def start(docs: DataFrame, outDir: String,
             checkpointDir: Option[String] = None): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), outDir, epoch)
-      }
-      .start()
+    EpochService.start(docs, outDir, checkpointDir)(runBatch(_, outDir, _))
 
   /** One micro-batch (factored out so batch specs can drive it
     * directly): scrub, split on n_pii, write both sides under
-    * `epoch=<N>`. Frames persist/unpersist (the [[DsirStream]] rule) so
-    * a real source is not re-read per output side.
+    * `epoch=<N>`. The scrubbed frame is a barrier so a real source is
+    * not re-read per output side.
     */
   def runBatch(batch: DataFrame, outDir: String, epoch: Long): Unit = {
     val withMeta = Seq("lang", "source").foldLeft(batch) { (df, c) =>
       if (df.columns.contains(c)) df else df.withColumn(c, lit(""))
     }
-    val scrubbed = Pii.scrubPii(withMeta).persist()
-    try {
-      scrubbed.filter(col("n_pii") === 0L)
-        .write.mode("overwrite").parquet(s"$outDir/clean/epoch=$epoch")
-      scrubbed.filter(col("n_pii") > 0L)
-        .write.mode("overwrite").parquet(s"$outDir/scrubbed/epoch=$epoch")
-    } finally scrubbed.unpersist()
+    EpochService.barriers { keep =>
+      val scrubbed = keep(Pii.scrubPii(withMeta))
+      EpochService.write(scrubbed.filter(col("n_pii") === 0L), outDir, "clean", epoch)
+      EpochService.write(scrubbed.filter(col("n_pii") > 0L), outDir, "scrubbed", epoch)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextAnalysis
@@ -9,8 +9,8 @@ import graft.operators.TextAnalysis
   * text-retrieval side: a stream of (query_id, terms) requests is
   * answered per micro-batch by [[TextAnalysis.keywordSearchForQueries]]
   * against a [[TextAnalysis.persistSearchIndex]]-ed corpus snapshot, and
-  * the ranked results land in epoch-partitioned overwrite parquet
-  * (idempotent replay — the [[CrawlDedup]] discipline).
+  * the ranked results land in `epoch=<N>` parquet (effectively-once per
+  * [[EpochService]]).
   *
   * Scale shape: per batch, the broadcast is the batch's exploded
   * (query_id, term) pairs; corpus-side work is one postings equi-join —
@@ -26,20 +26,14 @@ object SearchStream {
   def start(queries: DataFrame, indexDir: String, outDir: String,
             k: Int = 10,
             checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = queries.sparkSession
-    val index = TextAnalysis.loadSearchIndex(spark, indexDir)
-    queries.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), index, outDir, epoch, k)
-      }
-      .start()
+    val index = TextAnalysis.loadSearchIndex(queries.sparkSession, indexDir)
+    EpochService.start(queries, outDir, checkpointDir)(
+      runBatch(_, index, outDir, _, k))
   }
 
   /** One micro-batch (factored out so batch specs can drive it directly). */
   def runBatch(batch: DataFrame, index: TextAnalysis.SearchIndex,
                outDir: String, epoch: Long, k: Int = 10): Unit =
-    TextAnalysis.keywordSearchForQueries(index, batch, k)
-      .write.mode("overwrite").parquet(s"$outDir/hits/epoch=$epoch")
+    EpochService.write(TextAnalysis.keywordSearchForQueries(index, batch, k),
+      outDir, "hits", epoch)
 }

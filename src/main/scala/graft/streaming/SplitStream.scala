@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -68,14 +68,12 @@ import graft.operators.{Corpus, Dedup}
   * [[Corpus.leakageSafeSplit]]'s min-label clustering would pick for
   * the keys it can see.
   *
-  * Effectively-once: every per-epoch output lands in its own
-  * `epoch=<N>` dir with mode=overwrite, and the index/key unions read
+  * Effectively-once per [[EpochService]]: the index/key unions read
   * strictly-earlier epochs only, so a replayed micro-batch reproduces
   * its original assignment instead of matching its own half-written
-  * rows ([[CrawlDedup]]'s replay argument verbatim — spec'd). The
-  * intra-batch arm preserves this: it reads only the batch itself plus
-  * the strictly-earlier-derived inherited keys, so a replay recomputes
-  * the identical components and minima.
+  * rows (spec'd). The intra-batch arm preserves this: it reads only the
+  * batch itself plus the strictly-earlier-derived inherited keys, so a
+  * replay recomputes the identical components and minima.
   *
   * Scale shape: per batch, corpus-side cost ∝ |index| signature rows
   * (never corpus text), delta-side ∝ |batch|; the intra-batch arm is
@@ -116,14 +114,8 @@ object SplitStream {
     requireCurrentBases(spark, baseIndexDir, clustersDir, outDir)
     val base = spark.read.parquet(baseIndexDir)
     val clusters = spark.read.parquet(clustersDir)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), base, clusters, outDir, epoch, trainPct,
-          valPct, threshold)
-      }
-      .start()
+    EpochService.start(docs, outDir, checkpointDir)(
+      runBatch(_, base, clusters, outDir, _, trainPct, valPct, threshold))
   }
 
   /** One micro-batch (factored out so batch specs can drive it
@@ -133,88 +125,64 @@ object SplitStream {
     */
   def runBatch(batch: DataFrame, baseIndex: DataFrame, clusters: DataFrame,
                outDir: String, epoch: Long, trainPct: Int = 90,
-               valPct: Int = 5, threshold: Double = 0.8): Unit = {
-    val spark = batch.sparkSession
-    val grown = unionDeltas(spark, baseIndex, s"$outDir/index_delta", epoch)
-    val streamKeys = keyDeltas(spark, s"$outDir/key_delta", epoch)
-    // barrier: the batch feeds the match AND the assignment join —
-    // persist (not localCheckpoint: DsirStream's storage-reclaim
-    // argument) so a real source is not re-read per consumer
-    val delta = batch.persist()
-    // r18 (r17 ADVICE): pass dedupDelta a persist-capturing barrier for
-    // its internal delta-rep-sets frame instead of the default
-    // localCheckpoint (blocks wait on driver GC — the storage-reclaim
-    // rule every other per-batch frame here follows), and release it in
-    // the outermost finally once the batch's consumers have run.
-    val deltaSets = new scala.collection.mutable.ArrayBuffer[DataFrame]
-    try {
+               valPct: Int = 5, threshold: Double = 0.8): Unit =
+    // barriers (released once the epoch's three writes are down): the
+    // batch feeds the match AND the assignment join, so a real source is
+    // not re-read per consumer; dedupDelta's delta-rep-sets frame too
+    EpochService.barriers { keep =>
+      val spark = batch.sparkSession
+      val grown = unionDeltas(spark, baseIndex, s"$outDir/index_delta", epoch)
+      val streamKeys = keyDeltas(spark, s"$outDir/key_delta", epoch)
+      val delta = keep(batch)
       // the batch's own signature index — built ONCE: feeds the
       // intra-batch match here and the epoch's index_delta write below
-      val batchIdx = Dedup.buildDedupIndex(delta).persist()
-      try {
-        // corpus key resolution: base cluster id, else the key this stream
-        // assigned the matched doc earlier, else the matched doc's own id
-        val inherited = Dedup.dedupDelta(grown, delta, threshold,
-            deltaBarrier = df => { val p = df.persist(); deltaSets += p; p })
-          .select(col("corpus_id"), col("delta_id"))
-          .join(clusters.select(col("doc_id").as("corpus_id"),
-            col("cluster_id")), Seq("corpus_id"), "left")
-          .join(streamKeys.select(col("doc_id").as("corpus_id"),
-            col("split_key").as("stream_key")), Seq("corpus_id"), "left")
-          .select(col("delta_id").as("doc_id"),
-            coalesce(col("cluster_id"), col("stream_key"), col("corpus_id"))
-              .as("k"))
-          .groupBy("doc_id").agg(min("k").as("inherited_key"))
-          .persist() // feeds the intra-batch resolution AND the assignment
-        try {
-          // intra-batch arm (r16 ADVICE): the batch matched against its
-          // own signature index via the stored sketches (no second text
-          // pass), the CONNECTIVITY edges closed transitively, each
-          // component keyed by the minimum RESOLVED member key
-          val intraPairs = Dedup.selfEdgesFromIndex(batchIdx, threshold)
-            .persist()
-          val intraKeys = try {
-            if (intraPairs.isEmpty) emptyKeys(spark, "intra_key")
-            else Dedup.clustersFromPairs(intraPairs)
-              .join(inherited, Seq("doc_id"), "left")
-              .select(col("cluster_id"), col("doc_id"),
-                coalesce(col("inherited_key"), col("doc_id")).as("k"))
-              .withColumn("intra_key",
-                min(col("k")).over(org.apache.spark.sql.expressions.Window
-                  .partitionBy(col("cluster_id"))))
-              .select(col("doc_id"), col("intra_key"))
-              // materialize before intraPairs unpersists under the plan
-              .localCheckpoint(eager = true)
-          } finally intraPairs.unpersist()
-          val carried = delta.columns.filter(_ != "text").map(col).toIndexedSeq
-          val assigned = delta
-            .join(inherited, Seq("doc_id"), "left")
-            .join(intraKeys, Seq("doc_id"), "left")
-            .select(carried :+
-              coalesce(col("intra_key"), col("inherited_key"), col("doc_id"))
-                .as("split_key"): _*)
-            .withColumn("split",
-              Corpus.splitOfKey(col("split_key"), trainPct, valPct))
-            .persist() // feeds the assignment write AND the key delta
-          try {
-            assigned.write.mode("overwrite")
-              .parquet(s"$outDir/assigned/epoch=$epoch")
-            // the batch enters the match universe. Signatures need text,
-            // which the assignment output deliberately drops — the sketch
-            // was built above from the persisted batch (not a read-back),
-            // the one member where staging source and store schema differ
-            batchIdx
-              .write.mode("overwrite").parquet(s"$outDir/index_delta/epoch=$epoch")
-            assigned.select("doc_id", "split_key")
-              .write.mode("overwrite").parquet(s"$outDir/key_delta/epoch=$epoch")
-          } finally assigned.unpersist()
-        } finally inherited.unpersist()
-      } finally batchIdx.unpersist()
-    } finally {
-      deltaSets.foreach(_.unpersist(false))
-      delta.unpersist()
+      val batchIdx = keep(Dedup.buildDedupIndex(delta))
+      // corpus key resolution: base cluster id, else the key this stream
+      // assigned the matched doc earlier, else the matched doc's own id
+      val inherited = keep(Dedup.dedupDelta(grown, delta, threshold,
+          deltaBarrier = keep)
+        .select(col("corpus_id"), col("delta_id"))
+        .join(clusters.select(col("doc_id").as("corpus_id"),
+          col("cluster_id")), Seq("corpus_id"), "left")
+        .join(streamKeys.select(col("doc_id").as("corpus_id"),
+          col("split_key").as("stream_key")), Seq("corpus_id"), "left")
+        .select(col("delta_id").as("doc_id"),
+          coalesce(col("cluster_id"), col("stream_key"), col("corpus_id"))
+            .as("k"))
+        .groupBy("doc_id").agg(min("k").as("inherited_key")))
+      // intra-batch arm (r16 ADVICE): the batch matched against its own
+      // signature index via the stored sketches (no second text pass), the
+      // CONNECTIVITY edges closed transitively, each component keyed by
+      // the minimum RESOLVED member key
+      val intraPairs = keep(Dedup.selfEdgesFromIndex(batchIdx, threshold))
+      val intraKeys =
+        if (intraPairs.isEmpty) emptyKeys(spark, "intra_key")
+        else keep(Dedup.clustersFromPairs(intraPairs)
+          .join(inherited, Seq("doc_id"), "left")
+          .select(col("cluster_id"), col("doc_id"),
+            coalesce(col("inherited_key"), col("doc_id")).as("k"))
+          .withColumn("intra_key",
+            min(col("k")).over(org.apache.spark.sql.expressions.Window
+              .partitionBy(col("cluster_id"))))
+          .select(col("doc_id"), col("intra_key")))
+      val carried = delta.columns.filter(_ != "text").map(col).toIndexedSeq
+      val assigned = keep(delta // feeds the assignment write AND the key delta
+        .join(inherited, Seq("doc_id"), "left")
+        .join(intraKeys, Seq("doc_id"), "left")
+        .select(carried :+
+          coalesce(col("intra_key"), col("inherited_key"), col("doc_id"))
+            .as("split_key"): _*)
+        .withColumn("split",
+          Corpus.splitOfKey(col("split_key"), trainPct, valPct)))
+      EpochService.write(assigned, outDir, "assigned", epoch)
+      // the batch enters the match universe. Signatures need text, which
+      // the assignment output deliberately drops — the sketch was built
+      // above from the persisted batch (not a read-back), the one member
+      // where staging source and store schema differ
+      EpochService.write(batchIdx, outDir, "index_delta", epoch)
+      EpochService.write(assigned.select("doc_id", "split_key"),
+        outDir, "key_delta", epoch)
     }
-  }
 
   /** COMPACTION — fold the base signature index plus the stream's
     * appended signature deltas into a new committed base index, and the
@@ -238,29 +206,23 @@ object SplitStream {
     */
   def compact(spark: SparkSession, baseIndexDir: String, clustersDir: String,
               outDir: String, newBaseDir: String, stamp: String = "compact",
-              checkpointDir: Option[String] = None): Unit = {
-    StreamGuard.requireStopped(spark,
-      checkpointDir.getOrElse(s"$outDir/_checkpoint"), "SplitStream.compact")
-    unionDeltas(spark, spark.read.parquet(baseIndexDir),
-        s"$outDir/index_delta", beforeEpoch = Long.MaxValue)
-      .write.mode("overwrite").parquet(s"$newBaseDir/index")
-    // distinct: a corpus doc replayed through the stream carries its
-    // batch-equal key in BOTH sources (the parity contract), so the
-    // union can only duplicate equal rows — collapse them once here
-    spark.read.parquet(clustersDir)
-      .unionByName(keyDeltas(spark, s"$outDir/key_delta",
-          beforeEpoch = Long.MaxValue)
-        .select(col("doc_id"), col("split_key").as("cluster_id")))
-      .distinct()
-      .write.mode("overwrite").parquet(s"$newBaseDir/clusters")
-    graft.sources.SnapshotStore.commit(spark, newBaseDir, stamp)
-    val fs = new Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    writeMarker(spark, outDir,
-      s"index=$newBaseDir/index\nclusters=$newBaseDir/clusters\n")
-    fs.delete(new Path(s"$outDir/index_delta"), true)
-    fs.delete(new Path(s"$outDir/key_delta"), true)
-  }
+              checkpointDir: Option[String] = None): Unit =
+    EpochService.compact(spark, "SplitStream.compact", outDir, checkpointDir,
+        Seq("index_delta", "key_delta"), newBaseDir, stamp,
+        afterCommit = writeMarker(spark, outDir,
+          s"index=$newBaseDir/index\nclusters=$newBaseDir/clusters\n")) { epochs =>
+      EpochService.withDeltas(spark, spark.read.parquet(baseIndexDir),
+          s"$outDir/index_delta", epochs)
+        .write.mode("overwrite").parquet(s"$newBaseDir/index")
+      // distinct: a corpus doc replayed through the stream carries its
+      // batch-equal key in BOTH sources (the parity contract), so the
+      // union can only duplicate equal rows — collapse them once here
+      EpochService.read(spark, s"$outDir/key_delta", epochs).toSeq
+        .map(_.select(col("doc_id"), col("split_key").as("cluster_id")))
+        .foldLeft(spark.read.parquet(clustersDir))(_ unionByName _)
+        .distinct()
+        .write.mode("overwrite").parquet(s"$newBaseDir/clusters")
+    }
 
   /** Current appended delta-dir counts (`index_delta`, `key_delta`) —
     * the when-to-compact signal (r16 verdict 3): each epoch dir listed
@@ -269,17 +231,9 @@ object SplitStream {
     * files-read spec pins post-compact back to one base scan + zero
     * deltas).
     */
-  def epochCounts(spark: SparkSession, outDir: String): (Int, Int) = {
-    def n(dir: String): Int = {
-      val p = new Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p))
-        fs.listStatus(p)
-          .count(s => s.isDirectory && s.getPath.getName.startsWith("epoch="))
-      else 0
-    }
-    (n(s"$outDir/index_delta"), n(s"$outDir/key_delta"))
-  }
+  def epochCounts(spark: SparkSession, outDir: String): (Int, Int) =
+    (EpochService.epochs(spark, s"$outDir/index_delta").size,
+      EpochService.epochs(spark, s"$outDir/key_delta").size)
 
   /** Fail unless `outDir`'s `_compacted` marker (absent = pass) names
     * exactly the dirs the caller is about to match against (r16 ADVICE
@@ -318,36 +272,25 @@ object SplitStream {
     try out.write(contents.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Base signature index ∪ strictly-earlier epoch deltas (the
-    * [[CrawlDedup]] replay-safe union — a replayed epoch must not match
-    * its own previously-appended rows). `private[graft]` so the
-    * files-read spec can assert the pre/post-compact listing shape on
-    * the EXACT frame a batch reads (r16 verdict 3).
+  /** Base signature index ∪ strictly-earlier epoch deltas (the replay-safe
+    * union — a replayed epoch must not match its own previously-appended
+    * rows). `private[graft]` so the files-read spec can assert the
+    * pre/post-compact listing shape on the EXACT frame a batch reads
+    * (r16 verdict 3).
     */
   private[graft] def unionDeltas(spark: SparkSession, base: DataFrame,
-                                 deltaDir: String, beforeEpoch: Long): DataFrame = {
-    val p = new Path(deltaDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).exists(_.isDirectory))
-      base.unionByName(spark.read.parquet(deltaDir)
-        .filter(col("epoch") < beforeEpoch).drop("epoch"))
-    else base
-  }
+                                 deltaDir: String, beforeEpoch: Long): DataFrame =
+    EpochService.withDeltas(spark, base, deltaDir, _ < beforeEpoch)
 
   /** Stream-assigned (doc_id, split_key) rows of strictly-earlier
     * epochs; empty on the first batch. `private[graft]`: see
     * [[unionDeltas]].
     */
   private[graft] def keyDeltas(spark: SparkSession, deltaDir: String,
-                               beforeEpoch: Long): DataFrame = {
-    val p = new Path(deltaDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).exists(_.isDirectory))
-      spark.read.parquet(deltaDir)
-        .filter(col("epoch") < beforeEpoch)
-        .select("doc_id", "split_key")
-    else emptyKeys(spark, "split_key")
-  }
+                               beforeEpoch: Long): DataFrame =
+    EpochService.read(spark, deltaDir, _ < beforeEpoch)
+      .map(_.select("doc_id", "split_key"))
+      .getOrElse(emptyKeys(spark, "split_key"))
 
   private def emptyKeys(spark: SparkSession, keyCol: String): DataFrame =
     spark.createDataFrame(

@@ -5,9 +5,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Guard for the grown-view stores' compact() maintenance entry points.
   *
-  * Every log-structured service in this package (CrawlDedup, EmbedDedup,
-  * EncodeStream, IndexStream, IvfStream, ChunkStream, TakedownStream)
-  * shares the same compaction hazard: [[CrawlDedup.start]]-style streams
+  * Every grown store in this package (CrawlDedup, EmbedDedup,
+  * EncodeStream, IndexStream, IvfStream, ChunkStream, TakedownStream,
+  * SplitStream) compacts through [[EpochService.compact]], the one caller
+  * of this guard, and shares the same compaction hazard: [[CrawlDedup.start]]-style streams
   * capture their base snapshot ONCE at start, so a compact() that folds
   * the epoch deltas and clears the delta dir under a STILL-RUNNING stream
   * silently un-does the stream's view of every folded epoch — duplicates
@@ -22,7 +23,7 @@ import org.apache.spark.sql.SparkSession
   * that survives restarts — the SAME id [[org.apache.spark.sql.streaming
   * .StreamingQuery.id]] reports while running). The services all
   * checkpoint under `outDir/_checkpoint` (or a caller-supplied dir, which
-  * their compact() now accepts too), so compact() can read the id back
+  * their compact() accepts too), so compact() can read the id back
   * and refuse while any active query in the session carries it. A query
   * run from a DIFFERENT SparkSession/JVM against the same store is
   * invisible here — that remains the documented deployment contract (the

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -37,13 +37,7 @@ object TakedownStream {
     */
   def start(requests: DataFrame, outDir: String,
             checkpointDir: Option[String] = None): StreamingQuery =
-    requests.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), outDir, epoch)
-      }
-      .start()
+    EpochService.start(requests, outDir, checkpointDir)(runBatch(_, outDir, _))
 
   /** One micro-batch (factored out so batch specs can drive it
     * directly): dedup the batch's requests per doc_id (min reason —
@@ -51,9 +45,7 @@ object TakedownStream {
     * tombstone delta.
     */
   def runBatch(batch: DataFrame, outDir: String, epoch: Long): Unit =
-    batch.select(col("doc_id"), col("reason"))
-      .groupBy("doc_id").agg(min(col("reason")).as("reason"))
-      .write.mode("overwrite").parquet(s"$outDir/tombstones_delta/epoch=$epoch")
+    EpochService.write(byDoc(batch), outDir, "tombstones_delta", epoch)
 
   /** The GROWN tombstone view: committed base (absent is fine — a fresh
     * deployment starts with no erasures) ∪ all epoch deltas, one row per
@@ -62,77 +54,40 @@ object TakedownStream {
     * up to the last completed epoch.
     */
   def grownTombstones(spark: SparkSession, baseDir: String,
-                      outDir: String): DataFrame = {
-    val parts = Seq(existing(spark, s"$baseDir/tombstones"),
-      existing(spark, s"$outDir/tombstones_delta")).flatten
-    parts match {
-      case Nil => spark.range(0).select(col("id").as("doc_id"),
-        lit("").as("reason"))
-      case head :: tail =>
-        tail.foldLeft(head)(_ unionByName _)
-          .groupBy("doc_id").agg(min(col("reason")).as("reason"))
-    }
-  }
+                      outDir: String): DataFrame =
+    fold(spark, baseDir, outDir, _ => true)
 
   /** COMPACTION — fold base + deltas into a NEW committed tombstone base
-    * and clear the folded deltas. Commit-before-delete; see the class
-    * doc for the reader-migration ordering (erasures must never
-    * reappear).
-    *
-    * Two erasure-loss defenses beyond the sibling stores (round-13
-    * ADVICE 2 — losing a tombstone UN-SUPPRESSES an erasure, a
-    * compliance violation, so the doc-only ordering contract is not
-    * enough here):
-    *  - the stop-first contract is ENFORCED
-    *    ([[StreamGuard.requireStopped]] — refuses while the session
-    *    still runs the query checkpointed under `outDir`);
-    *  - the fold is EPOCH-SCOPED: the epoch dirs are listed ONCE, the
-    *    fold reads exactly that list, and only those dirs are deleted —
-    *    an epoch delta written between the fold and the delete (a
-    *    foreign writer, or a race the same-session guard cannot see)
-    *    survives for the next compaction instead of being silently
-    *    swallowed by a recursive delta-dir delete.
+    * and clear the folded deltas through [[EpochService.compact]]. See
+    * the class doc for the reader-migration ordering (erasures must never
+    * reappear). Losing a tombstone UN-SUPPRESSES an erasure, a compliance
+    * violation, so the skeleton's two defenses matter most here: the
+    * stop-first contract is enforced, and the fold is EPOCH-SCOPED — an
+    * epoch delta written between the listing and the delete survives for
+    * the next compaction instead of being swallowed.
     */
   def compact(spark: SparkSession, baseDir: String, outDir: String,
               newBaseDir: String, stamp: String = "compact",
-              checkpointDir: Option[String] = None): Unit = {
-    StreamGuard.requireStopped(spark,
-      checkpointDir.getOrElse(s"$outDir/_checkpoint"),
-      "TakedownStream.compact")
-    val deltaDir = new Path(s"$outDir/tombstones_delta")
-    val fs = deltaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val epochDirs =
-      if (fs.exists(deltaDir))
-        fs.listStatus(deltaDir).filter(_.isDirectory).map(_.getPath)
-          .filter(_.getName.startsWith("epoch=")).sortBy(_.getName).toSeq
-      else Seq.empty
-    val deltas =
-      if (epochDirs.isEmpty) None
-      else Some(spark.read.parquet(epochDirs.map(_.toString): _*)
-        .select(col("doc_id"), col("reason")))
-    val parts = existing(spark, s"$baseDir/tombstones").toSeq ++ deltas
-    val folded = parts match {
-      case Nil => spark.range(0).select(col("id").as("doc_id"),
-        lit("").as("reason"))
-      case head +: tail =>
-        tail.foldLeft(head)(_ unionByName _)
-          .groupBy("doc_id").agg(min(col("reason")).as("reason"))
+              checkpointDir: Option[String] = None): Unit =
+    EpochService.compact(spark, "TakedownStream.compact", outDir, checkpointDir,
+        Seq("tombstones_delta"), newBaseDir, stamp) { epochs =>
+      fold(spark, baseDir, outDir, epochs)
+        .write.mode("overwrite").parquet(s"$newBaseDir/tombstones")
     }
-    folded.write.mode("overwrite").parquet(s"$newBaseDir/tombstones")
-    graft.sources.SnapshotStore.commit(spark, newBaseDir, stamp)
-    epochDirs.foreach(p => fs.delete(p, true))
-    // only if nothing arrived since the listing does the parent go too —
-    // a late epoch keeps the dir and survives into the next compaction
-    if (fs.exists(deltaDir) && fs.listStatus(deltaDir).isEmpty)
-      fs.delete(deltaDir, true)
-  }
 
-  private def existing(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).nonEmpty)
-      Some(spark.read.parquet(dir).drop("epoch")
-        .select(col("doc_id"), col("reason")))
-    else None
+  /** One (doc_id, min reason) row per doc_id. */
+  private def byDoc(df: DataFrame): DataFrame =
+    df.groupBy("doc_id").agg(min(col("reason")).as("reason"))
+
+  /** Committed base (absent is fine) ∪ the `keep` epochs' deltas, by doc. */
+  private def fold(spark: SparkSession, baseDir: String, outDir: String,
+                   keep: Long => Boolean): DataFrame = {
+    val bp = new Path(s"$baseDir/tombstones")
+    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base =
+      if (fs.exists(bp) && fs.listStatus(bp).nonEmpty)
+        spark.read.parquet(bp.toString).select(col("doc_id"), col("reason"))
+      else spark.range(0).select(col("id").as("doc_id"), lit("").as("reason"))
+    byDoc(EpochService.withDeltas(spark, base, s"$outDir/tombstones_delta", keep))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextAnalysis
@@ -11,8 +11,7 @@ import graft.operators.TextAnalysis
   * micro-batch by [[TextAnalysis.unigramEncode]] against a FROZEN pruned
   * vocabulary (the persisted `unigram_vocab` artifact the registry
   * trains once per corpus snapshot), and the per-occurrence encodings
-  * land in epoch-partitioned overwrite parquet (idempotent crash
-  * replay — the [[CrawlDedup]] discipline).
+  * land in `epoch=<N>` parquet (effectively-once per [[EpochService]]).
   *
   * The vocabulary is deliberately NOT retrained per batch: encodings
   * must be commensurable across the stream's lifetime — a per-batch
@@ -37,20 +36,13 @@ object TokenizeStream {
     */
   def start(docs: DataFrame, vocabDir: String, outDir: String,
             checkpointDir: Option[String] = None): StreamingQuery = {
-    val spark = docs.sparkSession
-    val vocab = spark.read.parquet(vocabDir)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
-        runBatch(batch.toDF(), vocab, outDir, epoch)
-      }
-      .start()
+    val vocab = docs.sparkSession.read.parquet(vocabDir)
+    EpochService.start(docs, outDir, checkpointDir)(runBatch(_, vocab, outDir, _))
   }
 
   /** One micro-batch (factored out so batch specs can drive it directly). */
   def runBatch(batch: DataFrame, vocab: DataFrame, outDir: String,
                epoch: Long): Unit =
-    TextAnalysis.unigramEncode(batch, vocab)
-      .write.mode("overwrite").parquet(s"$outDir/encoded/epoch=$epoch")
+    EpochService.write(TextAnalysis.unigramEncode(batch, vocab),
+      outDir, "encoded", epoch)
 }

@@ -86,4 +86,15 @@ class AnnStreamSpec extends SparkSpec {
     assert(!zr.contains(50L), "zero-norm request must be dropped, not served garbage")
     assert(zr(51L).nonEmpty, "the healthy request in the same batch still answers")
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val base = Files.createTempDirectory("annlaw").toString
+    Similarity.persistAnnServe(emb, s"$base/snap", stamp = "s")
+    val snap = Similarity.loadAnnServe(spark, s"$base/snap")
+    val reqs = emb.filter(col("vec_id") < 3)
+      .select((col("vec_id") + 5000L).as("query_id"), col("embedding"))
+    EpochReplayLaw.check(spark, s"$base/out", Seq("topk"),
+      reqs.filter(col("query_id") === 5000L), reqs.filter(col("query_id") > 5000L))(
+      AnnStream.runBatch(_, snap, s"$base/out", _))
+  }
 }

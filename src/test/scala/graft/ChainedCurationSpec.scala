@@ -155,6 +155,49 @@ class ChainedCurationSpec extends SparkSpec {
     } finally qs.foreach(_.stop())
   }
 
+  test("replaying a scrub epoch (new part files under the same epoch=N) " +
+    "leaves the served document count unchanged") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.{EpochService, ScrubStream}
+    def text(tag: String): String = (1 to 40).map(i => s"$tag$i").mkString(" ")
+    val base = tmp("chainreplaybase")
+    Dedup.buildDedupIndex(Seq((1L, text("alpha"))).toDF("doc_id", "text"))
+      .write.parquet(s"$base/dedupindex")
+    val p = new Pipeline(spark, tmp("chainreplaystore"), tmp("chainreplayckpt"))
+    val input = MemoryStream[(Long, String)]
+    def withMeta(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("lang", lit("en")).withColumn("source", lit("crawl"))
+    val qs = p.startChainedCuration(withMeta(input.toDF().toDF("doc_id", "text")),
+      s"$base/dedupindex")
+    val wave = Seq((10L, text("alpha")),
+      (11L, "unique words with contact a@b.org inside"), (12L, text("novel")))
+    try {
+      input.addData(wave: _*)
+      drain(qs)
+      val ixBase = indexedBaseFor(p)
+      def served(): Long =
+        IndexStream.servingIndex(spark, ixBase, p.indexStorePath).nTotal
+      val before = served()
+      assert(before == 2L, s"precondition: the two survivors are served: $before")
+      def parts(): Set[String] = Seq("clean", "scrubbed").flatMap(o =>
+          new java.io.File(s"${p.scrubStorePath}/$o/epoch=0").list().toSeq)
+        .filter(_.startsWith("part-")).toSet
+      val partsBefore = parts()
+      def dedupEpochs() = EpochService.epochs(spark, s"${p.crawlStorePath}/clean")
+      val dedupBefore = dedupEpochs()
+      // the scrub stage crashed after its writes and replays epoch 0
+      ScrubStream.runBatch(withMeta(wave.toDF("doc_id", "text")),
+        p.scrubStorePath, epoch = 0L)
+      assert(parts().intersect(partsBefore).isEmpty,
+        s"the replay rewrites epoch 0 under new part-file names: ${parts()}")
+      drain(qs)
+      assert(dedupEpochs().size > dedupBefore.size,
+        s"the dedup stage ingests the replayed files as new epochs: ${dedupEpochs()}")
+      assert(served() == before,
+        s"the dedup gate absorbs a scrub replay: served ${served()} vs $before")
+    } finally qs.foreach(_.stop())
+  }
+
   /** An empty base search index (the chain starts indexing from zero). */
   private def indexedBaseFor(p: Pipeline): String = {
     val dir = tmp("chainemptyix")

@@ -113,4 +113,12 @@ class ChunkStreamSpec extends SparkSpec {
     assert(regrown.vectors.exceptAll(nb.vectors).isEmpty &&
       nb.vectors.exceptAll(regrown.vectors).isEmpty)
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val outDir = Files.createTempDirectory("chunklaw").toString + "/out"
+    EpochReplayLaw.check(spark, outDir, Seq("vectors_delta", "bands_delta"),
+      Seq((100L, text("gamma"))).toDF("doc_id", "text"),
+      Seq((101L, text("delta", 10)), (102L, text("eps"))).toDF("doc_id", "text"))(
+      ChunkStream.runBatch(_, outDir, _))
+  }
 }

@@ -136,4 +136,15 @@ class CrawlDedupSpec extends SparkSpec {
     assert(clean == Set(22L),
       s"dups of the corpus AND of pre-compaction epochs must drop: $clean")
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val base = Files.createTempDirectory("crawllaw").toString
+    Dedup.buildDedupIndex(Seq((1L, text("alpha"))).toDF("doc_id", "text"))
+      .write.parquet(s"$base/index")
+    val baseIndex = spark.read.parquet(s"$base/index")
+    EpochReplayLaw.check(spark, s"$base/out", Seq("pairs", "clean", "index_delta"),
+      Seq((10L, text("novelA")), (11L, text("alpha"))).toDF("doc_id", "text"),
+      Seq((20L, text("novelA")), (21L, text("novelB"))).toDF("doc_id", "text"))(
+      CrawlDedup.runBatch(_, baseIndex, s"$base/out", _))
+  }
 }

@@ -63,4 +63,15 @@ class DeconStreamSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/clean")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(2L, 3L))
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val out = tmp("decon-law")
+    val bitmap = Dedup.bloomBitmap(bench)
+    EpochReplayLaw.check(spark, out, Seq("contaminated", "clean"),
+      Seq((1L, "x alpha beta gamma delta epsilon y"), (2L, "clean words"))
+        .toDF("doc_id", "text"),
+      Seq((3L, "alpha beta gamma delta epsilon zeta"), (4L, "more clean material"))
+        .toDF("doc_id", "text"))(
+      DeconStream.runBatch(_, bitmap, bench, out, _))
+  }
 }

@@ -76,4 +76,17 @@ class DriftStreamSpec extends SparkSpec {
     DriftStream.runBatch(ref.limit(0), refShares, outDir, epoch = 7)
     assert(!log().exists(_._1 == 7L), "empty batch must write nothing")
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val base = Files.createTempDirectory("driftlaw").toString
+    Corpus.shareCard((0L until 10L).map(i =>
+        doc(i, if (i % 2 == 0) "en" else "fr", "src0"))
+      .toDF("doc_id", "text", "lang", "source")).write.parquet(s"$base/ref")
+    val refShares = spark.read.parquet(s"$base/ref")
+    EpochReplayLaw.check(spark, s"$base/out", Seq("drift"),
+      Seq(doc(100L, "en", "src0"), doc(101L, "fr", "src0"))
+        .toDF("doc_id", "text", "lang", "source"),
+      Seq(doc(200L, "de", "src9")).toDF("doc_id", "text", "lang", "source"))(
+      DriftStream.runBatch(_, refShares, s"$base/out", _))
+  }
 }

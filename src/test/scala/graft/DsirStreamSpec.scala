@@ -113,4 +113,13 @@ class DsirStreamSpec extends SparkSpec {
     DsirStream.runBatch(b0, model, outDir, epoch = 0L, threshold = 1.5)
     assert(state() == before, s"replay must be idempotent: ${state()} vs $before")
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val model = Corpus.loadDsirModel(spark, freshModelDir())
+    val outDir = Files.createTempDirectory("dsirlaw").toString + "/out"
+    EpochReplayLaw.check(spark, outDir, Seq("selected", "rejected"),
+      Seq((10L, "a b a b"), (11L, "b a b a")).toDF("doc_id", "text"),
+      Seq((20L, "a b c"), (21L, "x y")).toDF("doc_id", "text"))(
+      DsirStream.runBatch(_, model, outDir, _, threshold = 1.5))
+  }
 }

@@ -155,4 +155,15 @@ class EmbedDedupSpec extends SparkSpec {
     assert(clean == Set(22L),
       s"dups of the corpus AND of pre-compaction epochs must drop: $clean")
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val base = Files.createTempDirectory("embedlaw").toString
+    Similarity.buildAnnIndex(Seq((1L, vec(0))).toDF("vec_id", "embedding"))
+      .write.parquet(s"$base/index")
+    val baseIndex = spark.read.parquet(s"$base/index")
+    EpochReplayLaw.check(spark, s"$base/out", Seq("pairs", "clean", "index_delta"),
+      Seq((10L, vec(4)), (11L, vec(0))).toDF("vec_id", "embedding"),
+      Seq((20L, vec(4)), (21L, vec(6))).toDF("vec_id", "embedding"))(
+      EmbedDedup.runBatch(_, baseIndex, s"$base/out", _, threshold = 0.9, dim = D))
+  }
 }

@@ -156,4 +156,18 @@ class EncodeStreamSpec extends SparkSpec {
       emptyVecs.columns.toSeq == Seq("vec_id", "embedding"),
       "vectors dir must always be written, empty frame when nothing folds")
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val base = Files.createTempDirectory("pqlaw").toString
+    def v(hot: Int, mag: Float) = Array.tabulate(dim)(i => if (i == hot) mag else 1f)
+    Similarity.trainPqCodebooks(
+        Seq((1L, v(0, 10f)), (2L, v(2, 10f)), (3L, v(4, 10f))).toDF("vec_id", "embedding"),
+        m = m, k = 2, trainIters = 1, dim = dim)
+      .write.parquet(s"$base/cb")
+    val cb = spark.read.parquet(s"$base/cb")
+    EpochReplayLaw.check(spark, s"$base/out", Seq("codes", "vectors"),
+      Seq((50L, v(0, 9f)), (51L, v(2, 9f))).toDF("vec_id", "embedding"),
+      Seq((60L, v(4, 9f))).toDF("vec_id", "embedding"))(
+      EncodeStream.runBatch(_, cb, s"$base/out", _, m, dim))
+  }
 }

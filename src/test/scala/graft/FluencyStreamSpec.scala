@@ -90,4 +90,13 @@ class FluencyStreamSpec extends SparkSpec {
     FluencyStream.runBatch(b0, model, outDir, epoch = 0L, threshold = 0.5)
     assert(state() == before, s"replay must be idempotent: ${state()} vs $before")
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val model = TextAnalysis.loadLmModel(spark, freshModelDir())
+    val outDir = Files.createTempDirectory("fluencylaw").toString + "/out"
+    EpochReplayLaw.check(spark, outDir, Seq("clean", "rejected"),
+      Seq((10L, "a b a b a b"), (11L, "a c")).toDF("doc_id", "text"),
+      Seq((20L, "a b a c"), (21L, "z")).toDF("doc_id", "text"))(
+      FluencyStream.runBatch(_, model, outDir, _, threshold = 0.5))
+  }
 }

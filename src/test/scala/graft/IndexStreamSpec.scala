@@ -135,4 +135,13 @@ class IndexStreamSpec extends SparkSpec {
       lexiconOf(resumed).contains("epsilon"),
       "post-compaction epochs must keep accumulating")
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val outDir = Files.createTempDirectory("ixlaw").toString + "/out"
+    EpochReplayLaw.check(spark, outDir,
+      Seq("postings_delta", "lexicon_delta", "meta_delta"),
+      Seq((10L, "alpha gamma")).toDF("doc_id", "text"),
+      Seq((20L, "beta gamma gamma"), (21L, "delta")).toDF("doc_id", "text"))(
+      IndexStream.runBatch(_, outDir, _))
+  }
 }

@@ -111,4 +111,18 @@ class IvfStreamSpec extends SparkSpec {
     assert(resumed.select("vec_id").distinct().count() == grownIds.size + 1,
       "post-compaction epochs must keep accumulating")
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val base = Files.createTempDirectory("ivflaw").toString
+    (0L until 10L).map(i => (i, vec(i.toInt * 6, 10f), (i % 4).toInt))
+      .toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$base/embeddings.parquet")
+    Similarity.persistIndex(spark.read.parquet(s"$base/embeddings.parquet"),
+      s"$base/index", stamp = "spec", probeDepth = 4, pairNprobe = 4)
+    val (idx, _) = Similarity.loadIndex(spark, s"$base/index")
+    EpochReplayLaw.check(spark, s"$base/stream", Seq("lists_delta"),
+      Seq((50L, vec(0, 9f))).toDF("vec_id", "embedding"),
+      Seq((51L, vec(6, 9f)), (52L, vec(12, 9f))).toDF("vec_id", "embedding"))(
+      IvfStream.runBatch(_, idx, s"$base/stream", _))
+  }
 }

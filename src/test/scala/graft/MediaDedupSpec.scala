@@ -83,4 +83,15 @@ class MediaDedupSpec extends SparkSpec {
     MediaDedup.runBatch(b1, baseIndex, outDir, epoch = 1L)
     assert(state() == before, s"replay must be idempotent: ${state()} vs $before")
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val base = Files.createTempDirectory("medialaw").toString
+    Multimodal.mediaPhash(mediaDf(Seq((1L, text("alpha")))))
+      .write.parquet(s"$base/index")
+    val baseIndex = spark.read.parquet(s"$base/index")
+    EpochReplayLaw.check(spark, s"$base/out", Seq("pairs", "clean", "index_delta"),
+      mediaDf(Seq((10L, text("qwerty")), (11L, text("alpha")))),
+      mediaDf(Seq((20L, text("qwerty")), (21L, text("zxcvbn")))))(
+      MediaDedup.runBatch(_, baseIndex, s"$base/out", _))
+  }
 }

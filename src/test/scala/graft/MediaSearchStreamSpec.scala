@@ -90,4 +90,17 @@ class MediaSearchStreamSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(!self.contains((2L, 2L)), "in-corpus probes must not self-match")
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val base = Files.createTempDirectory("mediasearchlaw").toString
+    Multimodal.mediaPhash(mediaDf(Seq((1L, text("alpha")), (2L, text("beta")))))
+      .write.parquet(s"$base/phash")
+    val corpusPh = spark.read.parquet(s"$base/phash")
+    def probes(rows: Seq[(Long, String)]) = mediaDf(rows)
+      .withColumnRenamed("media_id", "query_id")
+    EpochReplayLaw.check(spark, s"$base/out", Seq("matches"),
+      probes(Seq((100L, text("alpha")))),
+      probes(Seq((200L, text("beta")), (201L, text("zeta")))))(
+      MediaSearchStream.runBatch(_, corpusPh, s"$base/out", _))
+  }
 }

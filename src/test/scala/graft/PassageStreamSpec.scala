@@ -71,4 +71,13 @@ class PassageStreamSpec extends SparkSpec {
       .groupBy("query_id", "doc_id").count().filter(col("count") > 2)
     assert(perDoc.count() == 0)
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val (base, t) = passageDir()
+    EpochReplayLaw.check(spark, s"$base/out", Seq("passages"),
+      Seq((100L, "event stream processing")).toDF("query_id", "query_text"),
+      Seq((200L, "data quality filter"), (201L, "vector similarity"))
+        .toDF("query_id", "query_text"))(
+      PassageStream.runBatch(_, t, s"$base/out", _))
+  }
 }

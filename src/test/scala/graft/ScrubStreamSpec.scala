@@ -76,4 +76,14 @@ class ScrubStreamSpec extends SparkSpec {
     assert(r.getString(0) == "call <PHONE> now",
       "re-scrub must not alter masked text")
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val outDir = Files.createTempDirectory("scrublaw").toString + "/out"
+    EpochReplayLaw.check(spark, outDir, Seq("clean", "scrubbed"),
+      Seq((10L, "call 202-555-0100 now", "en", "src0"), (11L, "plain", "en", "src0"))
+        .toDF("doc_id", "text", "lang", "source"),
+      Seq((20L, "write to a.b@example.com", "en", "src0"), (21L, "quiet", "en", "src0"))
+        .toDF("doc_id", "text", "lang", "source"))(
+      ScrubStream.runBatch(_, outDir, _))
+  }
 }

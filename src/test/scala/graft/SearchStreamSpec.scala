@@ -101,4 +101,12 @@ class SearchStreamSpec extends SparkSpec {
     assert(key(spark.read.parquet(s"$base/out/hits")) == before,
       "replayed epoch must be idempotent")
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val (base, index) = indexDir()
+    EpochReplayLaw.check(spark, s"$base/out", Seq("hits"),
+      Seq((100L, Seq("hash", "join"))).toDF("query_id", "terms"),
+      Seq((200L, Seq("query", "stream")), (201L, Seq("vector"))).toDF("query_id", "terms"))(
+      SearchStream.runBatch(_, index, s"$base/out", _))
+  }
 }

@@ -277,4 +277,14 @@ class SplitStreamSpec extends SparkSpec {
     assert(got == Map(50L -> 30L),
       s"restart on the folded bases continues the assignment history: $got")
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val (base, _) = fixture()
+    val baseIndex = spark.read.parquet(s"$base/index")
+    val clusters = spark.read.parquet(s"$base/clusters")
+    EpochReplayLaw.check(spark, s"$base/out", Seq("assigned", "index_delta", "key_delta"),
+      Seq((30L, text("delta")), (31L, near("alpha"))).toDF("doc_id", "text"),
+      Seq((40L, near("delta")), (41L, text("omega"))).toDF("doc_id", "text"))(
+      SplitStream.runBatch(_, baseIndex, clusters, s"$base/out", _))
+  }
 }

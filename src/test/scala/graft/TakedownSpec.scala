@@ -190,4 +190,13 @@ class TakedownSpec extends SparkSpec {
       "the second fold must carry BOTH generations' erasures")
     assert(!new java.io.File(s"$outDir/tombstones_delta").exists())
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    import graft.streaming.TakedownStream
+    val outDir = java.nio.file.Files.createTempDirectory("graft-tdlaw").toString + "/out"
+    EpochReplayLaw.check(spark, outDir, Seq("tombstones_delta"),
+      Seq((5L, "erasure"), (7L, "optout"), (7L, "dmca")).toDF("doc_id", "reason"),
+      Seq((9L, "erasure")).toDF("doc_id", "reason"))(
+      TakedownStream.runBatch(_, outDir, _))
+  }
 }

@@ -62,4 +62,17 @@ class TokenizeStreamSpec extends SparkSpec {
     assert(key(spark.read.parquet(s"$outDir/encoded")) == hits,
       "replayed epoch must be idempotent")
   }
+
+  test("epoch replay law: a replayed epoch, and one that lost an output, reproduce every output") {
+    val base = Files.createTempDirectory("toklaw").toString
+    val train = Seq((1L, "ab ab ab cd cd")).toDF("doc_id", "text")
+    val merges = TextAnalysis.bpeMerges(train, 2).collect()
+      .map(x => (x.getString(1), x.getString(2))).toSeq
+    TextAnalysis.unigramVocab(train, merges, keep = 2).write.parquet(s"$base/vocab")
+    val vocab = spark.read.parquet(s"$base/vocab")
+    EpochReplayLaw.check(spark, s"$base/out", Seq("encoded"),
+      Seq((10L, "ab cd"), (11L, "abcd")).toDF("doc_id", "text"),
+      Seq((20L, "xyz ab")).toDF("doc_id", "text"))(
+      TokenizeStream.runBatch(_, vocab, s"$base/out", _))
+  }
 }
