@@ -582,21 +582,25 @@ object Dedup {
     * (doc_id1, doc_id2), iterated to a fixpoint. Exposed separately so a
     * materialized pairs table can be clustered without re-running the
     * sketch pipeline.
+    *
+    * `barrier` cuts the lineage of the edges and of every round's labels.
+    * The default, a lazy `localCheckpoint`, is never released: its blocks
+    * wait on driver GC. A streaming batch passes a cut its batch releases
+    * (`EpochService.cut`).
     */
-  def clustersFromPairs(pairs: DataFrame, maxRounds: Int = 64): DataFrame = {
-    // lazy checkpoints: the Catalyst plan is truncated at BUILD time (the
-    // 4^rounds analysis blowup never forms). NB under AQE the checkpoint
-    // still materializes its query stages when called — building this
-    // frame therefore EXECUTES the rounds; that is inherent to iterative
+  def clustersFromPairs(pairs: DataFrame, maxRounds: Int = 64,
+                        barrier: DataFrame => DataFrame = _.localCheckpoint(eager = false)): DataFrame = {
+    // the barriers truncate the Catalyst plan at BUILD time (the 4^rounds
+    // analysis blowup never forms). NB under AQE a barrier still
+    // materializes its query stages when called — building this frame
+    // therefore EXECUTES the rounds; that is inherent to iterative
     // refinement (GraphFrames' Pregel has the same property) and the
     // reason this operator, unlike the rest of the registry, does real
     // work at construction time
-    val edges = pairs.select(col("doc_id1").as("src"), col("doc_id2").as("dst"))
-      .unionByName(pairs.select(col("doc_id2").as("src"), col("doc_id1").as("dst")))
-      .localCheckpoint(eager = false) // materialized once: consumed by every round
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("lbl", col("doc_id"))
-      .localCheckpoint(eager = false)
+    val edges = barrier(pairs.select(col("doc_id1").as("src"), col("doc_id2").as("dst"))
+      .unionByName(pairs.select(col("doc_id2").as("src"), col("doc_id1").as("dst")))) // consumed by every round
+    var labels = barrier(edges.select(col("src").as("doc_id")).distinct()
+      .withColumn("lbl", col("doc_id")))
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
@@ -604,13 +608,11 @@ object Dedup {
       val nbr = edges.join(labels.toDF("dst", "dlbl"), "dst")
         .groupBy("src").agg(min("dlbl").as("nlbl"))
         .withColumnRenamed("src", "doc_id")
-      val propagated = labels.join(nbr, Seq("doc_id"), "left")
-        .select(col("doc_id"), least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-        .localCheckpoint(eager = false) // truncate lineage before the self-join below
+      val propagated = barrier(labels.join(nbr, Seq("doc_id"), "left") // cut before the self-join below
+        .select(col("doc_id"), least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl")))
       // pointer jump: lbl(v) := lbl(lbl(v)) — doubles effective reach
-      val jumped = propagated.join(propagated.toDF("jid", "jlbl"), col("lbl") === col("jid"), "left")
-        .select(col("doc_id"), coalesce(col("jlbl"), col("lbl")).as("lbl"))
-        .localCheckpoint(eager = false)
+      val jumped = barrier(propagated.join(propagated.toDF("jid", "jlbl"), col("lbl") === col("jid"), "left")
+        .select(col("doc_id"), coalesce(col("jlbl"), col("lbl")).as("lbl")))
       // fixpoint test: labels only decrease, so "no row changed" ⇔ both the
       // propagate and jump steps were identities ⇔ exact component minima
       // reached. One count on the just-materialized frame per round.

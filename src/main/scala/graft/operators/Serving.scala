@@ -11,10 +11,13 @@ import org.apache.spark.sql.functions._
   * The serving queries consume the materialized outputs of
   * [[StreamAggregates]] (the reference's "DynamoDB tables"): serving-side
   * re-aggregation runs over pre-aggregated rows, not raw events — the
-  * materialized-view shape of SURVEY.md §4.3. At scale these frames would be
-  * keyed tables maintained by the streaming upsert sink
-  * ([[graft.sources.KeyedUpsertSink]]); here they are computed inline and
-  * Catalyst collapses the whole pipeline into one plan.
+  * materialized-view shape of SURVEY.md §4.3. Deployed, each frame is
+  * `KeyedUpsertSink.read` of a keyed store the streaming topology upserts
+  * ([[graft.sources.KeyedUpsertSink]]): a view materialized once per commit
+  * stamp, held as one partition when small, so each endpoint frame plans
+  * without an exchange and runs as one Spark job. The registry passes the
+  * batch forms instead, and Catalyst collapses that whole pipeline into one
+  * plan.
   *
   * Time-range endpoints pin "now" to the data's `max(ts)` via a broadcast
   * scalar frame instead of `current_timestamp()` (FIXTURES.md §5 determinism;
@@ -90,15 +93,17 @@ object Serving {
     windowedAgg.agg(sum("event_count").as("total_events"))
 
   /** GET /stats, part 2 (api/...:308-322, A6): alert counts by severity,
-    * zero-seeded for high/critical exactly as the reference's HashMap seed.
+    * zero-seeded for high/critical exactly as the reference's HashMap seed:
+    * one row per seeded severity, 0 where it has no alert. One global
+    * aggregate (a conditional count per seeded severity) unpivoted into the
+    * two rows, so no join and no exchange over a one-partition input.
+    * `spark` is unused, kept for the callers.
     */
-  def alertSeverityCounts(alerts: DataFrame, spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val seed = Seq("high", "critical").toDF("severity")
-    val counts = alerts.groupBy("severity").agg(count(lit(1)).as("alert_count"))
-    seed.join(counts, Seq("severity"), "left")
-      .select(col("severity"), coalesce(col("alert_count"), lit(0L)).as("alert_count"))
-  }
+  def alertSeverityCounts(alerts: DataFrame, spark: SparkSession): DataFrame =
+    alerts.agg(
+        count(when(col("severity") === "high", lit(1))).as("high"),
+        count(when(col("severity") === "critical", lit(1))).as("critical"))
+      .selectExpr("stack(2, 'high', high, 'critical', critical) AS (severity, alert_count)")
 
   /** Signup→purchase conversion funnel: users who signed up, and of those,
     * users whose first purchase strictly follows their first signup —

@@ -49,15 +49,16 @@ import org.apache.spark.sql.types.StructType
   *     matches, so a source regenerated mid-session rebuilds on the next
   *     call instead of serving stale tables for the session's lifetime
   *     (round-9 ADVICE-2);
-  *   - the memo is keyed by (session, dataset dir), and entries of stopped
-  *     sessions are swept on every call (round-6 ADVICE-4);
+  *   - the memo ([[Memo]]) is keyed by (session, dataset dir), and entries
+  *     of stopped sessions are swept on every call (round-6 ADVICE-4);
   *   - the directory is [[snapshotDir]] of the FIRST source.
   * Each family owns its own memo: a build may call another family's `get`
   * (a composed answer over already-persisted families), and a nested
   * `compute` on one shared map would fail with a recursive update.
   *
   * SOURCE reads use the same content stamps: [[parquet]] infers a table's
-  * or a store's schema once per stamp instead of on every read.
+  * schema once per stamp instead of on every read, and a keyed store's
+  * view ([[KeyedUpsertSink.read]]) is materialized once per stamp.
   */
 object SnapshotStore {
 
@@ -73,29 +74,48 @@ object SnapshotStore {
   final class Family[A] private[SnapshotStore] (
       name: String, version: String, sources: Seq[String],
       build: Build, load: (SparkSession, String) => A) {
-    private val memo = new ConcurrentHashMap[(SparkSession, String), (String, A)]()
+    private val memo = new Memo[A]
 
     /** The family's tables for the dataset at `d`, built on first use of
       * this source snapshot and re-read from the warehouse thereafter.
       */
     def get(s: SparkSession, d: String): A = {
-      memo.keySet.removeIf(_._1.sparkContext.isStopped)
       val paths = sources.map(src => s"$d/$src")
       val stamp = version + ":" + paths.map(fingerprint(s, _)).mkString("+")
-      memo.compute((s, d), (_, cached) =>
-        if (cached != null && cached._1 == stamp) cached
-        else {
-          val dir = snapshotDir(s, paths.head, name)
-          if (!ready(s, dir, stamp)) {
-            build(s, d, dir, stamp)
-            commit(s, dir, stamp)
-          }
-          (stamp, load(s, dir))
-        })._2
+      memo.get(s, d, stamp) { _ =>
+        val dir = snapshotDir(s, paths.head, name)
+        if (!ready(s, dir, stamp)) {
+          build(s, d, dir, stamp)
+          commit(s, dir, stamp)
+        }
+        load(s, dir)
+      }
     }
 
     /** Live memo entries — one per (session, dataset dir) in use. */
     private[graft] def memoSize: Int = memo.size
+  }
+
+  /** One value per (session, directory), reused while its stamp matches:
+    * the memo a [[Family]] and a keyed store's view
+    * ([[KeyedUpsertSink.read]]) share. Entries of stopped sessions are
+    * swept on every call, and concurrent misses on one key build once
+    * (`compute`). `build` gets the value it replaces, so it can release
+    * what that value holds.
+    */
+  final class Memo[A] {
+    private val held = new ConcurrentHashMap[(SparkSession, String), (String, A)]()
+
+    def get(s: SparkSession, dir: String, stamp: String)(build: Option[A] => A): A = {
+      held.keySet.removeIf(_._1.sparkContext.isStopped)
+      held.compute((s, dir), (_, cur) =>
+        if (cur != null && cur._1 == stamp) cur else (stamp, build(Option(cur).map(_._2))))._2
+    }
+
+    /** Drop `dir`'s entry for `s`, returning its value. */
+    def remove(s: SparkSession, dir: String): Option[A] = Option(held.remove((s, dir))).map(_._2)
+
+    def size: Int = held.size
   }
 
   /** Define a family: `build` writes the tables, `load(spark, snapshotDir)`
@@ -128,44 +148,47 @@ object SnapshotStore {
     f"${q.toString.hashCode}%08x-$count-$len-$mtime"
   }
 
-  /** Resolved parquet schemas, one entry per table path or store directory:
+  /** Resolved parquet schemas, one entry per table path:
     * `key -> (stamp, schema, facts)`. Inferring a schema runs a Spark job
-    * (a footer read, merged across files under `mergeSchema`), and the
-    * relation it yields cannot be shared: a reused DataFrame would alias
-    * its expression ids in a self-join. So only the schema is kept, and
+    * (a footer read), and the relation it yields cannot be shared: a
+    * reused DataFrame would alias its expression ids in a self-join. So only the schema is kept, and
     * every call builds a fresh relation from it. No DataFrame or session
     * is held.
     */
   private val schemas = new ConcurrentHashMap[String, (String, StructType, Seq[String])]()
 
   /** A parquet relation over `paths` whose schema is inferred once per
-    * content stamp. `content` stamps the files (a [[fingerprint]], a
-    * store's committed marker set); every `spark.sql.parquet.*` and
-    * `spark.sql.legacy.parquet.*` conf the session has set joins it,
-    * since they change how a footer maps to a schema. While the stamp
-    * matches `key`'s entry the relation is read with the memoized schema,
-    * which runs no job; otherwise the schema is inferred by a plain read
-    * and memoized with `facts(schema)`, small facts about the same content
-    * (a store's key columns, a footer annotation), returned with the
-    * relation. A hit returns the facts stored under `key`, so each key has
-    * one caller: a table path is read by its one `Tables` loader, a store
-    * directory by `KeyedUpsertSink`.
+    * content stamp. `content` stamps the files (a [[fingerprint]]);
+    * [[parquetStamp]] joins the session's parquet confs to it. While the
+    * stamp matches `key`'s entry the relation is read with the memoized
+    * schema, which runs no job; otherwise the schema is inferred by a plain
+    * read and memoized with `facts(schema)`, small facts about the same
+    * content (a footer annotation), returned with the relation. A hit
+    * returns the facts stored under `key`, so each key has one caller: a
+    * table path is read by its one `Tables` loader.
     */
-  def parquet(spark: SparkSession, key: String, content: String, paths: Seq[String],
-              mergeSchema: Boolean = false)(facts: StructType => Seq[String]): (DataFrame, Seq[String]) = {
-    val stamp = content + spark.conf.getAll.toSeq
-      .filter { case (k, _) => k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") }
-      .sorted.mkString("|", ",", "")
+  def parquet(spark: SparkSession, key: String, content: String,
+              paths: Seq[String])(facts: StructType => Seq[String]): (DataFrame, Seq[String]) = {
+    val stamp = parquetStamp(spark, content)
     schemas.get(key) match {
       case (`stamp`, schema, known) => (spark.read.schema(schema).parquet(paths: _*), known)
       case _ =>
-        val reader = if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
-        val df = reader.parquet(paths: _*)
+        val df = spark.read.parquet(paths: _*)
         val known = facts(df.schema)
         schemas.put(key, (stamp, df.schema, known))
         (df, known)
     }
   }
+
+  /** `content` joined by every `spark.sql.parquet.*` and
+    * `spark.sql.legacy.parquet.*` conf the session has set: they change how
+    * a footer maps to a schema, so a memo of anything derived from parquet
+    * files must miss when one of them flips.
+    */
+  def parquetStamp(spark: SparkSession, content: String): String =
+    content + spark.conf.getAll.toSeq
+      .filter { case (k, _) => k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") }
+      .sorted.mkString("|", ",", "")
 
   /** The parquet table at `path`, its schema inferred once per
     * [[fingerprint]].

@@ -70,6 +70,16 @@ object EpochService {
     finally held.reverseIterator.foreach(_.unpersist())
   }
 
+  /** A barrier that also cuts the Catalyst plan, for an iterative operator
+    * whose rounds would otherwise nest every earlier round's plan: `df`
+    * persisted by `keep`, so the batch releases it with its other
+    * barriers, and re-rooted as a plan leaf over its rows.
+    */
+  def cut(keep: DataFrame => DataFrame)(df: DataFrame): DataFrame = {
+    val kept = keep(df)
+    kept.sparkSession.createDataFrame(kept.rdd, kept.schema)
+  }
+
   /** The epochs present under `dir` (its `epoch=N` subdirectories),
     * ascending; empty when `dir` is absent.
     */

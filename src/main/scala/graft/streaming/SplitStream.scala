@@ -157,7 +157,7 @@ object SplitStream {
       val intraPairs = keep(Dedup.selfEdgesFromIndex(batchIdx, threshold))
       val intraKeys =
         if (intraPairs.isEmpty) emptyKeys(spark, "intra_key")
-        else keep(Dedup.clustersFromPairs(intraPairs)
+        else keep(Dedup.clustersFromPairs(intraPairs, barrier = EpochService.cut(keep))
           .join(inherited, Seq("doc_id"), "left")
           .select(col("cluster_id"), col("doc_id"),
             coalesce(col("inherited_key"), col("doc_id")).as("k"))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Multimodal, TextAnalysis}
 import graft.sources.SnapshotStore
-import graft.streaming.{CrawlDedup, DeconStream, EpochService, FluencyStream, MediaDedup}
+import graft.streaming.{CrawlDedup, DeconStream, EpochService, FluencyStream, MediaDedup, SplitStream}
 
 /** The shared epoch skeleton: compaction folds and deletes exactly the
   * epochs it listed, and per-batch barrier frames are released by the
@@ -111,6 +111,25 @@ class EpochServiceSpec extends SparkSpec {
       Seq((e, "a b a b"), (e + 100, "a c")).toDF("doc_id", "text"),
       model, s"$modelDir/out", e))
     assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+  }
+
+  test("SplitStream.runBatch releases its per-batch frames, the intra-batch clustering's cuts too") {
+    val base = Files.createTempDirectory("splitbarrier").toString
+    val corpus = Seq((1L, "en", text("gamma"))).toDF("doc_id", "lang", "text")
+    Dedup.buildDedupIndex(corpus).write.parquet(s"$base/index")
+    Seq((1L, 1L)).toDF("doc_id", "cluster_id").write.parquet(s"$base/clusters")
+    val baseIndex = spark.read.parquet(s"$base/index")
+    val clusters = spark.read.parquet(s"$base/clusters")
+    def near(tag: String): String = (text(tag).split(" ").dropRight(2) :+ "zz" :+ "qq").mkString(" ")
+    // each epoch holds one intra-batch near-dup pair, novel to the corpus
+    val leaked = leakedOverFiveEpochs(e => SplitStream.runBatch(
+      Seq((10L * e + 100, "en", text(s"pair$e")), (10L * e + 101, "en", near(s"pair$e")))
+        .toDF("doc_id", "lang", "text"), baseIndex, clusters, s"$base/out", e))
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+    val keys = spark.read.parquet(s"$base/out/assigned").select("doc_id", "split_key").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert((0L until 5L).forall(e => keys(10L * e + 101) == 10L * e + 100),
+      s"each pair shares its minimum member's key: $keys")
   }
 
   test("MediaDedup.runBatch releases its per-batch frames") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators._
+import graft.sources.KeyedUpsertSink
 
 /** Physical-plan shape assertions — the scale-critical plan properties the
   * build brief calls out: top-k compiles to TakeOrderedAndProject (not a
@@ -170,6 +171,40 @@ class PlanShapeSpec extends SparkSpec {
     val live = SparkEntry.queries("q_windowed_agg")(spark, sf)
     val stored = SparkEntry.queries("q_aggregations_recent")(spark, sf)
     assert(stored.count() > 0 && live.count() > 0)
+  }
+
+  test("store-backed endpoint frames run one Spark job each, with no exchange, on a view hit") {
+    val norm = CityEvents.normalize(Tables.events(spark, sf))
+    val root = java.nio.file.Files.createTempDirectory("planshape-store").toString
+    val stores = Seq(
+      ("raw", StreamAggregates.rawEvents(norm), Seq("rec_id", "ts_str")),
+      ("agg", StreamAggregates.windowedAggregate(norm), Seq("partition_key")),
+      ("alerts", StreamAggregates.alerts(norm).drop("ts"), Seq("city", "ts_str")))
+    // two segments each, so the read resolves last-writer-wins
+    for ((name, form, keys) <- stores; (half, epoch) <- Seq(0L, 1L).zipWithIndex)
+      KeyedUpsertSink.upsert(spark, s"$root/$name", keys,
+        form.filter(abs(xxhash64(keys.map(col): _*)) % 2 === half), epoch.toLong, "w")
+    def read(name: String) = KeyedUpsertSink.read(spark, s"$root/$name")
+    stores.foreach { case (name, _, _) => read(name).count() } // materialize: the frames below hit
+    val frames = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "health" -> (() => Serving.health(read("raw"))),
+      "summary" -> (() => Serving.summary(read("agg"), "NYC")),
+      "cities" -> (() => Serving.cities(read("agg"))),
+      "aggregationsFor" -> (() => Serving.aggregationsFor(read("agg"), "NYC", "click", 10)),
+      "statsTotal" -> (() => Serving.statsTotal(read("agg"))),
+      "alertSeverityCounts" -> (() => Serving.alertSeverityCounts(read("alerts"), spark)))
+    object aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val jobs = new JobCount(spark)
+    try frames.foreach { case (name, frame) =>
+      val df = frame()
+      val (got, n) = jobs.of(df.collect())
+      assert(got.nonEmpty, s"$name answered nothing")
+      assert(n == 1, s"$name ran $n Spark jobs")
+      val exchanges = aqe.collect(df.queryExecution.executedPlan) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+      }
+      assert(exchanges.isEmpty, s"$name plans an exchange:\n${df.queryExecution.executedPlan}")
+    } finally jobs.close()
   }
 
   test("dataset-card composition joins narrow frames without scan explosion (r10 next-round 7)") {
