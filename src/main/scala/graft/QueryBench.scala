@@ -8,7 +8,7 @@ package graft
   * Usage: QueryBench <sfDir> <iters> <query>...
   * Each named query is warmed twice untimed at the target SF (snapshot
   * builds amortize, codegen compiles), then timed `iters` times with the
-  * canary (`q_raw_events`, floor 0.09 s — see [[Bench]]) interleaved so
+  * canary (`q_raw_events`, floor 0.081 s — see [[Bench]]) interleaved so
   * every measurement carries its own host-load reading.
   */
 object QueryBench {

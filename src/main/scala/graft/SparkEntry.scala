@@ -726,24 +726,7 @@ object SparkEntry {
       |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
 
   private lazy val LateInteractionSql: String =
-    s"""WITH dch AS (SELECT doc_id, string_split(text, ' ') AS t,
-      |  CAST(floor((greatest(len(string_split(text, ' ')) - 8, 1) + 23)
-      |    / CAST(24 AS DOUBLE)) AS INT) AS n_chunks FROM documents),
-      |ch AS (SELECT doc_id, unnest(generate_series(0, n_chunks - 1)) AS chunk_id, t
-      |  FROM dch),
-      |cht AS (SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-      |  array_to_string(t[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' ') AS chunk_text
-      |  FROM ch),
-      |fp AS (SELECT doc_id, chunk_id,
-      |  ${TextAnalysis.Sql.fingerprintOf("chunk_text")} AS f FROM cht),
-      |pv AS (SELECT doc_id, chunk_id, doc_id * 1048576 + chunk_id AS pid,
-      |  list_transform(range(0, 16), dd ->
-      |    CAST((f * (2*dd + 3) + dd * 65599) % 2000001 AS DOUBLE)
-      |      / 1000000.0 - 1.0) AS v FROM fp),
-      |b AS (SELECT pid, doc_id, ${Similarity.Sql.lshBucket("v", 16, 16)} AS bucket
-      |  FROM pv),
-      |c AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, pid, doc_id
-      |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
+    s"""WITH $PassageIndexCtes,
       |qc AS (SELECT doc_id AS query_id, pid AS qpid, v FROM pv
       |  WHERE doc_id < 5 AND ${Similarity.Sql.dot("v", "v")} > 0),
       |qp AS (SELECT qc.query_id, qc.qpid, c.band, c.bb FROM c
@@ -770,14 +753,7 @@ object SparkEntry {
       |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
 
   private lazy val CrossModalTopKSql: String =
-    s"""WITH fp AS (SELECT doc_id AS media_id,
-      |  ${TextAnalysis.Sql.fingerprint} AS f FROM documents),
-      |tv AS (SELECT media_id, list_transform(range(0, 16), d ->
-      |  CAST((f * (2*d + 3) + d * 65599) % 2000001 AS DOUBLE)
-      |    / 1000000.0 - 1.0) AS t FROM fp),
-      |mv AS (SELECT media_id, list_transform(range(0, 16), d ->
-      |  CAST((f * (2*d + 1) + d * 40503) % 2000001 AS DOUBLE)
-      |    / 1000000.0 - 1.0) AS m FROM fp),
+    s"""WITH $MediaTowerCtes,
       |q AS (SELECT media_id AS query_id, t AS qv FROM tv
       |  WHERE media_id < 5 AND ${Similarity.Sql.dot("t", "t")} > 0),
       |sc AS (SELECT q.query_id, mv.media_id,
@@ -790,19 +766,7 @@ object SparkEntry {
       |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
 
   private lazy val MediaNearDupSql: String =
-    """WITH codes AS (SELECT doc_id AS media_id,
-      |  list_transform(string_split(text, ''), c -> CAST(ord(c) AS BIGINT)) AS cs
-      |  FROM documents),
-      |hh AS (SELECT media_id, len(cs) AS n, cs FROM codes),
-      |sm AS (SELECT media_id, list_transform(generate_series(0, 48),
-      |  j -> cs[CAST(least(j * 2, n - 1) AS INT) + 1]) AS smp FROM hh WHERE n > 0),
-      |h AS (SELECT media_id,
-      |  CAST(list_sum(list_transform(generate_series(0, 47),
-      |    i -> CASE WHEN smp[CAST(i AS INT) + 1] > smp[CAST(i AS INT) + 2]
-      |         THEN (CAST(1 AS BIGINT) << CAST(i AS INT))
-      |         ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS phash
-      |  FROM sm
-      |  UNION ALL SELECT media_id, CAST(0 AS BIGINT) FROM hh WHERE n = 0)
+    s"""WITH ${phashCtes("documents")}
       |SELECT a.media_id AS id1, b.media_id AS id2,
       |  CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
       |FROM h a JOIN h b ON a.media_id < b.media_id
@@ -904,6 +868,51 @@ object SparkEntry {
   private def bpeMergesTable(s: SparkSession, d: String): DataFrame =
     bpeTables(s, d).merges
 
+  /** The clean pipelines' shared Spark prefix: quality keep over the %11
+    * corpus → benchmark decontamination → lexical near-dedup greedy drop
+    * over the shared pairs frame restricted to decontaminated endpoints.
+    * Returns the lexical survivors with every document column.
+    * Contamination is a per-doc property (see deconCollisions), so
+    * anti-joining the quality survivors against the persisted
+    * corpus-wide collision table equals decontaminating them.
+    * BARRIER (r17): decon feeds both drop semi-joins AND the final
+    * anti-join; without it each reference re-expands the whole
+    * quality→decon subtree (the r17 plan audit read the documents and
+    * flag scans three times over). The checkpointed frame is the narrow
+    * per-doc survivor projection. DEPLOYMENT CAVEAT (r17 verdict 9):
+    * localCheckpoint is not fault-tolerant — an executor loss on a real
+    * cluster fails the query instead of recomputing; swap for
+    * persist(DISK_ONLY) where lineage safety outweighs the extra job.
+    * This caveat covers every funnel barrier (the callers' `lex` too).
+    */
+  private def lexicalSurvivors(s: SparkSession, d: String): DataFrame = {
+    val corpus = Tables.documents(s, d).filter(pmod(col("doc_id"), lit(11)) =!= 0)
+    val q = corpus.join(
+      qualityFlags(s, d).filter(col("keep")).select("doc_id"),
+      Seq("doc_id"), "left_semi")
+    val decon = q.join(deconCollisions(s, d).select("doc_id"),
+      Seq("doc_id"), "left_anti")
+      .localCheckpoint(eager = false)
+    val drop = nearDupPairs(s, d)
+      .join(decon.select(col("doc_id").as("doc_id1")), Seq("doc_id1"), "left_semi")
+      .join(decon.select(col("doc_id").as("doc_id2")), Seq("doc_id2"), "left_semi")
+      .select(col("doc_id2").as("doc_id")).distinct()
+    decon.join(drop, Seq("doc_id"), "left_anti")
+  }
+
+  /** The full clean pipelines' semantic stage over the lexical survivors
+    * `lex`: every semantic pair (vec_id1, vec_id2) with both endpoints in
+    * `lex` drops its higher id; returns (doc_id, lang, source) by doc_id.
+    */
+  private def semanticSurvivors(lex: DataFrame, pairs: DataFrame): DataFrame = {
+    val sem = pairs
+      .join(lex.select(col("doc_id").as("vec_id1")), Seq("vec_id1"), "left_semi")
+      .join(lex.select(col("doc_id").as("vec_id2")), Seq("vec_id2"), "left_semi")
+      .select(col("vec_id2").as("doc_id")).distinct()
+    lex.join(sem, Seq("doc_id"), "left_anti")
+      .select("doc_id", "lang", "source").orderBy("doc_id")
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference's centerpiece A1 windowed aggregation (SURVEY.md §7.1).
     */
@@ -915,19 +924,91 @@ object SparkEntry {
   /** Shared DuckDB CTE bodies mirroring the Spark operators. */
   private val NORM   = CityEvents.Sql.normalized
 
+  /** Sign-LSH buckets `b` of the prepared vectors `d` and their 4-bit
+    * band keys `c` (band, bb, vec_id).
+    */
+  private val VecBandCtes = s"""b AS (SELECT vec_id, ${Similarity.Sql.lshBucket("v")} AS bucket FROM d),
+    |c AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, vec_id
+    |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u)""".stripMargin
+
+  /** The banded candidates `p0` (query_id, vec_id) of the query vectors
+    * selected by predicate `queries` over vec_id: every other vector
+    * sharing a band key, over [[VecBandCtes]] of the prepared vectors `d`.
+    */
+  private def vecBandProbeCtes(queries: String): String =
+    s"""d AS (${Similarity.Sql.prepared}),
+      |$VecBandCtes,
+      |q AS (SELECT vec_id AS query_id, band, bb FROM c WHERE $queries),
+      |p0 AS (SELECT DISTINCT q.query_id, c2.vec_id
+      |  FROM c c2 JOIN q ON c2.band = q.band AND c2.bb = q.bb
+      |  WHERE c2.vec_id <> q.query_id)""".stripMargin
+
+  /** Every vector pair's exact cosine, `p` (vec_id1 < vec_id2, cosine),
+    * over the prepared vectors `d`.
+    */
+  private val CosinePairsCtes = s"""d AS (${Similarity.Sql.prepared}),
+    |p AS (SELECT a.vec_id AS vec_id1, b.vec_id AS vec_id2,
+    |  ${Similarity.Sql.cosine("a.v", "b.v")} AS cosine
+    |  FROM d a JOIN d b ON a.vec_id < b.vec_id)""".stripMargin
+
+  /** The duplicate-collapsed vectors: `g` (embedding, rep), each distinct
+    * embedding's min vec_id, and `d`, the reps' prepared vectors.
+    */
+  private val RepVecCtes: String =
+    s"""g AS (SELECT embedding, min(vec_id) AS rep FROM embeddings GROUP BY embedding),
+      |d AS (SELECT * FROM (${Similarity.Sql.prepared}) dp
+      |  WHERE vec_id IN (SELECT rep FROM g))""".stripMargin
+
+  /** The banding cards' body after their band CTEs: for each (family,
+    * band CTE (band, bb, vec_id)) arm over [[RepVecCtes]]' `d`, the
+    * banded candidate pairs, the exact-verified finds at cosine 0.4, the
+    * hottest band bucket, and recall and candidate rate against the
+    * shared exact truth; one row per family.
+    */
+  private def bandArmsCardSql(arms: Seq[(String, String)]): String = {
+    def union(sel: ((String, String)) => String) = arms.map(sel).mkString("\n  UNION ALL ")
+    val pairs = arms.map { case (_, c) =>
+      s"""p$c AS (SELECT DISTINCT a.vec_id AS vec_id1, c2.vec_id AS vec_id2
+        |  FROM $c a JOIN $c c2 ON a.band = c2.band AND a.bb = c2.bb
+        |    AND a.vec_id < c2.vec_id)""".stripMargin
+    }
+    s"""${pairs.mkString(",\n")},
+      |cand AS (${union { case (f, c) => s"SELECT '$f' AS family, vec_id1, vec_id2 FROM p$c" }}),
+      |ver AS (SELECT family, ${Similarity.Sql.cosine("a.v", "b2.v")} AS cosine
+      |  FROM cand JOIN d a ON cand.vec_id1 = a.vec_id
+      |            JOIN d b2 ON cand.vec_id2 = b2.vec_id),
+      |fam AS (SELECT family, count(*) AS n_candidates,
+      |  count(CASE WHEN cosine >= 0.4 THEN 1 END) AS n_found
+      |  FROM ver GROUP BY family),
+      |bal AS (SELECT family, max(n) AS max_band_bucket FROM (
+      |    ${union { case (f, c) => s"SELECT '$f' AS family, count(*) AS n FROM $c GROUP BY band, bb" }})
+      |  GROUP BY family),
+      |tr AS (SELECT count(CASE WHEN cosine >= 0.4 THEN 1 END) AS n_truth
+      |  FROM (SELECT ${Similarity.Sql.cosine("a.v", "b2.v")} AS cosine
+      |    FROM d a JOIN d b2 ON a.vec_id < b2.vec_id)),
+      |nr AS (SELECT count(*) AS n_reps FROM d)
+      |SELECT fam.family, n_candidates, n_found, n_truth,
+      |  CAST(n_found AS DOUBLE) / n_truth AS recall,
+      |  CAST(n_candidates AS DOUBLE) / (n_reps * (n_reps - 1) / 2)
+      |    AS candidate_rate,
+      |  max_band_bucket
+      |FROM fam JOIN bal ON fam.family = bal.family
+      |CROSS JOIN tr CROSS JOIN nr ORDER BY fam.family""".stripMargin
+  }
+
   /** The sign-LSH verified near-dup pair pipeline (buckets → bands →
-    * candidates → exact verify → dup-group expansion) as a WITH-body,
-    * shared by the `q_lsh_neardup_pairs` oracle and the
-    * `q_ivf_recall_bound` witness's exact-pair count.
+    * candidates → exact verify → dup-group expansion) as a WITH-body
+    * ending in `allp` (vec_id1, vec_id2, cosine), every verified pair,
+    * shared by the `q_lsh_neardup_pairs` oracle and its consumers: the
+    * threshold card, the `q_ivf_recall_bound` witness's exact-pair count,
+    * the contrastive triples, the semantic clusters
+    * ([[LshComponentCtes]]) and the scale-shape clean pipelines'
+    * semantic stage ([[SemLshDedupCtes]]).
     */
   private val lshPairsSqlCtes: String =
-    s"""g AS (SELECT embedding, min(vec_id) AS rep FROM embeddings GROUP BY embedding),
+    s"""$RepVecCtes,
        |m AS (SELECT g.rep, e.vec_id FROM embeddings e JOIN g ON e.embedding = g.embedding),
-       |d AS (SELECT * FROM (${Similarity.Sql.prepared}) dp
-       |  WHERE vec_id IN (SELECT rep FROM g)),
-       |b AS (SELECT vec_id, ${Similarity.Sql.lshBucket("v")} AS bucket FROM d),
-       |c AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, vec_id
-       |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
+       |$VecBandCtes,
        |p0 AS (SELECT DISTINCT a.vec_id AS vec_id1, c2.vec_id AS vec_id2
        |  FROM c a JOIN c c2 ON a.band = c2.band AND a.bb = c2.bb
        |    AND a.vec_id < c2.vec_id),
@@ -944,31 +1025,53 @@ object SparkEntry {
        |xg AS (SELECT least(m1.vec_id, m2.vec_id) AS vec_id1,
        |  greatest(m1.vec_id, m2.vec_id) AS vec_id2, rp.cosine
        |  FROM rp JOIN m m1 ON rp.vec_id1 = m1.rep
-       |          JOIN m m2 ON rp.vec_id2 = m2.rep)""".stripMargin
+       |          JOIN m m2 ON rp.vec_id2 = m2.rep),
+       |allp AS (SELECT * FROM intra UNION ALL SELECT * FROM xg)""".stripMargin
 
-  /** The lexical verified Jaccard pair pipeline (rep-collapse → df-capped
-    * shingle index → intersection → verify → dup-group expansion) as a
-    * WITH-body, shared by the `q_jaccard_pairs` oracle and the lexical
-    * threshold-sensitivity card so the two can never drift (the
-    * [[lshPairsSqlCtes]] precedent).
+  /** Exact min-label connected components `cl` (vec_id, cluster_id) over
+    * [[lshPairsSqlCtes]]' pairs by recursive-CTE reachability, so the
+    * enclosing WITH must be RECURSIVE.
     */
-  private val jaccardPairsSqlCtes: String =
-    """reps AS (SELECT text, min(doc_id) AS rep FROM documents GROUP BY text),
+  private val LshComponentCtes: String =
+    s"""$lshPairsSqlCtes,
+      |edges AS (SELECT vec_id1 AS src, vec_id2 AS dst FROM allp
+      |  UNION SELECT vec_id2, vec_id1 FROM allp),
+      |reach(vec_id, lbl) AS (
+      |  SELECT DISTINCT src, src FROM edges
+      |  UNION
+      |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.vec_id),
+      |cl AS (SELECT vec_id, min(lbl) AS cluster_id FROM reach GROUP BY vec_id)""".stripMargin
+
+  /** Exact-text rep-collapse and the representatives' 3-shingle postings:
+    * `reps`, `members` (rep, doc_id), `rdocs`, `sets` (doc_id, sh) and
+    * `ex0` (doc_id, shingle) — the head of the lexical pair oracles.
+    */
+  private val RepShingleCtes: String =
+    s"""reps AS (SELECT text, min(doc_id) AS rep FROM documents GROUP BY text),
       |members AS (SELECT r.rep, d.doc_id FROM documents d JOIN reps r ON d.text = r.text),
       |rdocs AS (SELECT d.doc_id, d.text FROM documents d JOIN reps r ON d.doc_id = r.rep),
-      |sets AS (SELECT doc_id, list_distinct(
-      |  list_transform(generate_series(1, len(t) - 2),
-      |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM rdocs)),
+      |sets AS (${Dedup.Sql.shingleSets("rdocs")}),
       |nonempty AS (SELECT * FROM sets WHERE len(sh) > 0),
-      |ex0 AS (SELECT doc_id, unnest(sh) AS shingle FROM nonempty),
-      |kept AS (SELECT * FROM ex0 WHERE shingle IN
-      |  (SELECT shingle FROM ex0 GROUP BY shingle HAVING count(*) <= 50)),
+      |ex0 AS (SELECT doc_id, unnest(sh) AS shingle FROM nonempty)""".stripMargin
+
+  /** The df-capped postings `kept` (shingles carried by ≤ 50 docs) of
+    * postings CTE `ex`, with per-doc set sizes `sz` and the pairwise
+    * shared-shingle counts `inter` (doc_id1 < doc_id2).
+    */
+  private def cappedInterCtes(ex: String): String =
+    s"""kept AS (SELECT * FROM $ex WHERE shingle IN
+      |  (SELECT shingle FROM $ex GROUP BY shingle HAVING count(*) <= 50)),
       |sz AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY doc_id),
       |inter AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2, count(*) AS n_common
       |  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2),
-      |rp AS (SELECT doc_id1, doc_id2,
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** Verify (jaccard ≥ 0.5 over `inter`/`sz`) and dup-group expansion:
+    * `intra` (exact-duplicate members at 1.0) and `xg` (verified rep
+    * pairs expanded to every member pair), both (doc_id1, doc_id2, jaccard).
+    */
+  private val JaccardExpandCtes: String =
+    """rp AS (SELECT doc_id1, doc_id2,
       |  CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) AS jaccard
       |  FROM inter
       |  JOIN sz s1 ON doc_id1 = s1.doc_id
@@ -982,6 +1085,15 @@ object SparkEntry {
       |  greatest(m1.doc_id, m2.doc_id) AS doc_id2, rp.jaccard
       |  FROM rp JOIN members m1 ON rp.doc_id1 = m1.rep
       |           JOIN members m2 ON rp.doc_id2 = m2.rep)""".stripMargin
+
+  /** The lexical verified Jaccard pair pipeline (rep-collapse → df-capped
+    * shingle index → intersection → verify → dup-group expansion) as a
+    * WITH-body, shared by the `q_jaccard_pairs` oracle and the lexical
+    * threshold-sensitivity card so the two can never drift (the
+    * [[lshPairsSqlCtes]] precedent).
+    */
+  private val jaccardPairsSqlCtes: String =
+    s"$RepShingleCtes,\n${cappedInterCtes("ex0")},\n$JaccardExpandCtes"
   private val AGG =
     """SELECT city || '#' || event_type || '#' || strftime(ws, '%Y-%m-%dT%H:%M:%S') AS partition_key,
       |  strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start,
@@ -996,61 +1108,145 @@ object SparkEntry {
   private val WITH_NORM_ALERTS =
     s"WITH norm AS ($NORM), alerts AS (SELECT * FROM norm WHERE severity IN ('high','critical'))"
 
-  /** Shared CTE chain of the passage retrieval-quality oracles
-    * (q_passage_mrr / q_passage_ndcg): chunking, towers, band index,
-    * the banded SERVED ranking (`rkb`, ranks ≤ 10) and the exact
-    * brute-force scoring (`dve`, with its per-doc diversity ordinal) —
-    * one site, so the two metric cards can never disagree on what
-    * "served" or "exact" means.
+  /** The gaps-and-islands oracle of both severity-streak forms (one-phase
+    * and segmented): every high/critical event that closes a run of
+    * exactly 2 consecutive ones per city.
     */
-  private val PassageEvalCtes = s"""dch AS (SELECT doc_id, string_split(text, ' ') AS t,
+  private val SeverityStreaksSql = s"""$WITH_NORM,
+    |f AS (SELECT city, ts,
+    |  CASE WHEN severity IN ('high','critical') THEN 1 ELSE 0 END AS hi FROM norm),
+    |r AS (SELECT city, ts, hi,
+    |  row_number() OVER (PARTITION BY city ORDER BY ts, hi) AS rn,
+    |  sum(hi) OVER (PARTITION BY city ORDER BY ts, hi
+    |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hseq
+    |  FROM f),
+    |p AS (SELECT city, ts,
+    |  row_number() OVER (PARTITION BY city, rn - hseq ORDER BY rn) AS streak
+    |  FROM r WHERE hi = 1)
+    |SELECT city, CAST(streak AS INT) AS streak,
+    |  strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS last_ts
+    |FROM p WHERE streak = 2
+    |ORDER BY city, last_ts""".stripMargin
+
+  /** The 16-d text tower over a fingerprint column `f` (the Passage /
+    * in-context-packing embedding), one site for every oracle that
+    * re-derives it.
+    */
+  private val TextTower = """list_transform(range(0, 16), dd ->
+    |    CAST((f * (2*dd + 3) + dd * 65599) % 2000001 AS DOUBLE)
+    |      / 1000000.0 - 1.0)""".stripMargin
+
+  /** The media stub towers over each document's fingerprint `fp`: text
+    * tower `tv` (media_id, t) and media tower `mv` (media_id, m).
+    */
+  private val MediaTowerCtes = s"""fp AS (SELECT doc_id AS media_id,
+    |  ${TextAnalysis.Sql.fingerprint} AS f FROM documents),
+    |tv AS (SELECT media_id, $TextTower AS t FROM fp),
+    |mv AS (SELECT media_id, list_transform(range(0, 16), d ->
+    |  CAST((f * (2*d + 1) + d * 40503) % 2000001 AS DOUBLE)
+    |    / 1000000.0 - 1.0) AS m FROM fp)""".stripMargin
+
+  /** The perceptual hash `h` (media_id, kind, phash) of every document of
+    * `docs` as a media payload: code points sampled on the fixed 49-point
+    * grid, dHash gradient signs packed into 48 bits; empty texts hash to 0.
+    */
+  private def phashCtes(docs: String): String =
+    s"""codes AS (SELECT doc_id AS media_id,
+      |  ['image','audio','video'][CAST(doc_id % 3 AS INT) + 1] AS kind,
+      |  list_transform(string_split(text, ''), c -> CAST(ord(c) AS BIGINT)) AS cs
+      |  FROM $docs),
+      |hh AS (SELECT media_id, kind, len(cs) AS n, cs FROM codes),
+      |sm AS (SELECT media_id, kind, list_transform(generate_series(0, 48),
+      |  j -> cs[CAST(least(j * 2, n - 1) AS INT) + 1]) AS smp FROM hh WHERE n > 0),
+      |h AS (SELECT media_id, kind,
+      |  CAST(list_sum(list_transform(generate_series(0, 47),
+      |    i -> CASE WHEN smp[CAST(i AS INT) + 1] > smp[CAST(i AS INT) + 2]
+      |         THEN (CAST(1 AS BIGINT) << CAST(i AS INT))
+      |         ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS phash
+      |  FROM sm
+      |  UNION ALL SELECT media_id, kind, CAST(0 AS BIGINT) FROM hh WHERE n = 0)""".stripMargin
+
+  /** The passage index every passage oracle re-derives: chunking (24-token
+    * stride, 32-token window) → per-chunk towers `pv` (doc_id, chunk_id,
+    * n_tokens, pid, v) → 16-plane buckets `b` → 4-bit band keys `c`.
+    */
+  private val PassageIndexCtes = s"""dch AS (SELECT doc_id, string_split(text, ' ') AS t,
     |  CAST(floor((greatest(len(string_split(text, ' ')) - 8, 1) + 23)
     |    / CAST(24 AS DOUBLE)) AS INT) AS n_chunks FROM documents),
     |ch AS (SELECT doc_id, unnest(generate_series(0, n_chunks - 1)) AS chunk_id, t
     |  FROM dch),
     |cht AS (SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-    |  array_to_string(t[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' ') AS chunk_text
+    |  array_to_string(t[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' ') AS chunk_text,
+    |  CAST(least(len(t) - chunk_id * 24, 32) AS BIGINT) AS n_tokens
     |  FROM ch),
-    |fp AS (SELECT doc_id, chunk_id,
+    |fp AS (SELECT doc_id, chunk_id, n_tokens,
     |  ${TextAnalysis.Sql.fingerprintOf("chunk_text")} AS f FROM cht),
-    |pv AS (SELECT doc_id, chunk_id, doc_id * 1048576 + chunk_id AS pid,
-    |  list_transform(range(0, 16), dd ->
-    |    CAST((f * (2*dd + 3) + dd * 65599) % 2000001 AS DOUBLE)
-    |      / 1000000.0 - 1.0) AS v FROM fp),
-    |qv AS (SELECT doc_id AS query_id, pid, v FROM pv
-    |  WHERE doc_id < 5 AND chunk_id = 0 AND ${Similarity.Sql.dot("v", "v")} > 0),
+    |pv AS (SELECT doc_id, chunk_id, n_tokens,
+    |  doc_id * 1048576 + chunk_id AS pid,
+    |  $TextTower AS v FROM fp),
     |b AS (SELECT pid, doc_id, ${Similarity.Sql.lshBucket("v", 16, 16)} AS bucket
     |  FROM pv),
     |c AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, pid, doc_id
-    |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
+    |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u)""".stripMargin
+
+  /** The diversity-capped passage ranking over banded candidates `p0`
+    * (query_id, pid) scored against the query vectors of CTE `qs`:
+    * `sc` cosines, `dv` per-doc ordinal, `rk` (≤ 2 chunks per doc,
+    * ranked by cosine, doc_id, chunk_id).
+    */
+  private def passageRankCtes(qs: String): String =
+    s"""sc AS (SELECT p0.query_id, cv.doc_id, cv.chunk_id, cv.n_tokens, cv.pid,
+      |  ${Similarity.Sql.cosine("qd.v", "cv.v")} AS cosine
+      |  FROM p0 JOIN pv cv USING (pid)
+      |       JOIN $qs qd ON qd.query_id = p0.query_id
+      |  WHERE ${Similarity.Sql.dot("cv.v", "cv.v")} > 0),
+      |dv AS (SELECT *, row_number() OVER (PARTITION BY query_id, doc_id
+      |  ORDER BY cosine DESC, pid) AS rn_doc FROM sc),
+      |rk AS (SELECT query_id, doc_id, chunk_id, n_tokens, cosine,
+      |  CAST(row_number() OVER (PARTITION BY query_id
+      |    ORDER BY cosine DESC, doc_id, chunk_id) AS BIGINT) AS rank
+      |  FROM dv WHERE rn_doc <= 2)""".stripMargin
+
+  /** The served passage top-k (the persisted `topk` before its rank ≤ 10
+    * cut): each of docs 0–4 queries with its first chunk's vector `qv`,
+    * band-collides against other documents' chunks, and ranks through
+    * [[passageRankCtes]]. Follows [[PassageIndexCtes]].
+    */
+  private val PassageTopKCtes = s"""qv AS (SELECT doc_id AS query_id, pid, v FROM pv
+    |  WHERE doc_id < 5 AND chunk_id = 0 AND ${Similarity.Sql.dot("v", "v")} > 0),
     |q AS (SELECT qv.query_id, c.band, c.bb FROM c JOIN qv USING (pid)),
     |p0 AS (SELECT DISTINCT q.query_id, c2.pid FROM c c2
     |  JOIN q ON c2.band = q.band AND c2.bb = q.bb
     |  WHERE c2.doc_id <> q.query_id),
-    |scb AS (SELECT p0.query_id, cv.doc_id, cv.chunk_id, cv.pid,
-    |  ${Similarity.Sql.cosine("qd.v", "cv.v")} AS cosine
-    |  FROM p0 JOIN pv cv USING (pid)
-    |       JOIN qv qd ON qd.query_id = p0.query_id
-    |  WHERE ${Similarity.Sql.dot("cv.v", "cv.v")} > 0),
-    |dvb AS (SELECT *, row_number() OVER (PARTITION BY query_id, doc_id
-    |  ORDER BY cosine DESC, pid) AS rn_doc FROM scb),
-    |rkb AS (SELECT query_id, doc_id, chunk_id, rank FROM (
-    |  SELECT query_id, doc_id, chunk_id, row_number() OVER (
-    |    PARTITION BY query_id ORDER BY cosine DESC, doc_id, chunk_id) AS rank
-    |  FROM dvb WHERE rn_doc <= 2) WHERE rank <= 10),
+    |${passageRankCtes("qv")}""".stripMargin
+
+  /** Shared CTE chain of the passage retrieval-quality oracles
+    * (q_passage_recall_bound / q_passage_mrr / q_passage_ndcg): the
+    * banded SERVED ranking (`rkb`, ranks ≤ 10) and the exact brute-force
+    * ranking (`dve` with its per-doc diversity ordinal, `rke` ranks
+    * ≤ 10) — one site, so the metric cards can never disagree on what
+    * "served" or "exact" means.
+    */
+  private val PassageEvalCtes = s"""$PassageIndexCtes,
+    |$PassageTopKCtes,
+    |rkb AS (SELECT query_id, doc_id, chunk_id, rank FROM rk WHERE rank <= 10),
     |sce AS (SELECT qv.query_id, cv.doc_id, cv.chunk_id, cv.pid,
     |  ${Similarity.Sql.cosine("qv.v", "cv.v")} AS cosine
     |  FROM pv cv CROSS JOIN qv
     |  WHERE cv.doc_id <> qv.query_id
     |    AND ${Similarity.Sql.dot("cv.v", "cv.v")} > 0),
     |dve AS (SELECT *, row_number() OVER (PARTITION BY query_id, doc_id
-    |  ORDER BY cosine DESC, pid) AS rn_doc FROM sce)""".stripMargin
+    |  ORDER BY cosine DESC, pid) AS rn_doc FROM sce),
+    |rke AS (SELECT query_id, doc_id, chunk_id, rank FROM (
+    |  SELECT query_id, doc_id, chunk_id, row_number() OVER (
+    |    PARTITION BY query_id ORDER BY cosine DESC, doc_id, chunk_id) AS rank
+    |  FROM dve WHERE rn_doc <= 2) WHERE rank <= 10)""".stripMargin
 
   /** Exact near-dup pair chain (0.8 jaccard over 3-shingle sets) shared
     * by the split-hygiene oracles — the q_split_leakage derivation
     * hoisted to one site. Ends with `prs` (doc_id1, doc_id2, jaccard).
     */
-  private val NearDupPairsCtes = s"""sets AS (${Dedup.Sql.shingleSets}),
+  private val NearDupPairsCtes = s"""sets AS (${Dedup.Sql.shingleSets("documents")}),
     |nonempty AS (SELECT * FROM sets WHERE len(sh) > 0),
     |ex AS (SELECT doc_id, unnest(sh) AS shingle FROM nonempty),
     |inter AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2, count(*) AS n_common
@@ -1075,14 +1271,134 @@ object SparkEntry {
     |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.doc_id),
     |cl AS (SELECT doc_id, min(lbl) AS cluster_id FROM reach GROUP BY doc_id)""".stripMargin
 
+  /** The six PII families' placeholder counts over `clean_text`, in
+    * `n_pii`'s summation order: as named columns, and as their sum.
+    */
+  private val PiiMarkCounts = Seq("n_emails" -> Pii.EmailMark, "n_phones" -> Pii.PhoneMark,
+    "n_ips" -> Pii.IpMark, "n_ids" -> Pii.IdMark, "n_intl_phones" -> Pii.E164Mark,
+    "n_ibans" -> Pii.IbanMark).map { case (n, m) => n -> Pii.Sql.markCount("clean_text", m) }
+  private val PiiCountCols = PiiMarkCounts.map { case (n, e) => s"$e AS $n" }.mkString(",\n  ")
+  private val PiiMarkSum = PiiMarkCounts.map(_._2).mkString("\n  + ")
+
   /** The deterministic split CASE over any id expression — dataSplit's
     * double-mod hash as SQL, one site for every split oracle.
     */
-  private def splitCaseSql(e: String): String = {
-    def b(x: String) =
-      s"(((((($x % 1000003) * 2246822519) % 999999937) % 1000003) * 3266489917) % 999999893) % 100"
-    s"CASE WHEN ${b(e)} < 90 THEN 'train' WHEN ${b(e)} < 95 THEN 'val' ELSE 'test' END"
-  }
+  private def splitBucketSql(e: String): String =
+    s"(((((($e % 1000003) * 2246822519) % 999999937) % 1000003) * 3266489917) % 999999893) % 100"
+  private def splitCaseSql(e: String): String =
+    s"CASE WHEN ${splitBucketSql(e)} < 90 THEN 'train' WHEN ${splitBucketSql(e)} < 95 THEN 'val' ELSE 'test' END"
+
+  /** `sp` (doc_id, split): every document's deterministic split. */
+  private val SplitCte = s"sp AS (SELECT doc_id, ${splitCaseSql("doc_id")} AS split FROM documents)"
+
+  /** The corpus-MLE bigram LM fluency chain: bigram occurrences `bo2`
+    * (doc_id, pos, l, r), per-doc `p2` (doc_id, n_bigrams, ratio_sum —
+    * the conditionals folded in position order) and `fl` (doc_id,
+    * n_bigrams, fluency). Its names stay clear of [[dsirOracleCtes]]',
+    * which the training manifest splices beside it.
+    */
+  private val LmFluencyCtes = """w2 AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+    |bo2 AS (SELECT doc_id, i - 1 AS pos, t[i] AS l, t[i+1] AS r
+    |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i FROM w2)),
+    |bc2 AS (SELECT l, r, count(*) AS c_xy FROM bo2 GROUP BY l, r),
+    |hc2 AS (SELECT l, sum(c_xy) AS c_x FROM bc2 GROUP BY l),
+    |sc2 AS (SELECT doc_id, pos,
+    |  CAST(c_xy AS DOUBLE) / CAST(c_x AS DOUBLE) AS ratio
+    |  FROM bo2 JOIN bc2 USING (l, r) JOIN hc2 USING (l)),
+    |p2 AS (SELECT doc_id, count(*) AS n_bigrams,
+    |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+    |    list_transform(list_sort(list(struct_pack(pos := pos, ratio := ratio))),
+    |      x -> x.ratio)), (a, b) -> a + b) AS ratio_sum
+    |  FROM sc2 GROUP BY doc_id),
+    |fl AS (SELECT doc_id, n_bigrams,
+    |  ratio_sum / CAST(n_bigrams AS DOUBLE) AS fluency FROM p2)""".stripMargin
+
+  /** [[LmFluencyCtes]] → `cc` (doc_id, lang, fluency, bucket): the CCNet
+    * per-language fluency terciles head/middle/tail.
+    */
+  private val CcnetCtes = s"""$LmFluencyCtes,
+    |cc AS (SELECT fl.doc_id, dd.lang, fl.fluency,
+    |  CASE ntile(3) OVER (PARTITION BY dd.lang ORDER BY fl.fluency DESC, fl.doc_id)
+    |    WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
+    |  FROM fl JOIN documents dd USING (doc_id))""".stripMargin
+
+  /** The exact-token-budget cut: `c3` (each doc's tokens before it in its
+    * (lang, shard) stratum, portable-hash order) and the docs inside the
+    * per-shard budget, `tm` (doc_id).
+    */
+  private val TokenBudgetCtes = """t3 AS (SELECT doc_id, lang, doc_id % 8 AS shard,
+    |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+    |  (doc_id % 1000003) * 2654435761 AS h FROM documents),
+    |c3 AS (SELECT *, CAST(coalesce(sum(n_tokens) OVER (PARTITION BY lang, shard
+    |  ORDER BY h, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+    |  AS BIGINT) AS cum_before FROM t3),
+    |tm AS (SELECT doc_id FROM c3
+    |  WHERE cum_before < CASE lang WHEN 'en' THEN 600 WHEN 'zh' THEN 300
+    |    WHEN 'de' THEN 300 WHEN 'fr' THEN 300 WHEN 'es' THEN 300 ELSE 0 END)""".stripMargin
+
+  /** The shipped mix's keep rule: `keeps` (doc_id, lang, fluency, bucket),
+    * the non-tail CCNet docs inside the token budget.
+    */
+  private val MixKeepCtes = s"""$CcnetCtes,
+    |$TokenBudgetCtes,
+    |keeps AS (SELECT cc.doc_id, cc.lang, cc.fluency, cc.bucket FROM cc
+    |  WHERE cc.bucket <> 'tail' AND cc.doc_id IN (SELECT doc_id FROM tm))""".stripMargin
+
+  /** Per-document coverage `pd` (doc_id, n_tokens, n_oov) by the corpus's
+    * top-20 vocabulary `v` (tf DESC, token), over the token rows `t`.
+    */
+  private val VocabCoverageCtes =
+    """t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
+      |  FROM documents),
+      |v AS (SELECT token FROM (SELECT token, count(*) AS tf FROM t
+      |  GROUP BY token ORDER BY tf DESC, token LIMIT 20)),
+      |pd AS (SELECT doc_id, count(*) AS n_tokens,
+      |  count(CASE WHEN token NOT IN (SELECT token FROM v) THEN 1 END) AS n_oov
+      |  FROM t GROUP BY doc_id)""".stripMargin
+
+  /** The top `k` rows per query of CTE `scored` (query_id, vec_id, ...)
+    * by `score` descending, ties by vec_id, as (query_id, vec_id,
+    * `cols`, rank).
+    */
+  private def vecTopKSql(cols: String, score: String, k: Int): String =
+    s"""SELECT query_id, vec_id, $cols, rank FROM (
+      |  SELECT *, row_number() OVER (PARTITION BY query_id
+      |    ORDER BY $score DESC, vec_id) AS rank FROM scored)
+      |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
+
+  /** The integer-dot top 10 over the quantized codes of the queries that
+    * `queries` selects, among their banded candidates ([[vecBandProbeCtes]]).
+    */
+  private def quantizedProbeTopKSql(queries: String): String =
+    s"""WITH ${vecBandProbeCtes(queries)},
+      |qz AS (${Similarity.Sql.quantized}),
+      |scored AS (SELECT p0.query_id, p0.vec_id,
+      |  ${Similarity.Sql.intDot("qd.codes", "cd.codes")} AS qdot
+      |  FROM p0 JOIN qz qd ON p0.query_id = qd.vec_id
+      |          JOIN qz cd ON p0.vec_id = cd.vec_id)
+      |${vecTopKSql("qdot", "qdot", 10)}""".stripMargin
+
+  /** The composite quality score of every document (the
+    * `TextAnalysis.qualityScore` mirror): `q` (doc_id, source,
+    * stopword_ratio, unique_ratio, punct_ratio, quality).
+    */
+  private val QualityScoreCte =
+    s"""q AS (SELECT *, least(stopword_ratio * 5.0, 1.0) * 0.3 + unique_ratio * 0.5
+      |    + (1.0 - least(punct_ratio * 10.0, 1.0)) * 0.2 AS quality FROM (
+      |  SELECT doc_id, source,
+      |    ${TextAnalysis.Sql.stopHits} / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stopword_ratio,
+      |    len(list_distinct(string_split(text, ' '))) / CAST(len(string_split(text, ' ')) AS DOUBLE) AS unique_ratio,
+      |    len(regexp_extract_all(text, '[^a-z0-9 ]')) / CAST(length(text) AS DOUBLE) AS punct_ratio
+      |  FROM documents))""".stripMargin
+
+  /** The document frequency `c` (shingle, df) of every 3-shingle of the
+    * exact-text-collapsed corpus `d` (doc_id, text), shared by the hot
+    * shingle oracle and the phrase lookup that probes its top shingle.
+    */
+  private val ShingleDfCtes =
+    s"""d AS (SELECT min(doc_id) AS doc_id, text FROM documents GROUP BY text),
+      |sp AS (SELECT doc_id, unnest(sh) AS shingle FROM (${Dedup.Sql.shingleSets("d")})),
+      |c AS (SELECT shingle, count(*) AS df FROM sp GROUP BY shingle)""".stripMargin
 
   /** The registry's 5-gram list over a pre-split token array `t` — shared
     * by the decontamination oracles so the gram definition can never
@@ -1091,17 +1407,154 @@ object SparkEntry {
   private val GRAM5 = "list_transform(generate_series(1, len(t) - 4), " +
     "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])"
 
+  /** `g` (source, g): the distinct hashed 5-grams of each source — the
+    * head of both source-overlap matrices.
+    */
+  private val SourceGramCte = s"""g AS (SELECT DISTINCT source,
+    |  ${TextAnalysis.Sql.fingerprintOf("gram")} AS g
+    |  FROM (SELECT source, unnest($GRAM5) AS gram
+    |    FROM (SELECT source, string_split(text, ' ') AS t FROM documents)))""".stripMargin
+
+  /** The registry's keyword query ('hash', 'join', 'vector') scored over
+    * every document: `p` (doc_id, score, n_terms_matched), each matched
+    * term's smoothed idf-weighted tf summed in sorted-term order.
+    */
+  private val KeywordScoreCtes = """f AS (
+    |  SELECT doc_id, tok, count(*) AS tf
+    |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
+    |  WHERE tok IN ('hash', 'join', 'vector') GROUP BY doc_id, tok),
+    |d AS (SELECT tok, count(*) AS df FROM f GROUP BY tok),
+    |t AS (SELECT count(*) AS n_total FROM documents),
+    |sw AS (SELECT doc_id, tok, tf * (n_total - df + 0.5) / (df + 0.5) AS w
+    |  FROM f JOIN d USING (tok) CROSS JOIN t),
+    |p AS (SELECT doc_id,
+    |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+    |    list_transform(list_sort(list(struct_pack(tok := tok, w := w))),
+    |      x -> x.w)), (a, b) -> a + b) AS score,
+    |  count(*) AS n_terms_matched
+    |  FROM sw GROUP BY doc_id)""".stripMargin
+
+  /** The span-excision tail over `toks` (doc_id, t) and the covered
+    * token positions `cov` (doc_id, cpos): each document's surviving
+    * tokens re-joined in order, with the dropped count and the dropped
+    * share as column `fracCol`.
+    */
+  private def spanExciseSql(fracCol: String): String =
+    s"""cv AS (SELECT doc_id, count(*) AS nc FROM cov GROUP BY doc_id),
+      |tok AS (SELECT doc_id, unnest(t) AS tok,
+      |  unnest(generate_series(1, len(t))) AS pos FROM toks),
+      |kept AS (SELECT tk.doc_id, string_agg(tk.tok, ' ' ORDER BY tk.pos) AS clean_text
+      |  FROM tok tk LEFT JOIN cov ON tk.doc_id = cov.doc_id AND tk.pos = cov.cpos
+      |  WHERE cov.cpos IS NULL GROUP BY tk.doc_id)
+      |SELECT d.doc_id, CAST(len(d.t) AS BIGINT) AS n_tokens,
+      |  CAST(coalesce(cv.nc, 0) AS BIGINT) AS n_dropped,
+      |  CAST(coalesce(cv.nc, 0) AS DOUBLE) / len(d.t) AS $fracCol,
+      |  coalesce(k.clean_text, '') AS clean_text
+      |FROM toks d LEFT JOIN cv USING (doc_id) LEFT JOIN kept k USING (doc_id)
+      |ORDER BY d.doc_id""".stripMargin
+
+  /** Exact cosine scoring of queries 0–4 against every other vector:
+    * `d` (prepared vectors), `q` (query_id, qv) and `scored` (query_id,
+    * vec_id, cosine) — the brute-force top-k baseline.
+    */
+  private val ExactTopKCtes = s"""d AS (${Similarity.Sql.prepared}),
+    |q AS (SELECT vec_id AS query_id, v AS qv FROM d WHERE vec_id < 5),
+    |scored AS (
+    |  SELECT query_id, vec_id, ${Similarity.Sql.cosine("qv", "v")} AS cosine
+    |  FROM d CROSS JOIN q WHERE vec_id <> query_id)""".stripMargin
+
+  /** Oracle of the top-k recall witnesses: per query, the exact top-10's
+    * size beside the `bound` literal.
+    */
+  private def topKRecallBoundSql(bound: String): String =
+    s"""WITH $ExactTopKCtes,
+      |ex AS (SELECT query_id FROM (
+      |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
+      |  FROM scored) WHERE rank <= 10)
+      |SELECT query_id, count(*) AS n_exact,
+      |  CAST($bound AS DOUBLE) AS recall_bound,
+      |  CAST(1 AS INT) AS within_bound
+      |FROM ex GROUP BY query_id ORDER BY query_id""".stripMargin
+
+  /** The %11 benchmark/corpus split (`bench`, `corp`) and the benchmark's
+    * distinct 5-grams `bg` — the head of every decontamination oracle.
+    */
+  private val BenchGramCtes = s"""bench AS (SELECT * FROM documents WHERE doc_id % 11 = 0),
+    |corp AS (SELECT * FROM documents WHERE doc_id % 11 <> 0),
+    |bg AS (SELECT DISTINCT unnest($GRAM5) AS g
+    |  FROM (SELECT string_split(text, ' ') AS t FROM bench))""".stripMargin
+
+  /** `cg`: the distinct 5-grams of each document of CTE `src`. */
+  private def docGramCte(src: String): String =
+    s"""cg AS (SELECT doc_id, unnest(list_distinct($GRAM5)) AS g
+       |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM $src))""".stripMargin
+
+  /** The C4 quality rules as one predicate over `text` — the persisted
+    * quality flags' `keep`.
+    */
+  private val C4KeepSql = """len(string_split(text, ' ')) >= 20
+    |  AND CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE)
+    |    / length(text) < 0.1
+    |  AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
+    |    / len(string_split(text, ' ')) > 0.3""".stripMargin
+
+  /** The share of a document's bigrams that repeat an earlier one
+    * (0.0 for a one-token text) — the Gopher repetition signal.
+    */
+  private val DupBigramFracSql = """CASE WHEN len(string_split(text, ' ')) > 1 THEN
+    |    1.0 - CAST(len(list_distinct(list_transform(
+    |      generate_series(1, len(string_split(text, ' ')) - 1),
+    |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1])))
+    |      AS DOUBLE) / (len(string_split(text, ' ')) - 1)
+    |    ELSE 0.0 END""".stripMargin
+
+  /** The Gopher rules as one predicate over `text` — the persisted
+    * Gopher flags' `keep`.
+    */
+  private val GopherKeepSql = s"""len(string_split(text, ' ')) >= 50 AND len(string_split(text, ' ')) <= 100000
+    |  AND (length(text) - len(string_split(text, ' ')) + 1)
+    |    / CAST(len(string_split(text, ' ')) AS DOUBLE) BETWEEN 3.0 AND 10.0
+    |  AND ($DupBigramFracSql) <= 0.2
+    |  AND ${TextAnalysis.Sql.stopHits} >= 2""".stripMargin
+
+  /** The clean pipelines' quality → decontamination prefix over the %11
+    * corpus: C4 survivors `q`, then `dcn`, those sharing no 5-gram with
+    * the benchmark.
+    */
+  private val DeconCtes = s"""$BenchGramCtes,
+    |q AS (SELECT * FROM corp WHERE $C4KeepSql),
+    |${docGramCte("q")},
+    |dcn AS (SELECT * FROM q WHERE doc_id NOT IN (SELECT doc_id FROM cg JOIN bg USING (g)))""".stripMargin
+
+  /** [[DeconCtes]] → lexical near-dedup: the greedy drop `dropset`
+    * (each 0.8-jaccard pair between two decontaminated docs drops its
+    * higher id) and the survivors `lex` (doc_id).
+    */
+  private val LexDedupCtes = s"""$DeconCtes,
+    |$NearDupPairsCtes,
+    |dropset AS (SELECT DISTINCT doc_id2 FROM prs
+    |  WHERE doc_id1 IN (SELECT doc_id FROM dcn)
+    |    AND doc_id2 IN (SELECT doc_id FROM dcn)),
+    |lex AS (SELECT doc_id FROM dcn
+    |  WHERE doc_id NOT IN (SELECT doc_id2 FROM dropset))""".stripMargin
+
+  /** [[LexDedupCtes]] → the scale-shape semantic stage: the sign-LSH
+    * verified pairs ([[lshPairsSqlCtes]]) between two lexical survivors
+    * drop their higher id (`semdrop`).
+    */
+  private val SemLshDedupCtes = s"""$LexDedupCtes,
+    |$lshPairsSqlCtes,
+    |semdrop AS (SELECT DISTINCT vec_id2 FROM allp
+    |  WHERE vec_id1 IN (SELECT doc_id FROM lex)
+    |    AND vec_id2 IN (SELECT doc_id FROM lex))""".stripMargin
+
   /** The exact-contamination oracle (q_contamination's SQL) — also the
     * oracle of q_bloom_contamination verbatim: the bloom pre-filter
     * admits false positives but never false negatives, so exact-verify
     * restricted to candidates IS the exact answer.
     */
-  private val EXACT_CONTAM_SQL = s"""WITH bench AS (SELECT * FROM documents WHERE doc_id % 11 = 0),
-    |corp AS (SELECT * FROM documents WHERE doc_id % 11 <> 0),
-    |bg AS (SELECT DISTINCT unnest($GRAM5) AS g
-    |  FROM (SELECT string_split(text, ' ') AS t FROM bench)),
-    |cg AS (SELECT doc_id, unnest(list_distinct($GRAM5)) AS g
-    |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM corp))
+  private val EXACT_CONTAM_SQL = s"""WITH $BenchGramCtes,
+    |${docGramCte("corp")}
     |SELECT doc_id, count(*) AS n_collisions
     |FROM cg JOIN bg USING (g)
     |GROUP BY doc_id ORDER BY doc_id""".stripMargin
@@ -1118,16 +1571,12 @@ object SparkEntry {
     val m = Dedup.BloomBits
     val probe = s"((fp % $m) + s * (1 + fp % ${m - 1})) % $m AS p"
     val seeds = s"generate_series(0, ${Dedup.BloomHashes - 1}) AS t(s)"
-    s"""WITH bench AS (SELECT * FROM documents WHERE doc_id % 11 = 0),
-    |corp AS (SELECT * FROM documents WHERE doc_id % 11 <> 0),
-    |bg AS (SELECT DISTINCT unnest($GRAM5) AS g
-    |  FROM (SELECT string_split(text, ' ') AS t FROM bench)),
+    s"""WITH $BenchGramCtes,
     |bfp AS (SELECT DISTINCT ${TextAnalysis.Sql.fingerprintOf("g")} AS fp FROM bg),
     |words AS (SELECT p // 63 AS word,
     |    bit_or(CAST(1 AS BIGINT) << CAST(p % 63 AS INT)) AS bits
     |  FROM (SELECT $probe FROM bfp, $seeds) GROUP BY 1),
-    |cg AS (SELECT doc_id, unnest(list_distinct($GRAM5)) AS g
-    |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM corp)),
+    |${docGramCte("corp")},
     |cfp AS (SELECT doc_id, g, ${TextAnalysis.Sql.fingerprintOf("g")} AS fp FROM cg),
     |chk AS (SELECT doc_id, g,
     |    bool_and((COALESCE(bits, CAST(0 AS BIGINT)) &
@@ -1249,14 +1698,20 @@ object SparkEntry {
       s"CAST($ap + len($pc) AS VARCHAR) || '|' || " +
       s"substr(a, strpos(a, '|') + 1) || ' ' || $pc END) AS st " +
       "FROM (SELECT DISTINCT w FROM words), kpl), " +
-      "occ AS (SELECT doc_id, CAST(p.i - 1 AS INTEGER) AS pos, p.w AS w " +
-      "FROM (SELECT doc_id, unnest(list_transform(" +
-      "list_filter(string_split(text, ' '), t -> t <> ''), " +
-      "(w, i) -> struct_pack(w := w, i := i))) AS p FROM documents)) " +
+      OccCte + " " +
       "SELECT o.doc_id, o.pos, o.w AS word, " +
       "substr(st, strpos(st, '|') + 2) AS encoded " +
       "FROM occ o JOIN enc ON o.w = enc.w ORDER BY doc_id, pos"
   }
+
+  /** `occ` (doc_id, pos, w): every non-empty token occurrence, 0-based,
+    * the rows the tokenizer encode oracles join their encodings back to.
+    */
+  private val OccCte =
+    "occ AS (SELECT doc_id, CAST(p.i - 1 AS INTEGER) AS pos, p.w AS w " +
+      "FROM (SELECT doc_id, unnest(list_transform(" +
+      "list_filter(string_split(text, ' '), t -> t <> ''), " +
+      "(w, i) -> struct_pack(w := w, i := i))) AS p FROM documents))"
 
   /** Encode oracle — the mirror of [[TextAnalysis.bpeEncode]]: the
     * training chain's final `seg<k>` IS every word type's encoding
@@ -1265,36 +1720,33 @@ object SparkEntry {
     */
   private def bpeEncodeOracleSql(k: Int): String =
     "WITH " + bpeStagesSql(k) + ", " +
-      "occ AS (SELECT doc_id, CAST(p.i - 1 AS INTEGER) AS pos, p.w AS w " +
-      "FROM (SELECT doc_id, unnest(list_transform(" +
-      "list_filter(string_split(text, ' '), t -> t <> ''), " +
-      "(w, i) -> struct_pack(w := w, i := i))) AS p FROM documents)) " +
+      OccCte + " " +
       s"SELECT o.doc_id, o.pos, o.w AS word, array_to_string(ws.seg, ' ') AS encoded " +
       s"FROM occ o JOIN seg$k ws ON o.w = ws.w ORDER BY doc_id, pos"
 
   // ---------------------------------------------------------------- registry
 
-  /** (name, spark query, optional DuckDB oracle). Single source of truth. */
+  /** One side `x` of the DSIR model (documents whose source matches
+    * `pred`): its positioned bigrams `xb`, hashed to 4096 buckets `xbh`
+    * (doc_id, pos, b), per-bucket counts `cx` (b, c_x) and total `tx`.
+    */
+  private def dsirBigramCtes(x: String, pred: String): String =
+    s"""${x}b AS (SELECT doc_id, i - 1 AS pos, t[i] || ' ' || t[i+1] AS g
+      |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i
+      |        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents
+      |              WHERE source $pred))),
+      |${x}bh AS (SELECT doc_id, pos, ${TextAnalysis.Sql.fingerprintOf("g")} % 4096 AS b FROM ${x}b),
+      |c$x AS (SELECT b, count(*) AS c_$x FROM ${x}bh GROUP BY b),
+      |t$x AS (SELECT count(*) AS t_$x FROM ${x}bh)""".stripMargin
+
   /** Shared DuckDB CTE chain of the two DSIR oracles — one definition so
     * the smoothing / hashing mirror cannot silently diverge between the
     * weights and selection queries (both re-derive the frozen model's
     * counts, which is what hash-proves the persisted tables).
     */
   private val dsirOracleCtes: String =
-    s"""WITH tb AS (SELECT doc_id, i - 1 AS pos, t[i] || ' ' || t[i+1] AS g
-      |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i
-      |        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents
-      |              WHERE source = 'src0'))),
-      |rb AS (SELECT doc_id, i - 1 AS pos, t[i] || ' ' || t[i+1] AS g
-      |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i
-      |        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents
-      |              WHERE source <> 'src0'))),
-      |tbh AS (SELECT doc_id, pos, ${TextAnalysis.Sql.fingerprintOf("g")} % 4096 AS b FROM tb),
-      |rbh AS (SELECT doc_id, pos, ${TextAnalysis.Sql.fingerprintOf("g")} % 4096 AS b FROM rb),
-      |ct AS (SELECT b, count(*) AS c_t FROM tbh GROUP BY b),
-      |cr AS (SELECT b, count(*) AS c_r FROM rbh GROUP BY b),
-      |tt AS (SELECT count(*) AS t_t FROM tbh),
-      |tr AS (SELECT count(*) AS t_r FROM rbh),
+    s"""WITH ${dsirBigramCtes("t", "= 'src0'")},
+      |${dsirBigramCtes("r", "<> 'src0'")},
       |sc AS (SELECT doc_id, pos,
       |  CAST(CAST(COALESCE(c_t, 0) + 1 AS HUGEINT) * (t_r + 4096) AS DOUBLE)
       |    / CAST(CAST(c_r + 1 AS HUGEINT) * (t_t + 4096) AS DOUBLE) AS ratio
@@ -1306,6 +1758,7 @@ object SparkEntry {
       |      x -> x.ratio)), (a, b) -> a + b) AS ratio_sum
       |  FROM sc GROUP BY doc_id)""".stripMargin
 
+  /** (name, spark query, optional DuckDB oracle). Single source of truth. */
   private lazy val registry: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
 
     // ---- consumer streaming queries, batch form (SURVEY.md §2.1-2.5, 2.9)
@@ -1633,21 +2086,7 @@ object SparkEntry {
         .select(col("city"), col("streak"),
           date_format(col("last_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("last_ts"))
         .orderBy("city", "last_ts"),
-      Some(s"""$WITH_NORM,
-        |f AS (SELECT city, ts,
-        |  CASE WHEN severity IN ('high','critical') THEN 1 ELSE 0 END AS hi FROM norm),
-        |r AS (SELECT city, ts, hi,
-        |  row_number() OVER (PARTITION BY city ORDER BY ts, hi) AS rn,
-        |  sum(hi) OVER (PARTITION BY city ORDER BY ts, hi
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hseq
-        |  FROM f),
-        |p AS (SELECT city, ts,
-        |  row_number() OVER (PARTITION BY city, rn - hseq ORDER BY rn) AS streak
-        |  FROM r WHERE hi = 1)
-        |SELECT city, CAST(streak AS INT) AS streak,
-        |  strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS last_ts
-        |FROM p WHERE streak = 2
-        |ORDER BY city, last_ts""".stripMargin)),
+      Some(SeverityStreaksSql)),
 
     // the SCALE-SAFE two-phase segmented stitch (parallelism ∝ city ×
     // time-segment, not the 6-city ceiling — round-8 verdict 4), re-oracled
@@ -1661,21 +2100,7 @@ object SparkEntry {
         .select(col("city"), col("streak"),
           date_format(col("last_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("last_ts"))
         .orderBy("city", "last_ts"),
-      Some(s"""$WITH_NORM,
-        |f AS (SELECT city, ts,
-        |  CASE WHEN severity IN ('high','critical') THEN 1 ELSE 0 END AS hi FROM norm),
-        |r AS (SELECT city, ts, hi,
-        |  row_number() OVER (PARTITION BY city ORDER BY ts, hi) AS rn,
-        |  sum(hi) OVER (PARTITION BY city ORDER BY ts, hi
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hseq
-        |  FROM f),
-        |p AS (SELECT city, ts,
-        |  row_number() OVER (PARTITION BY city, rn - hseq ORDER BY rn) AS streak
-        |  FROM r WHERE hi = 1)
-        |SELECT city, CAST(streak AS INT) AS streak,
-        |  strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS last_ts
-        |FROM p WHERE streak = 2
-        |ORDER BY city, last_ts""".stripMargin)),
+      Some(SeverityStreaksSql)),
 
     // ---- relational extension surface (SURVEY.md §2.4/§2.7, §7.2 M4)
     ("q_pricing_summary",
@@ -2027,15 +2452,8 @@ object SparkEntry {
 
     ("q_quality_score",
       (s, d) => TextAnalysis.qualityScore(Tables.documents(s, d)).orderBy("doc_id"),
-      Some(s"""WITH q AS (
-        |  SELECT doc_id,
-        |    ${TextAnalysis.Sql.stopHits} / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stopword_ratio,
-        |    len(list_distinct(string_split(text, ' '))) / CAST(len(string_split(text, ' ')) AS DOUBLE) AS unique_ratio,
-        |    len(regexp_extract_all(text, '[^a-z0-9 ]')) / CAST(length(text) AS DOUBLE) AS punct_ratio
-        |  FROM documents)
-        |SELECT doc_id, stopword_ratio, unique_ratio, punct_ratio,
-        |  least(stopword_ratio * 5.0, 1.0) * 0.3 + unique_ratio * 0.5
-        |    + (1.0 - least(punct_ratio * 10.0, 1.0)) * 0.2 AS quality
+      Some(s"""WITH $QualityScoreCte
+        |SELECT doc_id, stopword_ratio, unique_ratio, punct_ratio, quality
         |FROM q ORDER BY doc_id""".stripMargin)),
 
     ("q_lang_id",
@@ -2109,12 +2527,7 @@ object SparkEntry {
         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
         |  (length(text) - len(string_split(text, ' ')) + 1)
         |    / CAST(len(string_split(text, ' ')) AS DOUBLE) AS mean_token_len,
-        |  CASE WHEN len(string_split(text, ' ')) > 1 THEN
-        |    1.0 - CAST(len(list_distinct(list_transform(
-        |      generate_series(1, len(string_split(text, ' ')) - 1),
-        |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1])))
-        |      AS DOUBLE) / (len(string_split(text, ' ')) - 1)
-        |    ELSE 0.0 END AS dup_bigram_frac,
+        |  $DupBigramFracSql AS dup_bigram_frac,
         |  CAST(${TextAnalysis.Sql.stopHits} AS BIGINT) AS stop_hits
         |  FROM documents)
         |SELECT doc_id, n_tokens, mean_token_len, dup_bigram_frac, stop_hits,
@@ -2133,21 +2546,8 @@ object SparkEntry {
     // POSITION order on both sides so double addition is pinned
     ("q_lm_fluency",
       (s, d) => TextAnalysis.lmFluency(Tables.documents(s, d)).orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |bo AS (SELECT doc_id, i - 1 AS pos, t[i] AS l, t[i+1] AS r
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i FROM t)),
-        |bc AS (SELECT l, r, count(*) AS c_xy FROM bo GROUP BY l, r),
-        |hc AS (SELECT l, sum(c_xy) AS c_x FROM bc GROUP BY l),
-        |sc AS (SELECT doc_id, pos,
-        |  CAST(c_xy AS DOUBLE) / CAST(c_x AS DOUBLE) AS ratio
-        |  FROM bo JOIN bc USING (l, r) JOIN hc USING (l)),
-        |p AS (SELECT doc_id, count(*) AS n_bigrams,
-        |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(list_sort(list(struct_pack(pos := pos, ratio := ratio))),
-        |      x -> x.ratio)), (a, b) -> a + b) AS ratio_sum
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, n_bigrams, ratio_sum / CAST(n_bigrams AS DOUBLE) AS fluency
-        |FROM p ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH $LmFluencyCtes
+        |SELECT doc_id, n_bigrams, fluency FROM fl ORDER BY doc_id""".stripMargin)),
 
     // The fluency SERVING twin: scoring against the persisted frozen
     // model (graft_lm family) instead of retraining per call. On the
@@ -2157,21 +2557,8 @@ object SparkEntry {
     ("q_lm_fluency_serve",
       (s, d) => TextAnalysis.lmFluencyFrom(lmModel(s, d), Tables.documents(s, d))
         .orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |bo AS (SELECT doc_id, i - 1 AS pos, t[i] AS l, t[i+1] AS r
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i FROM t)),
-        |bc AS (SELECT l, r, count(*) AS c_xy FROM bo GROUP BY l, r),
-        |hc AS (SELECT l, sum(c_xy) AS c_x FROM bc GROUP BY l),
-        |sc AS (SELECT doc_id, pos,
-        |  CAST(c_xy AS DOUBLE) / CAST(c_x AS DOUBLE) AS ratio
-        |  FROM bo JOIN bc USING (l, r) JOIN hc USING (l)),
-        |p AS (SELECT doc_id, count(*) AS n_bigrams,
-        |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(list_sort(list(struct_pack(pos := pos, ratio := ratio))),
-        |      x -> x.ratio)), (a, b) -> a + b) AS ratio_sum
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, n_bigrams, ratio_sum / CAST(n_bigrams AS DOUBLE) AS fluency
-        |FROM p ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH $LmFluencyCtes
+        |SELECT doc_id, n_bigrams, fluency FROM fl ORDER BY doc_id""".stripMargin)),
 
     // CCNet-style per-language fluency terciles: frozen-model scores cut
     // into head/middle/tail thirds per lang (ntile over a lang-partitioned
@@ -2180,26 +2567,8 @@ object SparkEntry {
     ("q_ccnet_buckets",
       (s, d) => TextAnalysis.ccnetBuckets(lmScores(s, d), Tables.documents(s, d))
         .orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |bo AS (SELECT doc_id, i - 1 AS pos, t[i] AS l, t[i+1] AS r
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i FROM t)),
-        |bc AS (SELECT l, r, count(*) AS c_xy FROM bo GROUP BY l, r),
-        |hc AS (SELECT l, sum(c_xy) AS c_x FROM bc GROUP BY l),
-        |sc AS (SELECT doc_id, pos,
-        |  CAST(c_xy AS DOUBLE) / CAST(c_x AS DOUBLE) AS ratio
-        |  FROM bo JOIN bc USING (l, r) JOIN hc USING (l)),
-        |p AS (SELECT doc_id, count(*) AS n_bigrams,
-        |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(list_sort(list(struct_pack(pos := pos, ratio := ratio))),
-        |      x -> x.ratio)), (a, b) -> a + b) AS ratio_sum
-        |  FROM sc GROUP BY doc_id),
-        |f AS (SELECT doc_id, ratio_sum / CAST(n_bigrams AS DOUBLE) AS fluency FROM p),
-        |j AS (SELECT f.doc_id, d.lang, f.fluency,
-        |  ntile(3) OVER (PARTITION BY d.lang ORDER BY f.fluency DESC, f.doc_id) AS trc
-        |  FROM f JOIN documents d USING (doc_id))
-        |SELECT doc_id, lang, fluency,
-        |  CASE trc WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-        |FROM j ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH $CcnetCtes
+        |SELECT doc_id, lang, fluency, bucket FROM cc ORDER BY doc_id""".stripMargin)),
 
     // HOLDOUT model-fit card: the CCNet fluency-bucket composition per
     // SPLIT — if the hash holdout were distributionally off, its
@@ -2225,30 +2594,10 @@ object SparkEntry {
             (col("n_docs").cast("double") / col("split_docs")).as("share"))
           .orderBy("split", "bucket")
       },
-      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |bo AS (SELECT doc_id, i - 1 AS pos, t[i] AS l, t[i+1] AS r
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i FROM t)),
-        |bc AS (SELECT l, r, count(*) AS c_xy FROM bo GROUP BY l, r),
-        |hc AS (SELECT l, sum(c_xy) AS c_x FROM bc GROUP BY l),
-        |sc AS (SELECT doc_id, pos,
-        |  CAST(c_xy AS DOUBLE) / CAST(c_x AS DOUBLE) AS ratio
-        |  FROM bo JOIN bc USING (l, r) JOIN hc USING (l)),
-        |p AS (SELECT doc_id, count(*) AS n_bigrams,
-        |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(list_sort(list(struct_pack(pos := pos, ratio := ratio))),
-        |      x -> x.ratio)), (a, b) -> a + b) AS ratio_sum
-        |  FROM sc GROUP BY doc_id),
-        |f AS (SELECT doc_id, ratio_sum / CAST(n_bigrams AS DOUBLE) AS fluency FROM p),
-        |j AS (SELECT f.doc_id,
-        |  CASE ntile(3) OVER (PARTITION BY d.lang ORDER BY f.fluency DESC, f.doc_id)
-        |    WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-        |  FROM f JOIN documents d USING (doc_id)),
-        |sp AS (SELECT doc_id,
-        |  CASE WHEN ((((((doc_id % 1000003) * 2246822519) % 999999937) % 1000003) * 3266489917) % 999999893) % 100 < 90 THEN 'train'
-        |       WHEN ((((((doc_id % 1000003) * 2246822519) % 999999937) % 1000003) * 3266489917) % 999999893) % 100 < 95 THEN 'val'
-        |       ELSE 'test' END AS split FROM documents),
+      Some(s"""WITH $CcnetCtes,
+        |$SplitCte,
         |a AS (SELECT split, bucket, CAST(count(*) AS BIGINT) AS n_docs
-        |  FROM j JOIN sp USING (doc_id) GROUP BY 1, 2),
+        |  FROM cc JOIN sp USING (doc_id) GROUP BY 1, 2),
         |tt AS (SELECT split, sum(n_docs) AS split_docs FROM a GROUP BY split)
         |SELECT split, bucket, n_docs,
         |  CAST(n_docs AS DOUBLE) / split_docs AS share
@@ -2281,51 +2630,14 @@ object SparkEntry {
             (col("n_gopher_keep").cast("double") / col("n_docs")).as("gopher_keep_rate"))
           .orderBy("bucket")
       },
-      Some(s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |bo AS (SELECT doc_id, i - 1 AS pos, t[i] AS l, t[i+1] AS r
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i FROM t)),
-        |bc AS (SELECT l, r, count(*) AS c_xy FROM bo GROUP BY l, r),
-        |hc AS (SELECT l, sum(c_xy) AS c_x FROM bc GROUP BY l),
-        |sc AS (SELECT doc_id, pos,
-        |  CAST(c_xy AS DOUBLE) / CAST(c_x AS DOUBLE) AS ratio
-        |  FROM bo JOIN bc USING (l, r) JOIN hc USING (l)),
-        |p AS (SELECT doc_id, count(*) AS n_bigrams,
-        |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(list_sort(list(struct_pack(pos := pos, ratio := ratio))),
-        |      x -> x.ratio)), (a, b) -> a + b) AS ratio_sum
-        |  FROM sc GROUP BY doc_id),
-        |f AS (SELECT doc_id, ratio_sum / CAST(n_bigrams AS DOUBLE) AS fluency FROM p),
-        |j AS (SELECT f.doc_id,
-        |  CASE ntile(3) OVER (PARTITION BY d.lang ORDER BY f.fluency DESC, f.doc_id)
-        |    WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-        |  FROM f JOIN documents d USING (doc_id)),
-        |c4 AS (SELECT doc_id,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) >= 20
-        |  AND CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE)
-        |    / length(text) < 0.1
-        |  AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) > 0.3 AS keep
-        |  FROM documents),
-        |gp AS (SELECT doc_id,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) >= 50
-        |  AND CAST(len(string_split(text, ' ')) AS BIGINT) <= 100000
-        |  AND (length(text) - len(string_split(text, ' ')) + 1)
-        |    / CAST(len(string_split(text, ' ')) AS DOUBLE) >= 3.0
-        |  AND (length(text) - len(string_split(text, ' ')) + 1)
-        |    / CAST(len(string_split(text, ' ')) AS DOUBLE) <= 10.0
-        |  AND (CASE WHEN len(string_split(text, ' ')) > 1 THEN
-        |    1.0 - CAST(len(list_distinct(list_transform(
-        |      generate_series(1, len(string_split(text, ' ')) - 1),
-        |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1])))
-        |      AS DOUBLE) / (len(string_split(text, ' ')) - 1)
-        |    ELSE 0.0 END) <= 0.2
-        |  AND CAST(${TextAnalysis.Sql.stopHits} AS BIGINT) >= 2 AS keep
-        |  FROM documents),
-        |a AS (SELECT j.bucket, CAST(count(*) AS BIGINT) AS n_docs,
+      Some(s"""WITH $CcnetCtes,
+        |c4 AS (SELECT doc_id, $C4KeepSql AS keep FROM documents),
+        |gp AS (SELECT doc_id, $GopherKeepSql AS keep FROM documents),
+        |a AS (SELECT cc.bucket, CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(CASE WHEN c4.keep THEN 1 ELSE 0 END) AS BIGINT) AS n_c4_keep,
         |  CAST(sum(CASE WHEN gp.keep THEN 1 ELSE 0 END) AS BIGINT) AS n_gopher_keep
-        |  FROM j JOIN c4 USING (doc_id) JOIN gp USING (doc_id)
-        |  GROUP BY j.bucket)
+        |  FROM cc JOIN c4 USING (doc_id) JOIN gp USING (doc_id)
+        |  GROUP BY cc.bucket)
         |SELECT bucket, n_docs, n_c4_keep, n_gopher_keep,
         |  CAST(n_c4_keep AS DOUBLE) / n_docs AS c4_keep_rate,
         |  CAST(n_gopher_keep AS DOUBLE) / n_docs AS gopher_keep_rate
@@ -2336,15 +2648,8 @@ object SparkEntry {
     // empty ranges reads as coverage it doesn't have)
     ("q_quality_histogram",
       (s, d) => TextAnalysis.qualityHistogram(Tables.documents(s, d)),
-      Some(s"""WITH q AS (
-        |  SELECT doc_id,
-        |    ${TextAnalysis.Sql.stopHits} / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stopword_ratio,
-        |    len(list_distinct(string_split(text, ' '))) / CAST(len(string_split(text, ' ')) AS DOUBLE) AS unique_ratio,
-        |    len(regexp_extract_all(text, '[^a-z0-9 ]')) / CAST(length(text) AS DOUBLE) AS punct_ratio
-        |  FROM documents),
-        |b AS (SELECT CAST(least(floor((least(stopword_ratio * 5.0, 1.0) * 0.3
-        |    + unique_ratio * 0.5 + (1.0 - least(punct_ratio * 10.0, 1.0)) * 0.2)
-        |    * 20), 19) AS INT) AS bucket FROM q),
+      Some(s"""WITH $QualityScoreCte,
+        |b AS (SELECT CAST(least(floor(quality * 20), 19) AS INT) AS bucket FROM q),
         |c AS (SELECT bucket, count(*) AS n_docs FROM b GROUP BY bucket)
         |SELECT g.bucket, COALESCE(c.n_docs, CAST(0 AS BIGINT)) AS n_docs
         |FROM (SELECT CAST(unnest(generate_series(0, 19)) AS INT) AS bucket) g
@@ -2361,20 +2666,7 @@ object SparkEntry {
     ("q_keyword_search",
       (s, d) => TextAnalysis.keywordSearchFrom(searchIndex(s, d),
         Seq("hash", "join", "vector"), k = 10),
-      Some("""WITH f AS (
-        |  SELECT doc_id, tok, count(*) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-        |  WHERE tok IN ('hash', 'join', 'vector') GROUP BY doc_id, tok),
-        |d AS (SELECT tok, count(*) AS df FROM f GROUP BY tok),
-        |t AS (SELECT count(*) AS n_total FROM documents),
-        |s AS (SELECT doc_id, tok, tf * (n_total - df + 0.5) / (df + 0.5) AS w
-        |  FROM f JOIN d USING (tok) CROSS JOIN t),
-        |p AS (SELECT doc_id,
-        |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(list_sort(list(struct_pack(tok := tok, w := w))),
-        |      x -> x.w)), (a, b) -> a + b) AS score,
-        |  count(*) AS n_terms_matched
-        |  FROM s GROUP BY doc_id)
+      Some(s"""WITH $KeywordScoreCtes
         |SELECT doc_id, score, n_terms_matched FROM p
         |ORDER BY score DESC, doc_id LIMIT 10""".stripMargin)),
 
@@ -2406,19 +2698,7 @@ object SparkEntry {
             cosine(col("v"), col("qv")).as("cosine"))
           .orderBy(col("cosine").desc, col("doc_id")).limit(10)
       },
-      Some(s"""WITH f AS (
-        |  SELECT doc_id, tok, count(*) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-        |  WHERE tok IN ('hash', 'join', 'vector') GROUP BY doc_id, tok),
-        |d AS (SELECT tok, count(*) AS df FROM f GROUP BY tok),
-        |t AS (SELECT count(*) AS n_total FROM documents),
-        |s AS (SELECT doc_id, tok, tf * (n_total - df + 0.5) / (df + 0.5) AS w
-        |  FROM f JOIN d USING (tok) CROSS JOIN t),
-        |p AS (SELECT doc_id,
-        |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(list_sort(list(struct_pack(tok := tok, w := w))),
-        |      x -> x.w)), (a, b) -> a + b) AS score
-        |  FROM s GROUP BY doc_id),
+      Some(s"""WITH $KeywordScoreCtes,
         |lex AS (SELECT doc_id, score FROM p ORDER BY score DESC, doc_id LIMIT 20),
         |ev AS (SELECT vec_id, v FROM (${Similarity.Sql.prepared}) dp
         |  WHERE sqrt(${Similarity.Sql.dot("v", "v")}) > 0),
@@ -2446,20 +2726,7 @@ object SparkEntry {
           Seq("hash", "join", "vector"), k = 20),
         Takedown.tombstones(Tables.documents(s, d)),
         Seq(col("score").desc, col("doc_id")), serveK = 10),
-      Some("""WITH f AS (
-        |  SELECT doc_id, tok, count(*) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-        |  WHERE tok IN ('hash', 'join', 'vector') GROUP BY doc_id, tok),
-        |d AS (SELECT tok, count(*) AS df FROM f GROUP BY tok),
-        |t AS (SELECT count(*) AS n_total FROM documents),
-        |s AS (SELECT doc_id, tok, tf * (n_total - df + 0.5) / (df + 0.5) AS w
-        |  FROM f JOIN d USING (tok) CROSS JOIN t),
-        |p AS (SELECT doc_id,
-        |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(list_sort(list(struct_pack(tok := tok, w := w))),
-        |      x -> x.w)), (a, b) -> a + b) AS score,
-        |  count(*) AS n_terms_matched
-        |  FROM s GROUP BY doc_id),
+      Some(s"""WITH $KeywordScoreCtes,
         |deep AS (SELECT doc_id, score, n_terms_matched FROM p
         |  ORDER BY score DESC, doc_id LIMIT 20)
         |SELECT doc_id, score, n_terms_matched FROM deep
@@ -2473,41 +2740,8 @@ object SparkEntry {
     ("q_takedown_topk",
       (s, d) => Takedown.topKWithTakedown(passageTables(s, d).topk,
         Takedown.tombstones(Tables.documents(s, d)), serveK = 5),
-      Some(s"""WITH dch AS (SELECT doc_id, string_split(text, ' ') AS t,
-        |  CAST(floor((greatest(len(string_split(text, ' ')) - 8, 1) + 23)
-        |    / CAST(24 AS DOUBLE)) AS INT) AS n_chunks FROM documents),
-        |ch AS (SELECT doc_id, unnest(generate_series(0, n_chunks - 1)) AS chunk_id, t
-        |  FROM dch),
-        |cht AS (SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        |  array_to_string(t[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' ') AS chunk_text
-        |  FROM ch),
-        |fp AS (SELECT doc_id, chunk_id,
-        |  ${TextAnalysis.Sql.fingerprintOf("chunk_text")} AS f FROM cht),
-        |pv AS (SELECT doc_id, chunk_id, doc_id * 1048576 + chunk_id AS pid,
-        |  list_transform(range(0, 16), dd ->
-        |    CAST((f * (2*dd + 3) + dd * 65599) % 2000001 AS DOUBLE)
-        |      / 1000000.0 - 1.0) AS v FROM fp),
-        |b AS (SELECT pid, doc_id, ${Similarity.Sql.lshBucket("v", 16, 16)} AS bucket
-        |  FROM pv),
-        |c AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, pid, doc_id
-        |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
-        |qv AS (SELECT doc_id AS query_id, pid, v FROM pv
-        |  WHERE doc_id < 5 AND chunk_id = 0 AND ${Similarity.Sql.dot("v", "v")} > 0),
-        |q AS (SELECT qv.query_id, c.band, c.bb FROM c JOIN qv USING (pid)),
-        |p0 AS (SELECT DISTINCT q.query_id, c2.pid FROM c c2
-        |  JOIN q ON c2.band = q.band AND c2.bb = q.bb
-        |  WHERE c2.doc_id <> q.query_id),
-        |sc AS (SELECT p0.query_id, cv.doc_id, cv.chunk_id, cv.pid,
-        |  ${Similarity.Sql.cosine("qd.v", "cv.v")} AS cosine
-        |  FROM p0 JOIN pv cv USING (pid)
-        |       JOIN qv qd ON qd.query_id = p0.query_id
-        |  WHERE ${Similarity.Sql.dot("cv.v", "cv.v")} > 0),
-        |dv AS (SELECT *, row_number() OVER (PARTITION BY query_id, doc_id
-        |  ORDER BY cosine DESC, pid) AS rn_doc FROM sc),
-        |rk AS (SELECT query_id, doc_id, chunk_id, cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cosine DESC, doc_id, chunk_id) AS BIGINT) AS rank
-        |  FROM dv WHERE rn_doc <= 2),
+      Some(s"""WITH $PassageIndexCtes,
+        |$PassageTopKCtes,
         |tk AS (SELECT * FROM rk WHERE rank <= 10),
         |sup AS (SELECT query_id, doc_id, chunk_id, cosine,
         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY rank) AS BIGINT)
@@ -2595,57 +2829,12 @@ object SparkEntry {
           .crossJoin(Takedown.pairsAuditCounts(
             mediaPhashTables(s, d).nearDupPairs, tombs, "media"))
       },
-      Some(s"""WITH f AS (
-        |  SELECT doc_id, tok, count(*) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-        |  WHERE tok IN ('hash', 'join', 'vector') GROUP BY doc_id, tok),
-        |d AS (SELECT tok, count(*) AS df FROM f GROUP BY tok),
-        |t AS (SELECT count(*) AS n_total FROM documents),
-        |sw AS (SELECT doc_id, tok, tf * (n_total - df + 0.5) / (df + 0.5) AS w
-        |  FROM f JOIN d USING (tok) CROSS JOIN t),
-        |p AS (SELECT doc_id,
-        |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(list_sort(list(struct_pack(tok := tok, w := w))),
-        |      x -> x.w)), (a, b) -> a + b) AS score
-        |  FROM sw GROUP BY doc_id),
+      Some(s"""WITH $KeywordScoreCtes,
         |deep AS (SELECT doc_id, score FROM p ORDER BY score DESC, doc_id LIMIT 20),
         |served_search AS (SELECT doc_id FROM deep WHERE doc_id % 13 <> 6
         |  ORDER BY score DESC, doc_id LIMIT 10),
-        |dch AS (SELECT doc_id, string_split(text, ' ') AS t,
-        |  CAST(floor((greatest(len(string_split(text, ' ')) - 8, 1) + 23)
-        |    / CAST(24 AS DOUBLE)) AS INT) AS n_chunks FROM documents),
-        |ch AS (SELECT doc_id, unnest(generate_series(0, n_chunks - 1)) AS chunk_id, t
-        |  FROM dch),
-        |cht AS (SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        |  array_to_string(t[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' ') AS chunk_text
-        |  FROM ch),
-        |fp AS (SELECT doc_id, chunk_id,
-        |  ${TextAnalysis.Sql.fingerprintOf("chunk_text")} AS f FROM cht),
-        |pv AS (SELECT doc_id, chunk_id, doc_id * 1048576 + chunk_id AS pid,
-        |  list_transform(range(0, 16), dd ->
-        |    CAST((f * (2*dd + 3) + dd * 65599) % 2000001 AS DOUBLE)
-        |      / 1000000.0 - 1.0) AS v FROM fp),
-        |b AS (SELECT pid, doc_id, ${Similarity.Sql.lshBucket("v", 16, 16)} AS bucket
-        |  FROM pv),
-        |c AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, pid, doc_id
-        |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
-        |qv AS (SELECT doc_id AS query_id, pid, v FROM pv
-        |  WHERE doc_id < 5 AND chunk_id = 0 AND ${Similarity.Sql.dot("v", "v")} > 0),
-        |q AS (SELECT qv.query_id, c.band, c.bb FROM c JOIN qv USING (pid)),
-        |p0 AS (SELECT DISTINCT q.query_id, c2.pid FROM c c2
-        |  JOIN q ON c2.band = q.band AND c2.bb = q.bb
-        |  WHERE c2.doc_id <> q.query_id),
-        |sc AS (SELECT p0.query_id, cv.doc_id, cv.chunk_id, cv.pid,
-        |  ${Similarity.Sql.cosine("qd.v", "cv.v")} AS cosine
-        |  FROM p0 JOIN pv cv USING (pid)
-        |       JOIN qv qd ON qd.query_id = p0.query_id
-        |  WHERE ${Similarity.Sql.dot("cv.v", "cv.v")} > 0),
-        |dv AS (SELECT *, row_number() OVER (PARTITION BY query_id, doc_id
-        |  ORDER BY cosine DESC, pid) AS rn_doc FROM sc),
-        |rk AS (SELECT query_id, doc_id, cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cosine DESC, doc_id, chunk_id) AS BIGINT) AS rank
-        |  FROM dv WHERE rn_doc <= 2),
+        |$PassageIndexCtes,
+        |$PassageTopKCtes,
         |tk AS (SELECT * FROM rk WHERE rank <= 10),
         |sup AS (SELECT query_id, doc_id,
         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY rank) AS BIGINT)
@@ -2857,25 +3046,8 @@ object SparkEntry {
         .groupBy("c4_keep", "gopher_keep")
         .agg(count(lit(1)).as("n_docs"))
         .orderBy("c4_keep", "gopher_keep"),
-      Some(s"""WITH c4 AS (SELECT doc_id,
-        |  len(string_split(text, ' ')) >= 20
-        |  AND CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE)
-        |    / length(text) < 0.1
-        |  AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) > 0.3 AS c4_keep
-        |  FROM documents),
-        |gf AS (SELECT doc_id,
-        |  len(string_split(text, ' ')) >= 50 AND len(string_split(text, ' ')) <= 100000
-        |  AND (length(text) - len(string_split(text, ' ')) + 1)
-        |    / CAST(len(string_split(text, ' ')) AS DOUBLE) BETWEEN 3.0 AND 10.0
-        |  AND (CASE WHEN len(string_split(text, ' ')) > 1 THEN
-        |    1.0 - CAST(len(list_distinct(list_transform(
-        |      generate_series(1, len(string_split(text, ' ')) - 1),
-        |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1])))
-        |      AS DOUBLE) / (len(string_split(text, ' ')) - 1)
-        |    ELSE 0.0 END) <= 0.2
-        |  AND ${TextAnalysis.Sql.stopHits} >= 2 AS gopher_keep
-        |  FROM documents)
+      Some(s"""WITH c4 AS (SELECT doc_id, $C4KeepSql AS c4_keep FROM documents),
+        |gf AS (SELECT doc_id, $GopherKeepSql AS gopher_keep FROM documents)
         |SELECT c4.c4_keep, gf.gopher_keep, count(*) AS n_docs
         |FROM c4 JOIN gf USING (doc_id)
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
@@ -2892,25 +3064,8 @@ object SparkEntry {
           .join(gopherFlags(s, d)
             .select(col("doc_id"), col("keep").as("gopher_keep")),
             Seq("doc_id"))),
-      Some(s"""WITH c4 AS (SELECT doc_id,
-        |  len(string_split(text, ' ')) >= 20
-        |  AND CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE)
-        |    / length(text) < 0.1
-        |  AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) > 0.3 AS c4_keep
-        |  FROM documents),
-        |gf AS (SELECT doc_id,
-        |  len(string_split(text, ' ')) >= 50 AND len(string_split(text, ' ')) <= 100000
-        |  AND (length(text) - len(string_split(text, ' ')) + 1)
-        |    / CAST(len(string_split(text, ' ')) AS DOUBLE) BETWEEN 3.0 AND 10.0
-        |  AND (CASE WHEN len(string_split(text, ' ')) > 1 THEN
-        |    1.0 - CAST(len(list_distinct(list_transform(
-        |      generate_series(1, len(string_split(text, ' ')) - 1),
-        |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1])))
-        |      AS DOUBLE) / (len(string_split(text, ' ')) - 1)
-        |    ELSE 0.0 END) <= 0.2
-        |  AND ${TextAnalysis.Sql.stopHits} >= 2 AS gopher_keep
-        |  FROM documents),
+      Some(s"""WITH c4 AS (SELECT doc_id, $C4KeepSql AS c4_keep FROM documents),
+        |gf AS (SELECT doc_id, $GopherKeepSql AS gopher_keep FROM documents),
         |a AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(CASE WHEN c4_keep AND gopher_keep THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_both_keep,
@@ -2938,15 +3093,9 @@ object SparkEntry {
     // the in/out boundary is vocabulary's total-ordered top-k cut
     ("q_vocab_coverage",
       (s, d) => TextAnalysis.vocabCoverage(Tables.documents(s, d)).orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |  FROM documents),
-        |v AS (SELECT token FROM (SELECT token, count(*) AS tf FROM t
-        |  GROUP BY token ORDER BY tf DESC, token LIMIT 20))
-        |SELECT doc_id, count(*) AS n_tokens,
-        |  count(CASE WHEN token NOT IN (SELECT token FROM v) THEN 1 END) AS n_oov,
-        |  CAST(count(CASE WHEN token NOT IN (SELECT token FROM v) THEN 1 END)
-        |    AS DOUBLE) / count(*) AS oov_rate
-        |FROM t GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH $VocabCoverageCtes
+        |SELECT doc_id, n_tokens, n_oov, CAST(n_oov AS DOUBLE) / n_tokens AS oov_rate
+        |FROM pd ORDER BY doc_id""".stripMargin)),
 
     // approx_top_k (frequent-items sketch) heavy hitters with the bound
     // promoted into the oracle-checked surface — the approx_distinct /
@@ -3014,11 +3163,9 @@ object SparkEntry {
     // 2654435761
     ("q_data_split",
       (s, d) => Corpus.dataSplit(Tables.documents(s, d)).orderBy("doc_id"),
-      Some("""SELECT doc_id, lang, source,
-        |  ((((((doc_id % 1000003) * 2246822519) % 999999937) % 1000003) * 3266489917) % 999999893) % 100 AS bucket,
-        |  CASE WHEN ((((((doc_id % 1000003) * 2246822519) % 999999937) % 1000003) * 3266489917) % 999999893) % 100 < 90 THEN 'train'
-        |       WHEN ((((((doc_id % 1000003) * 2246822519) % 999999937) % 1000003) * 3266489917) % 999999893) % 100 < 95 THEN 'val'
-        |       ELSE 'test' END AS split
+      Some(s"""SELECT doc_id, lang, source,
+        |  ${splitBucketSql("doc_id")} AS bucket,
+        |  ${splitCaseSql("doc_id")} AS split
         |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // LEAKAGE-SAFE split — the FIX for what q_split_leakage measures:
@@ -3079,22 +3226,8 @@ object SparkEntry {
     ("q_split_leakage",
       (s, d) => Corpus.splitLeakage(Tables.documents(s, d), nearDupPairs(s, d))
         .orderBy("doc_id1", "doc_id2"),
-      Some(s"""WITH sets AS (${Dedup.Sql.shingleSets}),
-        |nonempty AS (SELECT * FROM sets WHERE len(sh) > 0),
-        |ex AS (SELECT doc_id, unnest(sh) AS shingle FROM nonempty),
-        |inter AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2, count(*) AS n_common
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |sz AS (SELECT doc_id, len(sh) AS n_sh FROM nonempty),
-        |prs AS (SELECT doc_id1, doc_id2,
-        |  CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) AS jaccard
-        |  FROM inter JOIN sz s1 ON doc_id1 = s1.doc_id
-        |              JOIN sz s2 ON doc_id2 = s2.doc_id
-        |  WHERE CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) >= 0.8),
-        |sp AS (SELECT doc_id,
-        |  CASE WHEN ((((((doc_id % 1000003) * 2246822519) % 999999937) % 1000003) * 3266489917) % 999999893) % 100 < 90 THEN 'train'
-        |       WHEN ((((((doc_id % 1000003) * 2246822519) % 999999937) % 1000003) * 3266489917) % 999999893) % 100 < 95 THEN 'val'
-        |       ELSE 'test' END AS split FROM documents)
+      Some(s"""WITH $NearDupPairsCtes,
+        |$SplitCte
         |SELECT doc_id1, s1.split AS split1, doc_id2, s2.split AS split2, jaccard
         |FROM prs JOIN sp s1 ON doc_id1 = s1.doc_id
         |         JOIN sp s2 ON doc_id2 = s2.doc_id
@@ -3108,20 +3241,8 @@ object SparkEntry {
     ("q_eval_holdout",
       (s, d) => Corpus.evalHoldout(Tables.documents(s, d), nearDupPairs(s, d))
         .orderBy("doc_id"),
-      Some(s"""WITH sets AS (${Dedup.Sql.shingleSets}),
-        |nonempty AS (SELECT * FROM sets WHERE len(sh) > 0),
-        |ex AS (SELECT doc_id, unnest(sh) AS shingle FROM nonempty),
-        |inter AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2, count(*) AS n_common
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |sz AS (SELECT doc_id, len(sh) AS n_sh FROM nonempty),
-        |prs AS (SELECT doc_id1, doc_id2 FROM inter
-        |  JOIN sz s1 ON doc_id1 = s1.doc_id JOIN sz s2 ON doc_id2 = s2.doc_id
-        |  WHERE CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) >= 0.8),
-        |sp AS (SELECT doc_id,
-        |  CASE WHEN ((((((doc_id % 1000003) * 2246822519) % 999999937) % 1000003) * 3266489917) % 999999893) % 100 < 90 THEN 'train'
-        |       WHEN ((((((doc_id % 1000003) * 2246822519) % 999999937) % 1000003) * 3266489917) % 999999893) % 100 < 95 THEN 'val'
-        |       ELSE 'test' END AS split FROM documents),
+      Some(s"""WITH $NearDupPairsCtes,
+        |$SplitCte,
         |bad AS (SELECT doc_id2 AS doc_id FROM prs
         |          JOIN sp s1 ON doc_id1 = s1.doc_id WHERE s1.split = 'train'
         |        UNION
@@ -3156,10 +3277,7 @@ object SparkEntry {
             (col("n_docs").cast("double") / col("lang_docs")).as("doc_share"))
           .orderBy("split", "lang")
       },
-      Some("""WITH sp AS (SELECT doc_id, lang,
-        |  CASE WHEN ((((((doc_id % 1000003) * 2246822519) % 999999937) % 1000003) * 3266489917) % 999999893) % 100 < 90 THEN 'train'
-        |       WHEN ((((((doc_id % 1000003) * 2246822519) % 999999937) % 1000003) * 3266489917) % 999999893) % 100 < 95 THEN 'val'
-        |       ELSE 'test' END AS split,
+      Some(s"""WITH sp AS (SELECT doc_id, lang, ${splitCaseSql("doc_id")} AS split,
         |  len(string_split(text, ' ')) AS n FROM documents),
         |a AS (SELECT split, lang, CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(n) AS BIGINT) AS n_tokens FROM sp GROUP BY 1, 2),
@@ -3180,17 +3298,8 @@ object SparkEntry {
         .agg(sum("n_tokens").as("n_tokens"), sum("n_oov").as("n_oov"),
           (sum("n_oov").cast("double") / sum("n_tokens")).as("oov_rate"))
         .orderBy("split"),
-      Some("""WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |  FROM documents),
-        |v AS (SELECT token FROM (SELECT token, count(*) AS tf FROM t
-        |  GROUP BY token ORDER BY tf DESC, token LIMIT 20)),
-        |pd AS (SELECT doc_id, count(*) AS n_tokens,
-        |  count(CASE WHEN token NOT IN (SELECT token FROM v) THEN 1 END) AS n_oov
-        |  FROM t GROUP BY doc_id),
-        |sp AS (SELECT doc_id,
-        |  CASE WHEN ((((((doc_id % 1000003) * 2246822519) % 999999937) % 1000003) * 3266489917) % 999999893) % 100 < 90 THEN 'train'
-        |       WHEN ((((((doc_id % 1000003) * 2246822519) % 999999937) % 1000003) * 3266489917) % 999999893) % 100 < 95 THEN 'val'
-        |       ELSE 'test' END AS split FROM documents)
+      Some(s"""WITH $VocabCoverageCtes,
+        |$SplitCte
         |SELECT split, CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
         |  CAST(sum(n_oov) AS BIGINT) AS n_oov,
         |  CAST(sum(n_oov) AS DOUBLE) / sum(n_tokens) AS oov_rate
@@ -3246,10 +3355,7 @@ object SparkEntry {
       Some(s"""WITH fp AS (SELECT doc_id, lang, doc_id % 8 AS shard,
         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
         |  ${TextAnalysis.Sql.fingerprintOf("text")} AS f FROM documents),
-        |pv AS (SELECT doc_id, lang, shard, n_tokens,
-        |  list_transform(range(0, 16), dd ->
-        |    CAST((f * (2*dd + 3) + dd * 65599) % 2000001 AS DOUBLE)
-        |      / 1000000.0 - 1.0) AS v FROM fp),
+        |pv AS (SELECT doc_id, lang, shard, n_tokens, $TextTower AS v FROM fp),
         |b AS (SELECT doc_id, lang, shard, n_tokens,
         |  ${Similarity.Sql.lshBucket("v", 16, 16)} AS bucket FROM pv)
         |SELECT doc_id, lang, shard, n_tokens, bucket,
@@ -3266,16 +3372,10 @@ object SparkEntry {
     // 300/shard, matching Corpus.DefaultTokenBudgets)
     ("q_token_budget_mix",
       (s, d) => Corpus.tokenBudgetMix(Tables.documents(s, d)).orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, lang, doc_id % 8 AS shard,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |  (doc_id % 1000003) * 2654435761 AS h FROM documents),
-        |c AS (SELECT *, CAST(coalesce(sum(n_tokens) OVER (PARTITION BY lang, shard
-        |  ORDER BY h, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |  AS BIGINT) AS cum_before FROM t)
-        |SELECT doc_id, lang, shard, n_tokens, cum_before FROM c
-        |WHERE cum_before < CASE lang WHEN 'en' THEN 600 WHEN 'zh' THEN 300
-        |  WHEN 'de' THEN 300 WHEN 'fr' THEN 300 WHEN 'es' THEN 300 ELSE 0 END
-        |ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH $TokenBudgetCtes
+        |SELECT doc_id, lang, shard, n_tokens, cum_before FROM c3
+        |WHERE doc_id IN (SELECT doc_id FROM tm)
+ORDER BY doc_id""".stripMargin)),
 
     // DSIR hashed-bigram importance weights: src0 plays the trusted
     // target domain, every other source is the raw pool being scored
@@ -3344,34 +3444,9 @@ object SparkEntry {
           .orderBy("doc_id")
       },
       Some(dsirOracleCtes + s""",
-        |w2 AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |bo2 AS (SELECT doc_id, i - 1 AS pos, t[i] AS l, t[i+1] AS r
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i FROM w2)),
-        |bc2 AS (SELECT l, r, count(*) AS c_xy FROM bo2 GROUP BY l, r),
-        |hc2 AS (SELECT l, sum(c_xy) AS c_x FROM bc2 GROUP BY l),
-        |sc2 AS (SELECT doc_id, pos,
-        |  CAST(c_xy AS DOUBLE) / CAST(c_x AS DOUBLE) AS ratio
-        |  FROM bo2 JOIN bc2 USING (l, r) JOIN hc2 USING (l)),
-        |p2 AS (SELECT doc_id, count(*) AS n_bigrams,
-        |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(list_sort(list(struct_pack(pos := pos, ratio := ratio))),
-        |      x -> x.ratio)), (a, b) -> a + b) AS ratio_sum
-        |  FROM sc2 GROUP BY doc_id),
-        |fl AS (SELECT doc_id, ratio_sum / CAST(n_bigrams AS DOUBLE) AS fluency FROM p2),
-        |cc AS (SELECT fl.doc_id,
-        |  CASE ntile(3) OVER (PARTITION BY dd.lang ORDER BY fl.fluency DESC, fl.doc_id)
-        |    WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-        |  FROM fl JOIN documents dd USING (doc_id)),
+        |$CcnetCtes,
         |dw AS (SELECT doc_id, ratio_sum / CAST(n_grams AS DOUBLE) AS dsir_weight FROM p),
-        |t3 AS (SELECT doc_id, lang, doc_id % 8 AS shard,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |  (doc_id % 1000003) * 2654435761 AS h FROM documents),
-        |c3 AS (SELECT *, CAST(coalesce(sum(n_tokens) OVER (PARTITION BY lang, shard
-        |  ORDER BY h, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |  AS BIGINT) AS cum_before FROM t3),
-        |tm AS (SELECT doc_id FROM c3
-        |  WHERE cum_before < CASE lang WHEN 'en' THEN 600 WHEN 'zh' THEN 300
-        |    WHEN 'de' THEN 300 WHEN 'fr' THEN 300 WHEN 'es' THEN 300 ELSE 0 END),
+        |$TokenBudgetCtes,
         |base AS (SELECT doc_id, lang, source,
         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens FROM documents),
         |mf AS (SELECT base.doc_id, base.lang, base.source, base.n_tokens,
@@ -3415,35 +3490,7 @@ object SparkEntry {
             col("n_kept").cast("double") / col("n_docs").cast("double"))
           .orderBy("source")
       },
-      Some("""WITH w2 AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |bo2 AS (SELECT doc_id, i - 1 AS pos, t[i] AS l, t[i+1] AS r
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i FROM w2)),
-        |bc2 AS (SELECT l, r, count(*) AS c_xy FROM bo2 GROUP BY l, r),
-        |hc2 AS (SELECT l, sum(c_xy) AS c_x FROM bc2 GROUP BY l),
-        |sc2 AS (SELECT doc_id, pos,
-        |  CAST(c_xy AS DOUBLE) / CAST(c_x AS DOUBLE) AS ratio
-        |  FROM bo2 JOIN bc2 USING (l, r) JOIN hc2 USING (l)),
-        |p2 AS (SELECT doc_id, count(*) AS n_bigrams,
-        |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(list_sort(list(struct_pack(pos := pos, ratio := ratio))),
-        |      x -> x.ratio)), (a, b) -> a + b) AS ratio_sum
-        |  FROM sc2 GROUP BY doc_id),
-        |fl AS (SELECT doc_id, ratio_sum / CAST(n_bigrams AS DOUBLE) AS fluency FROM p2),
-        |cc AS (SELECT fl.doc_id,
-        |  CASE ntile(3) OVER (PARTITION BY dd.lang ORDER BY fl.fluency DESC, fl.doc_id)
-        |    WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-        |  FROM fl JOIN documents dd USING (doc_id)),
-        |t3 AS (SELECT doc_id, lang, doc_id % 8 AS shard,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |  (doc_id % 1000003) * 2654435761 AS h FROM documents),
-        |c3 AS (SELECT *, CAST(coalesce(sum(n_tokens) OVER (PARTITION BY lang, shard
-        |  ORDER BY h, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |  AS BIGINT) AS cum_before FROM t3),
-        |tm AS (SELECT doc_id FROM c3
-        |  WHERE cum_before < CASE lang WHEN 'en' THEN 600 WHEN 'zh' THEN 300
-        |    WHEN 'de' THEN 300 WHEN 'fr' THEN 300 WHEN 'es' THEN 300 ELSE 0 END),
-        |keeps AS (SELECT cc.doc_id, cc.bucket FROM cc
-        |  WHERE cc.bucket <> 'tail' AND cc.doc_id IN (SELECT doc_id FROM tm)),
+      Some(s"""WITH $MixKeepCtes,
         |base AS (SELECT d.doc_id, d.source,
         |  CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens, k.bucket
         |  FROM documents d LEFT JOIN keeps k ON d.doc_id = k.doc_id)
@@ -3477,35 +3524,7 @@ object SparkEntry {
             Corpus.packTokenCounts(docs).join(keeps, Seq("doc_id"), "left_semi"))
           .orderBy("lang", "shard", "doc_id")
       },
-      Some("""WITH w2 AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |bo2 AS (SELECT doc_id, i - 1 AS pos, t[i] AS l, t[i+1] AS r
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i FROM w2)),
-        |bc2 AS (SELECT l, r, count(*) AS c_xy FROM bo2 GROUP BY l, r),
-        |hc2 AS (SELECT l, sum(c_xy) AS c_x FROM bc2 GROUP BY l),
-        |sc2 AS (SELECT doc_id, pos,
-        |  CAST(c_xy AS DOUBLE) / CAST(c_x AS DOUBLE) AS ratio
-        |  FROM bo2 JOIN bc2 USING (l, r) JOIN hc2 USING (l)),
-        |p2 AS (SELECT doc_id, count(*) AS n_bigrams,
-        |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(list_sort(list(struct_pack(pos := pos, ratio := ratio))),
-        |      x -> x.ratio)), (a, b) -> a + b) AS ratio_sum
-        |  FROM sc2 GROUP BY doc_id),
-        |fl AS (SELECT doc_id, ratio_sum / CAST(n_bigrams AS DOUBLE) AS fluency FROM p2),
-        |cc AS (SELECT fl.doc_id,
-        |  CASE ntile(3) OVER (PARTITION BY dd.lang ORDER BY fl.fluency DESC, fl.doc_id)
-        |    WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-        |  FROM fl JOIN documents dd USING (doc_id)),
-        |t3 AS (SELECT doc_id, lang, doc_id % 8 AS shard,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |  (doc_id % 1000003) * 2654435761 AS h FROM documents),
-        |c3 AS (SELECT *, CAST(coalesce(sum(n_tokens) OVER (PARTITION BY lang, shard
-        |  ORDER BY h, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |  AS BIGINT) AS cum_before FROM t3),
-        |tm AS (SELECT doc_id FROM c3
-        |  WHERE cum_before < CASE lang WHEN 'en' THEN 600 WHEN 'zh' THEN 300
-        |    WHEN 'de' THEN 300 WHEN 'fr' THEN 300 WHEN 'es' THEN 300 ELSE 0 END),
-        |keeps AS (SELECT cc.doc_id FROM cc
-        |  WHERE cc.bucket <> 'tail' AND cc.doc_id IN (SELECT doc_id FROM tm)),
+      Some(s"""WITH $MixKeepCtes,
         |kd AS (SELECT d.doc_id, d.lang, d.doc_id % 8 AS shard,
         |  CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens
         |  FROM documents d WHERE d.doc_id IN (SELECT doc_id FROM keeps))
@@ -3529,40 +3548,11 @@ object SparkEntry {
           TextAnalysis.ccnetBuckets(lmScores(s, d), docs),
           Corpus.tokenBudgetMix(docs))
       },
-      Some("""WITH w2 AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |bo2 AS (SELECT doc_id, i - 1 AS pos, t[i] AS l, t[i+1] AS r
-        |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i FROM w2)),
-        |bc2 AS (SELECT l, r, count(*) AS c_xy FROM bo2 GROUP BY l, r),
-        |hc2 AS (SELECT l, sum(c_xy) AS c_x FROM bc2 GROUP BY l),
-        |sc2 AS (SELECT doc_id, pos,
-        |  CAST(c_xy AS DOUBLE) / CAST(c_x AS DOUBLE) AS ratio
-        |  FROM bo2 JOIN bc2 USING (l, r) JOIN hc2 USING (l)),
-        |p2 AS (SELECT doc_id, count(*) AS n_bigrams,
-        |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(list_sort(list(struct_pack(pos := pos, ratio := ratio))),
-        |      x -> x.ratio)), (a, b) -> a + b) AS ratio_sum
-        |  FROM sc2 GROUP BY doc_id),
-        |fl AS (SELECT doc_id, ratio_sum / CAST(n_bigrams AS DOUBLE) AS fluency FROM p2),
-        |cc AS (SELECT fl.doc_id, dd.lang, fl.fluency,
-        |  CASE ntile(3) OVER (PARTITION BY dd.lang ORDER BY fl.fluency DESC, fl.doc_id)
-        |    WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-        |  FROM fl JOIN documents dd USING (doc_id)),
-        |t3 AS (SELECT doc_id, lang, doc_id % 8 AS shard,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |  (doc_id % 1000003) * 2654435761 AS h FROM documents),
-        |c3 AS (SELECT *, CAST(coalesce(sum(n_tokens) OVER (PARTITION BY lang, shard
-        |  ORDER BY h, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |  AS BIGINT) AS cum_before FROM t3),
-        |tm AS (SELECT doc_id FROM c3
-        |  WHERE cum_before < CASE lang WHEN 'en' THEN 600 WHEN 'zh' THEN 300
-        |    WHEN 'de' THEN 300 WHEN 'fr' THEN 300 WHEN 'es' THEN 300 ELSE 0 END),
-        |kept AS (SELECT cc.doc_id, cc.lang, cc.fluency FROM cc
-        |  WHERE cc.bucket <> 'tail'
-        |    AND cc.doc_id IN (SELECT doc_id FROM tm))
+      Some(s"""WITH $MixKeepCtes
         |SELECT doc_id, lang, fluency,
         |  CAST(ntile(4) OVER (PARTITION BY lang
         |    ORDER BY fluency DESC, doc_id) AS INT) AS stage
-        |FROM kept ORDER BY doc_id""".stripMargin)),
+        |FROM keeps ORDER BY doc_id""".stripMargin)),
 
     // ---- LLM-data pipeline: deduplication (north star)
     ("q_dedup_exact",
@@ -3579,12 +3569,7 @@ object SparkEntry {
     // boundary-tie superset of the top k.
     ("q_hot_shingles",
       (s, d) => hotShinglesFrame(s, d).orderBy(col("df").desc, col("shingle")),
-      Some("""WITH d AS (SELECT min(doc_id) AS doc_id, text FROM documents GROUP BY text),
-        |sh AS (SELECT doc_id, unnest(list_distinct(
-        |  list_transform(generate_series(1, len(t) - 2),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM d)),
-        |c AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle)
+      Some(s"""WITH $ShingleDfCtes
         |SELECT shingle, df FROM c WHERE df >= 2
         |ORDER BY df DESC, shingle LIMIT 20""".stripMargin)),
 
@@ -3600,12 +3585,7 @@ object SparkEntry {
           .select(col("shingle").as("phrase"))
         Dedup.phraseSearch(Tables.documents(s, d), phrase, t.members, t.index)
       },
-      Some("""WITH d AS (SELECT min(doc_id) AS doc_id, text FROM documents GROUP BY text),
-        |sh AS (SELECT doc_id, unnest(list_distinct(
-        |  list_transform(generate_series(1, len(t) - 2),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM d)),
-        |c AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle),
+      Some(s"""WITH $ShingleDfCtes,
         |top AS (SELECT shingle AS phrase FROM c WHERE df >= 2
         |  ORDER BY df DESC, shingle LIMIT 1)
         |SELECT doc_id, phrase FROM documents CROSS JOIN top
@@ -3659,21 +3639,8 @@ object SparkEntry {
     ("q_containment_pairs",
       (s, d) => dedupTables(s, d).containmentPairs
         .orderBy("contained_id", "container_id"),
-      Some("""WITH reps AS (SELECT text, min(doc_id) AS rep FROM documents GROUP BY text),
-        |members AS (SELECT r.rep, d.doc_id FROM documents d JOIN reps r ON d.text = r.text),
-        |rdocs AS (SELECT d.doc_id, d.text FROM documents d JOIN reps r ON d.doc_id = r.rep),
-        |sets AS (SELECT doc_id, list_distinct(
-        |  list_transform(generate_series(1, len(t) - 2),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM rdocs)),
-        |nonempty AS (SELECT * FROM sets WHERE len(sh) > 0),
-        |ex0 AS (SELECT doc_id, unnest(sh) AS shingle FROM nonempty),
-        |kept AS (SELECT * FROM ex0 WHERE shingle IN
-        |  (SELECT shingle FROM ex0 GROUP BY shingle HAVING count(*) <= 50)),
-        |sz AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY doc_id),
-        |inter AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2, count(*) AS n_common
-        |  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
+      Some(s"""WITH $RepShingleCtes,
+        |${cappedInterCtes("ex0")},
         |rp AS (
         |  SELECT doc_id1 AS contained_id, doc_id2 AS container_id,
         |    CAST(n_common AS DOUBLE) / s1.n_sh AS containment
@@ -3702,38 +3669,13 @@ object SparkEntry {
     // post-strip sets; the df-cap still guards whatever the miner missed.
     ("q_stoplist_pairs",
       (s, d) => dedupTables(s, d).stoplistPairs.orderBy("doc_id1", "doc_id2"),
-      Some("""WITH reps AS (SELECT text, min(doc_id) AS rep FROM documents GROUP BY text),
-        |members AS (SELECT r.rep, d.doc_id FROM documents d JOIN reps r ON d.text = r.text),
-        |rdocs AS (SELECT d.doc_id, d.text FROM documents d JOIN reps r ON d.doc_id = r.rep),
-        |sets AS (SELECT doc_id, list_distinct(
-        |  list_transform(generate_series(1, len(t) - 2),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM rdocs)),
-        |ex0 AS (SELECT doc_id, unnest(sh) AS shingle FROM sets),
+      Some(s"""WITH $RepShingleCtes,
         |hot AS (SELECT shingle FROM
         |  (SELECT shingle, count(*) AS df FROM ex0 GROUP BY shingle)
         |  WHERE df >= 2 ORDER BY df DESC, shingle LIMIT 20),
         |exs AS (SELECT * FROM ex0 WHERE shingle NOT IN (SELECT shingle FROM hot)),
-        |kept AS (SELECT * FROM exs WHERE shingle IN
-        |  (SELECT shingle FROM exs GROUP BY shingle HAVING count(*) <= 50)),
-        |sz AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY doc_id),
-        |inter AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2, count(*) AS n_common
-        |  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |rp AS (SELECT doc_id1, doc_id2,
-        |  CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) AS jaccard
-        |  FROM inter
-        |  JOIN sz s1 ON doc_id1 = s1.doc_id
-        |  JOIN sz s2 ON doc_id2 = s2.doc_id
-        |  WHERE CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) >= 0.5),
-        |elig AS (SELECT * FROM members WHERE rep IN (SELECT doc_id FROM sz)),
-        |intra AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2,
-        |  CAST(1.0 AS DOUBLE) AS jaccard
-        |  FROM elig a JOIN elig b ON a.rep = b.rep AND a.doc_id < b.doc_id),
-        |xg AS (SELECT least(m1.doc_id, m2.doc_id) AS doc_id1,
-        |  greatest(m1.doc_id, m2.doc_id) AS doc_id2, rp.jaccard
-        |  FROM rp JOIN members m1 ON rp.doc_id1 = m1.rep
-        |           JOIN members m2 ON rp.doc_id2 = m2.rep)
+        |${cappedInterCtes("exs")},
+        |$JaccardExpandCtes
         |SELECT * FROM intra UNION ALL SELECT * FROM xg
         |ORDER BY doc_id1, doc_id2""".stripMargin)),
 
@@ -3742,19 +3684,8 @@ object SparkEntry {
     // the exact-pairs SQL is a valid oracle.
     ("q_minhash_pairs",
       (s, d) => nearDupPairs(s, d).orderBy("doc_id1", "doc_id2"),
-      Some(s"""WITH sets AS (${Dedup.Sql.shingleSets}),
-        |nonempty AS (SELECT * FROM sets WHERE len(sh) > 0),
-        |ex AS (SELECT doc_id, unnest(sh) AS shingle FROM nonempty),
-        |inter AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2, count(*) AS n_common
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |sz AS (SELECT doc_id, len(sh) AS n_sh FROM nonempty)
-        |SELECT doc_id1, doc_id2,
-        |  CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) AS jaccard
-        |FROM inter
-        |JOIN sz s1 ON doc_id1 = s1.doc_id
-        |JOIN sz s2 ON doc_id2 = s2.doc_id
-        |WHERE CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) >= 0.8
+      Some(s"""WITH $NearDupPairsCtes
+        |SELECT doc_id1, doc_id2, jaccard FROM prs
         |ORDER BY doc_id1, doc_id2""".stripMargin)),
 
     // greedy near-dedup: drop the higher id of every minhash pair; oracle
@@ -3763,17 +3694,8 @@ object SparkEntry {
     ("q_neardedup_corpus",
       (s, d) => Dedup.nearDedupFromPairs(Tables.documents(s, d), nearDupPairs(s, d))
         .select("doc_id", "lang", "source").orderBy("doc_id"),
-      Some(s"""WITH sets AS (${Dedup.Sql.shingleSets}),
-        |nonempty AS (SELECT * FROM sets WHERE len(sh) > 0),
-        |ex AS (SELECT doc_id, unnest(sh) AS shingle FROM nonempty),
-        |inter AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2, count(*) AS n_common
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |sz AS (SELECT doc_id, len(sh) AS n_sh FROM nonempty),
-        |dropset AS (SELECT DISTINCT doc_id2 FROM inter
-        |  JOIN sz s1 ON doc_id1 = s1.doc_id
-        |  JOIN sz s2 ON doc_id2 = s2.doc_id
-        |  WHERE CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) >= 0.8)
+      Some(s"""WITH $NearDupPairsCtes,
+        |dropset AS (SELECT DISTINCT doc_id2 FROM prs)
         |SELECT doc_id, lang, source FROM documents
         |WHERE doc_id NOT IN (SELECT doc_id2 FROM dropset)
         |ORDER BY doc_id""".stripMargin)),
@@ -3788,25 +3710,9 @@ object SparkEntry {
     // state; [[Dedup.clustersFromPairs]] stays the any-pairs path).
     ("q_dup_clusters",
       (s, d) => dedupTables(s, d).clusters.orderBy("doc_id"),
-      Some(s"""WITH RECURSIVE sets AS (${Dedup.Sql.shingleSets}),
-        |nonempty AS (SELECT * FROM sets WHERE len(sh) > 0),
-        |ex AS (SELECT doc_id, unnest(sh) AS shingle FROM nonempty),
-        |inter AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2, count(*) AS n_common
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |sz AS (SELECT doc_id, len(sh) AS n_sh FROM nonempty),
-        |pairs AS (SELECT doc_id1, doc_id2 FROM inter
-        |  JOIN sz s1 ON doc_id1 = s1.doc_id
-        |  JOIN sz s2 ON doc_id2 = s2.doc_id
-        |  WHERE CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) >= 0.8),
-        |edges AS (SELECT doc_id1 AS src, doc_id2 AS dst FROM pairs
-        |  UNION SELECT doc_id2, doc_id1 FROM pairs),
-        |reach(doc_id, lbl) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.doc_id)
-        |SELECT doc_id, min(lbl) AS cluster_id FROM reach GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH RECURSIVE $NearDupPairsCtes,
+        |$DupClusterCtes
+        |SELECT doc_id, cluster_id FROM cl ORDER BY doc_id""".stripMargin)),
 
     // duplicate-cluster SIZE histogram: the dataset-card view of the
     // near-dup graph (2-copy pairs vs boilerplate mega-clusters), two
@@ -3814,24 +3720,8 @@ object SparkEntry {
     // touches documents
     ("q_cluster_sizes",
       (s, d) => Dedup.clusterSizeHistogram(dedupTables(s, d).clusters),
-      Some(s"""WITH RECURSIVE sets AS (${Dedup.Sql.shingleSets}),
-        |nonempty AS (SELECT * FROM sets WHERE len(sh) > 0),
-        |ex AS (SELECT doc_id, unnest(sh) AS shingle FROM nonempty),
-        |inter AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2, count(*) AS n_common
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |sz AS (SELECT doc_id, len(sh) AS n_sh FROM nonempty),
-        |pairs AS (SELECT doc_id1, doc_id2 FROM inter
-        |  JOIN sz s1 ON doc_id1 = s1.doc_id
-        |  JOIN sz s2 ON doc_id2 = s2.doc_id
-        |  WHERE CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) >= 0.8),
-        |edges AS (SELECT doc_id1 AS src, doc_id2 AS dst FROM pairs
-        |  UNION SELECT doc_id2, doc_id1 FROM pairs),
-        |reach(doc_id, lbl) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.doc_id),
-        |cl AS (SELECT doc_id, min(lbl) AS cluster_id FROM reach GROUP BY doc_id),
+      Some(s"""WITH RECURSIVE $NearDupPairsCtes,
+        |$DupClusterCtes,
         |cs AS (SELECT cluster_id, count(*) AS cluster_size FROM cl GROUP BY cluster_id)
         |SELECT cluster_size, count(*) AS n_clusters FROM cs
         |GROUP BY cluster_size ORDER BY cluster_size""".stripMargin)),
@@ -3846,24 +3736,8 @@ object SparkEntry {
       (s, d) => Tables.documents(s, d)
         .join(dedupTables(s, d).keepBestDrop, Seq("doc_id"), "left_anti")
         .select("doc_id", "lang", "source").orderBy("doc_id"),
-      Some(s"""WITH RECURSIVE sets AS (${Dedup.Sql.shingleSets}),
-        |nonempty AS (SELECT * FROM sets WHERE len(sh) > 0),
-        |ex AS (SELECT doc_id, unnest(sh) AS shingle FROM nonempty),
-        |inter AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2, count(*) AS n_common
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |sz AS (SELECT doc_id, len(sh) AS n_sh FROM nonempty),
-        |pairs AS (SELECT doc_id1, doc_id2 FROM inter
-        |  JOIN sz s1 ON doc_id1 = s1.doc_id
-        |  JOIN sz s2 ON doc_id2 = s2.doc_id
-        |  WHERE CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) >= 0.8),
-        |edges AS (SELECT doc_id1 AS src, doc_id2 AS dst FROM pairs
-        |  UNION SELECT doc_id2, doc_id1 FROM pairs),
-        |reach(doc_id, lbl) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.doc_id),
-        |cl AS (SELECT doc_id, min(lbl) AS cluster_id FROM reach GROUP BY doc_id),
+      Some(s"""WITH RECURSIVE $NearDupPairsCtes,
+        |$DupClusterCtes,
         |dropset AS (SELECT cl.doc_id FROM cl JOIN documents d USING (doc_id)
         |  QUALIFY row_number() OVER (PARTITION BY cluster_id
         |    ORDER BY d.n_chars DESC, cl.doc_id) > 1)
@@ -3900,41 +3774,8 @@ object SparkEntry {
     // so the persisted artifact hash-checks end to end at all SFs.
     ("q_passage_topk",
       (s, d) => passageTables(s, d).topk.orderBy("query_id", "rank"),
-      Some(s"""WITH dch AS (SELECT doc_id, string_split(text, ' ') AS t,
-        |  CAST(floor((greatest(len(string_split(text, ' ')) - 8, 1) + 23)
-        |    / CAST(24 AS DOUBLE)) AS INT) AS n_chunks FROM documents),
-        |ch AS (SELECT doc_id, unnest(generate_series(0, n_chunks - 1)) AS chunk_id, t
-        |  FROM dch),
-        |cht AS (SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        |  array_to_string(t[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' ') AS chunk_text
-        |  FROM ch),
-        |fp AS (SELECT doc_id, chunk_id,
-        |  ${TextAnalysis.Sql.fingerprintOf("chunk_text")} AS f FROM cht),
-        |pv AS (SELECT doc_id, chunk_id, doc_id * 1048576 + chunk_id AS pid,
-        |  list_transform(range(0, 16), dd ->
-        |    CAST((f * (2*dd + 3) + dd * 65599) % 2000001 AS DOUBLE)
-        |      / 1000000.0 - 1.0) AS v FROM fp),
-        |b AS (SELECT pid, doc_id, ${Similarity.Sql.lshBucket("v", 16, 16)} AS bucket
-        |  FROM pv),
-        |c AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, pid, doc_id
-        |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
-        |qv AS (SELECT doc_id AS query_id, pid, v FROM pv
-        |  WHERE doc_id < 5 AND chunk_id = 0 AND ${Similarity.Sql.dot("v", "v")} > 0),
-        |q AS (SELECT qv.query_id, c.band, c.bb FROM c JOIN qv USING (pid)),
-        |p0 AS (SELECT DISTINCT q.query_id, c2.pid FROM c c2
-        |  JOIN q ON c2.band = q.band AND c2.bb = q.bb
-        |  WHERE c2.doc_id <> q.query_id),
-        |sc AS (SELECT p0.query_id, cv.doc_id, cv.chunk_id, cv.pid,
-        |  ${Similarity.Sql.cosine("qd.v", "cv.v")} AS cosine
-        |  FROM p0 JOIN pv cv USING (pid)
-        |       JOIN qv qd ON qd.query_id = p0.query_id
-        |  WHERE ${Similarity.Sql.dot("cv.v", "cv.v")} > 0),
-        |dv AS (SELECT *, row_number() OVER (PARTITION BY query_id, doc_id
-        |  ORDER BY cosine DESC, pid) AS rn_doc FROM sc),
-        |rk AS (SELECT query_id, doc_id, chunk_id, cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cosine DESC, doc_id, chunk_id) AS BIGINT) AS rank
-        |  FROM dv WHERE rn_doc <= 2)
+      Some(s"""WITH $PassageIndexCtes,
+        |$PassageTopKCtes
         |SELECT query_id, doc_id, chunk_id, cosine, rank FROM rk
         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin)),
 
@@ -3961,41 +3802,8 @@ object SparkEntry {
     // student retrieval AND the teacher fold end to end.
     ("q_distill_pairs",
       (s, d) => passageTables(s, d).distill.orderBy("query_id", "teacher_rank"),
-      Some(s"""WITH dch AS (SELECT doc_id, string_split(text, ' ') AS t,
-        |  CAST(floor((greatest(len(string_split(text, ' ')) - 8, 1) + 23)
-        |    / CAST(24 AS DOUBLE)) AS INT) AS n_chunks FROM documents),
-        |ch AS (SELECT doc_id, unnest(generate_series(0, n_chunks - 1)) AS chunk_id, t
-        |  FROM dch),
-        |cht AS (SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        |  array_to_string(t[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' ') AS chunk_text
-        |  FROM ch),
-        |fp AS (SELECT doc_id, chunk_id,
-        |  ${TextAnalysis.Sql.fingerprintOf("chunk_text")} AS f FROM cht),
-        |pv AS (SELECT doc_id, chunk_id, doc_id * 1048576 + chunk_id AS pid,
-        |  list_transform(range(0, 16), dd ->
-        |    CAST((f * (2*dd + 3) + dd * 65599) % 2000001 AS DOUBLE)
-        |      / 1000000.0 - 1.0) AS v FROM fp),
-        |b AS (SELECT pid, doc_id, ${Similarity.Sql.lshBucket("v", 16, 16)} AS bucket
-        |  FROM pv),
-        |c AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, pid, doc_id
-        |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
-        |qv AS (SELECT doc_id AS query_id, pid, v FROM pv
-        |  WHERE doc_id < 5 AND chunk_id = 0 AND ${Similarity.Sql.dot("v", "v")} > 0),
-        |q AS (SELECT qv.query_id, c.band, c.bb FROM c JOIN qv USING (pid)),
-        |p0 AS (SELECT DISTINCT q.query_id, c2.pid FROM c c2
-        |  JOIN q ON c2.band = q.band AND c2.bb = q.bb
-        |  WHERE c2.doc_id <> q.query_id),
-        |sc AS (SELECT p0.query_id, cv.doc_id, cv.chunk_id, cv.pid,
-        |  ${Similarity.Sql.cosine("qd.v", "cv.v")} AS cosine
-        |  FROM p0 JOIN pv cv USING (pid)
-        |       JOIN qv qd ON qd.query_id = p0.query_id
-        |  WHERE ${Similarity.Sql.dot("cv.v", "cv.v")} > 0),
-        |dv AS (SELECT *, row_number() OVER (PARTITION BY query_id, doc_id
-        |  ORDER BY cosine DESC, pid) AS rn_doc FROM sc),
-        |rk AS (SELECT query_id, doc_id, cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cosine DESC, doc_id, chunk_id) AS BIGINT) AS rank
-        |  FROM dv WHERE rn_doc <= 2),
+      Some(s"""WITH $PassageIndexCtes,
+        |$PassageTopKCtes,
         |cand AS (SELECT query_id, doc_id, max(cosine) AS student_score,
         |  min(rank) AS best_rank FROM rk WHERE rank <= 10 GROUP BY query_id, doc_id),
         |qc AS (SELECT doc_id AS query_id, pid AS qpid, v FROM pv
@@ -4035,43 +3843,8 @@ object SparkEntry {
         val t = passageTables(s, d)
         Passage.contextPack(t.topk, t.vectors)
       },
-      Some(s"""WITH dch AS (SELECT doc_id, string_split(text, ' ') AS t,
-        |  CAST(floor((greatest(len(string_split(text, ' ')) - 8, 1) + 23)
-        |    / CAST(24 AS DOUBLE)) AS INT) AS n_chunks FROM documents),
-        |ch AS (SELECT doc_id, unnest(generate_series(0, n_chunks - 1)) AS chunk_id, t
-        |  FROM dch),
-        |cht AS (SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        |  array_to_string(t[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' ') AS chunk_text,
-        |  CAST(least(len(t) - chunk_id * 24, 32) AS BIGINT) AS n_tokens
-        |  FROM ch),
-        |fp AS (SELECT doc_id, chunk_id, n_tokens,
-        |  ${TextAnalysis.Sql.fingerprintOf("chunk_text")} AS f FROM cht),
-        |pv AS (SELECT doc_id, chunk_id, n_tokens,
-        |  doc_id * 1048576 + chunk_id AS pid,
-        |  list_transform(range(0, 16), dd ->
-        |    CAST((f * (2*dd + 3) + dd * 65599) % 2000001 AS DOUBLE)
-        |      / 1000000.0 - 1.0) AS v FROM fp),
-        |b AS (SELECT pid, doc_id, ${Similarity.Sql.lshBucket("v", 16, 16)} AS bucket
-        |  FROM pv),
-        |c AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, pid, doc_id
-        |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
-        |qv AS (SELECT doc_id AS query_id, pid, v FROM pv
-        |  WHERE doc_id < 5 AND chunk_id = 0 AND ${Similarity.Sql.dot("v", "v")} > 0),
-        |q AS (SELECT qv.query_id, c.band, c.bb FROM c JOIN qv USING (pid)),
-        |p0 AS (SELECT DISTINCT q.query_id, c2.pid FROM c c2
-        |  JOIN q ON c2.band = q.band AND c2.bb = q.bb
-        |  WHERE c2.doc_id <> q.query_id),
-        |sc AS (SELECT p0.query_id, cv.doc_id, cv.chunk_id, cv.n_tokens, cv.pid,
-        |  ${Similarity.Sql.cosine("qd.v", "cv.v")} AS cosine
-        |  FROM p0 JOIN pv cv USING (pid)
-        |       JOIN qv qd ON qd.query_id = p0.query_id
-        |  WHERE ${Similarity.Sql.dot("cv.v", "cv.v")} > 0),
-        |dv AS (SELECT *, row_number() OVER (PARTITION BY query_id, doc_id
-        |  ORDER BY cosine DESC, pid) AS rn_doc FROM sc),
-        |rk AS (SELECT query_id, doc_id, chunk_id, n_tokens,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cosine DESC, doc_id, chunk_id) AS BIGINT) AS rank
-        |  FROM dv WHERE rn_doc <= 2),
+      Some(s"""WITH $PassageIndexCtes,
+        |$PassageTopKCtes,
         |tk AS (SELECT query_id, rank, doc_id, chunk_id, n_tokens,
         |  sum(n_tokens) OVER (PARTITION BY query_id ORDER BY rank
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens
@@ -4092,52 +3865,7 @@ object SparkEntry {
         val t = passageTables(s, d)
         Passage.recallBound(t.topk, Passage.passageBruteTopK(t.vectors))
       },
-      Some(s"""WITH dch AS (SELECT doc_id, string_split(text, ' ') AS t,
-        |  CAST(floor((greatest(len(string_split(text, ' ')) - 8, 1) + 23)
-        |    / CAST(24 AS DOUBLE)) AS INT) AS n_chunks FROM documents),
-        |ch AS (SELECT doc_id, unnest(generate_series(0, n_chunks - 1)) AS chunk_id, t
-        |  FROM dch),
-        |cht AS (SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        |  array_to_string(t[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' ') AS chunk_text
-        |  FROM ch),
-        |fp AS (SELECT doc_id, chunk_id,
-        |  ${TextAnalysis.Sql.fingerprintOf("chunk_text")} AS f FROM cht),
-        |pv AS (SELECT doc_id, chunk_id, doc_id * 1048576 + chunk_id AS pid,
-        |  list_transform(range(0, 16), dd ->
-        |    CAST((f * (2*dd + 3) + dd * 65599) % 2000001 AS DOUBLE)
-        |      / 1000000.0 - 1.0) AS v FROM fp),
-        |qv AS (SELECT doc_id AS query_id, pid, v FROM pv
-        |  WHERE doc_id < 5 AND chunk_id = 0 AND ${Similarity.Sql.dot("v", "v")} > 0),
-        |b AS (SELECT pid, doc_id, ${Similarity.Sql.lshBucket("v", 16, 16)} AS bucket
-        |  FROM pv),
-        |c AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, pid, doc_id
-        |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
-        |q AS (SELECT qv.query_id, c.band, c.bb FROM c JOIN qv USING (pid)),
-        |p0 AS (SELECT DISTINCT q.query_id, c2.pid FROM c c2
-        |  JOIN q ON c2.band = q.band AND c2.bb = q.bb
-        |  WHERE c2.doc_id <> q.query_id),
-        |scb AS (SELECT p0.query_id, cv.doc_id, cv.chunk_id, cv.pid,
-        |  ${Similarity.Sql.cosine("qd.v", "cv.v")} AS cosine
-        |  FROM p0 JOIN pv cv USING (pid)
-        |       JOIN qv qd ON qd.query_id = p0.query_id
-        |  WHERE ${Similarity.Sql.dot("cv.v", "cv.v")} > 0),
-        |dvb AS (SELECT *, row_number() OVER (PARTITION BY query_id, doc_id
-        |  ORDER BY cosine DESC, pid) AS rn_doc FROM scb),
-        |rkb AS (SELECT query_id, doc_id, chunk_id FROM (
-        |  SELECT query_id, doc_id, chunk_id, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY cosine DESC, doc_id, chunk_id) AS rank
-        |  FROM dvb WHERE rn_doc <= 2) WHERE rank <= 10),
-        |sce AS (SELECT qv.query_id, cv.doc_id, cv.chunk_id, cv.pid,
-        |  ${Similarity.Sql.cosine("qv.v", "cv.v")} AS cosine
-        |  FROM pv cv CROSS JOIN qv
-        |  WHERE cv.doc_id <> qv.query_id
-        |    AND ${Similarity.Sql.dot("cv.v", "cv.v")} > 0),
-        |dve AS (SELECT *, row_number() OVER (PARTITION BY query_id, doc_id
-        |  ORDER BY cosine DESC, pid) AS rn_doc FROM sce),
-        |rke AS (SELECT query_id, doc_id, chunk_id FROM (
-        |  SELECT query_id, doc_id, chunk_id, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY cosine DESC, doc_id, chunk_id) AS rank
-        |  FROM dve WHERE rn_doc <= 2) WHERE rank <= 10),
+      Some(s"""WITH $PassageEvalCtes,
         |mk AS (SELECT count(*) AS n_exact,
         |  COALESCE(sum(CASE WHEN rkb.query_id IS NOT NULL THEN 1 ELSE 0 END),
         |    CAST(0 AS BIGINT)) AS n_found
@@ -4162,10 +3890,7 @@ object SparkEntry {
         Passage.mrrCard(t.topk, Passage.passageBruteTopK(t.vectors))
       },
       Some(s"""WITH $PassageEvalCtes,
-        |rke1 AS (SELECT query_id, doc_id, chunk_id FROM (
-        |  SELECT query_id, doc_id, chunk_id, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY cosine DESC, doc_id, chunk_id) AS rank
-        |  FROM dve WHERE rn_doc <= 2) WHERE rank = 1),
+        |rke1 AS (SELECT query_id, doc_id, chunk_id FROM rke WHERE rank = 1),
         |h AS (SELECT CASE WHEN rkb.rank IS NULL THEN CAST(0.0 AS DOUBLE)
         |    ELSE 1.0 / CAST(rkb.rank AS DOUBLE) END AS rr
         |  FROM rke1 LEFT JOIN rkb USING (query_id, doc_id, chunk_id))
@@ -4193,10 +3918,6 @@ object SparkEntry {
         val discSql = Passage.ndcgDiscounts(10).map(_.toString)
           .mkString("[", ", ", "]")
         s"""WITH $PassageEvalCtes,
-        |rke AS (SELECT query_id, doc_id, chunk_id, rank FROM (
-        |  SELECT query_id, doc_id, chunk_id, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY cosine DESC, doc_id, chunk_id) AS rank
-        |  FROM dve WHERE rn_doc <= 2) WHERE rank <= 10),
         |idcg AS (SELECT query_id, list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
         |    list_sort(list(CAST(11 - rank AS DOUBLE) * ($discSql)[rank]))),
         |  (a, b) -> a + b) AS idcg FROM rke GROUP BY query_id),
@@ -4233,33 +3954,14 @@ object SparkEntry {
         val t = passageTables(s, d)
         Passage.passageTopKForQueries(t.vectors, t.bands, reqs)
       },
-      Some(s"""WITH dch AS (SELECT doc_id, string_split(text, ' ') AS t,
-        |  CAST(floor((greatest(len(string_split(text, ' ')) - 8, 1) + 23)
-        |    / CAST(24 AS DOUBLE)) AS INT) AS n_chunks FROM documents),
-        |ch AS (SELECT doc_id, unnest(generate_series(0, n_chunks - 1)) AS chunk_id, t
-        |  FROM dch),
-        |cht AS (SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        |  array_to_string(t[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' ') AS chunk_text
-        |  FROM ch),
-        |fp AS (SELECT doc_id, chunk_id,
-        |  ${TextAnalysis.Sql.fingerprintOf("chunk_text")} AS f FROM cht),
-        |pv AS (SELECT doc_id, chunk_id, doc_id * 1048576 + chunk_id AS pid,
-        |  list_transform(range(0, 16), dd ->
-        |    CAST((f * (2*dd + 3) + dd * 65599) % 2000001 AS DOUBLE)
-        |      / 1000000.0 - 1.0) AS v FROM fp),
-        |b AS (SELECT pid, ${Similarity.Sql.lshBucket("v", 16, 16)} AS bucket
-        |  FROM pv),
-        |c AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, pid
-        |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
+      Some(s"""WITH $PassageIndexCtes,
         |reqs AS (SELECT * FROM (VALUES
         |  (1, 'event stream processing'),
         |  (2, 'vector similarity search'),
         |  (3, 'data quality filter')) AS vr(query_id, query_text)),
         |qf AS (SELECT CAST(query_id AS BIGINT) AS query_id,
         |  ${TextAnalysis.Sql.fingerprintOf("query_text")} AS f FROM reqs),
-        |qe AS (SELECT query_id, list_transform(range(0, 16), dd ->
-        |  CAST((f * (2*dd + 3) + dd * 65599) % 2000001 AS DOUBLE)
-        |    / 1000000.0 - 1.0) AS v FROM qf),
+        |qe AS (SELECT query_id, $TextTower AS v FROM qf),
         |qg AS (SELECT query_id, v FROM qe WHERE ${Similarity.Sql.dot("v", "v")} > 0),
         |qbk AS (SELECT query_id, ${Similarity.Sql.lshBucket("v", 16, 16)} AS bucket
         |  FROM qg),
@@ -4267,17 +3969,7 @@ object SparkEntry {
         |  FROM qbk CROSS JOIN (SELECT unnest(range(0, 4)) AS band) uq),
         |p0 AS (SELECT DISTINCT qc.query_id, c2.pid FROM c c2
         |  JOIN qc ON c2.band = qc.band AND c2.bb = qc.bb),
-        |sc AS (SELECT p0.query_id, cv.doc_id, cv.chunk_id, cv.pid,
-        |  ${Similarity.Sql.cosine("qd.v", "cv.v")} AS cosine
-        |  FROM p0 JOIN pv cv USING (pid)
-        |       JOIN qg qd ON qd.query_id = p0.query_id
-        |  WHERE ${Similarity.Sql.dot("cv.v", "cv.v")} > 0),
-        |dv AS (SELECT *, row_number() OVER (PARTITION BY query_id, doc_id
-        |  ORDER BY cosine DESC, pid) AS rn_doc FROM sc),
-        |rk AS (SELECT query_id, doc_id, chunk_id, cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cosine DESC, doc_id, chunk_id) AS BIGINT) AS rank
-        |  FROM dv WHERE rn_doc <= 2)
+        |${passageRankCtes("qg")}
         |SELECT query_id, doc_id, chunk_id, cosine, rank FROM rk
         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin)),
 
@@ -4298,19 +3990,13 @@ object SparkEntry {
         // is read and sketched per call — the production daily-crawl shape
         Dedup.dedupDelta(incrementalIndex(s, d), delta)
       },
-      Some("""WITH corpus AS (SELECT * FROM documents WHERE doc_id % 5 < 4),
+      Some(s"""WITH corpus AS (SELECT * FROM documents WHERE doc_id % 5 < 4),
         |delta AS (SELECT * FROM documents WHERE doc_id % 5 = 4),
         |exact AS (SELECT c.doc_id AS corpus_id, d.doc_id AS delta_id,
         |  CAST(1.0 AS DOUBLE) AS jaccard
         |  FROM corpus c JOIN delta d ON c.text = d.text),
-        |csets AS (SELECT doc_id, list_distinct(
-        |  list_transform(generate_series(1, len(t) - 2),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM corpus)),
-        |dsets AS (SELECT doc_id, list_distinct(
-        |  list_transform(generate_series(1, len(t) - 2),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM delta)),
+        |csets AS (${Dedup.Sql.shingleSets("corpus")}),
+        |dsets AS (${Dedup.Sql.shingleSets("delta")}),
         |cex AS (SELECT doc_id, unnest(sh) AS shingle FROM csets WHERE len(sh) > 0),
         |dex AS (SELECT doc_id, unnest(sh) AS shingle FROM dsets WHERE len(sh) > 0),
         |inter AS (SELECT c.doc_id AS corpus_id, d.doc_id AS delta_id, count(*) AS n_common
@@ -4339,19 +4025,13 @@ object SparkEntry {
     // cross-split jaccard join. Non-vacuous at all 3 SFs (7/3/36 pairs).
     ("q_fuzzy_contamination",
       (s, d) => fuzzyDeconPairs(s, d).orderBy("doc_id", "bench_id"),
-      Some("""WITH corpus AS (SELECT * FROM documents WHERE doc_id % 11 <> 0),
+      Some(s"""WITH corpus AS (SELECT * FROM documents WHERE doc_id % 11 <> 0),
         |bench AS (SELECT * FROM documents WHERE doc_id % 11 = 0),
         |exact AS (SELECT c.doc_id AS doc_id, b.doc_id AS bench_id,
         |  CAST(1.0 AS DOUBLE) AS jaccard
         |  FROM corpus c JOIN bench b ON c.text = b.text),
-        |csets AS (SELECT doc_id, list_distinct(
-        |  list_transform(generate_series(1, len(t) - 2),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM corpus)),
-        |bsets AS (SELECT doc_id, list_distinct(
-        |  list_transform(generate_series(1, len(t) - 2),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM bench)),
+        |csets AS (${Dedup.Sql.shingleSets("corpus")}),
+        |bsets AS (${Dedup.Sql.shingleSets("bench")}),
         |cex AS (SELECT doc_id, unnest(sh) AS shingle FROM csets WHERE len(sh) > 0),
         |bex AS (SELECT doc_id, unnest(sh) AS shingle FROM bsets WHERE len(sh) > 0),
         |inter AS (SELECT c.doc_id AS doc_id, b.doc_id AS bench_id, count(*) AS n_common
@@ -4446,14 +4126,8 @@ object SparkEntry {
         .filter(pmod(col("doc_id"), lit(11)) =!= 0)
         .join(deconCollisions(s, d).select("doc_id"), Seq("doc_id"), "left_anti")
         .select("doc_id", "lang", "source").orderBy("doc_id"),
-      Some("""WITH bench AS (SELECT * FROM documents WHERE doc_id % 11 = 0),
-        |corp AS (SELECT * FROM documents WHERE doc_id % 11 <> 0),
-        |bg AS (SELECT DISTINCT unnest(list_transform(generate_series(1, len(t) - 4),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS g
-        |  FROM (SELECT string_split(text, ' ') AS t FROM bench)),
-        |cg AS (SELECT doc_id, unnest(list_distinct(list_transform(generate_series(1, len(t) - 4),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]))) AS g
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM corp))
+      Some(s"""WITH $BenchGramCtes,
+        |${docGramCte("corp")}
         |SELECT doc_id, lang, source FROM corp
         |WHERE doc_id NOT IN (SELECT doc_id FROM cg JOIN bg USING (g))
         |ORDER BY doc_id""".stripMargin)),
@@ -4476,12 +4150,7 @@ object SparkEntry {
         |scr AS (SELECT doc_id, lang, source, ${Pii.Sql.scrub("text")} AS clean_text
         |  FROM inj),
         |cnt AS (SELECT doc_id, lang, source, clean_text,
-        |  ${Pii.Sql.markCount("clean_text", Pii.EmailMark)} AS n_emails,
-        |  ${Pii.Sql.markCount("clean_text", Pii.PhoneMark)} AS n_phones,
-        |  ${Pii.Sql.markCount("clean_text", Pii.IpMark)} AS n_ips,
-        |  ${Pii.Sql.markCount("clean_text", Pii.IdMark)} AS n_ids,
-        |  ${Pii.Sql.markCount("clean_text", Pii.E164Mark)} AS n_intl_phones,
-        |  ${Pii.Sql.markCount("clean_text", Pii.IbanMark)} AS n_ibans
+        |  $PiiCountCols
         |  FROM scr)
         |SELECT doc_id, lang, source, clean_text, n_emails, n_phones, n_ips,
         |  n_ids, n_intl_phones, n_ibans,
@@ -4499,12 +4168,7 @@ object SparkEntry {
         |scr AS (SELECT doc_id, source, ${Pii.Sql.scrub("text")} AS clean_text
         |  FROM inj),
         |cnt AS (SELECT doc_id, source,
-        |  ${Pii.Sql.markCount("clean_text", Pii.EmailMark)} AS n_emails,
-        |  ${Pii.Sql.markCount("clean_text", Pii.PhoneMark)} AS n_phones,
-        |  ${Pii.Sql.markCount("clean_text", Pii.IpMark)} AS n_ips,
-        |  ${Pii.Sql.markCount("clean_text", Pii.IdMark)} AS n_ids,
-        |  ${Pii.Sql.markCount("clean_text", Pii.E164Mark)} AS n_intl_phones,
-        |  ${Pii.Sql.markCount("clean_text", Pii.IbanMark)} AS n_ibans
+        |  $PiiCountCols
         |  FROM scr)
         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(CASE WHEN n_emails + n_phones + n_ips + n_ids
@@ -4538,33 +4202,13 @@ object SparkEntry {
           .select("doc_id", "source", "n_pii", "clean_text")
           .orderBy("doc_id")
       },
-      Some(s"""WITH bench AS (SELECT * FROM documents WHERE doc_id % 11 = 0),
-        |corp AS (SELECT * FROM documents WHERE doc_id % 11 <> 0),
-        |q AS (SELECT * FROM corp WHERE
-        |  len(string_split(text, ' ')) >= 20
-        |  AND CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE)
-        |    / length(text) < 0.1
-        |  AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) > 0.3),
-        |bg AS (SELECT DISTINCT unnest(list_transform(generate_series(1, len(t) - 4),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS g
-        |  FROM (SELECT string_split(text, ' ') AS t FROM bench)),
-        |cg AS (SELECT doc_id, unnest(list_distinct(list_transform(generate_series(1, len(t) - 4),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]))) AS g
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM q)),
-        |surv AS (SELECT doc_id FROM q
-        |  WHERE doc_id NOT IN (SELECT doc_id FROM cg JOIN bg USING (g))),
+      Some(s"""WITH $DeconCtes,
         |inj AS (SELECT doc_id, source, ${Pii.Sql.inject} AS text
-        |  FROM documents WHERE doc_id IN (SELECT doc_id FROM surv)),
+        |  FROM documents WHERE doc_id IN (SELECT doc_id FROM dcn)),
         |scr AS (SELECT doc_id, source, ${Pii.Sql.scrub("text")} AS clean_text
         |  FROM inj)
         |SELECT doc_id, source,
-        |  ${Pii.Sql.markCount("clean_text", Pii.EmailMark)}
-        |  + ${Pii.Sql.markCount("clean_text", Pii.PhoneMark)}
-        |  + ${Pii.Sql.markCount("clean_text", Pii.IpMark)}
-        |  + ${Pii.Sql.markCount("clean_text", Pii.IdMark)}
-        |  + ${Pii.Sql.markCount("clean_text", Pii.E164Mark)}
-        |  + ${Pii.Sql.markCount("clean_text", Pii.IbanMark)} AS n_pii,
+        |  $PiiMarkSum AS n_pii,
         |  clean_text
         |FROM scr ORDER BY doc_id""".stripMargin)),
 
@@ -4577,25 +4221,14 @@ object SparkEntry {
     // class) and reassembles clean_text with an ordered string_agg.
     ("q_strip_dup_spans",
       (s, d) => Dedup.stripDupSpans(Tables.documents(s, d), k = 8),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+      Some(s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |g0 AS (SELECT doc_id, t, unnest(generate_series(1, len(t) - 7)) AS pos FROM toks),
         |grams AS (SELECT doc_id, pos,
         |  list_aggregate(t[pos:pos+7], 'string_agg', ' ') AS g FROM g0),
         |hot AS (SELECT g FROM grams GROUP BY g HAVING count(DISTINCT doc_id) >= 2),
         |cov AS (SELECT DISTINCT doc_id, unnest(generate_series(pos, pos + 7)) AS cpos
         |  FROM grams WHERE g IN (SELECT g FROM hot)),
-        |cv AS (SELECT doc_id, count(*) AS nc FROM cov GROUP BY doc_id),
-        |tok AS (SELECT doc_id, unnest(t) AS tok,
-        |  unnest(generate_series(1, len(t))) AS pos FROM toks),
-        |kept AS (SELECT tk.doc_id, string_agg(tk.tok, ' ' ORDER BY tk.pos) AS clean_text
-        |  FROM tok tk LEFT JOIN cov ON tk.doc_id = cov.doc_id AND tk.pos = cov.cpos
-        |  WHERE cov.cpos IS NULL GROUP BY tk.doc_id)
-        |SELECT d.doc_id, CAST(len(d.t) AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(cv.nc, 0) AS BIGINT) AS n_dropped,
-        |  CAST(coalesce(cv.nc, 0) AS DOUBLE) / len(d.t) AS dup_frac,
-        |  coalesce(k.clean_text, '') AS clean_text
-        |FROM toks d LEFT JOIN cv USING (doc_id) LEFT JOIN kept k USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin)),
+        |${spanExciseSql("dup_frac")}""".stripMargin)),
 
     // SNAPSHOT DIFF — the dataset-versioning card between two corpus
     // releases: per (source, status) counts + net char delta, content
@@ -4685,28 +4318,13 @@ object SparkEntry {
           docs.filter(pmod(col("doc_id"), lit(11)) =!= 0),
           docs.filter(pmod(col("doc_id"), lit(11)) === 0), n = 5)
       },
-      Some("""WITH bench AS (SELECT * FROM documents WHERE doc_id % 11 = 0),
-        |corp AS (SELECT * FROM documents WHERE doc_id % 11 <> 0),
-        |bg AS (SELECT DISTINCT list_aggregate(t[pos:pos+4], 'string_agg', ' ') AS g
-        |  FROM (SELECT t, unnest(generate_series(1, len(t) - 4)) AS pos
-        |        FROM (SELECT string_split(text, ' ') AS t FROM bench))),
+      Some(s"""WITH $BenchGramCtes,
         |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM corp),
         |cg AS (SELECT doc_id, pos, list_aggregate(t[pos:pos+4], 'string_agg', ' ') AS g
         |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 4)) AS pos FROM toks)),
         |cov AS (SELECT DISTINCT doc_id, unnest(generate_series(pos, pos + 4)) AS cpos
         |  FROM cg WHERE g IN (SELECT g FROM bg)),
-        |cv AS (SELECT doc_id, count(*) AS nc FROM cov GROUP BY doc_id),
-        |tok AS (SELECT doc_id, unnest(t) AS tok,
-        |  unnest(generate_series(1, len(t))) AS pos FROM toks),
-        |kept AS (SELECT tk.doc_id, string_agg(tk.tok, ' ' ORDER BY tk.pos) AS clean_text
-        |  FROM tok tk LEFT JOIN cov ON tk.doc_id = cov.doc_id AND tk.pos = cov.cpos
-        |  WHERE cov.cpos IS NULL GROUP BY tk.doc_id)
-        |SELECT d.doc_id, CAST(len(d.t) AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(cv.nc, 0) AS BIGINT) AS n_dropped,
-        |  CAST(coalesce(cv.nc, 0) AS DOUBLE) / len(d.t) AS contaminated_frac,
-        |  coalesce(k.clean_text, '') AS clean_text
-        |FROM toks d LEFT JOIN cv USING (doc_id) LEFT JOIN kept k USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin)),
+        |${spanExciseSql("contaminated_frac")}""".stripMargin)),
 
     // WITHIN-doc repetition stripping (k=2): later occurrences of a bigram
     // already seen in the same document are excised, first survives — the
@@ -4716,7 +4334,7 @@ object SparkEntry {
     // (doc, gram))
     ("q_strip_self_repetition",
       (s, d) => Dedup.stripSelfRepetition(Tables.documents(s, d), k = 2),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+      Some(s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |grams AS (SELECT doc_id, pos, list_aggregate(t[pos:pos+1], 'string_agg', ' ') AS g
         |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS pos FROM toks)),
         |m AS (SELECT doc_id, g, min(pos) AS mp FROM grams GROUP BY 1, 2),
@@ -4724,18 +4342,7 @@ object SparkEntry {
         |  unnest(generate_series(gr.pos, gr.pos + 1)) AS cpos
         |  FROM grams gr JOIN m ON gr.doc_id = m.doc_id AND gr.g = m.g
         |  WHERE gr.pos > m.mp),
-        |cv AS (SELECT doc_id, count(*) AS nc FROM cov GROUP BY doc_id),
-        |tok AS (SELECT doc_id, unnest(t) AS tok,
-        |  unnest(generate_series(1, len(t))) AS pos FROM toks),
-        |kept AS (SELECT tk.doc_id, string_agg(tk.tok, ' ' ORDER BY tk.pos) AS clean_text
-        |  FROM tok tk LEFT JOIN cov ON tk.doc_id = cov.doc_id AND tk.pos = cov.cpos
-        |  WHERE cov.cpos IS NULL GROUP BY tk.doc_id)
-        |SELECT d.doc_id, CAST(len(d.t) AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(cv.nc, 0) AS BIGINT) AS n_dropped,
-        |  CAST(coalesce(cv.nc, 0) AS DOUBLE) / len(d.t) AS rep_frac,
-        |  coalesce(k.clean_text, '') AS clean_text
-        |FROM toks d LEFT JOIN cv USING (doc_id) LEFT JOIN kept k USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin)),
+        |${spanExciseSql("rep_frac")}""".stripMargin)),
 
     // END-TO-END training-data pipeline: quality filter → benchmark
     // decontamination → near-dedup greedy drop, composed from the SHARED
@@ -4746,65 +4353,11 @@ object SparkEntry {
     // materialized pairs table instead of re-sketching per stage. Each
     // stage is oracle-checked alone above; this row checks the composition.
     ("q_pipeline_clean",
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-        val corpus = docs.filter(pmod(col("doc_id"), lit(11)) =!= 0)
-        val q = corpus.join(
-          qualityFlags(s, d).filter(col("keep")).select("doc_id"),
-          Seq("doc_id"), "left_semi")
-        // persisted graft_decon collision table (per-doc property — see
-        // deconCollisions — so the restriction equals decontaminating q)
-        // BARRIER (r17): decon feeds both drop semi-joins AND the final
-        // anti-join; without it each reference re-expands the whole
-        // quality→decon subtree (the r17 plan audit read the documents
-        // and flag scans three times over). The checkpointed frame is
-        // the narrow per-doc survivor projection. DEPLOYMENT CAVEAT
-        // (r17 verdict 9): localCheckpoint is not fault-tolerant — an
-        // executor loss on a real cluster fails the query instead of
-        // recomputing; swap for persist(DISK_ONLY) where lineage safety
-        // outweighs the extra job. This caveat covers every funnel
-        // barrier below (q_pipeline_full_clean / q_pipeline_scale_clean).
-        val decon = q.join(deconCollisions(s, d).select("doc_id"),
-          Seq("doc_id"), "left_anti")
-          .localCheckpoint(eager = false)
-        val drop = nearDupPairs(s, d)
-          .join(decon.select(col("doc_id").as("doc_id1")), Seq("doc_id1"), "left_semi")
-          .join(decon.select(col("doc_id").as("doc_id2")), Seq("doc_id2"), "left_semi")
-          .select(col("doc_id2").as("doc_id")).distinct()
-        decon.join(drop, Seq("doc_id"), "left_anti")
-          .select("doc_id", "lang", "source").orderBy("doc_id")
-      },
-      Some(s"""WITH bench AS (SELECT * FROM documents WHERE doc_id % 11 = 0),
-        |corp AS (SELECT * FROM documents WHERE doc_id % 11 <> 0),
-        |q AS (SELECT * FROM corp WHERE
-        |  len(string_split(text, ' ')) >= 20
-        |  AND CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE)
-        |    / length(text) < 0.1
-        |  AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) > 0.3),
-        |bg AS (SELECT DISTINCT unnest(list_transform(generate_series(1, len(t) - 4),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS g
-        |  FROM (SELECT string_split(text, ' ') AS t FROM bench)),
-        |cg AS (SELECT doc_id, unnest(list_distinct(list_transform(generate_series(1, len(t) - 4),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]))) AS g
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM q)),
-        |dcn AS (SELECT * FROM q WHERE doc_id NOT IN (SELECT doc_id FROM cg JOIN bg USING (g))),
-        |sets AS (${Dedup.Sql.shingleSets}),
-        |nonempty AS (SELECT * FROM sets WHERE len(sh) > 0),
-        |ex AS (SELECT doc_id, unnest(sh) AS shingle FROM nonempty),
-        |inter AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2, count(*) AS n_common
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |sz AS (SELECT doc_id, len(sh) AS n_sh FROM nonempty),
-        |pairs AS (SELECT doc_id1, doc_id2 FROM inter
-        |  JOIN sz s1 ON doc_id1 = s1.doc_id
-        |  JOIN sz s2 ON doc_id2 = s2.doc_id
-        |  WHERE CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) >= 0.8),
-        |dropset AS (SELECT DISTINCT doc_id2 FROM pairs
-        |  WHERE doc_id1 IN (SELECT doc_id FROM dcn)
-        |    AND doc_id2 IN (SELECT doc_id FROM dcn))
+      (s, d) => lexicalSurvivors(s, d)
+        .select("doc_id", "lang", "source").orderBy("doc_id"),
+      Some(s"""WITH $LexDedupCtes
         |SELECT doc_id, lang, source FROM dcn
-        |WHERE doc_id NOT IN (SELECT doc_id2 FROM dropset)
+        |WHERE doc_id IN (SELECT doc_id FROM lex)
         |ORDER BY doc_id""".stripMargin)),
 
     // The FULL clean pipeline a training-data run actually ships: quality
@@ -4818,70 +4371,17 @@ object SparkEntry {
     // pushed to the scan).
     ("q_pipeline_full_clean",
       (s, d) => {
-        val docs = Tables.documents(s, d)
-        val corpus = docs.filter(pmod(col("doc_id"), lit(11)) =!= 0)
-        val q = corpus.join(
-          qualityFlags(s, d).filter(col("keep")).select("doc_id"),
-          Seq("doc_id"), "left_semi")
-        // contamination is a per-doc property (see deconCollisions), so
-        // anti-joining the quality survivors against the persisted
-        // corpus-wide collision table equals decontaminating them
-        // decon and lex are each read three times downstream; barrier
-        // both (r17, same rationale as q_pipeline_clean) so the funnel
-        // prefix computes once instead of once per reference.
-        val decon = q.join(deconCollisions(s, d).select("doc_id"),
-          Seq("doc_id"), "left_anti")
-          .localCheckpoint(eager = false)
-        val drop = nearDupPairs(s, d)
-          .join(decon.select(col("doc_id").as("doc_id1")), Seq("doc_id1"), "left_semi")
-          .join(decon.select(col("doc_id").as("doc_id2")), Seq("doc_id2"), "left_semi")
-          .select(col("doc_id2").as("doc_id")).distinct()
-        val lex = decon.join(drop, Seq("doc_id"), "left_anti")
-          .localCheckpoint(eager = false)
+        // lex is read three times downstream: barriered like decon
+        val lex = lexicalSurvivors(s, d).localCheckpoint(eager = false)
         // exact semantic stage served from the persisted graft_exactpairs
         // table restricted to both-endpoint lexical survivors (r16):
         // a pair's cosine is pair-local, so pairs(lexEmb) ≡
         // pairs(allEmb) ∩ {both endpoints ∈ lex} — the same restriction
         // identity the decon stage leans on. The oracle still re-walks
         // the exact all-pairs pass over the survivor frame.
-        val sem = exactPairsTable(s, d)
-          .join(lex.select(col("doc_id").as("vec_id1")), Seq("vec_id1"), "left_semi")
-          .join(lex.select(col("doc_id").as("vec_id2")), Seq("vec_id2"), "left_semi")
-          .select(col("vec_id2").as("doc_id")).distinct()
-        lex.join(sem, Seq("doc_id"), "left_anti")
-          .select("doc_id", "lang", "source").orderBy("doc_id")
+        semanticSurvivors(lex, exactPairsTable(s, d))
       },
-      Some(s"""WITH bench AS (SELECT * FROM documents WHERE doc_id % 11 = 0),
-        |corp AS (SELECT * FROM documents WHERE doc_id % 11 <> 0),
-        |q AS (SELECT * FROM corp WHERE
-        |  len(string_split(text, ' ')) >= 20
-        |  AND CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE)
-        |    / length(text) < 0.1
-        |  AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) > 0.3),
-        |bg AS (SELECT DISTINCT unnest(list_transform(generate_series(1, len(t) - 4),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS g
-        |  FROM (SELECT string_split(text, ' ') AS t FROM bench)),
-        |cg AS (SELECT doc_id, unnest(list_distinct(list_transform(generate_series(1, len(t) - 4),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]))) AS g
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM q)),
-        |dcn AS (SELECT * FROM q WHERE doc_id NOT IN (SELECT doc_id FROM cg JOIN bg USING (g))),
-        |sets AS (${Dedup.Sql.shingleSets}),
-        |nonempty AS (SELECT * FROM sets WHERE len(sh) > 0),
-        |ex AS (SELECT doc_id, unnest(sh) AS shingle FROM nonempty),
-        |inter AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2, count(*) AS n_common
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |sz AS (SELECT doc_id, len(sh) AS n_sh FROM nonempty),
-        |pairs AS (SELECT doc_id1, doc_id2 FROM inter
-        |  JOIN sz s1 ON doc_id1 = s1.doc_id
-        |  JOIN sz s2 ON doc_id2 = s2.doc_id
-        |  WHERE CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) >= 0.8),
-        |dropset AS (SELECT DISTINCT doc_id2 FROM pairs
-        |  WHERE doc_id1 IN (SELECT doc_id FROM dcn)
-        |    AND doc_id2 IN (SELECT doc_id FROM dcn)),
-        |lex AS (SELECT doc_id FROM dcn
-        |  WHERE doc_id NOT IN (SELECT doc_id2 FROM dropset)),
+      Some(s"""WITH $LexDedupCtes,
         |ev AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
         |  FROM embeddings WHERE vec_id IN (SELECT doc_id FROM lex)),
         |sp AS (SELECT a.vec_id AS vec_id1, b.vec_id AS vec_id2,
@@ -4904,88 +4404,10 @@ object SparkEntry {
     // q_pipeline_full_clean stays as its validation baseline.
     ("q_pipeline_scale_clean",
       (s, d) => {
-        val docs = Tables.documents(s, d)
-        val corpus = docs.filter(pmod(col("doc_id"), lit(11)) =!= 0)
-        val q = corpus.join(
-          qualityFlags(s, d).filter(col("keep")).select("doc_id"),
-          Seq("doc_id"), "left_semi")
-        // persisted collision table, same identity as q_pipeline_full_clean;
-        // decon/lex barriered for the same three-reads-each reason
-        val decon = q.join(deconCollisions(s, d).select("doc_id"),
-          Seq("doc_id"), "left_anti")
-          .localCheckpoint(eager = false)
-        val drop = nearDupPairs(s, d)
-          .join(decon.select(col("doc_id").as("doc_id1")), Seq("doc_id1"), "left_semi")
-          .join(decon.select(col("doc_id").as("doc_id2")), Seq("doc_id2"), "left_semi")
-          .select(col("doc_id2").as("doc_id")).distinct()
-        val lex = decon.join(drop, Seq("doc_id"), "left_anti")
-          .localCheckpoint(eager = false)
-        val sem = annServeTables(s, d).pairs
-          .join(lex.select(col("doc_id").as("vec_id1")), Seq("vec_id1"), "left_semi")
-          .join(lex.select(col("doc_id").as("vec_id2")), Seq("vec_id2"), "left_semi")
-          .select(col("vec_id2").as("doc_id")).distinct()
-        lex.join(sem, Seq("doc_id"), "left_anti")
-          .select("doc_id", "lang", "source").orderBy("doc_id")
+        val lex = lexicalSurvivors(s, d).localCheckpoint(eager = false)
+        semanticSurvivors(lex, annServeTables(s, d).pairs)
       },
-      Some(s"""WITH bench AS (SELECT * FROM documents WHERE doc_id % 11 = 0),
-        |corp AS (SELECT * FROM documents WHERE doc_id % 11 <> 0),
-        |q AS (SELECT * FROM corp WHERE
-        |  len(string_split(text, ' ')) >= 20
-        |  AND CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE)
-        |    / length(text) < 0.1
-        |  AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) > 0.3),
-        |bg AS (SELECT DISTINCT unnest(list_transform(generate_series(1, len(t) - 4),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS g
-        |  FROM (SELECT string_split(text, ' ') AS t FROM bench)),
-        |cg AS (SELECT doc_id, unnest(list_distinct(list_transform(generate_series(1, len(t) - 4),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]))) AS g
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM q)),
-        |dcn AS (SELECT * FROM q WHERE doc_id NOT IN (SELECT doc_id FROM cg JOIN bg USING (g))),
-        |sets AS (${Dedup.Sql.shingleSets}),
-        |nonempty AS (SELECT * FROM sets WHERE len(sh) > 0),
-        |ex AS (SELECT doc_id, unnest(sh) AS shingle FROM nonempty),
-        |inter AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2, count(*) AS n_common
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |sz AS (SELECT doc_id, len(sh) AS n_sh FROM nonempty),
-        |pairs AS (SELECT doc_id1, doc_id2 FROM inter
-        |  JOIN sz s1 ON doc_id1 = s1.doc_id
-        |  JOIN sz s2 ON doc_id2 = s2.doc_id
-        |  WHERE CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) >= 0.8),
-        |dropset AS (SELECT DISTINCT doc_id2 FROM pairs
-        |  WHERE doc_id1 IN (SELECT doc_id FROM dcn)
-        |    AND doc_id2 IN (SELECT doc_id FROM dcn)),
-        |lex AS (SELECT doc_id FROM dcn
-        |  WHERE doc_id NOT IN (SELECT doc_id2 FROM dropset)),
-        |lg AS (SELECT embedding, min(vec_id) AS rep FROM embeddings GROUP BY embedding),
-        |lm AS (SELECT lg.rep, e.vec_id FROM embeddings e JOIN lg ON e.embedding = lg.embedding),
-        |ld AS (SELECT * FROM (${Similarity.Sql.prepared}) dp
-        |  WHERE vec_id IN (SELECT rep FROM lg)),
-        |lb AS (SELECT vec_id, ${Similarity.Sql.lshBucket("v")} AS bucket FROM ld),
-        |lc AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, vec_id
-        |  FROM lb CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
-        |lp0 AS (SELECT DISTINCT a.vec_id AS vec_id1, c2.vec_id AS vec_id2
-        |  FROM lc a JOIN lc c2 ON a.band = c2.band AND a.bb = c2.bb
-        |    AND a.vec_id < c2.vec_id),
-        |lp AS (SELECT lp0.vec_id1, lp0.vec_id2,
-        |  ${Similarity.Sql.cosine("a.v", "b2.v")} AS cosine
-        |  FROM lp0 JOIN ld a ON lp0.vec_id1 = a.vec_id
-        |          JOIN ld b2 ON lp0.vec_id2 = b2.vec_id),
-        |lrp AS (SELECT * FROM lp WHERE cosine >= 0.4),
-        |lelig AS (SELECT lm.rep, lm.vec_id FROM lm JOIN ld ON lm.rep = ld.vec_id
-        |  WHERE sqrt(${Similarity.Sql.dot("ld.v", "ld.v")}) > 0),
-        |lintra AS (SELECT a.vec_id AS vec_id1, b2.vec_id AS vec_id2
-        |  FROM lelig a JOIN lelig b2 ON a.rep = b2.rep AND a.vec_id < b2.vec_id),
-        |lxg AS (SELECT least(m1.vec_id, m2.vec_id) AS vec_id1,
-        |  greatest(m1.vec_id, m2.vec_id) AS vec_id2
-        |  FROM lrp JOIN lm m1 ON lrp.vec_id1 = m1.rep
-        |           JOIN lm m2 ON lrp.vec_id2 = m2.rep),
-        |spairs AS (SELECT vec_id1, vec_id2 FROM lintra
-        |  UNION ALL SELECT vec_id1, vec_id2 FROM lxg),
-        |semdrop AS (SELECT DISTINCT vec_id2 FROM spairs
-        |  WHERE vec_id1 IN (SELECT doc_id FROM lex)
-        |    AND vec_id2 IN (SELECT doc_id FROM lex))
+      Some(s"""WITH $SemLshDedupCtes
         |SELECT d2.doc_id, d2.lang, d2.source FROM documents d2
         |WHERE d2.doc_id IN (SELECT doc_id FROM lex)
         |  AND d2.doc_id NOT IN (SELECT vec_id2 FROM semdrop)
@@ -5012,77 +4434,14 @@ object SparkEntry {
     // re-walks the whole composition.
     ("q_curation_funnel",
       (s, d) => funnelTable(s, d).orderBy("stage_id"),
-      Some(s"""WITH bench AS (SELECT * FROM documents WHERE doc_id % 11 = 0),
-        |corp AS (SELECT * FROM documents WHERE doc_id % 11 <> 0),
-        |q AS (SELECT * FROM corp WHERE
-        |  len(string_split(text, ' ')) >= 20
-        |  AND CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE)
-        |    / length(text) < 0.1
-        |  AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) > 0.3),
-        |bg AS (SELECT DISTINCT unnest(list_transform(generate_series(1, len(t) - 4),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS g
-        |  FROM (SELECT string_split(text, ' ') AS t FROM bench)),
-        |cg AS (SELECT doc_id, unnest(list_distinct(list_transform(generate_series(1, len(t) - 4),
-        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]))) AS g
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM q)),
-        |dcn AS (SELECT * FROM q WHERE doc_id NOT IN (SELECT doc_id FROM cg JOIN bg USING (g))),
-        |sets AS (${Dedup.Sql.shingleSets}),
-        |nonempty AS (SELECT * FROM sets WHERE len(sh) > 0),
-        |ex AS (SELECT doc_id, unnest(sh) AS shingle FROM nonempty),
-        |inter AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2, count(*) AS n_common
-        |  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |sz AS (SELECT doc_id, len(sh) AS n_sh FROM nonempty),
-        |pairs AS (SELECT doc_id1, doc_id2 FROM inter
-        |  JOIN sz s1 ON doc_id1 = s1.doc_id
-        |  JOIN sz s2 ON doc_id2 = s2.doc_id
-        |  WHERE CAST(n_common AS DOUBLE) / (s1.n_sh + s2.n_sh - n_common) >= 0.8),
-        |dropset AS (SELECT DISTINCT doc_id2 FROM pairs
-        |  WHERE doc_id1 IN (SELECT doc_id FROM dcn)
-        |    AND doc_id2 IN (SELECT doc_id FROM dcn)),
-        |lex AS (SELECT doc_id FROM dcn
-        |  WHERE doc_id NOT IN (SELECT doc_id2 FROM dropset)),
-        |lg AS (SELECT embedding, min(vec_id) AS rep FROM embeddings GROUP BY embedding),
-        |lm AS (SELECT lg.rep, e.vec_id FROM embeddings e JOIN lg ON e.embedding = lg.embedding),
-        |ld AS (SELECT * FROM (${Similarity.Sql.prepared}) dp
-        |  WHERE vec_id IN (SELECT rep FROM lg)),
-        |lb AS (SELECT vec_id, ${Similarity.Sql.lshBucket("v")} AS bucket FROM ld),
-        |lc AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, vec_id
-        |  FROM lb CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
-        |lp0 AS (SELECT DISTINCT a.vec_id AS vec_id1, c2.vec_id AS vec_id2
-        |  FROM lc a JOIN lc c2 ON a.band = c2.band AND a.bb = c2.bb
-        |    AND a.vec_id < c2.vec_id),
-        |lp AS (SELECT lp0.vec_id1, lp0.vec_id2,
-        |  ${Similarity.Sql.cosine("a.v", "b2.v")} AS cosine
-        |  FROM lp0 JOIN ld a ON lp0.vec_id1 = a.vec_id
-        |          JOIN ld b2 ON lp0.vec_id2 = b2.vec_id),
-        |lrp AS (SELECT * FROM lp WHERE cosine >= 0.4),
-        |lelig AS (SELECT lm.rep, lm.vec_id FROM lm JOIN ld ON lm.rep = ld.vec_id
-        |  WHERE sqrt(${Similarity.Sql.dot("ld.v", "ld.v")}) > 0),
-        |lintra AS (SELECT a.vec_id AS vec_id1, b2.vec_id AS vec_id2
-        |  FROM lelig a JOIN lelig b2 ON a.rep = b2.rep AND a.vec_id < b2.vec_id),
-        |lxg AS (SELECT least(m1.vec_id, m2.vec_id) AS vec_id1,
-        |  greatest(m1.vec_id, m2.vec_id) AS vec_id2
-        |  FROM lrp JOIN lm m1 ON lrp.vec_id1 = m1.rep
-        |           JOIN lm m2 ON lrp.vec_id2 = m2.rep),
-        |spairs AS (SELECT vec_id1, vec_id2 FROM lintra
-        |  UNION ALL SELECT vec_id1, vec_id2 FROM lxg),
-        |semdrop AS (SELECT DISTINCT vec_id2 FROM spairs
-        |  WHERE vec_id1 IN (SELECT doc_id FROM lex)
-        |    AND vec_id2 IN (SELECT doc_id FROM lex)),
+      Some(s"""WITH $SemLshDedupCtes,
         |fin AS (SELECT doc_id FROM lex
         |  WHERE doc_id NOT IN (SELECT vec_id2 FROM semdrop)),
         |pinj AS (SELECT doc_id, ${Pii.Sql.inject} AS text FROM documents
         |  WHERE doc_id IN (SELECT doc_id FROM dcn)),
         |pscr AS (SELECT doc_id, ${Pii.Sql.scrub("text")} AS clean_text FROM pinj),
         |ppii AS (SELECT doc_id FROM pscr WHERE
-        |  ${Pii.Sql.markCount("clean_text", Pii.EmailMark)}
-        |  + ${Pii.Sql.markCount("clean_text", Pii.PhoneMark)}
-        |  + ${Pii.Sql.markCount("clean_text", Pii.IpMark)}
-        |  + ${Pii.Sql.markCount("clean_text", Pii.IdMark)}
-        |  + ${Pii.Sql.markCount("clean_text", Pii.E164Mark)}
-        |  + ${Pii.Sql.markCount("clean_text", Pii.IbanMark)} > 0)
+        |  $PiiMarkSum > 0)
         |SELECT CAST(stage_id AS INT) AS stage_id, stage, n_docs FROM (VALUES
         |  (0, 'corpus', (SELECT count(*) FROM corp)),
         |  (1, 'quality', (SELECT count(*) FROM q)),
@@ -5126,10 +4485,7 @@ object SparkEntry {
     // stays the any-corpus path.
     ("q_source_overlap",
       (s, d) => releaseTables(s, d)._4.orderBy("source_a", "source_b"),
-      Some(s"""WITH g AS (SELECT DISTINCT source,
-        |  ${TextAnalysis.Sql.fingerprintOf("gram")} AS g
-        |  FROM (SELECT source, unnest($GRAM5) AS gram
-        |    FROM (SELECT source, string_split(text, ' ') AS t FROM documents))),
+      Some(s"""WITH $SourceGramCte,
         |cat AS (SELECT DISTINCT source FROM g),
         |df AS (SELECT g, count(*) AS sdf FROM g GROUP BY g),
         |kept AS (SELECT g.source, g.g FROM g JOIN df USING (g)
@@ -5163,10 +4519,7 @@ object SparkEntry {
     // primary above is what a production corpus runs.
     ("q_source_overlap_uncapped",
       (s, d) => releaseTables(s, d)._3.orderBy("source_a", "source_b"),
-      Some(s"""WITH g AS (SELECT DISTINCT source,
-        |  ${TextAnalysis.Sql.fingerprintOf("gram")} AS g
-        |  FROM (SELECT source, unnest($GRAM5) AS gram
-        |    FROM (SELECT source, string_split(text, ' ') AS t FROM documents))),
+      Some(s"""WITH $SourceGramCte,
         |sz AS (SELECT source, count(*) AS n_grams FROM g GROUP BY source),
         |ov AS (SELECT a.source AS source_a, b.source AS source_b,
         |  count(*) AS n_shared
@@ -5209,21 +4562,13 @@ object SparkEntry {
     // Served from the persisted graft_cards family (r16).
     ("q_preference_pairs",
       (s, d) => cardsTables(s, d)._2.orderBy("source", "pair_rank"),
-      Some(s"""WITH q AS (
-        |  SELECT doc_id, source,
-        |    ${TextAnalysis.Sql.stopHits} / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stopword_ratio,
-        |    len(list_distinct(string_split(text, ' '))) / CAST(len(string_split(text, ' ')) AS DOUBLE) AS unique_ratio,
-        |    len(regexp_extract_all(text, '[^a-z0-9 ]')) / CAST(length(text) AS DOUBLE) AS punct_ratio
-        |  FROM documents),
-        |sq AS (SELECT doc_id, source,
-        |  least(stopword_ratio * 5.0, 1.0) * 0.3 + unique_ratio * 0.5
-        |    + (1.0 - least(punct_ratio * 10.0, 1.0)) * 0.2 AS quality FROM q),
+      Some(s"""WITH $QualityScoreCte,
         |t AS (SELECT source, doc_id AS chosen_id, quality AS chosen_quality,
         |  CAST(row_number() OVER (PARTITION BY source
-        |    ORDER BY quality DESC, doc_id) AS BIGINT) AS pair_rank FROM sq),
+        |    ORDER BY quality DESC, doc_id) AS BIGINT) AS pair_rank FROM q),
         |b AS (SELECT source, doc_id AS rejected_id, quality AS rejected_quality,
         |  CAST(row_number() OVER (PARTITION BY source
-        |    ORDER BY quality ASC, doc_id) AS BIGINT) AS pair_rank FROM sq)
+        |    ORDER BY quality ASC, doc_id) AS BIGINT) AS pair_rank FROM q)
         |SELECT t.source, t.pair_rank, chosen_id, rejected_id,
         |  chosen_quality, rejected_quality,
         |  chosen_quality - rejected_quality AS quality_gap
@@ -5398,47 +4743,21 @@ object SparkEntry {
     // component's own mirror inside one query.
     ("q_dataset_card",
       (s, d) => Corpus.datasetCard(Tables.documents(s, d)),
-      Some(s"""WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |  FROM documents),
-        |v AS (SELECT token FROM (SELECT token, count(*) AS tf FROM t
-        |  GROUP BY token ORDER BY tf DESC, token LIMIT 20)),
-        |cov AS (SELECT doc_id, count(*) AS n_tokens,
-        |  count(CASE WHEN token NOT IN (SELECT token FROM v) THEN 1 END) AS n_oov
-        |  FROM t GROUP BY doc_id),
-        |q AS (SELECT doc_id,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks,
-        |  CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) AS unique_ratio,
-        |  CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE)
-        |    / length(text) AS punct_ratio,
-        |  (length(text) - len(string_split(text, ' ')) + 1)
-        |    / CAST(len(string_split(text, ' ')) AS DOUBLE) AS mean_token_len,
-        |  CASE WHEN len(string_split(text, ' ')) > 1 THEN
-        |    1.0 - CAST(len(list_distinct(list_transform(
-        |      generate_series(1, len(string_split(text, ' ')) - 1),
-        |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1])))
-        |      AS DOUBLE) / (len(string_split(text, ' ')) - 1)
-        |    ELSE 0.0 END AS dup_bigram_frac,
-        |  CAST(${TextAnalysis.Sql.stopHits} AS BIGINT) AS stop_hits
-        |  FROM documents),
+      Some(s"""WITH $VocabCoverageCtes,
         |flags AS (SELECT doc_id,
-        |  CASE WHEN n_toks >= 20 AND punct_ratio < 0.1 AND unique_ratio > 0.3
-        |    THEN 1 ELSE 0 END AS c4_keep,
-        |  CASE WHEN n_toks >= 50 AND n_toks <= 100000
-        |    AND mean_token_len >= 3.0 AND mean_token_len <= 10.0
-        |    AND dup_bigram_frac <= 0.2 AND stop_hits >= 2
-        |    THEN 1 ELSE 0 END AS gopher_keep
-        |  FROM q)
+        |  CASE WHEN $C4KeepSql THEN 1 ELSE 0 END AS c4_keep,
+        |  CASE WHEN $GopherKeepSql THEN 1 ELSE 0 END AS gopher_keep
+        |  FROM documents)
         |SELECT d.source, count(*) AS n_docs,
         |  count(DISTINCT ${TextAnalysis.Sql.fingerprint}) AS n_distinct,
         |  1.0 - CAST(count(DISTINCT ${TextAnalysis.Sql.fingerprint}) AS DOUBLE)
         |    / count(*) AS dup_rate,
-        |  CAST(sum(cov.n_tokens) AS BIGINT) AS total_tokens,
-        |  CAST(sum(cov.n_tokens) AS DOUBLE) / count(*) AS avg_doc_tokens,
+        |  CAST(sum(pd.n_tokens) AS BIGINT) AS total_tokens,
+        |  CAST(sum(pd.n_tokens) AS DOUBLE) / count(*) AS avg_doc_tokens,
         |  CAST(sum(flags.c4_keep) AS BIGINT) AS n_c4_keep,
         |  CAST(sum(flags.gopher_keep) AS BIGINT) AS n_gopher_keep,
-        |  CAST(sum(cov.n_oov) AS DOUBLE) / sum(cov.n_tokens) AS oov_rate
-        |FROM documents d JOIN cov USING (doc_id) JOIN flags USING (doc_id)
+        |  CAST(sum(pd.n_oov) AS DOUBLE) / sum(pd.n_tokens) AS oov_rate
+        |FROM documents d JOIN pd USING (doc_id) JOIN flags USING (doc_id)
         |GROUP BY d.source ORDER BY d.source""".stripMargin)),
 
     // dataset-card composition report per language
@@ -5551,32 +4870,19 @@ object SparkEntry {
         |  SELECT query_id, c.vec_id, c.label,
         |    ${Similarity.Sql.cosine("qv", "c.v")} AS cosine
         |  FROM c CROSS JOIN q WHERE c.vec_id <> query_id)
-        |SELECT query_id, vec_id, label, cosine, rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cosine DESC, vec_id) AS rank FROM scored)
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin)),
+        |${vecTopKSql("label, cosine", "cosine", 10)}""".stripMargin)),
 
     ("q_cosine_topk",
       (s, d) => Similarity.bruteForceTopK(Tables.embeddings(s, d))
         .withColumn("rank", col("rank").cast("long")),
-      Some(s"""WITH d AS (${Similarity.Sql.prepared}),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM d WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT query_id, vec_id, ${Similarity.Sql.cosine("qv", "v")} AS cosine
-        |  FROM d CROSS JOIN q WHERE vec_id <> query_id)
-        |SELECT query_id, vec_id, cosine, rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-        |  FROM scored)
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin)),
+      Some(s"""WITH $ExactTopKCtes
+        |${vecTopKSql("cosine", "cosine", 10)}""".stripMargin)),
 
     // Served from the persisted graft_exactpairs table (r16); the oracle
     // re-walks the exact all-pairs computation.
     ("q_cosine_pairs",
       (s, d) => exactPairsTable(s, d).orderBy("vec_id1", "vec_id2"),
-      Some(s"""WITH d AS (${Similarity.Sql.prepared}),
-        |p AS (SELECT a.vec_id AS vec_id1, b.vec_id AS vec_id2,
-        |  ${Similarity.Sql.cosine("a.v", "b.v")} AS cosine
-        |  FROM d a JOIN d b ON a.vec_id < b.vec_id)
+      Some(s"""WITH $CosinePairsCtes
         |SELECT * FROM p WHERE cosine >= 0.4 ORDER BY vec_id1, vec_id2""".stripMargin)),
 
     // Sign-LSH (random-hyperplane) bucket per vector — the LSH-bucketed
@@ -5601,8 +4907,7 @@ object SparkEntry {
     ("q_lsh_neardup_pairs",
       (s, d) => annServeTables(s, d).pairs.orderBy("vec_id1", "vec_id2"),
       Some(s"""WITH $lshPairsSqlCtes
-        |SELECT * FROM intra UNION ALL SELECT * FROM xg
-        |ORDER BY vec_id1, vec_id2""".stripMargin)),
+        |SELECT * FROM allp ORDER BY vec_id1, vec_id2""".stripMargin)),
 
     // THRESHOLD-SENSITIVITY card over the persisted verified pairs: the
     // pair count and the greedy drop count at each candidate dedup
@@ -5616,7 +4921,6 @@ object SparkEntry {
       (s, d) => Similarity.dedupThresholdSensitivity(
         annServeTables(s, d).pairs, Seq(0.4, 0.5, 0.6, 0.7, 0.8, 0.9)),
       Some(s"""WITH $lshPairsSqlCtes,
-        |allp AS (SELECT * FROM intra UNION ALL SELECT * FROM xg),
         |tx AS (SELECT allp.cosine, allp.vec_id2, t.threshold FROM allp
         |  CROSS JOIN (SELECT unnest([0.4, 0.5, 0.6, 0.7, 0.8, 0.9])
         |    AS threshold) t)
@@ -5640,47 +4944,12 @@ object SparkEntry {
     // oracle re-walks BOTH closed-form families end-to-end.
     ("q_plane_migration",
       (s, d) => planesTable(s, d).orderBy("family"),
-      Some(s"""WITH g AS (SELECT embedding, min(vec_id) AS rep
-        |  FROM embeddings GROUP BY embedding),
-        |d AS (SELECT * FROM (${Similarity.Sql.prepared}) dp
-        |  WHERE vec_id IN (SELECT rep FROM g)),
-        |bq AS (SELECT vec_id, ${Similarity.Sql.lshBucket("v")} AS bucket FROM d),
+      Some(s"""WITH $RepVecCtes,
+        |$VecBandCtes,
         |bl AS (SELECT vec_id, ${Similarity.Sql.lshBucketLinearV1("v")} AS bucket FROM d),
-        |cq AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, vec_id
-        |  FROM bq CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
         |cl AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, vec_id
         |  FROM bl CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
-        |pq AS (SELECT DISTINCT a.vec_id AS vec_id1, b.vec_id AS vec_id2
-        |  FROM cq a JOIN cq b ON a.band = b.band AND a.bb = b.bb
-        |    AND a.vec_id < b.vec_id),
-        |pl AS (SELECT DISTINCT a.vec_id AS vec_id1, b.vec_id AS vec_id2
-        |  FROM cl a JOIN cl b ON a.band = b.band AND a.bb = b.bb
-        |    AND a.vec_id < b.vec_id),
-        |cand AS (SELECT 'linear-v1' AS family, vec_id1, vec_id2 FROM pl
-        |  UNION ALL SELECT 'quadratic-v2', vec_id1, vec_id2 FROM pq),
-        |ver AS (SELECT family, ${Similarity.Sql.cosine("a.v", "b2.v")} AS cosine
-        |  FROM cand JOIN d a ON cand.vec_id1 = a.vec_id
-        |            JOIN d b2 ON cand.vec_id2 = b2.vec_id),
-        |fam AS (SELECT family, count(*) AS n_candidates,
-        |  count(CASE WHEN cosine >= 0.4 THEN 1 END) AS n_found
-        |  FROM ver GROUP BY family),
-        |bal AS (SELECT family, max(c) AS max_band_bucket FROM (
-        |    SELECT 'quadratic-v2' AS family, count(*) AS c FROM cq
-        |      GROUP BY band, bb
-        |    UNION ALL
-        |    SELECT 'linear-v1', count(*) FROM cl GROUP BY band, bb)
-        |  GROUP BY family),
-        |tr AS (SELECT count(CASE WHEN cosine >= 0.4 THEN 1 END) AS n_truth
-        |  FROM (SELECT ${Similarity.Sql.cosine("a.v", "b2.v")} AS cosine
-        |    FROM d a JOIN d b2 ON a.vec_id < b2.vec_id)),
-        |nr AS (SELECT count(*) AS n_reps FROM d)
-        |SELECT fam.family, n_candidates, n_found, n_truth,
-        |  CAST(n_found AS DOUBLE) / n_truth AS recall,
-        |  CAST(n_candidates AS DOUBLE) / (n_reps * (n_reps - 1) / 2)
-        |    AS candidate_rate,
-        |  max_band_bucket
-        |FROM fam JOIN bal ON fam.family = bal.family
-        |CROSS JOIN tr CROSS JOIN nr ORDER BY fam.family""".stripMargin)),
+        |${bandArmsCardSql(Seq("linear-v1" -> "cl", "quadratic-v2" -> "c"))}""".stripMargin)),
 
     // BANDING-GEOMETRY sensitivity card — the second production
     // MigrationCard instance (r16 verdict 5, exercised): the same
@@ -5696,46 +4965,11 @@ object SparkEntry {
     // the shared truth end-to-end.
     ("q_band_geometry",
       (s, d) => geometryTable(s, d).orderBy("family"),
-      Some(s"""WITH g AS (SELECT embedding, min(vec_id) AS rep
-        |  FROM embeddings GROUP BY embedding),
-        |d AS (SELECT * FROM (${Similarity.Sql.prepared}) dp
-        |  WHERE vec_id IN (SELECT rep FROM g)),
-        |bq AS (SELECT vec_id, ${Similarity.Sql.lshBucket("v")} AS bucket FROM d),
-        |c4 AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, vec_id
-        |  FROM bq CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
+      Some(s"""WITH $RepVecCtes,
+        |$VecBandCtes,
         |c8 AS (SELECT band, (bucket >> (band * 8)) & 255 AS bb, vec_id
-        |  FROM bq CROSS JOIN (SELECT unnest(range(0, 2)) AS band) u),
-        |p4 AS (SELECT DISTINCT a.vec_id AS vec_id1, b.vec_id AS vec_id2
-        |  FROM c4 a JOIN c4 b ON a.band = b.band AND a.bb = b.bb
-        |    AND a.vec_id < b.vec_id),
-        |p8 AS (SELECT DISTINCT a.vec_id AS vec_id1, b.vec_id AS vec_id2
-        |  FROM c8 a JOIN c8 b ON a.band = b.band AND a.bb = b.bb
-        |    AND a.vec_id < b.vec_id),
-        |cand AS (SELECT '4bit-4band' AS family, vec_id1, vec_id2 FROM p4
-        |  UNION ALL SELECT '8bit-2band', vec_id1, vec_id2 FROM p8),
-        |ver AS (SELECT family, ${Similarity.Sql.cosine("a.v", "b2.v")} AS cosine
-        |  FROM cand JOIN d a ON cand.vec_id1 = a.vec_id
-        |            JOIN d b2 ON cand.vec_id2 = b2.vec_id),
-        |fam AS (SELECT family, count(*) AS n_candidates,
-        |  count(CASE WHEN cosine >= 0.4 THEN 1 END) AS n_found
-        |  FROM ver GROUP BY family),
-        |bal AS (SELECT family, max(c) AS max_band_bucket FROM (
-        |    SELECT '4bit-4band' AS family, count(*) AS c FROM c4
-        |      GROUP BY band, bb
-        |    UNION ALL
-        |    SELECT '8bit-2band', count(*) FROM c8 GROUP BY band, bb)
-        |  GROUP BY family),
-        |tr AS (SELECT count(CASE WHEN cosine >= 0.4 THEN 1 END) AS n_truth
-        |  FROM (SELECT ${Similarity.Sql.cosine("a.v", "b2.v")} AS cosine
-        |    FROM d a JOIN d b2 ON a.vec_id < b2.vec_id)),
-        |nr AS (SELECT count(*) AS n_reps FROM d)
-        |SELECT fam.family, n_candidates, n_found, n_truth,
-        |  CAST(n_found AS DOUBLE) / n_truth AS recall,
-        |  CAST(n_candidates AS DOUBLE) / (n_reps * (n_reps - 1) / 2)
-        |    AS candidate_rate,
-        |  max_band_bucket
-        |FROM fam JOIN bal ON fam.family = bal.family
-        |CROSS JOIN tr CROSS JOIN nr ORDER BY fam.family""".stripMargin)),
+        |  FROM b CROSS JOIN (SELECT unnest(range(0, 2)) AS band) u),
+        |${bandArmsCardSql(Seq("4bit-4band" -> "c", "8bit-2band" -> "c8"))}""".stripMargin)),
 
     // SEMANTIC duplicate clusters (SemDeDup's grouping step — the
     // embedding-side twin of q_dup_clusters): exact min-label connected
@@ -5746,17 +4980,8 @@ object SparkEntry {
     // components over exact pairs.
     ("q_semantic_clusters",
       (s, d) => annServeTables(s, d).clusters.orderBy("vec_id"),
-      Some(s"""WITH RECURSIVE $lshPairsSqlCtes,
-        |allp AS (SELECT vec_id1, vec_id2 FROM intra
-        |  UNION ALL SELECT vec_id1, vec_id2 FROM xg),
-        |edges AS (SELECT vec_id1 AS src, vec_id2 AS dst FROM allp
-        |  UNION SELECT vec_id2, vec_id1 FROM allp),
-        |reach(vec_id, lbl) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.vec_id)
-        |SELECT vec_id, min(lbl) AS cluster_id FROM reach GROUP BY vec_id
-        |ORDER BY vec_id""".stripMargin)),
+      Some(s"""WITH RECURSIVE $LshComponentCtes
+        |SELECT vec_id, cluster_id FROM cl ORDER BY vec_id""".stripMargin)),
 
     // SEMANTIC keep-one (SemDeDup's pruning step): cluster_id IS the
     // component's min vec_id, so the deterministic keep-the-
@@ -5769,16 +4994,7 @@ object SparkEntry {
           .filter(col("vec_id") =!= col("cluster_id"))
           .select(col("vec_id").as("doc_id")), Seq("doc_id"), "left_anti")
         .select("doc_id", "lang", "source").orderBy("doc_id"),
-      Some(s"""WITH RECURSIVE $lshPairsSqlCtes,
-        |allp AS (SELECT vec_id1, vec_id2 FROM intra
-        |  UNION ALL SELECT vec_id1, vec_id2 FROM xg),
-        |edges AS (SELECT vec_id1 AS src, vec_id2 AS dst FROM allp
-        |  UNION SELECT vec_id2, vec_id1 FROM allp),
-        |reach(vec_id, lbl) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.vec_id),
-        |cl AS (SELECT vec_id, min(lbl) AS cluster_id FROM reach GROUP BY vec_id)
+      Some(s"""WITH RECURSIVE $LshComponentCtes
         |SELECT doc_id, lang, source FROM documents
         |WHERE doc_id NOT IN (SELECT vec_id FROM cl WHERE vec_id <> cluster_id)
         |ORDER BY doc_id""".stripMargin)),
@@ -5796,8 +5012,7 @@ object SparkEntry {
     ("q_ivf_recall_bound",
       (s, d) => Similarity.ivfRecallBound(
         ivfTables(s, d)._3, annServeTables(s, d).pairs, 0.95),
-      Some(s"""WITH $lshPairsSqlCtes,
-        |allp AS (SELECT * FROM intra UNION ALL SELECT * FROM xg)
+      Some(s"""WITH $lshPairsSqlCtes
         |SELECT count(*) AS n_exact_pairs,
         |  CAST(0.95 AS DOUBLE) AS recall_bound,
         |  CAST(1 AS INT) AS within_bound
@@ -5813,22 +5028,12 @@ object SparkEntry {
       (s, d) => Similarity.lshTopKServeFrom(Tables.embeddings(s, d),
           annServeTables(s, d).bands)
         .withColumn("rank", col("rank").cast("long")),
-      Some(s"""WITH d AS (${Similarity.Sql.prepared}),
-        |b AS (SELECT vec_id, ${Similarity.Sql.lshBucket("v")} AS bucket FROM d),
-        |c AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, vec_id
-        |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
-        |q AS (SELECT vec_id AS query_id, band, bb FROM c WHERE vec_id < 5),
-        |p0 AS (SELECT DISTINCT q.query_id, c2.vec_id
-        |  FROM c c2 JOIN q ON c2.band = q.band AND c2.bb = q.bb
-        |  WHERE c2.vec_id <> q.query_id),
+      Some(s"""WITH ${vecBandProbeCtes("vec_id < 5")},
         |scored AS (SELECT p0.query_id, p0.vec_id,
         |  ${Similarity.Sql.cosine("qd.v", "cd.v")} AS cosine
         |  FROM p0 JOIN d qd ON p0.query_id = qd.vec_id
         |          JOIN d cd ON p0.vec_id = cd.vec_id)
-        |SELECT query_id, vec_id, cosine, rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cosine DESC, vec_id) AS rank FROM scored)
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin)),
+        |${vecTopKSql("cosine", "cosine", 10)}""".stripMargin)),
 
     // BITEXT MINING (LASER/CCMatrix): margin-based MUTUAL top-1
     // alignment of every non-English document to an English one in
@@ -5885,23 +5090,13 @@ object SparkEntry {
       (s, d) => Similarity.hardNegativesServeFrom(Tables.embeddings(s, d),
           annServeTables(s, d).bands)
         .withColumn("rank", col("rank").cast("long")),
-      Some(s"""WITH d AS (${Similarity.Sql.prepared}),
-        |b AS (SELECT vec_id, ${Similarity.Sql.lshBucket("v")} AS bucket FROM d),
-        |c AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, vec_id
-        |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
-        |q AS (SELECT vec_id AS query_id, band, bb FROM c WHERE vec_id < 5),
-        |p0 AS (SELECT DISTINCT q.query_id, c2.vec_id
-        |  FROM c c2 JOIN q ON c2.band = q.band AND c2.bb = q.bb
-        |  WHERE c2.vec_id <> q.query_id),
+      Some(s"""WITH ${vecBandProbeCtes("vec_id < 5")},
         |scored AS (SELECT p0.query_id, p0.vec_id,
         |  ${Similarity.Sql.cosine("qd.v", "cd.v")} AS cosine
         |  FROM p0 JOIN d qd ON p0.query_id = qd.vec_id
         |          JOIN d cd ON p0.vec_id = cd.vec_id
         |  WHERE ${Similarity.Sql.cosine("qd.v", "cd.v")} < 0.4)
-        |SELECT query_id, vec_id, cosine, rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cosine DESC, vec_id) AS rank FROM scored)
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
+        |${vecTopKSql("cosine", "cosine", 5)}""".stripMargin)),
 
     // CONTRASTIVE TRAINING TRIPLES — the finished (anchor, positive,
     // hard-negative) artifact an embedding model trains on: every
@@ -5917,7 +5112,6 @@ object SparkEntry {
       (s, d) => annServeTables(s, d).triples
         .orderBy("anchor_id", "positive_id", "neg_rank"),
       Some(s"""WITH $lshPairsSqlCtes,
-        |allp AS (SELECT * FROM intra UNION ALL SELECT * FROM xg),
         |anch AS (SELECT vec_id1 AS anchor_id, vec_id2 AS positive_id,
         |    cosine AS pos_cosine FROM allp
         |  UNION ALL SELECT vec_id2, vec_id1, cosine FROM allp),
@@ -5956,10 +5150,7 @@ object SparkEntry {
         .join(exactPairsTable(s, d).select(col("vec_id2").as("vec_id"))
           .distinct(), Seq("vec_id"), "left_anti")
         .select("vec_id", "label").orderBy("vec_id"),
-      Some(s"""WITH d AS (${Similarity.Sql.prepared}),
-        |p AS (SELECT a.vec_id AS vec_id1, b.vec_id AS vec_id2,
-        |  ${Similarity.Sql.cosine("a.v", "b.v")} AS cosine
-        |  FROM d a JOIN d b ON a.vec_id < b.vec_id),
+      Some(s"""WITH $CosinePairsCtes,
         |dropset AS (SELECT DISTINCT vec_id2 FROM p WHERE cosine >= 0.4)
         |SELECT vec_id, label FROM embeddings
         |WHERE vec_id NOT IN (SELECT vec_id2 FROM dropset)
@@ -5990,10 +5181,7 @@ object SparkEntry {
         |scored AS (SELECT query_id, vec_id,
         |  ${Similarity.Sql.intDot("qcodes", "codes")} AS qdot
         |  FROM qz CROSS JOIN p WHERE vec_id <> query_id)
-        |SELECT query_id, vec_id, qdot, rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY qdot DESC, vec_id) AS rank
-        |  FROM scored)
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin)),
+        |${vecTopKSql("qdot", "qdot", 10)}""".stripMargin)),
 
     // Quantized SERVING composition (round-9 verdict next-round 4): int8
     // codes ranked inside sign-LSH band candidates — 4x memory AND
@@ -6007,23 +5195,7 @@ object SparkEntry {
         Similarity.quantizedTopKServeFrom(snap.codes, snap.bands)
           .withColumn("rank", col("rank").cast("long"))
       },
-      Some(s"""WITH d AS (${Similarity.Sql.prepared}),
-        |b AS (SELECT vec_id, ${Similarity.Sql.lshBucket("v")} AS bucket FROM d),
-        |c AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, vec_id
-        |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
-        |q AS (SELECT vec_id AS query_id, band, bb FROM c WHERE vec_id < 5),
-        |p0 AS (SELECT DISTINCT q.query_id, c2.vec_id
-        |  FROM c c2 JOIN q ON c2.band = q.band AND c2.bb = q.bb
-        |  WHERE c2.vec_id <> q.query_id),
-        |qz AS (${Similarity.Sql.quantized}),
-        |scored AS (SELECT p0.query_id, p0.vec_id,
-        |  ${Similarity.Sql.intDot("qd.codes", "cd.codes")} AS qdot
-        |  FROM p0 JOIN qz qd ON p0.query_id = qd.vec_id
-        |          JOIN qz cd ON p0.vec_id = cd.vec_id)
-        |SELECT query_id, vec_id, qdot, rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY qdot DESC, vec_id) AS rank
-        |  FROM scored)
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin)),
+      Some(quantizedProbeTopKSql("vec_id < 5"))),
 
     // The ANN QUERY-SERVING endpoint: an arbitrary (query_id, embedding)
     // frame — here corpus ids 5..9 standing in for external requests —
@@ -6041,24 +5213,7 @@ object SparkEntry {
         Similarity.quantizedTopKForQueries(qs, snap)
           .withColumn("rank", col("rank").cast("long"))
       },
-      Some(s"""WITH d AS (${Similarity.Sql.prepared}),
-        |b AS (SELECT vec_id, ${Similarity.Sql.lshBucket("v")} AS bucket FROM d),
-        |c AS (SELECT band, (bucket >> (band * 4)) & 15 AS bb, vec_id
-        |  FROM b CROSS JOIN (SELECT unnest(range(0, 4)) AS band) u),
-        |q AS (SELECT vec_id AS query_id, band, bb FROM c
-        |  WHERE vec_id >= 5 AND vec_id < 10),
-        |p0 AS (SELECT DISTINCT q.query_id, c2.vec_id
-        |  FROM c c2 JOIN q ON c2.band = q.band AND c2.bb = q.bb
-        |  WHERE c2.vec_id <> q.query_id),
-        |qz AS (${Similarity.Sql.quantized}),
-        |scored AS (SELECT p0.query_id, p0.vec_id,
-        |  ${Similarity.Sql.intDot("qd.codes", "cd.codes")} AS qdot
-        |  FROM p0 JOIN qz qd ON p0.query_id = qd.vec_id
-        |          JOIN qz cd ON p0.vec_id = cd.vec_id)
-        |SELECT query_id, vec_id, qdot, rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY qdot DESC, vec_id) AS rank
-        |  FROM scored)
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin)),
+      Some(quantizedProbeTopKSql("vec_id >= 5 AND vec_id < 10"))),
 
     // IVF probing is approximate — recall vs brute force asserted in
     // ScalaTest. Served from the PERSISTED ivf-v6 default answer (one
@@ -6129,18 +5284,7 @@ object SparkEntry {
         Similarity.topKRecallBound(topk,
           Similarity.bruteForceTopK(Tables.embeddings(s, d)), 0.7)
       },
-      Some(s"""WITH d AS (${Similarity.Sql.prepared}),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM d WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT query_id, vec_id, ${Similarity.Sql.cosine("qv", "v")} AS cosine
-        |  FROM d CROSS JOIN q WHERE vec_id <> query_id),
-        |ex AS (SELECT query_id FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-        |  FROM scored) WHERE rank <= 10)
-        |SELECT query_id, count(*) AS n_exact,
-        |  CAST(0.7 AS DOUBLE) AS recall_bound,
-        |  CAST(1 AS INT) AS within_bound
-        |FROM ex GROUP BY query_id ORDER BY query_id""".stripMargin)),
+      Some(topKRecallBoundSql("0.7"))),
 
     // IVF-PQ top-k — FAISS's IVFPQ composed from the TWO persisted
     // indexes: IVF cells prune the corpus, the PQ LUT ranks cell members
@@ -6161,18 +5305,7 @@ object SparkEntry {
         // bounds the served table itself (see q_pq_recall_bound)
         Similarity.topKRecallBound(ivfPqTopK(s, d),
           Similarity.bruteForceTopK(Tables.embeddings(s, d)), 0.7),
-      Some(s"""WITH d AS (${Similarity.Sql.prepared}),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM d WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT query_id, vec_id, ${Similarity.Sql.cosine("qv", "v")} AS cosine
-        |  FROM d CROSS JOIN q WHERE vec_id <> query_id),
-        |ex AS (SELECT query_id FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-        |  FROM scored) WHERE rank <= 10)
-        |SELECT query_id, count(*) AS n_exact,
-        |  CAST(0.7 AS DOUBLE) AS recall_bound,
-        |  CAST(1 AS INT) AS within_bound
-        |FROM ex GROUP BY query_id ORDER BY query_id""".stripMargin)),
+      Some(topKRecallBoundSql("0.7"))),
 
     // RECALL-CONTRACT witness for the top-k family (the q_ivf_recall_bound
     // precedent): per query, the overlap of the IVF answer with the
@@ -6186,18 +5319,7 @@ object SparkEntry {
         // topk table (see q_pq_recall_bound)
         Similarity.topKRecallBound(ivfTables(s, d)._4,
           Similarity.bruteForceTopK(Tables.embeddings(s, d)), 0.8),
-      Some(s"""WITH d AS (${Similarity.Sql.prepared}),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM d WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT query_id, vec_id, ${Similarity.Sql.cosine("qv", "v")} AS cosine
-        |  FROM d CROSS JOIN q WHERE vec_id <> query_id),
-        |ex AS (SELECT query_id FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-        |  FROM scored) WHERE rank <= 10)
-        |SELECT query_id, count(*) AS n_exact,
-        |  CAST(0.8 AS DOUBLE) AS recall_bound,
-        |  CAST(1 AS INT) AS within_bound
-        |FROM ex GROUP BY query_id ORDER BY query_id""".stripMargin)),
+      Some(topKRecallBoundSql("0.8"))),
 
     // IVF-cell near-dup pairs: the scale path behind q_cosine_pairs /
     // q_semantic_dedup. Cell-geometry recall has no closed-form bound, so
@@ -6297,14 +5419,7 @@ object SparkEntry {
             Multimodal.embedStub(Multimodal.mediaFromDocuments(docs)))
           .orderBy("media_id")
       },
-      Some(s"""WITH fp AS (SELECT doc_id AS media_id,
-        |  ${TextAnalysis.Sql.fingerprint} AS f FROM documents),
-        |tv AS (SELECT media_id, list_transform(range(0, 16), d ->
-        |  CAST((f * (2*d + 3) + d * 65599) % 2000001 AS DOUBLE)
-        |    / 1000000.0 - 1.0) AS t FROM fp),
-        |mv AS (SELECT media_id, list_transform(range(0, 16), d ->
-        |  CAST((f * (2*d + 1) + d * 40503) % 2000001 AS DOUBLE)
-        |    / 1000000.0 - 1.0) AS m FROM fp),
+      Some(s"""WITH $MediaTowerCtes,
         |sc AS (SELECT media_id, ${Similarity.Sql.cosine("t", "m")} AS clip_score
         |  FROM tv JOIN mv USING (media_id)
         |  WHERE ${Similarity.Sql.dot("t", "t")} > 0
@@ -6342,14 +5457,7 @@ object SparkEntry {
     // Multimodal.crossModalRecall stays the any-parameter path.
     ("q_crossmodal_recall",
       (s, d) => crossModalTables(s, d)._2,
-      Some(s"""WITH fp AS (SELECT doc_id AS media_id,
-        |  ${TextAnalysis.Sql.fingerprint} AS f FROM documents),
-        |tv AS (SELECT media_id, list_transform(range(0, 16), d ->
-        |  CAST((f * (2*d + 3) + d * 65599) % 2000001 AS DOUBLE)
-        |    / 1000000.0 - 1.0) AS t FROM fp),
-        |mv AS (SELECT media_id, list_transform(range(0, 16), d ->
-        |  CAST((f * (2*d + 1) + d * 40503) % 2000001 AS DOUBLE)
-        |    / 1000000.0 - 1.0) AS m FROM fp),
+      Some(s"""WITH $MediaTowerCtes,
         |q AS (SELECT media_id AS query_id, t AS qv FROM tv
         |  WHERE ${Similarity.Sql.dot("t", "t")} > 0
         |  ORDER BY ((media_id % 1000003) * 2654435761 + (media_id % 101))
@@ -6384,20 +5492,7 @@ object SparkEntry {
     // text, hash-proving the persisted table equals direct computation.
     ("q_media_phash",
       (s, d) => mediaPhashTables(s, d).phash.orderBy("media_id"),
-      Some("""WITH codes AS (SELECT doc_id AS media_id,
-        |  ['image','audio','video'][CAST(doc_id % 3 AS INT) + 1] AS kind,
-        |  list_transform(string_split(text, ''), c -> CAST(ord(c) AS BIGINT)) AS cs
-        |  FROM documents),
-        |hh AS (SELECT media_id, kind, len(cs) AS n, cs FROM codes),
-        |sm AS (SELECT media_id, kind, list_transform(generate_series(0, 48),
-        |  j -> cs[CAST(least(j * 2, n - 1) AS INT) + 1]) AS smp FROM hh WHERE n > 0),
-        |h AS (SELECT media_id, kind,
-        |  CAST(list_sum(list_transform(generate_series(0, 47),
-        |    i -> CASE WHEN smp[CAST(i AS INT) + 1] > smp[CAST(i AS INT) + 2]
-        |         THEN (CAST(1 AS BIGINT) << CAST(i AS INT))
-        |         ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS phash
-        |  FROM sm
-        |  UNION ALL SELECT media_id, kind, CAST(0 AS BIGINT) FROM hh WHERE n = 0)
+      Some(s"""WITH ${phashCtes("documents")}
         |SELECT media_id, kind, phash FROM h ORDER BY media_id""".stripMargin)),
 
     // media near-dup via Hamming-banded perceptual hashes, served from
@@ -6422,19 +5517,7 @@ object SparkEntry {
           .withColumnRenamed("media_id", "query_id")
         Multimodal.phashLookup(mediaPhashTables(s, d).phash, probes)
       },
-      Some("""WITH codes AS (SELECT doc_id AS media_id,
-        |  list_transform(string_split(text, ''), c -> CAST(ord(c) AS BIGINT)) AS cs
-        |  FROM documents),
-        |hh AS (SELECT media_id, len(cs) AS n, cs FROM codes),
-        |sm AS (SELECT media_id, list_transform(generate_series(0, 48),
-        |  j -> cs[CAST(least(j * 2, n - 1) AS INT) + 1]) AS smp FROM hh WHERE n > 0),
-        |h AS (SELECT media_id,
-        |  CAST(list_sum(list_transform(generate_series(0, 47),
-        |    i -> CASE WHEN smp[CAST(i AS INT) + 1] > smp[CAST(i AS INT) + 2]
-        |         THEN (CAST(1 AS BIGINT) << CAST(i AS INT))
-        |         ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS phash
-        |  FROM sm
-        |  UNION ALL SELECT media_id, CAST(0 AS BIGINT) FROM hh WHERE n = 0)
+      Some(s"""WITH ${phashCtes("documents")}
         |SELECT q.media_id AS query_id, c.media_id AS media_id,
         |  CAST(bit_count(xor(q.phash, c.phash)) AS BIGINT) AS hamming
         |FROM h q JOIN h c ON q.media_id < 30 AND c.media_id <> q.media_id
@@ -6452,19 +5535,7 @@ object SparkEntry {
         val t = mediaPhashTables(s, d)
         Multimodal.phashRecallBound(t.nearDupPairs, t.phash)
       },
-      Some("""WITH codes AS (SELECT doc_id AS media_id,
-        |  list_transform(string_split(text, ''), c -> CAST(ord(c) AS BIGINT)) AS cs
-        |  FROM documents WHERE doc_id < 1000),
-        |hh AS (SELECT media_id, len(cs) AS n, cs FROM codes),
-        |sm AS (SELECT media_id, list_transform(generate_series(0, 48),
-        |  j -> cs[CAST(least(j * 2, n - 1) AS INT) + 1]) AS smp FROM hh WHERE n > 0),
-        |h AS (SELECT media_id,
-        |  CAST(list_sum(list_transform(generate_series(0, 47),
-        |    i -> CASE WHEN smp[CAST(i AS INT) + 1] > smp[CAST(i AS INT) + 2]
-        |         THEN (CAST(1 AS BIGINT) << CAST(i AS INT))
-        |         ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS phash
-        |  FROM sm
-        |  UNION ALL SELECT media_id, CAST(0 AS BIGINT) FROM hh WHERE n = 0),
+      Some(s"""WITH ${phashCtes("documents WHERE doc_id < 1000")},
         |e AS (SELECT a.media_id AS id1, b.media_id AS id2
         |  FROM h a JOIN h b ON a.media_id < b.media_id
         |  WHERE bit_count(xor(a.phash, b.phash)) <= 5)

@@ -1619,11 +1619,13 @@ object Dedup {
 
   /** DuckDB oracle fragments. */
   object Sql {
-    /** Shingle-set CTE body over `documents` (mirrors [[shingles]], n=3). */
-    val shingleSets: String =
-      """SELECT doc_id, list_distinct(
+    /** Shingle-set CTE body (doc_id, sh) over table `src` (doc_id, text)
+      * (mirrors [[shingles]], n=3).
+      */
+    def shingleSets(src: String): String =
+      s"""SELECT doc_id, list_distinct(
         |  list_transform(generate_series(1, len(t) - 2),
         |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-        |FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)""".stripMargin
+        |FROM (SELECT doc_id, string_split(text, ' ') AS t FROM $src)""".stripMargin
   }
 }

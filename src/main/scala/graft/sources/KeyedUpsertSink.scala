@@ -80,18 +80,15 @@ object KeyedUpsertSink {
   private def writeKeysManifest(spark: SparkSession, store: String, keyCols: Seq[String]): Unit = {
     val p = new Path(s"$store/_keys")
     val fs = fsOf(spark, p)
-    if (!fs.exists(p)) {
+    val created = !fs.exists(p) && {
       val tmp = new Path(s"$store/.keys-tmp-${UUID.randomUUID}")
       val out = fs.create(tmp, true)
       out.write(encodeKeys(keyCols).getBytes(UTF_8))
       out.close()
-      if (!fs.rename(tmp, p)) { // lost a creation race: verify, don't clobber
-        fs.delete(tmp, false)
-        val existing = readKeysManifest(spark, store)
-        require(existing == keyCols,
-          s"store $store is keyed by ${existing.mkString(",")}, not ${keyCols.mkString(",")}")
-      }
-    } else {
+      // lost a creation race: verify the winner's manifest, don't clobber it
+      fs.rename(tmp, p) || { fs.delete(tmp, false); false }
+    }
+    if (!created) {
       val existing = readKeysManifest(spark, store)
       require(existing == keyCols,
         s"store $store is keyed by ${existing.mkString(",")}, not ${keyCols.mkString(",")}")
