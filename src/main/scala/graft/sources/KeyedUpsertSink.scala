@@ -9,7 +9,9 @@ import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -127,11 +129,33 @@ object KeyedUpsertSink {
       new Footer(st.getPath, ParquetFileReader.readFooter(HadoopInputFile.fromStatus(st, conf), NO_FILTER)))
   }
 
+  /** `batch` deduplicated on `keyCols`. A batch of exactly one partition is
+    * deduplicated in place: `coalesce(1)` gives the plan `SinglePartition`,
+    * so the dedup plans no exchange and the write is one job, which for a
+    * `foreachBatch` batch runs the micro-batch's own last stage. The count
+    * is read from the batch's RDD, `queryExecution.toRdd`, without running
+    * it: a `foreachBatch` batch is an RDD scan over the micro-batch's RDD.
+    * A plan whose RDD may run jobs to build (adaptive, or holding an
+    * exchange, which can broadcast or sample, or a subquery) keeps the
+    * shuffle, as does any batch of more than one partition.
+    */
+  private[graft] def dedup(batch: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val qe = batch.queryExecution
+    val runsToBuild = qe.executedPlan.exists(p =>
+      p.isInstanceOf[AdaptiveSparkPlanExec] || p.isInstanceOf[Exchange] || p.subqueries.nonEmpty)
+    if (!runsToBuild && qe.toRdd.getNumPartitions == 1) batch.coalesce(1).dropDuplicates(keyCols)
+    else batch.dropDuplicates(keyCols)
+  }
+
   /** Append `batch` as `writerId`'s segment for `epochId` (last-writer-wins
     * on `keyCols`; rows within one batch are deduped on the key first).
     * Cost is O(batch) regardless of store size. Re-delivery of an epoch
     * this writer already committed (checkpoint replay) is skipped; other
     * writers' counters can never fence it.
+    *
+    * A batch of exactly one partition is deduped in place, with no
+    * exchange, so its commit is one Spark job; a batch of more partitions
+    * is deduped through a shuffle on the key ([[dedup]] has the rule).
     *
     * A write that produced no rows — the no-data micro-batch an update-mode
     * aggregation runs to advance its watermark — commits nothing once the
@@ -154,7 +178,7 @@ object KeyedUpsertSink {
     val seq = log.claim()
     val name = s"${seq}__${writer}__$epochId"
     val tmp = log.tmpPath(name)
-    batch.dropDuplicates(keyCols)
+    dedup(batch, keyCols)
       .withColumn(SeqCol, lit(seq))
       .withColumn(SrcCol, lit(name))
       .write.mode("overwrite").parquet(tmp.toString)

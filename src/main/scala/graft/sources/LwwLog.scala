@@ -22,12 +22,14 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *    sequence, the LWW order: one above the highest claim or committed
   *    sequence, taken by creating `_seq/<seq>` exclusively. A writer that
   *    loses the race re-reads and retries above the winner, so two commits
-  *    never share a sequence. Claims in one JVM also serialize on
-  *    `claimLock`, because Hadoop's local `create(overwrite = false)` is
-  *    check-then-create; across processes the filesystem's atomic create
-  *    (HDFS) is the guarantee, and an object store needs a conditional put
-  *    (Delta's LogStore caveat). A crashed writer burns its claim:
-  *    sequences are monotonic, not dense.
+  *    never share a sequence. Claims on one store in one JVM also
+  *    serialize on that store's lock ([[LwwLog.claimLock]]), because
+  *    Hadoop's local `create(overwrite = false)` is check-then-create;
+  *    claims on different stores do not wait on each other. Across
+  *    processes the filesystem's atomic create (HDFS) is the guarantee,
+  *    and an object store needs a conditional put (Delta's LogStore
+  *    caveat). A crashed writer burns its claim: sequences are monotonic,
+  *    not dense.
   *  - '''Marker-last commit''' ([[commit]]). The front-end stages its data
   *    at [[tmpPath]]; the commit deletes any uncommitted leftover at the
   *    final name, renames (a failed rename fails the commit — never a
@@ -105,7 +107,7 @@ private[graft] final class LwwLog(val fs: FileSystem, val store: String, dataDir
   def txnEpoch(key: String): Option[Long] =
     names(txnDir).flatMap(keyEpoch).collect { case (`key`, e) => e }.maxOption
 
-  def claim(): Long = claimLock.synchronized {
+  def claim(): Long = claimLock(fs.makeQualified(seqDir)).synchronized {
     Iterator.fill(MaxRaces) {
       val next = (names(seqDir).flatMap(_.toLongOption) ++ markers().flatMap(seqOf))
         .foldLeft(-1L)(_ max _) + 1
@@ -155,7 +157,15 @@ private[graft] object LwwLog {
 
   private val Compact = "compact-"
   private val MaxRaces = 1000
-  private val claimLock = new Object
+  private val claimLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]
+
+  /** The claim lock of the store whose qualified `_seq` directory is
+    * `seqDir`, shared by every [[LwwLog]] over that store (front-ends build
+    * a log per call, so the lock cannot live on the instance). One entry
+    * per store path claimed in this JVM.
+    */
+  private def claimLock(seqDir: Path): Object =
+    claimLocks.computeIfAbsent(seqDir.toString, _ => new Object)
 
   /** A marker's `<seq>__` prefix, and the rest: its tag. Legacy markers
     * without the prefix are all tag.

@@ -28,6 +28,44 @@ import graft.sources.{KeyedForeachWriter, KeyedUpsertSink}
   * stamped on arrival — late data cannot exist, SURVEY.md T1). The rebuild
   * defaults to true event-time watermarks on `ts`; `processingTimeMode`
   * reproduces the reference's behavior for fidelity.
+  *
+  * State partitions: a member whose state is keyed by the event domain —
+  * the windowed aggregations (window × city × type, evicted by the
+  * watermark) and the monitoring counts (city × type × severity) — holds
+  * a few hundred state rows at most, so it starts with
+  * `spark.sql.shuffle.partitions=1`, set on the session for the duration
+  * of its own `start()` only. Its state then commits once per micro-batch
+  * instead of once per partition, its map-side partial aggregation still
+  * runs at the source's parallelism, and its micro-batch reaches the sink
+  * as one partition, which [[KeyedUpsertSink.upsert]] dedups in place.
+  * This pays where a micro-batch is small and its cost is fixed per-task
+  * and per-commit overhead, as in the serving benchmark's 300-event
+  * writer batches. The row count is bounded, but not the work: the
+  * collect_list aggregation's state bytes and final merge grow with the
+  * events per group per window, and all of it now runs in one task
+  * against one store. Under high ingest that task is the member's
+  * bottleneck; that regime is unmeasured (ROADMAP D2 step 4), and
+  * [[startWindowedAggCounts]] is the member whose state stays bounded.
+  * The query keeps the value it started with. A restarted checkpoint
+  * keeps the partition count recorded in its offset log, so a checkpoint
+  * first started at 4 restarts at 4. Members whose state is keyed by
+  * traffic (sessions, dedup, joins) run at the session's value.
+  *
+  * Every member starts under one JVM-wide lock, so two pipelines starting
+  * members on one session never see or restore each other's temporary
+  * value. The lock does not cover code outside this class: a batch query
+  * planned, or a conf set, on another thread of the session while a
+  * one-partition member starts sees or clobbers the temporary value. As
+  * with `stateStoreProvider`, this assumes one topology per session,
+  * started from one thread.
+  *
+  * Progress record: with the session conf `graft.telemetry.dir` set, the
+  * pipeline's members are tracked by one [[ProgressLog]] listener, which
+  * appends one JSON line per progress report of each member it starts,
+  * no-data batches included, to `progress.jsonl` there. The listener is
+  * registered on the session while at least one tracked member runs and
+  * removes itself when the last one terminates. Unset, nothing is
+  * registered.
   */
 class Pipeline(
     spark: SparkSession,
@@ -61,6 +99,11 @@ class Pipeline(
   // outputs + footprints).
   stateStoreConf.foreach { case (k, v) => spark.conf.set(k, v) }
 
+  // The per-member, per-batch progress record (ProgressLog): one listener
+  // for this pipeline's members when `graft.telemetry.dir` is set.
+  private val progressLog: Option[ProgressLog] =
+    spark.conf.getOption(ProgressLog.DirKey).map(new ProgressLog(_, spark.streams))
+
   def rawStorePath: String      = s"$storeRoot/raw_events"
   def rawDedupStorePath: String = s"$storeRoot/raw_events_dedup"
   def aggStorePath: String       = s"$storeRoot/aggregations"
@@ -90,28 +133,48 @@ class Pipeline(
       KeyedUpsertSink.compact(df.sparkSession, path)
   }
 
+  /** Starts member `name` under [[Pipeline.startLock]]: `start` is handed
+    * its checkpoint dir, `checkpointRoot/name`, and the query it returns
+    * is tracked by the progress record. With `oneStatePartition` the
+    * member starts under `spark.sql.shuffle.partitions=1` (see the class
+    * doc); the session's value is restored once `start` returns.
+    */
+  private def member(name: String, oneStatePartition: Boolean = false)
+                    (start: String => StreamingQuery): StreamingQuery = {
+    val key = "spark.sql.shuffle.partitions"
+    val q = Pipeline.startLock.synchronized {
+      val held = spark.conf.getOption(key)
+      if (oneStatePartition) spark.conf.set(key, "1")
+      try start(s"$checkpointRoot/$name")
+      finally if (oneStatePartition) held.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    progressLog.foreach(_.track(q, name))
+    q
+  }
+
   /** A keyed-store member: `df` in `mode`, checkpointed at
     * `checkpointRoot/name`, each micro-batch upserted into `path` by `keys`.
     */
   private def upsertMember(df: DataFrame, mode: String, name: String,
-                           path: String, keys: Seq[String]): StreamingQuery =
-    df.writeStream
+                           path: String, keys: Seq[String],
+                           oneStatePartition: Boolean = false): StreamingQuery =
+    member(name, oneStatePartition)(checkpoint => df.writeStream
       .outputMode(mode)
-      .option("checkpointLocation", s"$checkpointRoot/$name")
+      .option("checkpointLocation", checkpoint)
       .foreachBatch(upsertBatch(path, keys) _)
-      .start()
+      .start())
 
   /** An append-mode member landing in the in-memory table `queryName`,
     * checkpointed at `checkpointRoot/name`.
     */
   private def memoryMember[T](ds: Dataset[T], queryName: String,
                               name: String): StreamingQuery =
-    ds.writeStream
+    member(name)(checkpoint => ds.writeStream
       .outputMode("append")
       .format("memory")
       .queryName(queryName)
-      .option("checkpointLocation", s"$checkpointRoot/$name")
-      .start()
+      .option("checkpointLocation", checkpoint)
+      .start())
 
   /** Query 1: raw events, append mode, keyed upsert (reference :100-115).
     * Carries an `observe()` metrics contract — the streaming analog of the
@@ -157,7 +220,7 @@ class Pipeline(
   def startWindowedAgg(events: DataFrame): StreamingQuery =
     upsertMember(StreamAggregates.windowedAggregate(
         normalized(events).withWatermark("ts", watermarkDelay)),
-      "update", "aggregations", aggStorePath, Seq("partition_key"))
+      "update", "aggregations", aggStorePath, Seq("partition_key"), oneStatePartition = true)
 
   /** Query 2 at scale: the same watermarked windowed aggregation with the
     * per-severity COUNT MAP ([[StreamAggregates.windowedAggregateCounts]])
@@ -170,7 +233,8 @@ class Pipeline(
   def startWindowedAggCounts(events: DataFrame): StreamingQuery =
     upsertMember(StreamAggregates.windowedAggregateCounts(
         normalized(events).withWatermark("ts", watermarkDelay)),
-      "update", "aggregations-counts", aggCountsStorePath, Seq("partition_key"))
+      "update", "aggregations-counts", aggCountsStorePath, Seq("partition_key"),
+      oneStatePartition = true)
 
   /** Query 3: high-severity alerts, append mode (reference :160-177). */
   def startAlerts(events: DataFrame): StreamingQuery =
@@ -187,13 +251,13 @@ class Pipeline(
     * target; foreachBatch + [[KeyedUpsertSink]] remains the columnar path.
     */
   def startAlertsForeach(events: DataFrame): StreamingQuery =
-    EventStreamSource.toKafkaRecords(
+    member("alerts-foreach")(checkpoint => EventStreamSource.toKafkaRecords(
         StreamAggregates.alerts(normalized(events)).drop("ts"))
       .writeStream
       .outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/alerts-foreach")
+      .option("checkpointLocation", checkpoint)
       .foreach(new KeyedForeachWriter(s"$storeRoot/alerts_rows"))
-      .start()
+      .start())
 
   /** Throttled (suppression-windowed) alert stream — [[Stateful.alertThrottle]]
     * as a topology member: the alert stream deduped to at most one page
@@ -279,12 +343,14 @@ class Pipeline(
   def startMonitoring(events: DataFrame, queryName: String = "monitoring",
                       console: Boolean = false): StreamingQuery = {
     val counts = StreamAggregates.globalCounts(normalized(events))
-    val base = counts.writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", s"$checkpointRoot/console")
-    (if (console) base.format("console").option("truncate", value = false)
-     else base.format("memory").queryName(queryName))
-      .start()
+    member("console", oneStatePartition = true) { checkpoint =>
+      val base = counts.writeStream
+        .outputMode("complete")
+        .option("checkpointLocation", checkpoint)
+      (if (console) base.format("console").option("truncate", value = false)
+       else base.format("memory").queryName(queryName))
+        .start()
+    }
   }
 
   def crawlStorePath: String = s"$storeRoot/crawl"
@@ -299,8 +365,9 @@ class Pipeline(
     */
   def startCrawlDedup(docs: DataFrame, baseIndexDir: String,
                       threshold: Double = 0.8): StreamingQuery =
-    CrawlDedup.start(docs, baseIndexDir, crawlStorePath, threshold,
-      checkpointDir = Some(s"$checkpointRoot/crawl-dedup"))
+    member("crawl-dedup")(checkpoint =>
+      CrawlDedup.start(docs, baseIndexDir, crawlStorePath, threshold,
+        checkpointDir = Some(checkpoint)))
 
   /** Start all four queries (T5) and return them; callers block with
     * `spark.streams.awaitAnyTermination()` exactly as the reference does.
@@ -325,8 +392,9 @@ class Pipeline(
     */
   def startFluencyGate(docs: DataFrame, modelDir: String,
                        threshold: Double = 0.05): StreamingQuery =
-    FluencyStream.start(docs, modelDir, fluencyStorePath, threshold,
-      checkpointDir = Some(s"$checkpointRoot/fluency-gate"))
+    member("fluency-gate")(checkpoint =>
+      FluencyStream.start(docs, modelDir, fluencyStorePath, threshold,
+        checkpointDir = Some(checkpoint)))
 
   /** The full curation topology: the four event queries, plus dedup AND
     * fluency gating both tapping the same crawl source — six concurrent
@@ -354,9 +422,10 @@ class Pipeline(
   def startSplitAssign(docs: DataFrame, baseIndexDir: String,
                        clustersDir: String, trainPct: Int = 90,
                        valPct: Int = 5): StreamingQuery =
-    SplitStream.start(docs, baseIndexDir, clustersDir, splitStorePath,
-      trainPct, valPct,
-      checkpointDir = Some(s"$checkpointRoot/split-assign"))
+    member("split-assign")(checkpoint =>
+      SplitStream.start(docs, baseIndexDir, clustersDir, splitStorePath,
+        trainPct, valPct,
+        checkpointDir = Some(checkpoint)))
 
   def indexStorePath: String = s"$storeRoot/index"
 
@@ -391,12 +460,12 @@ class Pipeline(
     val hfs = new org.apache.hadoop.fs.Path(storeRoot)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     hfs.mkdirs(new org.apache.hadoop.fs.Path(s"$crawlStorePath/clean"))
-    SplitStream.start(
+    member("chain-split")(checkpoint => SplitStream.start(
       spark.readStream.schema(cleanHandoffSchema)
         .parquet(s"$crawlStorePath/clean")
         .select("doc_id", "text"),
       baseIndexDir, clustersDir, chainSplitStorePath, trainPct, valPct,
-      threshold, checkpointDir = Some(s"$checkpointRoot/chain-split"))
+      threshold, checkpointDir = Some(checkpoint)))
   }
 
   /** The dedup survivors' hand-off schema ([[CrawlDedup]] `clean/` —
@@ -471,16 +540,16 @@ class Pipeline(
       .parquet(s"$scrubStorePath/$sub")
       .select(org.apache.spark.sql.functions.col("doc_id"),
         org.apache.spark.sql.functions.col("clean_text").as("text"))
-    val dedupQ = CrawlDedup.start(
+    val dedupQ = member("chain-dedup")(checkpoint => CrawlDedup.start(
       scrubOut("clean").unionByName(scrubOut("scrubbed")),
       dedupBaseIndexDir, crawlStorePath, threshold,
-      checkpointDir = Some(s"$checkpointRoot/chain-dedup"))
+      checkpointDir = Some(checkpoint)))
     // stage 3 source: the dedup survivors
-    val ixQ = IndexStream.start(
+    val ixQ = member("chain-indexer")(checkpoint => IndexStream.start(
       spark.readStream.schema(cleanHandoffSchema).parquet(s"$crawlStorePath/clean")
         .select("doc_id", "text"),
       indexStorePath,
-      checkpointDir = Some(s"$checkpointRoot/chain-indexer"))
+      checkpointDir = Some(checkpoint)))
     // optional stage 4 (r16 verdict 2): split assignment over the SAME
     // survivors' hand-off — a deduped doc never consumes a split
     val splitQ = splitClustersDir.map(clusters =>
@@ -495,8 +564,9 @@ class Pipeline(
     * queries against base ∪ deltas via [[IndexStream.servingIndex]]).
     */
   def startIndexer(docs: DataFrame): StreamingQuery =
-    IndexStream.start(docs, indexStorePath,
-      checkpointDir = Some(s"$checkpointRoot/indexer"))
+    member("indexer")(checkpoint =>
+      IndexStream.start(docs, indexStorePath,
+        checkpointDir = Some(checkpoint)))
 
   def scrubStorePath: String = s"$storeRoot/scrub"
 
@@ -506,8 +576,9 @@ class Pipeline(
     * are masked at INGEST, before any downstream store can persist them.
     */
   def startScrub(docs: DataFrame): StreamingQuery =
-    ScrubStream.start(docs, scrubStorePath,
-      checkpointDir = Some(s"$checkpointRoot/scrub"))
+    member("scrub")(checkpoint =>
+      ScrubStream.start(docs, scrubStorePath,
+        checkpointDir = Some(checkpoint)))
 
   def embedStorePath: String = s"$storeRoot/embed"
 
@@ -520,8 +591,9 @@ class Pipeline(
     */
   def startEmbedDedup(vecs: DataFrame, baseIndexDir: String,
                       threshold: Double = 0.4, dim: Int = 64): StreamingQuery =
-    EmbedDedup.start(vecs, baseIndexDir, embedStorePath, threshold, dim,
-      checkpointDir = Some(s"$checkpointRoot/embed-dedup"))
+    member("embed-dedup")(checkpoint =>
+      EmbedDedup.start(vecs, baseIndexDir, embedStorePath, threshold, dim,
+        checkpointDir = Some(checkpoint)))
 
   def mediaStorePath: String = s"$storeRoot/media"
 
@@ -533,8 +605,9 @@ class Pipeline(
     */
   def startMediaDedup(media: DataFrame, basePhashDir: String,
                       maxHamming: Int = 5): StreamingQuery =
-    MediaDedup.start(media, basePhashDir, mediaStorePath, maxHamming,
-      checkpointDir = Some(s"$checkpointRoot/media-dedup"))
+    member("media-dedup")(checkpoint =>
+      MediaDedup.start(media, basePhashDir, mediaStorePath, maxHamming,
+        checkpointDir = Some(checkpoint)))
 
   def tokenizeStorePath: String = s"$storeRoot/tokenize"
 
@@ -545,8 +618,9 @@ class Pipeline(
     * the tokenizer chain's serving twin beside the fluency gate's.
     */
   def startTokenize(docs: DataFrame, vocabDir: String): StreamingQuery =
-    TokenizeStream.start(docs, vocabDir, tokenizeStorePath,
-      checkpointDir = Some(s"$checkpointRoot/tokenize"))
+    member("tokenize")(checkpoint =>
+      TokenizeStream.start(docs, vocabDir, tokenizeStorePath,
+        checkpointDir = Some(checkpoint)))
 
   def pqStorePath: String = s"$storeRoot/pq"
 
@@ -557,8 +631,9 @@ class Pipeline(
     */
   def startPqEncode(vecs: DataFrame, codebookDir: String,
                     m: Int = 8, dim: Int = 64): StreamingQuery =
-    EncodeStream.start(vecs, codebookDir, pqStorePath, m, dim,
-      checkpointDir = Some(s"$checkpointRoot/pq"))
+    member("pq")(checkpoint =>
+      EncodeStream.start(vecs, codebookDir, pqStorePath, m, dim,
+        checkpointDir = Some(checkpoint)))
 
   def ivfStorePath: String = s"$storeRoot/ivf"
 
@@ -572,8 +647,9 @@ class Pipeline(
     */
   def startIvfGrow(vecs: DataFrame, indexDir: String,
                    probeDepth: Int = 4): StreamingQuery =
-    IvfStream.start(vecs, indexDir, ivfStorePath, probeDepth,
-      checkpointDir = Some(s"$checkpointRoot/ivf-grow"))
+    member("ivf-grow")(checkpoint =>
+      IvfStream.start(vecs, indexDir, ivfStorePath, probeDepth,
+        checkpointDir = Some(checkpoint)))
 
   def mediaSearchStorePath: String = s"$storeRoot/media-search"
 
@@ -586,8 +662,9 @@ class Pipeline(
     */
   def startMediaSearch(queries: DataFrame, phashDir: String,
                        maxHamming: Int = 5): StreamingQuery =
-    MediaSearchStream.start(queries, phashDir, mediaSearchStorePath, maxHamming,
-      checkpointDir = Some(s"$checkpointRoot/media-search"))
+    member("media-search")(checkpoint =>
+      MediaSearchStream.start(queries, phashDir, mediaSearchStorePath, maxHamming,
+        checkpointDir = Some(checkpoint)))
 
   def passageStorePath: String = s"$storeRoot/passage-search"
 
@@ -599,8 +676,9 @@ class Pipeline(
     */
   def startPassageSearch(queries: DataFrame, passageDir: String,
                          k: Int = 10): StreamingQuery =
-    PassageStream.start(queries, passageDir, passageStorePath, k,
-      checkpointDir = Some(s"$checkpointRoot/passage-search"))
+    member("passage-search")(checkpoint =>
+      PassageStream.start(queries, passageDir, passageStorePath, k,
+        checkpointDir = Some(checkpoint)))
 
   def chunkStorePath: String = s"$storeRoot/chunk-ingest"
 
@@ -612,8 +690,9 @@ class Pipeline(
     * retrievable the epoch after it arrives).
     */
   def startChunkIngest(docs: DataFrame): StreamingQuery =
-    ChunkStream.start(docs, chunkStorePath,
-      checkpointDir = Some(s"$checkpointRoot/chunk-ingest"))
+    member("chunk-ingest")(checkpoint =>
+      ChunkStream.start(docs, chunkStorePath,
+        checkpointDir = Some(checkpoint)))
 
   def deconStorePath: String = s"$storeRoot/decon-gate"
 
@@ -622,8 +701,9 @@ class Pipeline(
     * exact-verified candidates quarantined, the rest passing clean.
     */
   def startDeconGate(docs: DataFrame, benchmark: DataFrame): StreamingQuery =
-    DeconStream.start(docs, benchmark, deconStorePath,
-      checkpointDir = Some(s"$checkpointRoot/decon-gate"))
+    member("decon-gate")(checkpoint =>
+      DeconStream.start(docs, benchmark, deconStorePath,
+        checkpointDir = Some(checkpoint)))
 
   def takedownStorePath: String = s"$storeRoot/takedown"
 
@@ -635,8 +715,9 @@ class Pipeline(
     * micro-batch, no rebuild on the serving path.
     */
   def startTakedown(requests: DataFrame): StreamingQuery =
-    TakedownStream.start(requests, takedownStorePath,
-      checkpointDir = Some(s"$checkpointRoot/takedown"))
+    member("takedown")(checkpoint =>
+      TakedownStream.start(requests, takedownStorePath,
+        checkpointDir = Some(checkpoint)))
 
   def driftStorePath: String = s"$storeRoot/drift"
 
@@ -649,8 +730,9 @@ class Pipeline(
     */
   def startDriftMonitor(docs: DataFrame, refSharesDir: String,
                         threshold: Double = 0.5): StreamingQuery =
-    DriftStream.start(docs, refSharesDir, driftStorePath, threshold,
-      checkpointDir = Some(s"$checkpointRoot/drift"))
+    member("drift")(checkpoint =>
+      DriftStream.start(docs, refSharesDir, driftStorePath, threshold,
+        checkpointDir = Some(checkpoint)))
 
   def awaitAnyTermination(): Unit = spark.streams.awaitAnyTermination()
 }
@@ -662,6 +744,12 @@ case class StateFootprint(member: String, op_index: Int,
                           n_state_rows: Long, state_bytes: Long)
 
 object Pipeline {
+  /** Held while a member starts, so that one member's temporary
+    * `spark.sql.shuffle.partitions` is never read, or restored, by
+    * another pipeline's start on the same session.
+    */
+  private val startLock = new Object
+
   /** Spark's RocksDB state store provider (in the stock Spark 4
     * distribution; rocksdbjni ships in its jars) — pass as
     * `stateStoreProvider` to spill stateful-member state off-heap.

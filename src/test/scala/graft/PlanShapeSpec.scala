@@ -207,6 +207,44 @@ class PlanShapeSpec extends SparkSpec {
     } finally jobs.close()
   }
 
+  /** The shuffle exchanges of `df`'s executed plan, adaptive stages included. */
+  private def shuffles(df: org.apache.spark.sql.DataFrame) = {
+    object aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    aqe.collect(df.queryExecution.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+    }
+  }
+
+  /** Rows of (key, v) as a frame of exactly `parts` partitions with no exchange. */
+  private def batchOf(parts: Int, rows: (String, Int)*) = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(rows, parts).toDF("key", "v")
+  }
+
+  test("upserting a one-partition batch runs one job with no exchange: the dedup is in place") {
+    val store = java.nio.file.Files.createTempDirectory("planshape-inplace").toString + "/s"
+    val batch = batchOf(1, ("k", 1), ("k", 2), ("j", 3))
+    val deduped = KeyedUpsertSink.dedup(batch, Seq("key"))
+    assert(shuffles(deduped).isEmpty, s"the dedup plans an exchange:\n${deduped.queryExecution.executedPlan}")
+    val jobs = new JobCount(spark)
+    try {
+      val (_, n) = jobs.of(KeyedUpsertSink.upsert(spark, store, Seq("key"), batch, 0L, "w"))
+      assert(n == 1, s"the upsert ran $n Spark jobs")
+    } finally jobs.close()
+    assert(KeyedUpsertSink.segmentRows(spark, store, 0L, "w") == 2)
+    assert(KeyedUpsertSink.read(spark, store).select("key").collect().map(_.getString(0)).sorted.toSeq == Seq("j", "k"))
+  }
+
+  test("a batch with one key in two partitions keeps its exchange and commits one row for that key") {
+    val store = java.nio.file.Files.createTempDirectory("planshape-shuffled").toString + "/s"
+    val batch = batchOf(2, ("k", 1), ("k", 2))
+    assert(batch.rdd.getNumPartitions == 2)
+    assert(shuffles(KeyedUpsertSink.dedup(batch, Seq("key"))).nonEmpty)
+    KeyedUpsertSink.upsert(spark, store, Seq("key"), batch, 0L, "w")
+    assert(KeyedUpsertSink.segmentRows(spark, store, 0L, "w") == 1)
+    assert(KeyedUpsertSink.read(spark, store).count() == 1)
+  }
+
   test("dataset-card composition joins narrow frames without scan explosion (r10 next-round 7)") {
     // both quality gates are row-local predicates, so the base scan
     // carries fingerprint + both flags in ONE projection; only the OOV
